@@ -316,16 +316,18 @@ class GraphCatalog(val spark: SparkSession, val dir: String,
     */
   def truncateData(): Unit = {
     // independent tables swap concurrently (r16, guide §2.6): each
-    // truncation is its own crash-safe two-rename swap under its own
-    // marker, so a crash mid-clear still leaves every table either full
-    // or empty — the same per-table guarantee the sequential loop gave
+    // truncation is its own [[graft.Commit]] swap, so a crash mid-clear
+    // still leaves every table either full or empty — the same
+    // per-table guarantee the sequential loop gave
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(
-      Future.traverse(schema.tables.toList)(td =>
-        Future(rewrite(td.name, provider.nodeTable(td.name).limit(0)))),
-      Duration.Inf)
+    val swaps = schema.tables.map(td =>
+      Future(rewrite(td.name, provider.nodeTable(td.name).limit(0))))
+    // every swap finishes before the first failure surfaces: none may
+    // still be moving files after this method returns
+    swaps.foreach(Await.ready(_, Duration.Inf))
+    swaps.foreach(Await.result(_, Duration.Inf))
   }
 
   /** CLEAR DATA — the reference's `ClearData`
@@ -347,8 +349,8 @@ class GraphCatalog(val spark: SparkSession, val dir: String,
     // delete; every step after it is idempotent, so a crash at ANY
     // point is recovered by finishing the clear — which the next
     // catalog open does automatically (see the recovery block at the
-    // end of the constructor). Same commit-marker discipline as the
-    // incremental indexes and [[rewrite]]'s two-rename swap.
+    // end of the constructor). Same marker-first discipline as
+    // [[graft.Commit]].
     writeClearMarker(schema.tables.map(_.name))
     finishClear(schema.tables.map(_.name))
     // the cleared tables' cached GraphX graphs are stale the moment the
@@ -428,41 +430,26 @@ class GraphCatalog(val spark: SparkSession, val dir: String,
           .mode("overwrite").saveAsTable(ident)
     }
 
-  /** persist a DML rewrite of a node table (write-temp-then-swap; the
-    * temp write is bucketed under the same spec, so the swapped-in files
-    * keep the co-located layout and are re-registered over the final
-    * location)
+  /** persist a DML rewrite of a node table through a [[graft.Commit]]
+    * directory swap (`tables/.<t>_tmp|_bak|_swap`); the temp write is
+    * bucketed under the same spec, so the swapped-in files keep the
+    * co-located layout and are re-registered over the final location
     */
   def rewrite(tableName: String, df: DataFrame): Unit = {
-    val tmp = s"$dir/tables/.${tableName}_tmp"
-    buckets match {
-      case None => df.write.mode("overwrite").parquet(tmp)
-      case Some(n) =>
-        val tmpIdent = tableIdent(tableName) + "_tmp"
-        spark.sql(s"DROP TABLE IF EXISTS $tmpIdent")
-        df.write.bucketBy(n, "GlobalNodeId").sortBy("GlobalNodeId")
-          .option("path", tmp).mode("overwrite").saveAsTable(tmpIdent)
-        // external table: dropping releases only metadata, files remain
-        spark.sql(s"DROP TABLE IF EXISTS $tmpIdent")
+    val sw = graft.Commit.Swap.hidden(s"$dir/tables", tableName)
+    val tmp = sw.tmp.toString
+    graft.Commit.swap(fsOf(sw.dst), sw) {
+      buckets match {
+        case None => df.write.mode("overwrite").parquet(tmp)
+        case Some(n) =>
+          val tmpIdent = tableIdent(tableName) + "_tmp"
+          spark.sql(s"DROP TABLE IF EXISTS $tmpIdent")
+          df.write.bucketBy(n, "GlobalNodeId").sortBy("GlobalNodeId")
+            .option("path", tmp).mode("overwrite").saveAsTable(tmpIdent)
+          // external table: dropping releases only metadata, files remain
+          spark.sql(s"DROP TABLE IF EXISTS $tmpIdent")
+      }
     }
-    // Two-rename swap through the Hadoop FileSystem API (java.nio only
-    // worked on file: — this path serves hdfs:/s3a: alike; the
-    // production analogue is a Delta/Iceberg metadata swap). The old
-    // table stays recoverable (.bak) until the new one is in place, and
-    // the swap-marker pointer file makes the crash window detectable:
-    // marker present + live dir absent → [[recoverInterruptedSwaps]]
-    // restores the .bak on the next catalog load.
-    val dst = new HPath(tablePath(tableName))
-    val bak = new HPath(s"$dir/tables/.${tableName}_bak")
-    val marker = new HPath(s"$dir/tables/.${tableName}_swap")
-    val fs = fsOf(dst)
-    fs.delete(bak, true)
-    fs.create(marker, true).close()
-    if (fs.exists(dst))
-      require(fs.rename(dst, bak), s"swap: cannot move $dst aside")
-    require(fs.rename(new HPath(tmp), dst), s"swap: cannot publish $tmp")
-    fs.delete(bak, true)
-    fs.delete(marker, false)
     buckets.foreach { _ =>
       spark.sql(s"DROP TABLE IF EXISTS ${tableIdent(tableName)}")
       ensureRegistered(tableName, Some(df.schema))
@@ -470,33 +457,18 @@ class GraphCatalog(val spark: SparkSession, val dir: String,
     cache.remove(tableName)
   }
 
-  /** Recover any rewrite whose process died between the two swap
-    * renames: the marker says a swap began; if the live dir is gone the
-    * `.bak` still holds the last committed table — restore it. A marker
-    * with the live dir present means the crash hit after publish —
-    * drop the leftovers. Runs once per catalog load.
-    */
-  private def recoverInterruptedSwaps(): Unit = {
-    val tablesDir = new HPath(s"$dir/tables")
-    val fs = fsOf(tablesDir)
-    if (!fs.exists(tablesDir)) return
+  // recover every [[rewrite]] swap a dead process left, once per load
+  {
+    val tables = new HPath(s"$dir/tables")
+    val fs = fsOf(tables)
     val Marker = """\.(.+)_swap""".r
-    fs.listStatus(tablesDir).foreach { st =>
-      st.getPath.getName match {
-        case Marker(name) =>
-          val dst = new HPath(tablePath(name))
-          val bak = new HPath(s"$dir/tables/.${name}_bak")
-          if (!fs.exists(dst) && fs.exists(bak))
-            require(fs.rename(bak, dst), s"swap recovery: cannot restore $bak")
-          fs.delete(bak, true)
-          fs.delete(new HPath(s"$dir/tables/.${name}_tmp"), true)
-          fs.delete(st.getPath, false)
+    if (fs.exists(tables))
+      fs.listStatus(tables).map(_.getPath.getName).foreach {
+        case Marker(name) => graft.Commit.recover(fs,
+          graft.Commit.Swap.hidden(s"$dir/tables", name))
         case _ => ()
       }
-    }
   }
-
-  recoverInterruptedSwaps()
 
   def nextTableId: Int =
     (schema.tables.map(_.tableId) :+ 0).max + 1

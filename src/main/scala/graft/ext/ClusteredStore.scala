@@ -13,11 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * deltas scan until folded in) instead of forcing a cluster-on-write
   * exchange into every increment.
   *
-  * Crash-safety is the repo's marker protocol (the
-  * [[graft.streaming.BatchLedger]] convention): a dir without its
-  * `_commits/` marker is invisible to [[read]], commits are one
-  * marker-file create, and a crashed attempt's orphan data is
-  * reclaimed by [[vacuum]]. [[compact]] commits the new epoch BEFORE
+  * Crash-safety is [[graft.Commit]]'s named markers: a dir without its
+  * commit marker is invisible to [[read]], commits are one marker-file
+  * create, and a crashed attempt's orphan data is reclaimed by
+  * [[vacuum]]. [[compact]] commits the new epoch BEFORE
   * vacuuming the old, so a crash between the two leaves a readable
   * store plus garbage, never a torn view. Single writer per store
   * (the catalog DML contract); all file ops go through the Hadoop FS
@@ -28,22 +27,14 @@ object ClusteredStore {
   private def fs(spark: SparkSession, p: HPath): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def commitMarker(root: String, name: String) =
-    new HPath(s"$root/_commits/$name")
+  private def markers(spark: SparkSession, root: String) =
+    graft.Commit.commits(graft.Commit.fs(spark, root), root)
 
-  private def committed(spark: SparkSession, root: String): Set[String] = {
-    val dir = new HPath(s"$root/_commits")
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) Set.empty
-    else f.listStatus(dir).map(_.getPath.getName).toSet
-  }
+  private def committed(spark: SparkSession, root: String): Set[String] =
+    markers(spark, root).names.toSet
 
-  private def commit(spark: SparkSession, root: String, name: String): Unit = {
-    val m = commitMarker(root, name)
-    val f = fs(spark, m)
-    f.mkdirs(m.getParent)
-    f.create(m, true).close()
-  }
+  private def commit(spark: SparkSession, root: String, name: String): Unit =
+    markers(spark, root).create(name)
 
   /** max committed base epoch, or -1 before [[create]] */
   private def currentBase(spark: SparkSession, root: String): Long = {
@@ -215,13 +206,11 @@ object ClusteredStore {
         !n.startsWith("_") && !keep(n)
       }
       .foreach(p => f.delete(p, true))
-    val cm = new HPath(s"$root/_commits")
-    if (f.exists(cm)) {
-      f.listStatus(cm).map(_.getPath)
-        // applied_t* is the epoch-independent replay ledger — it must
-        // outlive the base whose delta it tagged (see [[append]])
-        .filter(p => !keep(p.getName) && !p.getName.startsWith("applied_"))
-        .foreach(p => f.delete(p, false))
-    }
+    val marks = markers(spark, root)
+    marks.names
+      // applied_t* is the epoch-independent replay ledger — it must
+      // outlive the base whose delta it tagged (see [[append]])
+      .filter(n => !keep(n) && !n.startsWith("applied_"))
+      .foreach(marks.remove)
   }
 }

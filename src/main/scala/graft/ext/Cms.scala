@@ -74,32 +74,21 @@ object Cms {
   //
   // CMS merge is a SUM, not a set union: re-folding a replayed
   // increment double-counts, so — unlike the KMV family, whose merge
-  // is idempotent by algebra — the persisted state uses the
-  // heavy-hitter family's versioned protocol: state lives under
-  // `s<version>` with a `_commits/s<version>` marker written last, an
-  // update whose version is already committed is a no-op, and a crash
-  // before the marker leaves the previous committed version as the
-  // read point (the half-written dir is invisible). Versions are the
-  // caller's batch ids — sparse is fine.
+  // is idempotent by algebra — the state is versioned
+  // ([[graft.Commit.Versions]], `s<version>`): an update whose version
+  // is already committed is a no-op. Versions are the caller's batch
+  // ids — sparse is fine.
 
-  import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+  import org.apache.hadoop.fs.{Path => HPath}
 
-  private def hfs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): FileSystem =
-    new HPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def versions(spark: org.apache.spark.sql.SparkSession,
+      stateDir: String) =
+    new graft.Commit.Versions(graft.Commit.fs(spark, stateDir), stateDir,
+      "s", "cms updateState")
 
   /** committed state versions, ascending */
   def committedVersions(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): Seq[Long] = {
-    val f = hfs(spark, stateDir)
-    val p = new HPath(s"$stateDir/_commits")
-    if (!f.exists(p)) Seq()
-    else f.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("s") &&
-        s.drop(1).nonEmpty && s.drop(1).forall(_.isDigit) =>
-        s.drop(1).toLong }
-      .sorted
-  }
+      stateDir: String): Seq[Long] = versions(spark, stateDir).committed
 
   /** (sketch, items-folded) at the LATEST committed version — zeros at
     * an empty state. Shape is checked against (depth, width).
@@ -107,18 +96,18 @@ object Cms {
   def readState(spark: org.apache.spark.sql.SparkSession, stateDir: String,
       depth: Int = DefaultDepth, width: Int = DefaultWidth)
       : (Array[Long], Long) = {
-    val versions = committedVersions(spark, stateDir)
-    if (versions.isEmpty) return (new Array[Long](depth * width), 0L)
-    val rows = spark.read.schema("idx LONG, c LONG")
-      .parquet(s"$stateDir/s${versions.max}")
+    val state = versions(spark, stateDir)
+    val latest = state.latest
+    if (latest.isEmpty) return (new Array[Long](depth * width), 0L)
+    val dir = state.dir(latest.get)
+    val rows = spark.read.schema("idx LONG, c LONG").parquet(dir.toString)
       .collect() // depth·width rows — fixed size, never corpus-scaled
     require(rows.length == depth * width,
       s"cms state shape ${rows.length} != ${depth * width} — depth/width " +
         "differ from the ones this state was built with")
     val sk = new Array[Long](depth * width)
     rows.foreach(r => sk(r.getLong(0).toInt) = r.getLong(1))
-    val f = hfs(spark, stateDir)
-    val in = f.open(new HPath(s"$stateDir/s${versions.max}/_n"))
+    val in = graft.Commit.fs(spark, stateDir).open(new HPath(dir, "_n"))
     val n = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
       finally in.close()
     (sk, n)
@@ -132,14 +121,9 @@ object Cms {
     *
     * Writer contract: SINGLE WRITER per `stateDir` (the intended
     * driver is a Structured Streaming `foreachBatch`, which Spark
-    * already serializes per sink). The version protocol makes
-    * same-version REPLAYS no-ops, but two concurrent writers that both
-    * read the same committed max would fold disjoint increments and
-    * the later commit would silently drop the earlier fold — so each
-    * commit records the parent version it folded on top of and the
-    * commit re-checks that the parent is still the committed max,
-    * turning the lost-update race into a loud failure at the second
-    * writer instead of silent undercounts.
+    * already serializes per sink). A second writer that folded on the
+    * same parent fails loudly in [[graft.Commit.Versions.publish]]
+    * instead of silently dropping the other fold.
     */
   def updateState(increment: DataFrame, itemCol: Column, stateDir: String,
       depth: Int = DefaultDepth, width: Int = DefaultWidth,
@@ -161,97 +145,23 @@ object Cms {
       beforeMarker: () => Unit = () => ()): Unit = {
     val spark = increment.sparkSession
     import spark.implicits._
-    val committed = committedVersions(spark, stateDir)
-    val v = version.getOrElse(if (committed.isEmpty) 0L else committed.max + 1)
-    if (committed.contains(v)) return
+    val state = versions(spark, stateDir)
+    val v = state.next(version)
+    if (state.replayed(v)) return
+    val parent = state.latest
     val inc = sketch(increment, itemCol, depth, width)
     val (prev, nPrev) = readState(spark, stateDir, depth, width)
     val nInc = inc.sum / depth // every item increments one cell per row
     val merged = merge(prev, inc)
     afterFold()
-    // lost-update guard, BEFORE any write: if another writer committed
-    // since we read `prev`, our fold is based on a stale parent — fail
-    // before touching the state dir. The pre-write position matters: a
-    // same-version intruder commit means `$stateDir/s$v` now holds
-    // COMMITTED data, and the r14 spec showed the old post-write check
-    // both overwrote it and then passed via its replay disjunct
-    // (`nowCommitted.contains(v)`) — a silent lost update. A genuine
-    // same-version REPLAY is handled by the early return above; any
-    // commit landing between that read and here is by definition a
-    // concurrent writer.
-    val parent = if (committed.isEmpty) -1L else committed.max
-    def guard(): Unit = {
-      val nowCommitted = committedVersions(spark, stateDir)
-      val nowMax = if (nowCommitted.isEmpty) -1L else nowCommitted.max
-      require(nowMax == parent,
-        s"cms updateState: concurrent writer detected on $stateDir — " +
-          s"folded on parent v$parent but committed max is now v$nowMax; " +
-          "this sink requires a single writer (see scaladoc)")
-    }
-    guard()
-    // the fold lands in a WRITER-UNIQUE temp dir and only renames into
-    // place after the final guard: the r14 shape wrote mode("overwrite")
-    // straight to s$v, so a commit slipping between guard #1 and the
-    // parquet job still clobbered the intruder's COMMITTED data before
-    // guard #2 threw — a corrupted committed version, not just a loud
-    // failure. With the temp dir, committed state is never touched by
-    // an uncommitted writer; the worst a racing pair leaves behind is
-    // an orphaned .tmp dir (swept by the next successful commit).
-    val f = hfs(spark, stateDir)
-    val dir = new HPath(s"$stateDir/s$v")
-    val tmp = new HPath(
-      s"$stateDir/.s$v.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      merged.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq
-        .toDF("idx", "c")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val out = f.create(new HPath(s"$tmp/_n"), true)
-      try out.write(s"${nPrev + nInc}".getBytes("UTF-8")) finally out.close()
-      // re-check before publishing: the data write above runs a Spark
-      // job and the race can also land inside it (defense in depth —
-      // the single-writer contract still holds; the checks exist to
-      // turn a misconfigured double writer into a loud failure, not to
-      // be a concurrency protocol)
-      guard()
-      // an existing s$v dir HERE is a crash leftover, not a concurrent
-      // writer: guard() just proved v is uncommitted, so a dir at the
-      // committed path can only be a half-write from a writer that died
-      // before its marker (the crash-window replay the streaming sinks
-      // exercise) — replace it. The pre-delete also keeps Hadoop rename
-      // from moving the source INTO an existing dir. A concurrent
-      // same-version writer that got further (its marker landed) is
-      // caught by guard above or the atomic marker create below.
-      if (f.exists(dir)) f.delete(dir, true)
-      require(f.rename(tmp, dir),
-        s"cms updateState: publish of $dir failed — a concurrent writer " +
-          "created it after the guard re-check; this sink requires a " +
-          "single writer (see scaladoc)")
-    } finally f.delete(tmp, true) // no-op after a successful rename
-    beforeMarker()
-    val m = new HPath(s"$stateDir/_commits/s$v")
-    f.mkdirs(m.getParent)
-    // overwrite=false: the marker CREATE is itself the last-writer
-    // check — if a concurrent writer committed this version between
-    // the rename and here, the atomic create fails loudly instead of
-    // silently re-pointing the intruder's committed marker at our data
-    val mo = try f.create(m, false)
-      catch { case e: java.io.IOException =>
-        throw new IllegalArgumentException(
-          s"cms updateState: commit marker $m already exists — a " +
-            "concurrent writer committed this version; this sink " +
-            "requires a single writer (see scaladoc)", e)
-      }
-    try mo.write(s"parent=$parent".getBytes("UTF-8")) finally mo.close()
-    // a successful commit sweeps superseded versions AND any orphaned
-    // temp dirs a crashed/raced writer left behind
-    committed.filter(_ < v).foreach { old =>
-      f.delete(new HPath(s"$stateDir/s$old"), true)
-      f.delete(new HPath(s"$stateDir/_commits/s$old"), false)
-    }
-    f.listStatus(new HPath(stateDir)).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(".s") && n.contains(".tmp-") &&
-        st.getPath != tmp) f.delete(st.getPath, true)
+    state.publish(v, parent, beforeMarker = beforeMarker) {
+      tmp =>
+        merged.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq
+          .toDF("idx", "c")
+          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val out = graft.Commit.fs(spark, stateDir)
+          .create(new HPath(tmp, "_n"), true)
+        try out.write(s"${nPrev + nInc}".getBytes("UTF-8")) finally out.close()
     }
   }
 }

@@ -75,27 +75,21 @@ object CorpusOverlap {
     * of the index family has: ≤k longs + the `_params.json` sidecar,
     * so tomorrow's increment screens against today's 100 TB corpus by
     * reading k values instead of rescanning anything. Published through
-    * the two-rename swap, so rebuilding over an existing sketch can't
+    * a directory swap, so rebuilding over an existing sketch can't
     * destroy it mid-write either.
     */
   def writeKmvSketch(docs: DataFrame, textCol: String, path: String,
-      k: Int = 256): Unit = {
-    val spark = docs.sparkSession
-    recoverSketchSwap(spark, path)
-    publishSketch(spark, path, k) { tmp =>
+      k: Int = 256): Unit =
+    publishSketch(docs.sparkSession, path, k) { tmp =>
       kmvSketch(docs, textCol, k).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
     }
-  }
 
   /** Fold an increment into a persisted sketch: the updated sketch is
     * the bottom-k of the union — exactly [[writeKmvSketch]] over
     * history ∪ increment (KMV mergeability), so probes after any
     * append ≡ a from-scratch build. Single writer, like every index
-    * in the family. The merged sketch is written to a temp sibling and
-    * swapped in via the catalog's two-rename discipline
-    * ([[graft.ddl.GraphCatalog]] `rewrite`): a crash at ANY point
-    * leaves either the old or the new sketch intact — an in-place
+    * in the family. The merged sketch is swapped in whole: an in-place
     * overwrite would have a window where the pre-merge history sketch
     * is simply gone, recoverable only by rescanning the full history
     * corpus, the exact cost the persisted sketch exists to avoid.
@@ -103,7 +97,7 @@ object CorpusOverlap {
   def mergeKmvSketch(newDocs: DataFrame, textCol: String, path: String,
       k: Int = 256): Unit = {
     val spark = newDocs.sparkSession
-    recoverSketchSwap(spark, path)
+    recoverSketch(spark, path)
     IndexParams.check(spark, path, kmvParams(k))
     val merged = spark.read.schema("h LONG").parquet(path)
       .unionByName(kmvSketch(newDocs, textCol, k))
@@ -117,63 +111,27 @@ object CorpusOverlap {
     }
   }
 
-  /** Two-rename crash-safe publish of a sketch directory (the
-    * [[graft.ddl.GraphCatalog]] `rewrite` discipline): build the new
-    * sketch + sidecar in a temp sibling, drop a swap marker, move the
-    * live dir aside as `.bak`, publish the temp, clean up. A crash at
-    * any point leaves the marker telling [[recoverSketchSwap]] which
-    * side is authoritative — the old sketch until publish, the new one
-    * after.
-    */
+  /** [[graft.Commit.swap]] of a sketch dir and its sidecar
+    * (`<path>__tmp|__bak|__swap`) */
   private def publishSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, k: Int)(writeTmp: String => Unit): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val dst = new HPath(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new HPath(path + "__tmp")
-    val bak = new HPath(path + "__bak")
-    val marker = new HPath(path + "__swap")
-    fs.delete(tmp, true)
-    fs.delete(bak, true)
-    writeTmp(tmp.toString)
-    IndexParams.write(spark, tmp.toString, kmvParams(k))
-    fs.create(marker, true).close()
-    if (fs.exists(dst))
-      require(fs.rename(dst, bak), s"sketch swap: cannot move $dst aside")
-    require(fs.rename(tmp, dst), s"sketch swap: cannot publish $tmp")
-    fs.delete(bak, true)
-    fs.delete(marker, false)
+    val sw = graft.Commit.Swap.suffixed(path)
+    graft.Commit.swap(graft.Commit.fs(spark, path), sw) {
+      writeTmp(sw.tmp.toString)
+      IndexParams.write(spark, sw.tmp.toString, kmvParams(k))
+    }
   }
 
-  /** Reader-side recovery of an interrupted sketch swap (runs at the
-    * head of every sketch write/merge/probe): marker present + live dir
-    * gone → the crash hit between the two renames, restore the `.bak`;
-    * marker present + live dir present → the crash hit after publish,
-    * drop the leftovers. Idempotent; a no-op when no marker exists.
-    */
-  /** [[recoverSketchSwap]] for callers outside this object that read
-    * the sketch files directly (the streaming face snapshots the
-    * pre-batch sketch before merging — without recovery-at-head, a
-    * merge that crashed mid-swap would read as "no sketch" and the
-    * snapshot would silently record an empty history).
+  /** Reader-side [[graft.Commit.recover]] of an interrupted sketch
+    * swap; runs at the head of every sketch merge and probe, and of the
+    * streaming face's pre-batch snapshot (without it, a merge that
+    * crashed mid-swap would read as "no sketch" and the snapshot would
+    * silently record an empty history).
     */
   private[graft] def recoverSketch(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = recoverSketchSwap(spark, path)
-
-  private def recoverSketchSwap(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val dst = new HPath(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new HPath(path + "__swap")
-    if (!fs.exists(marker)) return
-    val bak = new HPath(path + "__bak")
-    if (!fs.exists(dst) && fs.exists(bak))
-      require(fs.rename(bak, dst), s"sketch swap recovery: cannot restore $bak")
-    fs.delete(bak, true)
-    fs.delete(new HPath(path + "__tmp"), true)
-    fs.delete(marker, false)
-  }
+      path: String): Unit =
+    graft.Commit.recover(graft.Commit.fs(spark, path),
+      graft.Commit.Swap.suffixed(path))
 
   /** Overlap of an increment against a persisted history sketch:
     * the same one-row estimate as [[overlapEstimate]](history,
@@ -185,7 +143,7 @@ object CorpusOverlap {
   def overlapWithSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, textCol: String,
       k: Int = 256): DataFrame = {
-    recoverSketchSwap(spark, path)
+    recoverSketch(spark, path)
     IndexParams.check(spark, path, kmvParams(k))
     val hist = spark.read.schema("h LONG").parquet(path)
       .withColumn("in_a", lit(1))

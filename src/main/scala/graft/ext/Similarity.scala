@@ -141,27 +141,14 @@ object Similarity {
   // therefore EQUALS the batch rebuild over the union — the oracle
   // states exactly that.
   //
-  // State: `knnDir/v<N>` parquet (qid, nid, cs, rn) behind commit
-  // markers (readers resolve the max committed version; a crashed
-  // attempt's orphan dir is overwritten); vectors accumulate in the
+  // State: `knnDir/v<N>` parquet (qid, nid, cs, rn), versioned through
+  // [[graft.Commit.Versions]]; vectors accumulate in the
   // cell-partitioned IVF dir. Single writer, like every index here.
 
-  private def knnVersions(spark: org.apache.spark.sql.SparkSession,
-      knnDir: String): Seq[Long] = {
-    val cm = new org.apache.hadoop.fs.Path(s"$knnDir/_commits")
-    val f = cm.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(cm)) Seq.empty
-    else f.listStatus(cm).map(_.getPath.getName)
-      .filter(_.startsWith("v")).map(_.drop(1).toLong).toSeq
-  }
-
-  private def knnCommit(spark: org.apache.spark.sql.SparkSession,
-      knnDir: String, v: Long): Unit = {
-    val m = new org.apache.hadoop.fs.Path(s"$knnDir/_commits/v$v")
-    val f = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(m.getParent)
-    f.create(m, true).close()
-  }
+  private[graft] def knnState(spark: org.apache.spark.sql.SparkSession,
+      knnDir: String) =
+    new graft.Commit.Versions(graft.Commit.fs(spark, knnDir), knnDir, "v",
+      "knn state")
 
   // vacuumOld=false defers reclaiming superseded versions to the
   // CALLER's commit point: the streaming face must not delete the
@@ -170,63 +157,30 @@ object Similarity {
   // begin-phase cleanup (which drops the crashed attempt's version)
   // with NO surviving state at all
   private def knnWrite(spark: org.apache.spark.sql.SparkSession,
-      knnDir: String, edges: DataFrame,
+      knnDir: String, edges: DataFrame, parent: Option[Long],
       version: Option[Long] = None, vacuumOld: Boolean = true): Unit = {
-    val vs = knnVersions(spark, knnDir)
-    val v = version.getOrElse(if (vs.isEmpty) 0L else vs.max + 1)
-    edges.write.mode("overwrite").parquet(s"$knnDir/v$v")
-    knnCommit(spark, knnDir, v)
-    if (vacuumOld) knnVacuumBelow(spark, knnDir, v)
-  }
-
-  /** reclaim every committed state version below `v` */
-  private[graft] def knnVacuumBelow(spark: org.apache.spark.sql.SparkSession,
-      knnDir: String, v: Long): Unit = {
-    val f = new org.apache.hadoop.fs.Path(knnDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    knnVersions(spark, knnDir).filter(_ < v).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$knnDir/v$old"), true)
-      f.delete(new org.apache.hadoop.fs.Path(s"$knnDir/_commits/v$old"),
-        false)
+    val state = knnState(spark, knnDir)
+    state.publish(state.next(version), parent, vacuumOld) { tmp =>
+      edges.write.mode("overwrite").parquet(tmp.toString)
     }
-  }
-
-  /** Vacuum every committed version except the newest one. Unlike
-    * `knnVacuumBelow(dir, batchId)` this is safe to call after an
-    * EMPTY micro-batch (routine in Structured Streaming): no version
-    * `batchId` exists then, and vacuuming below it would delete the
-    * entire committed state. Keying on the max committed version keeps
-    * exactly the state a replay or reader needs. */
-  private[graft] def knnVacuumStale(spark: org.apache.spark.sql.SparkSession,
-      knnDir: String): Unit = {
-    val vs = knnVersions(spark, knnDir)
-    if (vs.nonEmpty) knnVacuumBelow(spark, knnDir, vs.max)
-  }
-
-  /** drop a state version (committed or not) — the begin-phase cleanup
-    * of a crashed streaming attempt */
-  private[graft] def knnDropVersion(spark: org.apache.spark.sql.SparkSession,
-      knnDir: String, v: Long): Unit = {
-    val f = new org.apache.hadoop.fs.Path(knnDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(s"$knnDir/v$v"), true)
-    f.delete(new org.apache.hadoop.fs.Path(s"$knnDir/_commits/v$v"), false)
   }
 
   /** the max committed kNN-graph state */
   def readKnnGraph(spark: org.apache.spark.sql.SparkSession,
       knnDir: String): DataFrame = {
-    val vs = knnVersions(spark, knnDir)
-    require(vs.nonEmpty, s"no kNN graph at $knnDir")
-    spark.read.parquet(s"$knnDir/v${vs.max}")
+    val state = knnState(spark, knnDir)
+    val v = state.latest
+    require(v.nonEmpty, s"no kNN graph at $knnDir")
+    spark.read.parquet(state.dir(v.get).toString)
   }
 
   /** bootstrap: IVF layout for the vectors + the batch graph */
   def knnGraphInit(corpus: DataFrame, idCol: String, vecCol: String,
       cellCol: String, k: Int, ivfDir: String, knnDir: String): Unit = {
     writeIvfIndex(corpus, idCol, vecCol, cellCol, ivfDir)
-    knnWrite(corpus.sparkSession, knnDir,
-      knnGraph(corpus, idCol, vecCol, cellCol, k))
+    val spark = corpus.sparkSession
+    knnWrite(spark, knnDir, knnGraph(corpus, idCol, vecCol, cellCol, k),
+      knnState(spark, knnDir).latest)
   }
 
   /** fold an increment in: new nodes get their top-k, affected old
@@ -327,8 +281,10 @@ object Similarity {
       val rev = cands.join(incIds, Seq("nid"), "left_anti")
         .select(col("nid").as("qid"), col("qid").as("nid"), col("cs"))
       val affected = rev.select("qid").distinct()
+      val state = knnState(spark, knnDir)
+      val parent = state.latest
       val stored =
-        if (knnVersions(spark, knnDir).isEmpty)
+        if (parent.isEmpty)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             org.apache.spark.sql.types.StructType(Seq(
@@ -340,7 +296,7 @@ object Similarity {
                 org.apache.spark.sql.types.DoubleType),
               org.apache.spark.sql.types.StructField("rn",
                 org.apache.spark.sql.types.IntegerType))))
-        else readKnnGraph(spark, knnDir)
+        else spark.read.parquet(state.dir(parent.get).toString)
       val repaired = stored.select("qid", "nid", "cs")
         .join(affected, Seq("qid"), "left_semi")
         .union(rev)
@@ -350,7 +306,7 @@ object Similarity {
         untouched.select("qid", "nid", "cs", "rn")
           .union(repaired.select("qid", "nid", "cs", "rn"))
           .union(newEdges.select("qid", "nid", "cs", "rn"))
-          .stageBoundary, version, vacuumOld)
+          .stageBoundary, parent, version, vacuumOld)
     } finally Await.ready(ivfF, Duration.Inf)
     // knnWrite succeeded — now surface an append failure, if any
     Await.result(ivfF, Duration.Inf)
@@ -387,6 +343,10 @@ object Similarity {
       cellCol: String, k: Int, numCells: Int,
       sampleRows: Int = 4096, seed: Long = 42L,
       version: Option[Long] = None): Unit = {
+    // a committed version is never rewritten: refuse before the IVF is
+    val state = knnState(spark, knnDir)
+    require(version.forall(v => !state.committed.contains(v)),
+      s"kNN state version ${version.get} is already committed at $knnDir")
     val vecs = spark.read.parquet(ivfDir).select(col(idCol), col(vecCol))
       .stageBoundary // sever from the files the rewrite replaces
     val centroids = trainCentroidsKMeansPP(vecs, idCol, vecCol,
@@ -395,8 +355,8 @@ object Similarity {
       .stageBoundary
     writeIvfIndex(recelled, idCol, vecCol, cellCol, ivfDir)
     writeCentroids(spark, ivfDir, centroids)
-    knnWrite(spark, knnDir,
-      knnGraph(recelled, idCol, vecCol, cellCol, k), version)
+    knnWrite(spark, knnDir, knnGraph(recelled, idCol, vecCol, cellCol, k),
+      state.latest, version)
   }
 
   /** Materialize the IVF index layout: the corpus written as parquet

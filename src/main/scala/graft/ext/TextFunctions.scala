@@ -400,41 +400,26 @@ object TextFunctions {
   // candidate set) holds across ANY sequence of increments, so the
   // final support-threshold answer still equals a plain GROUP BY.
   //
-  // State layout: `stateDir/s<version>/` parquet (token, w) + `_n`
-  // text file (total tokens), made visible by a `_commits/s<version>`
-  // marker (the repo's marker protocol). Readers resolve the max
-  // committed version; a replayed version number is a committed no-op
-  // — that makes the streaming face idempotent without a ledger.
+  // State: `stateDir/s<version>/` parquet (token, w) + `_n` text file
+  // (total tokens), versioned through [[graft.Commit.Versions]]; a
+  // replayed version number is a committed no-op — that makes the
+  // streaming face idempotent without a ledger.
 
-  private def hhFs(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def hhCommitted(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): Seq[Long] = {
-    val cm = new org.apache.hadoop.fs.Path(s"$stateDir/_commits")
-    val f = hhFs(spark, stateDir)
-    if (!f.exists(cm)) Seq.empty
-    else f.listStatus(cm).map(_.getPath.getName)
-      .filter(_.startsWith("s")).map(_.drop(1).toLong).toSeq
-  }
+  private def hhVersions(spark: org.apache.spark.sql.SparkSession,
+      stateDir: String) =
+    new graft.Commit.Versions(graft.Commit.fs(spark, stateDir), stateDir,
+      "s", "heavy-hitter state")
 
   /** (candidates, total tokens) of the max committed state version —
     * (empty, 0) before the first increment */
   def heavyHitterState(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): (Map[String, Long], Long) = {
-    val versions = hhCommitted(spark, stateDir)
-    if (versions.isEmpty) return (Map.empty, 0L)
-    val dir = s"$stateDir/s${versions.max}"
-    val rows = spark.read.parquet(dir).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val f = hhFs(spark, stateDir)
-    val in = f.open(new org.apache.hadoop.fs.Path(s"$dir/_n"))
-    // first field only: the boilerplate family appends a doc count
-    val n = try scala.io.Source.fromInputStream(in).mkString.trim
-      .split("\\s+")(0).toLong
-    finally in.close()
-    (rows, n)
+    val state = hhVersions(spark, stateDir)
+    state.latest.fold((Map.empty[String, Long], 0L)) { v =>
+      val rows = spark.read.parquet(state.dir(v).toString).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      (rows, readHhMeta(spark, stateDir)._1)
+    }
   }
 
   /** fold an increment into the sketch state; `version` defaults to
@@ -445,16 +430,16 @@ object TextFunctions {
       textCol: String, stateDir: String, sketchK: Int = 1024,
       version: Option[Long] = None): Unit = {
     val spark = increment.sparkSession
-    import spark.implicits._
-    val committed = hhCommitted(spark, stateDir)
-    val v = version.getOrElse(if (committed.isEmpty) 0L else committed.max + 1)
-    if (committed.contains(v)) return
+    val state = hhVersions(spark, stateDir)
+    val v = state.next(version)
+    if (state.replayed(v)) return
+    val parent = state.latest
     val tok = increment.select(explode(tokens(col(textCol))).as("__w"))
     val (inc, nInc) = sketchOf(tok)(sketchK)
     val (prev, nPrev) = heavyHitterState(spark, stateDir)
     val merged = graft.functions.MisraGries.merge(prev, inc, sketchK)
-    writeHhState(spark, stateDir, v, merged, (nPrev + nInc).toString,
-      committed)
+    writeHhState(spark, stateDir, v, parent, merged,
+      (nPrev + nInc).toString)
   }
 
   /** Boilerplate LINES by document frequency (the RefinedWeb/CCNet
@@ -513,10 +498,10 @@ object TextFunctions {
       textCol: String, stateDir: String, sketchK: Int = 1024,
       version: Option[Long] = None): Unit = {
     val spark = increment.sparkSession
-    import spark.implicits._
-    val committed = hhCommitted(spark, stateDir)
-    val v = version.getOrElse(if (committed.isEmpty) 0L else committed.max + 1)
-    if (committed.contains(v)) return
+    val state = hhVersions(spark, stateDir)
+    val v = state.next(version)
+    if (state.replayed(v)) return
+    val parent = state.latest
     val dl = increment.select(explode(array_distinct(
       split(col(textCol), "\n", -1))).as("__w"))
     val (inc, nInc) = sketchOf(dl)(sketchK)
@@ -527,8 +512,8 @@ object TextFunctions {
       (p._1, meta._1, meta._2)
     }
     val merged = graft.functions.MisraGries.merge(prev, inc, sketchK)
-    writeHhState(spark, stateDir, v, merged,
-      s"${nPrev + nInc} ${docsPrev + docsInc}", committed)
+    writeHhState(spark, stateDir, v, parent, merged,
+      s"${nPrev + nInc} ${docsPrev + docsInc}")
   }
 
   /** heavy boilerplate lines from the PERSISTED state: isin recount of
@@ -555,34 +540,27 @@ object TextFunctions {
     * family) reads as docs = 0 */
   private def readHhMeta(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): (Long, Long) = {
-    val versions = hhCommitted(spark, stateDir)
-    if (versions.isEmpty) return (0L, 0L)
-    val f = hhFs(spark, stateDir)
-    val in = f.open(new org.apache.hadoop.fs.Path(
-      s"$stateDir/s${versions.max}/_n"))
-    val parts = try scala.io.Source.fromInputStream(in).mkString.trim
-      .split("\\s+") finally in.close()
-    (parts(0).toLong, if (parts.length > 1) parts(1).toLong else 0L)
+    val state = hhVersions(spark, stateDir)
+    state.latest.fold((0L, 0L)) { v =>
+      val in = graft.Commit.fs(spark, stateDir)
+        .open(new org.apache.hadoop.fs.Path(state.dir(v), "_n"))
+      val parts = try scala.io.Source.fromInputStream(in).mkString.trim
+        .split("\\s+") finally in.close()
+      (parts(0).toLong, if (parts.length > 1) parts(1).toLong else 0L)
+    }
   }
 
   private def writeHhState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, v: Long, merged: Map[String, Long],
-      meta: String, committed: Seq[Long]): Unit = {
+      stateDir: String, v: Long, parent: Option[Long],
+      merged: Map[String, Long], meta: String): Unit = {
     import spark.implicits._
-    val dir = s"$stateDir/s$v"
-    merged.toSeq.toDF("token", "w")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val f = hhFs(spark, stateDir)
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$dir/_n"), true)
-    try out.write(meta.getBytes("UTF-8"))
-    finally out.close()
-    val m = new org.apache.hadoop.fs.Path(s"$stateDir/_commits/s$v")
-    f.mkdirs(m.getParent)
-    f.create(m, true).close()
-    committed.filter(_ < v).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/s$old"), true)
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/s$old"),
-        false)
+    hhVersions(spark, stateDir).publish(v, parent) { tmp =>
+      merged.toSeq.toDF("token", "w")
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val out = graft.Commit.fs(spark, stateDir)
+        .create(new org.apache.hadoop.fs.Path(tmp, "_n"), true)
+      try out.write(meta.getBytes("UTF-8"))
+      finally out.close()
     }
   }
 

@@ -914,7 +914,7 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
     } else {
       // distinct tables: both rewrites read pre-statement snapshots
       // (srcT/sinkT bound above, pairs/numbered checkpointed) and swap
-      // DIFFERENT tables, each under its own two-rename crash marker —
+      // DIFFERENT tables, each through its own crash-safe swap —
       // overlap them (r16, guide §2.6; the r15 verdict: per-table swaps
       // are crash-safe independently)
       import scala.concurrent.{Await, ExecutionContext, Future}

@@ -40,8 +40,8 @@ final class BatchLedger(spark: SparkSession, ledgerRoot: String,
   private def fs(p: HPath): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def marker(batchId: Long) =
-    new HPath(s"$ledgerRoot/_applied/b$batchId")
+  private val markers = new graft.Commit.Markers(
+    fs(new HPath(ledgerRoot)), new HPath(s"$ledgerRoot/_applied"))
 
   private def stagingRoot(batchId: Long) =
     new HPath(s"$ledgerRoot/_staging/b$batchId")
@@ -53,10 +53,7 @@ final class BatchLedger(spark: SparkSession, ledgerRoot: String,
     s"$ledgerRoot/_staging/b$batchId/$i"
   }
 
-  def applied(batchId: Long): Boolean = {
-    val m = marker(batchId)
-    fs(m).exists(m)
-  }
+  def applied(batchId: Long): Boolean = markers.has(s"b$batchId")
 
   private def prefix(batchId: Long) = s"b$batchId-"
 
@@ -119,10 +116,5 @@ final class BatchLedger(spark: SparkSession, ledgerRoot: String,
     fs(sr).delete(sr, true)
   }
 
-  def commit(batchId: Long): Unit = {
-    val m = marker(batchId)
-    val f = fs(m)
-    f.mkdirs(m.getParent)
-    f.create(m, true).close()
-  }
+  def commit(batchId: Long): Unit = markers.create(s"b$batchId")
 }

@@ -498,26 +498,29 @@ object EdgeStream {
       ivfDir: String, knnDir: String): Unit = {
     val spark = batch.sparkSession
     val ledger = new BatchLedger(spark, knnDir, Seq(ivfDir))
-    if (ledger.applied(batchId)) return
-    ledger.begin(batchId)
-    graft.ext.Similarity.knnDropVersion(spark, knnDir, batchId)
-    if (!batch.isEmpty) {
-      graft.ext.Similarity.knnGraphIncrement(batch, idCol, vecCol,
-        cellCol, k, ivfDir, knnDir, version = Some(batchId),
-        ivfWriter = Some { rows =>
-          rows.write.mode("overwrite").partitionBy(cellCol)
-            .parquet(ledger.stagingFor(batchId, ivfDir))
-          ledger.publish(batchId)
-        },
-        // the previous state version survives until THIS batch's
-        // ledger marker lands — see knnWrite's crash-window note
-        vacuumOld = false)
+    val state = graft.ext.Similarity.knnState(spark, knnDir)
+    if (!ledger.applied(batchId)) {
+      ledger.begin(batchId)
+      state.drop(batchId) // a crashed attempt's version, committed or not
+      if (!batch.isEmpty) {
+        graft.ext.Similarity.knnGraphIncrement(batch, idCol, vecCol,
+          cellCol, k, ivfDir, knnDir, version = Some(batchId),
+          ivfWriter = Some { rows =>
+            rows.write.mode("overwrite").partitionBy(cellCol)
+              .parquet(ledger.stagingFor(batchId, ivfDir))
+            ledger.publish(batchId)
+          },
+          // the previous state version survives until THIS batch's
+          // ledger marker lands — see knnWrite's crash-window note
+          vacuumOld = false)
+      }
+      ledger.commit(batchId)
     }
-    ledger.commit(batchId)
     // Vacuum keys on the max COMMITTED version, not batchId: an empty
     // micro-batch writes no version batchId, and vacuuming below the
-    // batchId would then delete every surviving state version.
-    graft.ext.Similarity.knnVacuumStale(spark, knnDir)
+    // batchId would then delete every surviving state version. A
+    // replayed batch runs it too, finishing a vacuum a crash cut short.
+    state.latest.foreach(state.vacuumBelow)
   }
 
   /** Streaming boilerplate-line mining: the line-sketch face of
@@ -764,7 +767,7 @@ object EdgeStream {
     * the streaming face of the [[graft.ext.CorpusOverlap]] family
     * (every other incremental family has one): each micro-batch of
     * documents folds into the persisted corpus sketch at `sketchPath`
-    * through the family's crash-safe two-rename merge, and the batch's
+    * through the family's swap-published merge, and the batch's
     * one-row overlap estimate against the PRE-batch sketch ("how much
     * of this shard has the corpus already seen") goes to
     * `sink(estimate, batchId)`. At 100 TB the per-batch cost is one
@@ -778,7 +781,7 @@ object EdgeStream {
     * The one replay hazard is the SCREEN: a crash between merge and
     * commit would leave the replay estimating against a sketch that
     * already absorbed the batch (containment reads ~inflated). So the
-    * pre-batch sketch is snapshotted — rename-committed — BEFORE the
+    * pre-batch sketch is snapshotted — swap-published — BEFORE the
     * merge, and the screen always reads the snapshot: a replay at any
     * crash point reproduces the sink row exactly. Applied batches'
     * snapshots are swept at the head of later batches.
@@ -857,8 +860,7 @@ object EdgeStream {
     if (ledger.applied(batchId)) return
     val batch = batch0.stageBoundary
     if (batch.count() == 0) { ledger.commit(batchId); return }
-    val fs = new HPath(sketchPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.Commit.fs(spark, sketchPath)
     // a merge that crashed mid-swap leaves the live dir possibly absent
     // until the family's recovery runs — run it BEFORE the existence
     // checks below, or the pre-batch snapshot would silently record an
@@ -876,21 +878,20 @@ object EdgeStream {
           fs.delete(st.getPath, true)
       }
 
-    // pre-batch snapshot, rename-committed BEFORE the merge: the
+    // pre-batch snapshot, swapped in BEFORE the merge: the
     // replay-stable history side of the screen. k rows — copying it is
     // O(k), not O(corpus)
-    val pre = new HPath(s"$sketchPath._pre/b$batchId")
-    if (!fs.exists(pre)) {
-      val tmp = new HPath(s"$sketchPath._pre/b${batchId}__tmp")
-      fs.delete(tmp, true)
-      val hist =
-        if (fs.exists(new HPath(sketchPath)))
-          spark.read.schema("h LONG").parquet(sketchPath)
-        else spark.range(0).select(col("id").as("h"))
-      hist.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      fs.mkdirs(pre.getParent)
-      require(fs.rename(tmp, pre), s"kmv stream: cannot commit $pre")
-    }
+    val snap = graft.Commit.Swap.suffixed(s"$sketchPath._pre/b$batchId")
+    val pre = snap.dst
+    graft.Commit.recover(fs, snap)
+    if (!fs.exists(pre))
+      graft.Commit.swap(fs, snap) {
+        val hist =
+          if (fs.exists(new HPath(sketchPath)))
+            spark.read.schema("h LONG").parquet(sketchPath)
+          else spark.range(0).select(col("id").as("h"))
+        hist.coalesce(1).write.mode("overwrite").parquet(snap.tmp.toString)
+      }
 
     if (fs.exists(new HPath(sketchPath)))
       graft.ext.CorpusOverlap.mergeKmvSketch(batch, textCol, sketchPath, k)
