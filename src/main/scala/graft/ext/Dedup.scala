@@ -84,76 +84,9 @@ object Dedup {
     */
   val DefaultMaxShingleFreq = 1000
 
-  /** Exact n-gram Jaccard similarity join: all pairs (a<b) with
-    * jaccard >= minJaccard. Shuffles on the shingle key; a hot shingle
-    * fans out quadratically — so shingles in more than `maxShingleFreq`
-    * docs are suppressed by default (stopword-shingle suppression; both
-    * intersection and sizes see the same capped universe, keeping the
-    * jaccard internally consistent).
-    */
-  /** Edit-distance near-dup pairs — the exact complement to the
-    * shingle family: Levenshtein ≤ d certifies "differs by at most d
-    * character edits" (typo-level variants, template fills), which
-    * low-Jaccard pairs can satisfy and high-Jaccard pairs can violate.
-    *
-    * Blocking is Ed-Join-style PREFIX FILTERING over character
-    * q-grams, composed with the length window (|len(a) − len(b)| ≤ d
-    * is a hard Levenshtein lower bound): one edit destroys at most q
-    * of a string's q-grams, so if ed(a,b) ≤ d then at most q·d
-    * distinct q-grams of `a` can be absent from `b` — under ANY fixed
-    * total order on the gram universe, keeping each doc's first q·d+1
-    * grams as its PREFIX, two within-distance docs must share a
-    * prefix gram (were the prefixes disjoint, the side whose prefix
-    * ends earlier in the order would have q·d+1 distinct grams
-    * missing from the other — Xiao et al., Ed-Join, VLDB'08).
-    * Candidates are one equi-join on the prefix-gram key — never a
-    * length-bucket cartesian, so near-constant-length corpora
-    * (tweets, code lines) no longer degenerate: same-length docs only
-    * pair when they actually share a selected gram.
-    *
-    * The global order is Ed-Join's df-ascending (rarest first, hash
-    * ties) — the property that keeps TEMPLATED corpora from
-    * degenerating: two docs sharing 90% boilerplate still get nearly
-    * disjoint prefixes, because each doc's unique grams have df 1 and
-    * head its prefix (a corpus-independent pseudo-random order was
-    * measured to hand same-template docs identical prefixes — the
-    * candidate join went quadratic per template on a 100k-doc stress
-    * corpus). The df pass stays cheap by construction: grams travel
-    * as 64-bit hashes everywhere (explode → count → join back → one
-    * per-doc aggregation that sorts ≤len (df, hash) structs and
-    * slices q·d+1 — no strings shuffled, no window). (df, hash) is a
-    * total order on a doc's distinct grams, so the slice needs no
-    * tie handling; hash collisions merely merge two grams into one
-    * blocking key, which can only ADD candidates.
-    *
-    * Completeness needs a doc to HAVE q·d+1 grams: docs shorter than
-    * q·(d+1) chars fall back to an all-pairs bucket over the
-    * ≤ q·(d+1)−1+d -char population (their only possible partners) —
-    * quadratic only over near-empty strings, a bounded universe at
-    * any corpus size. Verification is the codegen'd banded
-    * `levenshtein(a, b, threshold)` (O(d·len), early exit) — both
-    * engines run the same classic DP, so the result is EXACTLY all
-    * pairs at ≤ d, not a candidate superset.
-    */
   /** docs shorter than this can't fill a q·d+1-gram prefix */
   private[ext] def editShortMax(maxDist: Int, q: Int): Int = q * (maxDist + 1) - 1
 
-  /** Per-doc prefix-gram rows (id, len, g, b) for docs long enough to
-    * fill a prefix: the q·d+1 DF-SMALLEST distinct q-grams under the
-    * global (document frequency asc, hash asc) order — Ed-Join's
-    * rarest-first order, which is what keeps templated corpora from
-    * degenerating (docs sharing 90% of their grams still get nearly
-    * disjoint prefixes, because each doc's UNIQUE grams have df 1 and
-    * head its prefix; a pseudo-random hash order instead hands
-    * same-template docs identical prefixes and the candidate join
-    * goes quadratic per template). Grams travel as 64-bit hashes
-    * everywhere — the df aggregate, the join back and the per-doc
-    * min-k (one aggregation: sort the doc's ≤len (df, hash) structs,
-    * slice q·d+1 — no window, no strings shuffled). (df, hash) is a
-    * total order on a doc's distinct grams, so the slice needs no tie
-    * handling. `b` is the width-(d+1) length bucket the candidate
-    * joins compose with the gram key.
-    */
   /** (id, len, g) distinct hashed q-grams of prefix-capable docs */
   private[ext] def editGramRows(df: DataFrame, textCol: String,
       idCol: String, maxDist: Int, q: Int): DataFrame =
@@ -186,6 +119,24 @@ object Dedup {
       .withColumn("b", (col("len") / (maxDist + 1)).cast(LongType))
   }
 
+  /** Per-doc prefix-gram rows (id, len, g, b) for docs long enough to
+    * fill a prefix: the q·d+1 DF-SMALLEST distinct q-grams under the
+    * global (document frequency asc, hash asc) order — Ed-Join's
+    * rarest-first order, which is what keeps templated corpora from
+    * degenerating (docs sharing 90% of their grams still get nearly
+    * disjoint prefixes, because each doc's UNIQUE grams have df 1 and
+    * head its prefix; a pseudo-random hash order instead hands
+    * same-template docs identical prefixes and the candidate join
+    * goes quadratic per template — measured on a 100k-doc stress
+    * corpus). Grams travel as 64-bit hashes everywhere — the df count
+    * and the per-doc min-k (one aggregation: sort the doc's ≤len (df,
+    * hash) structs, slice q·d+1 — no strings shuffled). (df, hash) is a
+    * total order on a doc's distinct grams, so the slice needs no tie
+    * handling; hash collisions merely merge two grams into one
+    * blocking key, which can only ADD candidates. `b` is the
+    * width-(d+1) length bucket the candidate joins compose with the
+    * gram key.
+    */
   private[graft] def editPrefixRows(df: DataFrame, textCol: String,
       idCol: String, maxDist: Int, q: Int): DataFrame = {
     // self-lookup fused into one window pass over the gram shuffle
@@ -208,6 +159,36 @@ object Dedup {
       .withColumn("b", (col("len") / (maxDist + 1)).cast(LongType))
   }
 
+  /** Edit-distance near-dup pairs — the exact complement to the
+    * shingle family: Levenshtein ≤ d certifies "differs by at most d
+    * character edits" (typo-level variants, template fills), which
+    * low-Jaccard pairs can satisfy and high-Jaccard pairs can violate.
+    *
+    * Blocking is Ed-Join-style PREFIX FILTERING over character
+    * q-grams, composed with the length window (|len(a) − len(b)| ≤ d
+    * is a hard Levenshtein lower bound): one edit destroys at most q
+    * of a string's q-grams, so if ed(a,b) ≤ d then at most q·d
+    * distinct q-grams of `a` can be absent from `b` — under ANY fixed
+    * total order on the gram universe, keeping each doc's first q·d+1
+    * grams as its PREFIX, two within-distance docs must share a
+    * prefix gram (were the prefixes disjoint, the side whose prefix
+    * ends earlier in the order would have q·d+1 distinct grams
+    * missing from the other — Xiao et al., Ed-Join, VLDB'08).
+    * Candidates are one equi-join on the prefix-gram key — never a
+    * length-bucket cartesian, so near-constant-length corpora
+    * (tweets, code lines) no longer degenerate: same-length docs only
+    * pair when they actually share a selected gram. The global order
+    * is Ed-Join's df-ascending one ([[editPrefixRows]]).
+    *
+    * Completeness needs a doc to HAVE q·d+1 grams: docs shorter than
+    * q·(d+1) chars fall back to an all-pairs bucket over the
+    * ≤ q·(d+1)−1+d -char population (their only possible partners) —
+    * quadratic only over near-empty strings, a bounded universe at
+    * any corpus size. Verification is the codegen'd banded
+    * `levenshtein(a, b, threshold)` (O(d·len), early exit) — both
+    * engines run the same classic DP, so the result is EXACTLY all
+    * pairs at ≤ d, not a candidate superset.
+    */
   def editDistancePairs(df: DataFrame, textCol: String, idCol: String,
       maxDist: Int, q: Int = 5): DataFrame = {
     require(maxDist >= 1, "maxDist must be >= 1")
@@ -221,17 +202,13 @@ object Dedup {
     val docs0 = df.filter(col(textCol).isNotNull)
       .select(col(idCol).cast(LongType).as("id"), col(textCol).as("t"),
         length(col(textCol)).as("len"))
-    // exact-text collapse to min-id representatives: edit distance is
-    // content-determined, so identical docs are pairwise distance 0 and
-    // share every distance to third strings — a hot boilerplate cluster
-    // of m copies then grams/verifies ONCE instead of inflating the
-    // prefix join by (q·d+1)·m² and running m² identical DPs. The
-    // membership relation is constant-width (md5 fp + two longs) and
-    // reduces to None on a duplicate-free corpus (see [[dupMembership]]
-    // — the rep restriction and expansion are then skipped wholesale)
-    val members = docs0.select(col("id"), md5(col("t")).as("fp"))
-    val dupMemb = dupMembership(members, "fp", DupCollapseCutoff)
-    val docs = repRestrict(docs0, col("id"), dupMemb)
+    // exact-text collapse ([[Collapse]]): a hot boilerplate cluster of
+    // m copies grams and verifies ONCE instead of inflating the prefix
+    // join by (q·d+1)·m² and running m² identical DPs
+    val memb = Collapse.membership(
+      docs0.select(col("id"), md5(col("t")).as("fp")),
+      Collapse.DupCollapseCutoff, "fp")
+    val docs = Collapse.restrict(docs0, col("id"), memb)
     // the length window rides IN the join key (width-d+1 buckets,
     // same + adjacent joins — |len diff| <= d spans at most adjacent
     // buckets): a hot gram (a stop-phrase gram whose hash happens to
@@ -276,35 +253,30 @@ object Dedup {
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
     val texts = docs.select(col("id"), col("t"))
-    val repPairs = candLong.unionByName(candShort).distinct()
-      // keep the banded-DP verify stage wide: levenshtein is CPU-dense
-      // per byte, and the candidate list is small enough that
-      // size-driven AQE coalescing would serialize it (r15; same move
-      // as verifyJaccard)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .join(texts.select(col("id").as("id_a"), col("t").as("t_a")), "id_a")
-      .join(texts.select(col("id").as("id_b"), col("t").as("t_b")), "id_b")
+    val repPairs = editVerified(candLong.unionByName(candShort).distinct(),
+      texts, texts, maxDist)
+    // within-group pairs at distance exactly 0 plus cross-group pairs
+    // copying the rep pair's distance to every member pair
+    Collapse.memberPairs(memb, "dist", editWithin, repPairs)
+  }
+
+  /** identical texts sit at distance exactly 0 */
+  private val editWithin = Collapse.constant("dist", lit(0).cast(IntegerType))
+
+  /** banded-DP verification of (id_a, id_b) candidates against the
+    * (id, t) texts of each side → (id_a, id_b, dist) pairs at ≤
+    * `maxDist`. The candidate list is repartitioned cores-wide first:
+    * levenshtein is CPU-dense per byte, and size-driven AQE coalescing
+    * would serialize the small list (r15; same move as verifyJaccard)
+    */
+  private def editVerified(cand: DataFrame, textsA: DataFrame,
+      textsB: DataFrame, maxDist: Int): DataFrame =
+    cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+      .join(textsA.select(col("id").as("id_a"), col("t").as("t_a")), "id_a")
+      .join(textsB.select(col("id").as("id_b"), col("t").as("t_b")), "id_b")
       .withColumn("dist", levenshtein(col("t_a"), col("t_b"), maxDist))
       .filter(col("dist") >= 0)
       .select(col("id_a"), col("id_b"), col("dist").cast(IntegerType))
-    // within-group pairs at distance exactly 0 plus cross-group pairs
-    // copying the rep pair's distance to every member pair — groups are
-    // disjoint and each member pair maps to exactly one rep pair, so
-    // the union is duplicate-free without a member-level distinct. On a
-    // duplicate-free corpus both legs short-circuit to the rep pairs
-    val expanded = expandOrPass(repPairs, dupMemb, "dist")
-    dupMemb.fold(expanded)(m => withinDist0(m).unionByName(expanded))
-  }
-
-  /** within-group pairs at distance exactly 0 off the duplicates-only
-    * membership — ~empty in a mostly-unique corpus
-    */
-  private def withinDist0(dupMemb: DataFrame): DataFrame =
-    dupMemb.as("m1")
-      .join(dupMemb.as("m2"),
-        col("m1.rep") === col("m2.rep") && col("m1.id") < col("m2.id"))
-      .select(col("m1.id").as("id_a"), col("m2.id").as("id_b"),
-        lit(0).cast(IntegerType).as("dist"))
 
   /** Cross-corpus edit-distance matching (fuzzy record linkage): every
     * (left, right) pair within Levenshtein `maxDist` — match a corpus
@@ -370,15 +342,7 @@ object Dedup {
       .unionByName(shortLeg(l, r, flip = false))
       .unionByName(shortLeg(r, l, flip = true))
       .distinct()
-      // wide DP verify under size-driven AQE coalescing (r15; same
-      // move as editDistancePairs)
-      .repartition(left.sparkSession.sparkContext.defaultParallelism)
-    cand
-      .join(l.select(col("id").as("id_a"), col("t").as("t_a")), "id_a")
-      .join(r.select(col("id").as("id_b"), col("t").as("t_b")), "id_b")
-      .withColumn("dist", levenshtein(col("t_a"), col("t_b"), maxDist))
-      .filter(col("dist") >= 0)
-      .select(col("id_a"), col("id_b"), col("dist").cast(IntegerType))
+    editVerified(cand, l, r, maxDist)
   }
 
   private def editParams(maxDist: Int, q: Int) =
@@ -400,9 +364,10 @@ object Dedup {
     * corpora refresh selectivity by rebuilding the index — the same
     * retrain story as the kNN quantizer, with the same observer:
     * [[editHotPrefixes]] watches per-(gram, bucket) fan-out and a trip
-    * calls [[rebuildEditIndex]]; completeness never depends on it. ~q·d+1 longs per long doc — the text itself is NOT
-    * duplicated into the index; verification fetches it from the
-    * corpus, semi-joined down to candidates.
+    * calls [[rebuildEditIndex]]; completeness never depends on it.
+    * The index costs ~q·d+1 longs per long doc: the text itself is NOT
+    * duplicated into it, and verification fetches it from the corpus,
+    * semi-joined down to candidates.
     */
   def writeEditIndex(docs: DataFrame, textCol: String, idCol: String,
       path: String, maxDist: Int, q: Int = 5): Unit = {
@@ -513,11 +478,9 @@ object Dedup {
     val members0 = newDocs.filter(col(textCol).isNotNull)
       .select(col(idCol).cast(LongType).as("id"),
         md5(col(textCol)).as("fp"))
-    // duplicates-only membership in one window pass (see
-    // editDistancePairs — same shape, same None short-circuit)
-    val dupMemb = dupMembership(members0, "fp", DupCollapseCutoff)
+    val memb = Collapse.membership(members0, Collapse.DupCollapseCutoff, "fp")
     val incIds = members0.select(col("id").as("__iid"))
-    val repDocs = repRestrict(newDocs, col(idCol).cast(LongType), dupMemb)
+    val repDocs = Collapse.restrict(newDocs, col(idCol).cast(LongType), memb)
     // the increment's prefixes MUST use the index's frozen gram order
     // (see writeEditIndex — mixed orders break prefix completeness)
     val newPrefix = editPrefixFrom(
@@ -598,39 +561,35 @@ object Dedup {
       .join(candIds, col("id") === col("__cid"), "left_semi")
       .dropDuplicates("id") // a replayed rep's text arrives from both
       .stageBoundary
-    val repPairs = candidates
-      // wide DP verify under size-driven AQE coalescing (r15; same
-      // move as editDistancePairs)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .join(texts.select(col("id").as("id_a"), col("t").as("t_a")), "id_a")
-      .join(texts.select(col("id").as("id_b"), col("t").as("t_b")), "id_b")
-      .withColumn("dist", levenshtein(col("t_a"), col("t_b"), maxDist))
-      .filter(col("dist") >= 0)
-      .select(col("id_a"), col("id_b"), col("dist").cast(IntegerType))
-    // expansion: increment reps fan out to their exact-copy members,
-    // history ids and singleton reps pass through (left joins +
-    // coalesce — a verified pair may carry its rep on either side after
-    // the least/greatest reorder). Verified pairs are distinct at rep
-    // level, groups are disjoint, and replayed ids were pruned — so
-    // member pairs are duplicate-free without a final distinct. A
-    // duplicate-free increment short-circuits to the rep pairs
-    val expanded = expandOrPass(repPairs, dupMemb, "dist")
-    dupMemb.fold(expanded)(m => withinDist0(m).unionByName(expanded))
+    val repPairs = editVerified(candidates, texts, texts, maxDist)
+    // both-sides expansion: a verified pair may carry its increment rep
+    // on either side after the least/greatest reorder, and a history id
+    // has no membership row, so it passes through. Replayed ids were
+    // pruned, which keeps the sources disjoint (see [[Collapse]])
+    Collapse.memberPairs(memb, "dist", editWithin, repPairs)
   }
 
+  /** Exact n-gram Jaccard similarity join: all pairs (a<b) with
+    * jaccard >= minJaccard. Shuffles on the shingle key; a hot shingle
+    * fans out quadratically — so shingles in more than `maxShingleFreq`
+    * docs are suppressed by default (stopword-shingle suppression; both
+    * intersection and sizes see the same capped universe, keeping the
+    * jaccard internally consistent).
+    */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
       n: Int, minJaccard: Double,
       maxShingleFreq: Option[Int] = Some(DefaultMaxShingleFreq)): DataFrame = {
-    val (repPairs, dupMemb) =
+    val (repPairs, memb) =
       jaccardRepPairs(df, textCol, idCol, n, minJaccard, maxShingleFreq)
-    // cross-set member pairs copy the rep pair's jaccard (identical
-    // sets); each unordered doc pair maps to exactly ONE rep pair and
-    // groups are disjoint, so the union needs no member-level distinct.
-    // A duplicate-free corpus short-circuits to the rep pairs
-    val expanded = expandOrPass(repPairs, dupMemb, "jaccard")
-    dupMemb.fold(expanded)(m =>
-      withinSetPairs(m, minJaccard).unionByName(expanded))
+    // cross-set member pairs copy the rep pair's jaccard (identical sets)
+    Collapse.memberPairs(memb, "jaccard", jaccardWithin(minJaccard), repPairs)
   }
+
+  /** identical shingle sets sit at jaccard exactly 1.0 — no
+    * verification; a degenerate τ>1 constant-folds the groups away
+    */
+  private def jaccardWithin(minJaccard: Double) =
+    Collapse.constant("jaccard", lit(1.0), lit(1.0) >= minJaccard)
 
   /** Collapsed near-dup CLUSTER edges: rep-level verified jaccard pairs
     * plus spanning-star (rep, member) edges for threshold-qualifying
@@ -644,17 +603,9 @@ object Dedup {
   def ngramJaccardClusterEdges(df: DataFrame, textCol: String,
       idCol: String, n: Int, minJaccard: Double,
       maxShingleFreq: Option[Int] = Some(DefaultMaxShingleFreq)): DataFrame = {
-    val (repPairs, dupMemb) =
+    val (repPairs, memb) =
       jaccardRepPairs(df, textCol, idCol, n, minJaccard, maxShingleFreq)
-    // same qualification gate as withinSetPairs: identical sets sit at
-    // jaccard exactly 1.0 (degenerate τ>1 constant-folds to empty); a
-    // duplicate-free corpus has no stars to add
-    dupMemb.fold(repPairs.select("id_a", "id_b")) { m =>
-      val stars = m.filter(col("id") =!= col("rep"))
-        .select(col("rep").as("id_a"), col("id").as("id_b"))
-        .filter(lit(1.0) >= minJaccard)
-      repPairs.select("id_a", "id_b").unionByName(stars)
-    }
+    Collapse.clusterEdges(memb, jaccardWithin(minJaccard), repPairs)
   }
 
   /** shared core of the exact-jaccard family: (rep-level verified
@@ -680,25 +631,17 @@ object Dedup {
     // zero pairs. Collapsed, copy count cannot evict a page's shingles
     // (the page contributes ONE row per shingle), and within-set pairs
     // bypass candidate generation entirely — identical sets need no
-    // shared-shingle evidence
-    // constant-width (id, fp) rows: the sorted shingle arrays never
-    // materialize past the map side. One window pass over fp yields the
-    // duplicates-only membership (keyed is referenced exactly once, so
-    // only the tiny dup relation needs a boundary — and the boundary
-    // reduces to None on a duplicate-free corpus, see [[dupMembership]]);
-    // the rep restriction below is an anti-join against non-rep
-    // duplicate ids — never a corpus-size semi-join against the
-    // distinct-set relation, and skipped entirely at zero duplicates
+    // shared-shingle evidence. Constant-width (id, fp) rows: the sorted
+    // shingle arrays never materialize past the map side
     val keyed = df.select(col(idCol).as("id"),
         array_sort(hashedShingles(col(textCol), n)).as("shs"))
       .filter(size(col("shs")) > 0)
-      .select(col("id"), struct(xxhash64(col("shs")).as("h1"),
-        xxhash64(reverse(col("shs"))).as("h2")).as("fp"))
-    val dupMemb = dupMembership(keyed, "fp")
+      .select(col("id"), Collapse.arrayKey(col("shs")).as("fp"))
+    val memb = Collapse.membership(keyed, 0L, "fp")
     // representative shingles re-derive from the raw docs (the arrays
-    // are roughly the corpus — never cached; see lshCollapse); docs
+    // are roughly the corpus — never cached; see bandRowsFp); docs
     // with empty shingle sets explode to nothing either way
-    var sh = repRestrict(df, col(idCol), dupMemb)
+    var sh = Collapse.restrict(df, col(idCol), memb)
       .select(col(idCol).as("id"),
         explode(hashedShingles(col(textCol), n)).as("sh"))
       // keyed cores-wide repartition (r15): the shingle relation's MAP
@@ -736,7 +679,7 @@ object Dedup {
           (col("sz_a") + col("sz_b") - col("inter")).cast(DoubleType))
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard")
-    (repPairs, dupMemb)
+    (repPairs, memb)
   }
 
   /** MinHash signature column: for perm i, min over shingles of
@@ -759,239 +702,19 @@ object Dedup {
     * bands (constant per doc) + the candidate verification — never the
     * full shingle cross join.
     *
-    * Exact shingle-SET duplicates collapse to one representative (the
-    * set's min id) BEFORE the band join. Lossless: jaccard depends only
-    * on the shingle set, so equal-set docs have jaccard 1 with each
-    * other and identical jaccard against every third doc — within-set
-    * pairs are emitted directly at 1.0 and each representative pair
-    * copies unchanged to its member pairs. This removes the classic LSH
-    * hot-bucket quadratic: m exact copies of one page land together in
-    * EVERY band bucket (bands×m² candidate-join rows, m² shingle-array
-    * verifications); collapsed, the page bands once and its m²/2 pairs
-    * come out of one O(output) equi-join with no verification at all.
-    * Set identity is a 128-bit sorted-set fingerprint (collision odds
-    * across 1e10 docs ~1e-19 — far below the banding miss probability
-    * the contract already accepts).
+    * Exact shingle-SET duplicates collapse to one representative
+    * BEFORE the band join ([[Collapse]]; within-set pairs sit at 1.0).
+    * This removes the classic LSH hot-bucket quadratic: m exact copies
+    * of one page land together in EVERY band bucket (bands×m²
+    * candidate-join rows, m² verifications); collapsed, the page bands
+    * once and its m²/2 pairs need no verification at all.
     */
   def minhashLshPairs(df: DataFrame, textCol: String, idCol: String,
       n: Int, minJaccard: Double,
       numPerms: Int = 64, bands: Int = 16): DataFrame = {
-    val c = lshCollapse(df, textCol, idCol, n, numPerms, bands)
-    val repPairs = verifyJaccard(df.select(col(idCol), col(textCol)),
-      textCol, idCol, n, minJaccard, selfCandidates(c.repBanded))
-    val expanded = expandOrPass(repPairs, c.dupMemb, "jaccard")
-    c.dupMemb.fold(expanded)(m =>
-      withinSetPairs(m, minJaccard).unionByName(expanded))
-  }
-
-  /** within-set pairs at jaccard exactly 1.0, no verification — off the
-    * duplicates-only membership, so in a mostly-unique corpus this
-    * relation is ~empty and the join costs nothing
-    */
-  private def withinSetPairs(dupMemb: DataFrame, minJaccard: Double): DataFrame =
-    dupMemb.as("m1")
-      .join(dupMemb.as("m2"),
-        col("m1.rep") === col("m2.rep") && col("m1.id") < col("m2.id"))
-      .select(col("m1.id").as("id_a"), col("m2.id").as("id_b"),
-        lit(1.0).as("jaccard"))
-      .filter(lit(1.0) >= minJaccard) // degenerate τ>1 → constant-folds to empty
-
-  /** Expand verified rep-level pairs to member pairs through the
-    * duplicates-only membership: LEFT joins with coalesce fallback —
-    * a singleton rep has no membership row and passes through
-    * unchanged, a duplicate group's rep fans out to every member; the
-    * metric column copies (identical content ⇒ identical metric). One
-    * pass over the pair relation, joins sized by duplicates — never a
-    * corpus-width expansion join. Each unordered member pair maps to
-    * exactly one rep pair and groups are disjoint, so the result is
-    * duplicate-free without a member-level distinct. With
-    * `bothSides = false` only id_a expands (the incremental cross
-    * shape, where id_b is a raw history id).
-    *
-    * Hot-group fanout parallelism: dupMemb is duplicates-only and
-    * checkpointed with measured stats, so these joins broadcast in any
-    * realistic corpus — and a BROADCAST join has no key-skew problem:
-    * a hot rep's m-way fanout streams in place, parallelized by the
-    * pair side's partitioning, never funneled through one reducer.
-    * Past the broadcast threshold (billions of duplicate rows) the SMJ
-    * falls under AQE skew-join splitting. Manual salting was measured
-    * and REJECTED: exploding the membership S× pushes it past the
-    * broadcast threshold, trading the (nonexistent) broadcast skew for
-    * real shuffles — 114→166 s on the m=20k StressCollapse wing.
-    */
-  /** Below this many duplicate-membership rows the collapse machinery
-    * costs more than it saves AND is provably unnecessary where the
-    * uncollapsed path is output-identical: ≤64 duplicate members means
-    * at most 64²/2 ≈ 2k extra candidate-join rows and verifications in
-    * the legacy shape — noise — while the collapse's boundary, rep
-    * anti-join and expansion joins are fixed per-call latency. The m²
-    * the collapse exists to kill needs HOT groups (StressCollapse's
-    * wings run m = 2k–20k). 64 keeps every duplicate-carrying gate row
-    * (q_dedup_hotcopy_*: ≥75 membership rows by construction) and all
-    * stress wings on the full collapse path, while the sf0.1 bench
-    * corpus's 8 natural duplicate text pairs (16 rows — discovered
-    * r11; the gate corpora carry zero) take the legacy path.
-    */
-  private[ext] val DupCollapseCutoffDefault = 64L
-
-  /** Spec-only override of the cutoff ([[DedupPropertySpec]]'s boundary-
-    * equivalence case drives ONE corpus through BOTH the bypass and the
-    * collapse path and asserts identical pair sets — the proof the
-    * scaladoc above argues in prose). Never set outside tests; consumed
-    * eagerly on the driver at pair-generation time, and the test suite
-    * runs suites sequentially in one forked JVM.
-    */
-  @volatile private[ext] var dupCollapseCutoffForSpec: Option[Long] = None
-
-  private[ext] def DupCollapseCutoff: Long =
-    dupCollapseCutoffForSpec.getOrElse(DupCollapseCutoffDefault)
-
-  /** Duplicates-only membership (id, rep) off constant-width (id,
-    * `fpCol`) rows — ONE window pass over the fingerprint, eagerly
-    * materialized — reduced to None when the duplicate population is
-    * absent or (where the caller may allow it) too small for the
-    * collapse to pay.
-    *
-    * The None probe is one bounded driver decision per pair-generator
-    * call (the same pattern as the 1025-cap bucket list in
-    * [[editDistancePairsIncremental]]). With the membership None the
-    * whole collapse apparatus is skipped: the rep anti-join restricts
-    * nothing, within-group pairs come out of the ordinary
-    * band/prefix/verify path (identical content ⇒ identical keys ⇒
-    * candidate pairs that verify at distance 0 / jaccard 1), and both
-    * expansion joins match nothing. Callers pass `bypassBelow = 0`
-    * when the uncollapsed path is NOT provably output-identical for
-    * nonzero duplicates (the jaccard family: its hot-shingle cap is
-    * defined at representative granularity) and
-    * [[DupCollapseCutoff]] where it is (LSH, simhash, edit distance:
-    * banding and prefix filtering are cap-free, so group members
-    * simply ride the candidate join — Θ(m²) work that is noise below
-    * the cutoff and exactly what the collapse removes above it).
-    */
-  /** Bounded memo of membership probes, keyed on the canonicalized
-    * analyzed plan of the probe's (id, `fpCol`) projection — the same
-    * identity class as the GraphX graph cache. Stacked rows
-    * (q_dedup_clusters_df, q_pipeline_curate_v2) run 2–3 pair
-    * generators over the SAME corpus and re-derived the same census
-    * each time (one window pass + one count job per call — the
-    * +3-jobs-per-run drift JobCount pinned on q_dedup_clusters going
-    * r10→r11). The memo cuts the census to one job per distinct corpus
-    * plan per JVM. Correctness leans on corpus-snapshot immutability:
-    * the engine's tables are read-only parquet snapshots and the
-    * incremental indexes version their directories, so a changed corpus
-    * is a changed plan (and a boundary upstream canonicalizes per-RDD,
-    * so post-boundary plans never falsely collide); a session that
-    * rewrites a parquet path IN PLACE must call
-    * [[clearMembershipMemo]]. Access-ordered, capped at
-    * [[MembershipMemoCap]]; an evicted entry's boundary blocks are
-    * reclaimed by the ContextCleaner once unreferenced (localCheckpoint
-    * storage is GC-tracked, unlike GraphX's explicitly persisted RDDs).
-    * Values are (census count, boundary if materialized): a bypass-side
-    * probe memoizes just the count, and a later lower-`bypassBelow`
-    * caller (the jaccard family probes at 0) upgrades the entry with
-    * the boundary it needs.
-    */
-  private val MembershipMemoCap = 8
-  // keyed on (session id, canonicalized plan): a boundary DataFrame is
-  // bound to the session that checkpointed it, and one JVM can run
-  // several sessions over the same parquet paths (the canonicalized
-  // plans compare equal across sessions) — without the session
-  // component, a restarted session would be served a DataFrame whose
-  // owning session is stopped
-  private type MemoKey =
-    (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-  private val membershipMemo =
-    new java.util.LinkedHashMap[MemoKey, (Long, Option[DataFrame])](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[MemoKey, (Long, Option[DataFrame])])
-          : Boolean = size > MembershipMemoCap
-    }
-  private[ext] def membershipMemoSize: Int =
-    membershipMemo.synchronized(membershipMemo.size)
-  private[ext] def clearMembershipMemo(): Unit =
-    membershipMemo.synchronized(membershipMemo.clear())
-
-  private def dupMembership(keyed: DataFrame, fpCol: String,
-      bypassBelow: Long = 0L): Option[DataFrame] = {
-    def membPlan = {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(fpCol)
-      keyed
-        .withColumn("rep", min(col("id")).over(w))
-        .withColumn("__cnt", count(lit(1)).over(w))
-        .filter(col("__cnt") > 1)
-        .select(col("id"), col("rep"))
-    }
-    val key: MemoKey = (
-      System.identityHashCode(keyed.sparkSession).toString,
-      keyed.select(col("id"), col(fpCol))
-        .queryExecution.analyzed.canonicalized)
-    // probe the PLAN with count(), not isEmpty-on-a-boundary: count is
-    // ONE job (isEmpty's executeTake scales up 1→4→16→… partitions,
-    // paying several job rounds to learn there is nothing), and on the
-    // bypass path the checkpoint never happens at all — only a corpus
-    // with a collapse-worthy duplicate population re-runs the window
-    // into the eager boundary its multi-consumer machinery needs (the
-    // rerun is one constant-width window pass, paid exactly where the
-    // collapse is about to save m² work)
-    val (n, memb) =
-      membershipMemo.synchronized(Option(membershipMemo.get(key))) match {
-        case Some(hit) => hit
-        case None =>
-          val entry = (membPlan.count(), None: Option[DataFrame])
-          membershipMemo.synchronized(membershipMemo.put(key, entry))
-          entry
-      }
-    if (n <= bypassBelow) None
-    else memb.orElse {
-      val df = membPlan.stageBoundary
-      membershipMemo.synchronized(membershipMemo.put(key, (n, Some(df))))
-      Some(df)
-    }
-  }
-
-  /** restrict `df` to group representatives: anti-join away the
-    * non-rep duplicate ids — the identity when the membership is None
-    * (no duplicates), so the join is skipped, not planned
-    */
-  private def repRestrict(df: DataFrame, idC: Column,
-      dupMemb: Option[DataFrame]): DataFrame =
-    dupMemb.fold(df)(m =>
-      df.join(m.filter(col("id") =!= col("rep"))
-          .select(col("id").as("__did")),
-        idC === col("__did"), "left_anti"))
-
-  /** [[expandDupPairs]] with the zero-duplicate short-circuit: an
-    * empty membership makes the expansion provably the identity (both
-    * left joins match nothing, every coalesce takes its fallback), so
-    * the rep pairs pass through directly — `bothSides = false` callers
-    * still get the least/greatest reorder the expansion would have
-    * applied (their id_b is a raw history id that may sort under id_a)
-    */
-  private def expandOrPass(repPairs: DataFrame, dupMemb: Option[DataFrame],
-      metricCol: String, bothSides: Boolean = true): DataFrame =
-    dupMemb match {
-      case Some(m) => expandDupPairs(repPairs, m, metricCol, bothSides)
-      case None if bothSides => repPairs.select("id_a", "id_b", metricCol)
-      case None => repPairs.select(
-        least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col(metricCol))
-    }
-
-  private def expandDupPairs(repPairs: DataFrame, dupMemb: DataFrame,
-      metricCol: String, bothSides: Boolean = true): DataFrame = {
-    val a = repPairs.as("p")
-      .join(dupMemb.as("ma"), col("ma.rep") === col("p.id_a"), "left")
-    val exp = if (bothSides)
-      a.join(dupMemb.as("mb"), col("mb.rep") === col("p.id_b"), "left")
-        .select(coalesce(col("ma.id"), col("p.id_a")).as("__xa"),
-          coalesce(col("mb.id"), col("p.id_b")).as("__xb"),
-          col(metricCol))
-    else
-      a.select(coalesce(col("ma.id"), col("p.id_a")).as("__xa"),
-        col("p.id_b").as("__xb"), col(metricCol))
-    exp.select(least(col("__xa"), col("__xb")).as("id_a"),
-      greatest(col("__xa"), col("__xb")).as("id_b"), col(metricCol))
+    val (c, repPairs) =
+      lshRepPairs(df, textCol, idCol, n, minJaccard, numPerms, bands)
+    Collapse.memberPairs(c.memb, "jaccard", jaccardWithin(minJaccard), repPairs)
   }
 
   /** The near-dedup "doomed" set: ids with at least one verified
@@ -1012,36 +735,17 @@ object Dedup {
   def minhashLshDoomed(df: DataFrame, textCol: String, idCol: String,
       n: Int, minJaccard: Double,
       numPerms: Int = 64, bands: Int = 16): DataFrame = {
-    val c = lshCollapse(df, textCol, idCol, n, numPerms, bands)
-    val repPairs = verifyJaccard(df.select(col(idCol), col(textCol)),
-      textCol, idCol, n, minJaccard, selfCandidates(c.repBanded))
+    val (c, repPairs) =
+      lshRepPairs(df, textCol, idCol, n, minJaccard, numPerms, bands)
     val repDoomed = repPairs.select(col("id_b").as("id"))
-    c.dupMemb.fold(repDoomed)(m =>
-      m.filter(col("id") =!= col("rep")).select(col("id"))
-        .filter(lit(1.0) >= minJaccard)
-        .union(repDoomed))
+    c.memb.fold(repDoomed)(m =>
+      Collapse.nonReps(jaccardWithin(minJaccard)(m)).union(repDoomed))
       .distinct().select(col("id").as(idCol))
   }
 
-  /** ids: one (id) row per doc; dupMemb: (id, rep) rows for members of
-    * MULTI-member exact-shingle-set groups only (rep = the group's min
-    * id) — sized by duplicates, not the corpus, so every downstream
-    * join against it broadcasts in the mostly-unique case; repBanded:
-    * the representatives' (id, band, bandHash) rows.
-    *
-    * The full (id → rep) map is deliberately NOT built: constructing it
-    * costs a corpus×corpus join on the fingerprint and consuming it
-    * costs corpus-size expansion joins, where singleton groups (the
-    * overwhelming majority of any real corpus) carry zero information —
-    * rep pairs pass through expansion unchanged via LEFT joins against
-    * dupMemb with coalesce fallback.
-    */
-  private case class LshCollapsed(ids: DataFrame,
-      dupMemb: Option[DataFrame], repBanded: DataFrame)
-
-  /** Shared core of the collapsed LSH family: band the corpus tagged
-    * with shingle-set fingerprints, collapse each set to its min-id
-    * representative.
+  /** Shared core of the batch LSH faces: the corpus banded with its
+    * shingle-set fingerprints and collapsed to set representatives
+    * ([[Collapse.banded]]), plus the verified rep pairs.
     *
     * (id, shingles) is DERIVED, never persisted: the shingle arrays are
     * roughly the corpus itself, so caching them across passes is the
@@ -1049,46 +753,22 @@ object Dedup {
     * shingles the corpus ONCE (map-only into constant-size band keys);
     * verification re-shingles only the candidate docs.
     */
-  private def lshCollapse(df: DataFrame, textCol: String, idCol: String,
-      n: Int, numPerms: Int, bands: Int): LshCollapsed = {
-    // banding carries only (id, fp, band, bandHash) — constant bytes per
-    // doc; shingle arrays stay out of every shuffle. Materialized once
-    // (localCheckpoint → executor-local storage, ~28 bytes × bands per
-    // doc): the member slice, the rep window and the self-join all read
-    // it without re-running the corpus-wide shingle+signature pipeline
-    val banded = bandRowsFp(df, textCol, idCol, n, numPerms, bands)
-      .stageBoundary
-    // one (fp, id) row per doc — a cheap re-scan of the materialized
-    // banding (band 0 exists for every banded doc)
-    val members = banded.filter(col("band") === 0).select("fp", "id")
-    // duplicates-only membership in ONE window pass (no groupBy+join —
-    // members is referenced once, so it needs no boundary of its own);
-    // singleton docs never enter a membership row at all. The boundary
-    // output is sized by duplicates and reduces to None on a
-    // duplicate-free corpus (see [[dupMembership]])
-    val dupMemb = dupMembership(members, "fp", DupCollapseCutoff)
-    // representative band rows: drop non-rep duplicate members — a
-    // broadcast anti-join against the (tiny) non-rep id set, cheap to
-    // recompute off the checkpointed banding, so no boundary here;
-    // identity (skipped) at zero duplicates
-    val repBanded = repRestrict(banded, col("id"), dupMemb)
-      .select("id", "band", "bandHash")
-    LshCollapsed(members.select("id"), dupMemb, repBanded)
+  private def lshRepPairs(df: DataFrame, textCol: String, idCol: String,
+      n: Int, minJaccard: Double, numPerms: Int,
+      bands: Int): (Collapse.Banded, DataFrame) = {
+    val c = Collapse.banded(bandRowsFp(df, textCol, idCol, n, numPerms, bands),
+      "fp", "id", "band", "bandHash")
+    (c, verifyJaccard(df.select(col(idCol), col(textCol)),
+      textCol, idCol, n, minJaccard, selfCandidates(c.reps).stageBoundary))
   }
 
   /** bucket self-join of representative band rows → distinct candidate
-    * pairs (id_a < id_b), materialized small so the verify side starts
-    * from the checkpointed pair list (the pair set is O(duplicates))
+    * pairs (id_a < id_b), un-materialized: the batch faces checkpoint it
+    * small (the pair set is O(duplicates)) so the verify side starts
+    * from the pair list; the incremental probe unions it with the cross
+    * candidates and checkpoints THAT
     */
   private def selfCandidates(repBanded: DataFrame): DataFrame =
-    selfCandidatesPlan(repBanded).stageBoundary
-
-  /** the un-materialized plan of [[selfCandidates]] — for callers that
-    * immediately fold it into their own boundary (the incremental
-    * probe unions it with the cross candidates and checkpoints THAT;
-    * a second eager materialization in between was pure job latency)
-    */
-  private def selfCandidatesPlan(repBanded: DataFrame): DataFrame =
     repBanded.as("a")
       .join(repBanded.as("b"),
         col("a.band") === col("b.band") &&
@@ -1190,9 +870,7 @@ object Dedup {
     df.select(col(idCol).as("id"),
       array_sort(hashedShingles(col(textCol), n)).as("shs"))
       .filter(size(col("shs")) > 0)
-      .withColumn("fp",
-        struct(xxhash64(col("shs")).as("h1"),
-          xxhash64(reverse(col("shs"))).as("h2")))
+      .withColumn("fp", Collapse.arrayKey(col("shs")))
       .withColumn("sig", graft.functions.MinHashSig(col("shs"), numPerms))
       .select(col("id"), col("fp"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -1220,15 +898,11 @@ object Dedup {
     * The increment gets the same exact-shingle-set collapse as the
     * batch operator: a daily batch carrying m copies of one hot page
     * probes the index and self-joins ONCE for that page instead of m
-    * times (bands×m² rows). Representative pairs expand back to member
-    * pairs by membership joins — history ids, which have no increment
-    * group, pass through unchanged. Replay overlap (an increment doc already
+    * times (bands×m² rows). Replay overlap (an increment doc already
     * present in the index) is pruned at the probe: every pair touching
     * a replayed doc is already produced by the increment side, so index
-    * matches onto increment ids are anti-joined away. That leaves the
-    * three pair sources pairwise disjoint and duplicate-free — the
-    * output needs no final distinct, so nothing ever shuffles at
-    * member-pair (output) granularity, only at rep/candidate scale.
+    * matches onto increment ids are anti-joined away — which keeps the
+    * three pair sources disjoint ([[Collapse]]).
     */
   def minhashLshPairsIncremental(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, corpus: DataFrame, indexPath: String,
@@ -1237,17 +911,8 @@ object Dedup {
       numPerms: Int = 64, bands: Int = 16): DataFrame = {
     val (c, crossPairs, selfPairs) = lshIncProbe(spark, newDocs, corpus,
       indexPath, textCol, idCol, n, minJaccard, numPerms, bands)
-    // expand rep pairs to member pairs. No final distinct: cross pairs
-    // carry a history-only side (each member pair maps to exactly one
-    // rep pair), self pairs span disjoint groups, and within-set pairs
-    // stay inside one group — the three sources are pairwise disjoint
-    // and individually duplicate-free, so the union already is. A
-    // duplicate-free increment short-circuits to the rep pairs
-    val expanded =
-      expandOrPass(crossPairs, c.dupMemb, "jaccard", bothSides = false)
-        .unionByName(expandOrPass(selfPairs, c.dupMemb, "jaccard"))
-    c.dupMemb.fold(expanded)(m =>
-      withinSetPairs(m, minJaccard).unionByName(expanded))
+    Collapse.memberPairs(c.memb, "jaccard", jaccardWithin(minJaccard),
+      selfPairs, Some(crossPairs))
   }
 
   /** Incremental doomed set at representative granularity — the ids an
@@ -1283,13 +948,13 @@ object Dedup {
       indexPath, textCol, idCol, n, minJaccard, numPerms, bands)
     // group verdicts decompose over the duplicates-only membership: the
     // rep's own verdict comes straight off crossPairs (id_a IS the
-    // rep), non-rep members inherit through dupMemb — both inheritance
-    // legs vanish on a duplicate-free increment
+    // rep), non-rep members inherit through the membership — both
+    // inheritance legs vanish on a duplicate-free increment
     val histDoomed =
       if (historyWins) {
         val hitReps = crossPairs.select(col("id_a").as("rep")).distinct()
         val repIds = hitReps.select(col("rep").as("id"))
-        c.dupMemb.fold(repIds)(m => repIds
+        c.memb.fold(repIds)(m => repIds
           .union(m.filter(col("id") =!= col("rep"))
             .join(hitReps, Seq("rep"), "left_semi").select(col("id"))))
       } else {
@@ -1297,17 +962,13 @@ object Dedup {
           .groupBy("rep").agg(min("id_b").as("__hmin"))
         val repIds = hmin.filter(col("__hmin") < col("rep"))
           .select(col("rep").as("id"))
-        c.dupMemb.fold(repIds)(m => repIds
+        c.memb.fold(repIds)(m => repIds
           .union(m.filter(col("id") =!= col("rep"))
             .join(hmin, Seq("rep"))
             .filter(col("__hmin") < col("id")).select(col("id"))))
       }
-    val nonReps = c.dupMemb.fold(histDoomed)(m =>
-      m.filter(col("id") =!= col("rep")).select(col("id"))
-        // degenerate τ>1 → constant-folds to empty
-        .filter(lit(1.0) >= minJaccard)
-        .union(histDoomed))
-    nonReps
+    c.memb.fold(histDoomed)(m =>
+      Collapse.nonReps(jaccardWithin(minJaccard)(m)).union(histDoomed))
       .union(selfPairs.select(col("id_b").as("id")))
       .distinct().select(col("id").as(idCol))
   }
@@ -1326,14 +987,16 @@ object Dedup {
       newDocs: DataFrame, corpus: DataFrame, indexPath: String,
       textCol: String, idCol: String, n: Int, minJaccard: Double,
       numPerms: Int, bands: Int)
-      : (LshCollapsed, DataFrame, DataFrame) = {
+      : (Collapse.Banded, DataFrame, DataFrame) = {
     IndexParams.check(spark, indexPath, bandParams(n, numPerms, bands))
-    val c = lshCollapse(newDocs, textCol, idCol, n, numPerms, bands)
+    val c = Collapse.banded(
+      bandRowsFp(newDocs, textCol, idCol, n, numPerms, bands),
+      "fp", "id", "band", "bandHash")
     // explicit schema: an EMPTY band-partitioned index (bootstrap of the
     // streaming face) has no data files to infer from
     val index = spark.read
       .schema("id LONG, bandHash LONG, band INT").parquet(indexPath)
-    val crossCand = c.repBanded.as("a")
+    val crossCand = c.reps.as("a")
       .join(index.as("b"),
         col("a.band") === col("b.band") &&
           col("a.bandHash") === col("b.bandHash") &&
@@ -1345,7 +1008,7 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
     val candidates = crossCand
-      .unionByName(selfCandidatesPlan(c.repBanded)).distinct().stageBoundary
+      .unionByName(selfCandidates(c.reps)).distinct().stageBoundary
     val repPairs = verifyJaccard(
       corpus.select(col(idCol), col(textCol))
         .unionByName(newDocs.select(col(idCol), col(textCol))),
@@ -1380,11 +1043,6 @@ object Dedup {
       SimHash64(transform(TextFunctions.tokens(col(textCol)),
         tokenHash)).as("simhash"))
 
-  /** SimHash near-dup pairs with hamming distance <= maxHamming, blocked
-    * by 16-bit bands (4 bands: any pair within hamming 3 shares at least
-    * one exact band — pigeonhole), so the join key is a short int, not
-    * the full corpus cross product.
-    */
   /** (id, simhash, band, bandVal) rows — the 4×16-bit pigeonhole
     * banding, shared by the batch self-join, the persisted index, and
     * the incremental probe
@@ -1397,76 +1055,53 @@ object Dedup {
           shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandVal")
 
+  /** SimHash near-dup pairs with hamming distance <= maxHamming, blocked
+    * by 16-bit bands (4 bands: any pair within hamming 3 shares at least
+    * one exact band — pigeonhole), so the join key is a short int, not
+    * the full corpus cross product.
+    */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3,
       tokenHash: Column => Column = XxTokenHash): DataFrame = {
     require(maxHamming < 4, "4 x 16-bit banding guarantees only hamming <= 3")
-    val c = simhashCollapse(df, textCol, idCol, tokenHash)
     // rep-level bucket join + hamming check — hot exact-duplicate
     // clusters (identical fingerprints) band exactly once instead of
     // emitting 4·m² bucket-join rows
-    val repPairs = simhashRepPairs(c.repBanded, maxHamming)
-    // within-group pairs: identical fingerprints, hamming exactly 0 —
-    // off the duplicates-only membership. Cross-group expansion:
-    // distinct groups have distinct fingerprints, so each member pair
-    // maps to exactly one rep pair — the union is duplicate-free
-    // without a member-level distinct. A duplicate-free corpus
-    // short-circuits to the rep pairs
-    val expanded = expandOrPass(repPairs, c.dupMemb, "hamming")
-    c.dupMemb.fold(expanded)(m =>
-      withinHamming0(m).unionByName(expanded))
+    val c = simhashBanded(df, textCol, idCol, tokenHash)
+    Collapse.memberPairs(c.memb, "hamming", simhashWithin,
+      simhashRepPairs(c.reps, maxHamming))
   }
 
-  /** within-group pairs at hamming exactly 0 off the duplicates-only
-    * membership
+  /** the corpus's simhash band rows collapsed to identical-fingerprint
+    * representatives (hamming depends only on the fingerprint, so group
+    * members are pairwise hamming 0 and share every distance to third
+    * docs)
     */
-  private def withinHamming0(dupMemb: DataFrame): DataFrame =
-    dupMemb.as("m1")
-      .join(dupMemb.as("m2"),
-        col("m1.rep") === col("m2.rep") && col("m1.id") < col("m2.id"))
-      .select(col("m1.id").as("id_a"), col("m2.id").as("id_b"),
-        lit(0).as("hamming"))
+  private def simhashBanded(df: DataFrame, textCol: String, idCol: String,
+      tokenHash: Column => Column): Collapse.Banded =
+    Collapse.banded(simhashBandRows(df, textCol, idCol, tokenHash),
+      "simhash", "id", "simhash", "band", "bandVal")
 
-  /** ids: one (id) row per doc; dupMemb: (id, rep) rows for members of
-    * multi-member identical-fingerprint groups ONLY (hamming depends
-    * only on the fingerprint, so group members are pairwise hamming 0
-    * and share every distance to third docs); repBanded: the
-    * representatives' (id, simhash, band, bandVal) rows. Same
-    * duplicates-only layout as [[LshCollapsed]] — no corpus-size
-    * membership map is ever built or joined.
-    */
-  private case class SimhashCollapsed(ids: DataFrame,
-      dupMemb: Option[DataFrame], repBanded: DataFrame)
-
-  private def simhashCollapse(df: DataFrame, textCol: String,
-      idCol: String, tokenHash: Column => Column): SimhashCollapsed = {
-    // materialized once (4 short rows per doc) so the member slice, the
-    // rep restriction and the bucket join all read it without re-running
-    // the corpus-wide tokenize+simhash pass
-    val banded = simhashBandRows(df, textCol, idCol, tokenHash)
-      .stageBoundary
-    val members = banded.filter(col("band") === 0).select("simhash", "id")
-    // duplicates-only membership in one window pass; the rep band rows
-    // are a broadcast anti-join recomputed off the checkpointed banding
-    // (see lshCollapse — same shape, same no-boundary reasoning, same
-    // None short-circuit on a duplicate-free corpus)
-    val dupMemb = dupMembership(members, "simhash", DupCollapseCutoff)
-    val repBanded = repRestrict(banded, col("id"), dupMemb)
-      .select("id", "simhash", "band", "bandVal")
-    SimhashCollapsed(members.select("id"), dupMemb, repBanded)
-  }
+  /** identical fingerprints sit at hamming exactly 0 */
+  private val simhashWithin = Collapse.constant("hamming", lit(0))
 
   /** bucket self-join of representative band rows → verified
-    * (id_a < id_b, hamming) rep pairs; the distinct is candidate-scaled
-    * (two reps can share up to 4 bands)
+    * (id_a < id_b, hamming) rep pairs
     */
   private def simhashRepPairs(repBanded: DataFrame,
       maxHamming: Int): DataFrame =
-    repBanded.as("a")
+    hammingPairs(repBanded.as("a")
       .join(repBanded.as("b"),
         col("a.band") === col("b.band") &&
           col("a.bandVal") === col("b.bandVal") &&
-          col("a.id") < col("b.id"))
+          col("a.id") < col("b.id")), maxHamming)
+
+  /** band matches of `a`/`b`-aliased band rows → (id_a, id_b, hamming)
+    * pairs within `maxHamming`; the distinct is candidate-scaled (two
+    * docs can share up to 4 bands)
+    */
+  private def hammingPairs(matches: DataFrame, maxHamming: Int): DataFrame =
+    matches
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.simhash").as("sh_a"), col("b.simhash").as("sh_b"))
       .distinct()
@@ -1509,39 +1144,23 @@ object Dedup {
       tokenHash: Column => Column = XxTokenHash): DataFrame = {
     require(maxHamming < 4, "4 x 16-bit banding guarantees only hamming <= 3")
     IndexParams.check(spark, indexPath, simhashParams(tokenHash))
-    val c = simhashCollapse(newDocs, textCol, idCol, tokenHash)
+    val c = simhashBanded(newDocs, textCol, idCol, tokenHash)
     // explicit schema: an empty band-partitioned index has no data
     // files to infer from
     val index = spark.read
       .schema("id LONG, simhash LONG, bandVal LONG, band INT")
       .parquet(indexPath)
-    // rep probe of the index, pruned of matches onto replayed increment
-    // ids (the replayed doc's group rep carries an identical fingerprint,
-    // so every pair touching it is already produced by the increment
-    // side). id_a = increment rep, id_b = history-only id
-    val crossPairs = c.repBanded.as("a")
+    // rep probe of the index, pruned of replayed increment ids (their
+    // group rep produces their pairs): id_a = rep, id_b = history id
+    val crossPairs = hammingPairs(c.reps.as("a")
       .join(index.as("b"),
         col("a.band") === col("b.band") &&
           col("a.bandVal") === col("b.bandVal") &&
           col("a.id") =!= col("b.id"))
       .join(c.ids.select(col("id").as("__iid")),
-        col("b.id") === col("__iid"), "left_anti")
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.simhash").as("sh_a"), col("b.simhash").as("sh_b"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-    val selfPairs = simhashRepPairs(c.repBanded, maxHamming)
-    // same three disjoint, individually duplicate-free sources as the
-    // batch operator — no member-level distinct; a duplicate-free
-    // increment short-circuits to the rep pairs
-    val expanded =
-      expandOrPass(crossPairs, c.dupMemb, "hamming", bothSides = false)
-        .unionByName(expandOrPass(selfPairs, c.dupMemb, "hamming"))
-    c.dupMemb.fold(expanded)(m =>
-      withinHamming0(m).unionByName(expanded))
+        col("b.id") === col("__iid"), "left_anti"), maxHamming)
+    Collapse.memberPairs(c.memb, "hamming", simhashWithin,
+      simhashRepPairs(c.reps, maxHamming), Some(crossPairs))
   }
 
   /** Transitive near-duplicate cluster resolution: connected components

@@ -52,11 +52,10 @@ object SemanticDedup {
     // duplicate groups reach the identical transitive closure (same
     // canonical = cluster min id) with O(duplicates) edges instead of
     // O(duplicates²)
-    val (repPairs, _, stars) = Similarity.blockedVecRepPairs(
+    val edges = Similarity.blockedVecClusterEdges(
       celled.select(col(idCol).as("id"), col(vecCol).as("v"),
         col("cell").cast(org.apache.spark.sql.types.LongType).as("blk")),
       minCosine = tau)
-    val edges = repPairs.select("id_a", "id_b").unionByName(stars)
     val clusters = Dedup.resolveClusters(edges, celled, idCol)
     celled.select(col(idCol), col("cell"))
       .join(clusters, idCol)

@@ -462,14 +462,15 @@ object Similarity {
       indexPath: String, newDocs: DataFrame, idCol: String, vecCol: String,
       minCosine: Double): DataFrame = {
     val cents = readCentroids(spark, indexPath)
-    // exact-vector collapse of the increment (see vecCollapse): a
+    // exact-vector collapse of the increment (see vecMembership): a
     // dup-heavy ingest batch probes the index and self-joins at rep
     // granularity; identical vectors assign identical cells, so the
     // rep's cell IS every member's cell and the fp-only group key is
     // block-consistent here
     val raw = newDocs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val (dupMemb, repRaw) = vecCollapse(raw, blockKeyed = false)
-    val inc = assignCells(repRaw, "v", "cell", cents)
+    val memb = vecMembership(raw, blockKeyed = false)
+    val inc = assignCells(Collapse.restrict(raw, col("id"), memb),
+      "v", "cell", cents)
       .stageBoundary
     // partition pruning must be GUARANTEED, not hoped for: a plain
     // equi-join may plan as SMJ scanning every cell directory, and
@@ -486,14 +487,10 @@ object Similarity {
       .select(col(idCol).as("id"), col(vecCol).as("v"),
         col("__cell").cast(IntegerType).as("cell"))
     def verified(cand: DataFrame) = cand
-      .withColumn("cs", cosine(col("va"), col("vb")))
-      .filter(col("cs") >= minCosine && !isnan(col("cs")))
-      .select(col("id_a"), col("id_b"), col("cs"))
-    // cross: increment rep × history id, pruned of history ids that are
-    // replayed increment members (a replayed doc's pairs are produced
-    // by the self/within side — the anti-join replaces the member-level
-    // distinct the pre-collapse shape needed, same as the simhash and
-    // LSH incrementals). id_a = increment rep for the expansion join.
+      .transform(csGate(col("va"), col("vb"), minCosine)).drop("va", "vb")
+    // cross: increment rep × history id, pruned of replayed increment
+    // ids (the increment side produces their pairs, which keeps the
+    // sources disjoint — see [[Collapse]])
     val cross = verified(inc.as("a").join(hist.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") =!= col("b.id"))
       .join(raw.select(col("id").as("__iid")),
@@ -504,13 +501,8 @@ object Similarity {
         col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.v").as("va"), col("b.v").as("vb")))
-    // three disjoint, individually duplicate-free sources — within-
-    // group increment pairs, cross-group increment rep pairs expanded
-    // through both membership sides, and rep × history pairs expanded
-    // through the increment side only (id_b is a real history id)
-    withinVecPairs(raw, dupMemb, minCosine)
-      .unionByName(expandRepPairs(self, dupMemb))
-      .unionByName(expandRepPairs(cross, dupMemb, bothSides = false))
+    Collapse.memberPairs(memb, "cs", vecGroupCs(raw, minCosine), self,
+      Some(cross))
   }
 
   /** int8 scalar quantization of an embedding column: each component
@@ -1199,8 +1191,9 @@ object Similarity {
     *  - `blockCol` given: **exact within blocks** — a distributed
     *    equi-join on the block key (pairs across blocks are by contract
     *    not candidates, matching the reference semantics of a coarse
-    *    quantizer cell). Exact-duplicate vectors collapse to min-id
-    *    representatives first (see `vecCollapse`): a hot page's m
+    *    quantizer cell; a null block pairs with nothing). Exact-
+    *    duplicate vectors collapse to min-id representatives first
+    *    (see `vecMembership`): a hot page's m
     *    verbatim copies cost m membership rows plus the output, never
     *    m² vector-carrying join rows or m² kernel evaluations;
     *  - no block, corpus ≤ [[BroadcastPairLimit]]: exact all pairs via
@@ -1283,8 +1276,7 @@ object Similarity {
         "the benchmark")
     corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
       .crossJoin(broadcast(b))
-      .withColumn("cs", cosine(col("v"), col("bv")))
-      .filter(col("cs") >= minCosine && !isnan(col("cs")))
+      .transform(csGate(col("v"), col("bv"), minCosine))
       .select(col("id"), col("bench_id"), col("cs"))
   }
 
@@ -1303,139 +1295,84 @@ object Similarity {
   private def smallAllPairs(base: DataFrame, minCosine: Double): DataFrame =
     base.repartition(base.sparkSession.sparkContext.defaultParallelism)
       .as("a").join(broadcast(base.as("b")), col("a.id") < col("b.id"))
-      .withColumn("cs", cosine(col("a.v"), col("b.v")))
-      .filter(col("cs") >= minCosine && !isnan(col("cs")))
+      .transform(csGate(col("a.v"), col("b.v"), minCosine))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("cs"))
 
-  /** Exact-vector collapse to min-id representatives — the embedding
-    * face of [[Dedup]]'s content-keyed collapse (edit distance groups
-    * by md5(text), jaccard by the sorted shingle-set fingerprint):
-    * cosine is content-determined, so bit-identical vectors share every
-    * similarity to third vectors, and a hot page's m verbatim copies
-    * (identical embeddings) otherwise inflate the block join by m²
-    * vector-carrying rows and m² kernel evaluations. The group key is
-    * the 128-bit (xxhash64(v), xxhash64(reverse(v))) pair — raw float
-    * bits, so −0.0/0.0 and NaN payloads land in different groups, which
-    * only under-collapses (never wrong). `blockKeyed` folds the block
-    * key into the group: a caller-provided block need not derive from
-    * the vector, and identical vectors in different blocks must NOT
-    * pair. The membership relation is DUPLICATES-ONLY (id, rep) rows —
-    * the full (id → rep) map is never built: it would cost a
-    * corpus×corpus join to construct and corpus-size expansion joins to
-    * consume, where singleton groups carry zero information. Returns
-    * (dupMemb, base restricted to reps).
+  /** Exact-vector census ([[Collapse.membership]], any duplicate
+    * collapses): bit-identical vectors share every similarity to third
+    * vectors, and a hot page's m verbatim copies otherwise inflate the
+    * block join by m² vector-carrying rows and m² kernel evaluations.
+    * The key is [[Collapse.arrayKey]] over raw float bits, so
+    * −0.0/0.0 and NaN payloads land in different groups, which only
+    * under-collapses. `blockKeyed` folds the block key into the group:
+    * a caller-provided block need not derive from the vector, and
+    * identical vectors in different blocks must NOT pair.
     */
-  private def vecCollapse(base: DataFrame, blockKeyed: Boolean)
-      : (DataFrame, DataFrame) = {
-    val keyCols = if (blockKeyed) Seq("blk", "fp") else Seq("fp")
-    val fp = struct(xxhash64(col("v")).as("h1"),
-      xxhash64(reverse(col("v"))).as("h2")).as("fp")
-    val members =
-      if (blockKeyed) base.select(col("id"), col("blk"), fp)
-      else base.select(col("id"), fp)
-    // duplicates-only membership in one window pass (members is
-    // referenced once — no groupBy+join); only the tiny dup relation
-    // is checkpointed
-    val w = Window.partitionBy(keyCols.map(col): _*)
-    val dupMemb = members
-      .withColumn("rep", min(col("id")).over(w))
-      .withColumn("__cnt", count(lit(1)).over(w))
-      .filter(col("__cnt") > 1)
-      .select(col("id"), col("rep"))
-      .stageBoundary
-    val dupIds = dupMemb.filter(col("id") =!= col("rep"))
-      .select(col("id").as("__did"))
-    (dupMemb, base.join(dupIds, col("id") === col("__did"), "left_anti"))
+  private def vecMembership(base: DataFrame,
+      blockKeyed: Boolean): Option[DataFrame] = {
+    val keys = (if (blockKeyed) Seq("blk") else Nil) :+ "fp"
+    Collapse.membership(
+      base.withColumn("fp", Collapse.arrayKey(col("v")))
+        .select(("id" +: keys).map(col): _*),
+      0L, keys: _*)
   }
 
-  /** threshold-qualifying duplicate groups: (__grp = rep id, cs), where
-    * cs is the kernel evaluated ONCE per multi-member group on the
-    * stored vector. cos(v,v) is NOT exactly 1.0 in floating point
-    * (sqrt(n)·sqrt(n) ≠ n), and a zero vector's cosine is NaN — every
-    * pair shape evaluates the same expression on the same bits and
-    * applies the same `>= τ && !isnan` gate, so computing (not
-    * hardcoding 1.0) preserves values and the zero-vector drop exactly.
-    *
-    * The `!isnan` is EXPLICIT everywhere (all five threshold sites):
-    * Spark SQL orders NaN ABOVE every value, so a bare `cs >= τ` lets a
-    * zero embedding pair with its entire cell — pathological for dedup
-    * (one null document would doom every cell-mate). Spec-pinned in
+  /** the threshold gate every cosine pair shape applies: `cs` = the
+    * kernel, kept when ≥ `minCosine` and not NaN. The `!isnan` is
+    * EXPLICIT: Spark SQL orders NaN ABOVE every value, so a bare
+    * `cs >= τ` lets a zero embedding pair with its entire cell (one
+    * null document would doom every cell-mate). Spec-pinned in
     * SemanticDedupSpec against a driver-side IEEE brute force.
     */
-  private def dupGroupCs(base: DataFrame, dupMemb: DataFrame,
-      minCosine: Double): DataFrame =
-    dupMemb.filter(col("id") === col("rep"))
-      .select("id", "rep")
-      .join(base.select(col("id"), col("v")), "id")
-      .withColumn("cs", cosine(col("v"), col("v")))
+  private def csGate(a: Column, b: Column, minCosine: Double)(
+      df: DataFrame): DataFrame =
+    df.withColumn("cs", cosine(a, b))
       .filter(col("cs") >= minCosine && !isnan(col("cs")))
-      .select(col("rep").as("__grp"), col("cs"))
 
-  /** within-group member pairs carrying their group's kernel value.
-    * The kernel joins onto the MEMBER relation before the pair fanout —
-    * qualifying is per-group work; doing it after the self-join would
-    * probe once per OUTPUT pair (measured 6× on the m=20k StressCollapse
-    * wing, 400M pairs)
+  /** Within-group metric of the cosine family ([[Collapse.memberPairs]]'
+    * `groupMetric`): the membership rows of threshold-qualifying groups
+    * with their kernel value `cs`, evaluated ONCE per group on the
+    * rep's stored vector. cos(v,v) is NOT exactly 1.0 in floating point
+    * (sqrt(n)·sqrt(n) ≠ n), and a zero vector's cosine is NaN — every
+    * pair shape evaluates the same expression on the same bits behind
+    * the same [[csGate]], so computing (not hardcoding 1.0) preserves
+    * values and the zero-vector drop exactly.
     */
-  private def withinVecPairs(base: DataFrame, dupMemb: DataFrame,
-      minCosine: Double): DataFrame = {
-    val qual = dupMemb
-      .join(dupGroupCs(base, dupMemb, minCosine),
-        col("rep") === col("__grp"))
+  private def vecGroupCs(base: DataFrame, minCosine: Double)(
+      memb: DataFrame): DataFrame = {
+    val groupCs = memb.filter(col("id") === col("rep")).select("id")
+      .join(base.select(col("id"), col("v")), "id")
+      .transform(csGate(col("v"), col("v"), minCosine))
+      .select(col("id").as("__grp"), col("cs"))
+    memb.join(groupCs, col("rep") === col("__grp"))
       .select(col("id"), col("rep"), col("cs"))
-    qual.as("m1")
-      .join(qual.as("m2"),
-        col("m1.rep") === col("m2.rep") && col("m1.id") < col("m2.id"))
-      .select(col("m1.id").as("id_a"), col("m2.id").as("id_b"),
-        col("m1.cs").as("cs"))
   }
 
-  /** cross-group member pairs copy their rep pair's kernel value — LEFT
-    * joins against the duplicates-only membership with coalesce
-    * fallback (singleton reps pass through unchanged, never a
-    * corpus-width join). Each unordered member pair maps to exactly ONE
-    * rep pair and groups are disjoint, so the expansion is
-    * duplicate-free without a member-level distinct. With
-    * `bothSides = false` only id_a expands (the incremental cross
-    * shape, where id_b is a raw history id).
+  /** rep-level blocked pairs and the (block, vector) census — the
+    * collapsed primitives: [[cosinePairs]] expands them to the
+    * member-pair relation, [[SemanticDedup]] closes over them directly
+    * ([[blockedVecClusterEdges]])
     */
-  private def expandRepPairs(repPairs: DataFrame, dupMemb: DataFrame,
-      bothSides: Boolean = true): DataFrame = {
-    val a = repPairs.as("p")
-      .join(dupMemb.as("ma"), col("ma.rep") === col("p.id_a"), "left")
-    val exp = if (bothSides)
-      a.join(dupMemb.as("mb"), col("mb.rep") === col("p.id_b"), "left")
-        .select(coalesce(col("ma.id"), col("p.id_a")).as("__xa"),
-          coalesce(col("mb.id"), col("p.id_b")).as("__xb"), col("cs"))
-    else
-      a.select(coalesce(col("ma.id"), col("p.id_a")).as("__xa"),
-        col("p.id_b").as("__xb"), col("cs"))
-    exp.select(least(col("__xa"), col("__xb")).as("id_a"),
-      greatest(col("__xa"), col("__xb")).as("id_b"), col("cs"))
-  }
-
-  /** rep-level blocked pairs, membership, and qualifying-group star
-    * edges — the collapsed primitives: [[cosinePairs]] expands them to
-    * the member-pair relation, [[SemanticDedup]] closes over them
-    * directly (a duplicate group is a clique, and connected components
-    * needs only its spanning star — m edges, not m²/2).
-    */
-  private[ext] def blockedVecRepPairs(base: DataFrame, minCosine: Double)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (dupMemb, repBase) = vecCollapse(base, blockKeyed = true)
+  private def blockedVecRepPairs(base: DataFrame, minCosine: Double)
+      : (DataFrame, Option[DataFrame]) = {
+    val memb = vecMembership(base, blockKeyed = true)
+    val repBase = Collapse.restrict(base, col("id"), memb)
     val repPairs = repBase.as("a").join(repBase.as("b"),
         col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
-      .withColumn("cs", cosine(col("a.v"), col("b.v")))
-      .filter(col("cs") >= minCosine && !isnan(col("cs")))
+      .transform(csGate(col("a.v"), col("b.v"), minCosine))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("cs"))
-    // star edges only for groups whose self-cosine passes the
-    // threshold: identical ZERO vectors produce NaN and must not
-    // cluster, exactly as brute force drops their pairs
-    val stars = dupMemb.filter(col("id") =!= col("rep"))
-      .join(dupGroupCs(base, dupMemb, minCosine),
-        col("rep") === col("__grp"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"))
-    (repPairs, dupMemb, stars)
+    (repPairs, memb)
+  }
+
+  /** closure-equivalent edges of the blocked cosine pairs: rep pairs
+    * plus spanning stars of the groups whose self-cosine passes the
+    * threshold (identical ZERO vectors produce NaN and must not
+    * cluster, exactly as brute force drops their pairs)
+    */
+  private[ext] def blockedVecClusterEdges(base: DataFrame,
+      minCosine: Double): DataFrame = {
+    val (repPairs, memb) = blockedVecRepPairs(base, minCosine)
+    Collapse.clusterEdges(memb, vecGroupCs(base, minCosine), repPairs)
   }
 
   /** exact pairs within a block: distributed equi-join on the block key
@@ -1445,9 +1382,8 @@ object Similarity {
     * DISTINCT vectors per block
     */
   private def pairsWithinBlocks(base: DataFrame, minCosine: Double): DataFrame = {
-    val (repPairs, dupMemb, _) = blockedVecRepPairs(base, minCosine)
-    withinVecPairs(base, dupMemb, minCosine)
-      .unionByName(expandRepPairs(repPairs, dupMemb))
+    val (repPairs, memb) = blockedVecRepPairs(base, minCosine)
+    Collapse.memberPairs(memb, "cs", vecGroupCs(base, minCosine), repPairs)
   }
 
   /** SRP auto-blocking: band rows carry only (id, band, cell) — the
@@ -1463,7 +1399,8 @@ object Similarity {
     // collapsed, it bands once and its within pairs bypass candidate
     // generation (recall for them becomes exactly 1 — identical
     // vectors always shared all bands anyway)
-    val (dupMemb, repBase) = vecCollapse(base, blockKeyed = false)
+    val memb = vecMembership(base, blockKeyed = false)
+    val repBase = Collapse.restrict(base, col("id"), memb)
     val banded = repBase
       .select(col("id"), posexplode(SrpBands(col("v"), bits, bands, SrpSeed)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "cell")
@@ -1477,11 +1414,9 @@ object Similarity {
     val repPairs = candidates
       .join(repBase.select(col("id").as("id_a"), col("v").as("va")), "id_a")
       .join(repBase.select(col("id").as("id_b"), col("v").as("vb")), "id_b")
-      .withColumn("cs", cosine(col("va"), col("vb")))
-      .filter(col("cs") >= minCosine && !isnan(col("cs")))
+      .transform(csGate(col("va"), col("vb"), minCosine))
       .select("id_a", "id_b", "cs")
-    withinVecPairs(base, dupMemb, minCosine)
-      .unionByName(expandRepPairs(repPairs, dupMemb))
+    Collapse.memberPairs(memb, "cs", vecGroupCs(base, minCosine), repPairs)
   }
 
   // ---- product quantization (PQ / IVF-PQ) ----

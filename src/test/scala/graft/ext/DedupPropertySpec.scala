@@ -375,8 +375,17 @@ class DedupPropertySpec extends SparkSpec {
   }
 
   private def withCutoff[T](c: Option[Long])(f: => T): T = {
-    Dedup.dupCollapseCutoffForSpec = c
-    try f finally Dedup.dupCollapseCutoffForSpec = None
+    Collapse.dupCollapseCutoffForSpec = c
+    try f finally Collapse.dupCollapseCutoffForSpec = None
+  }
+
+  /** 70 null-text docs plus 2 identical docs: a null key is no
+    * duplicate, so no path may pair the null-text docs with each other
+    */
+  private def nullTextCorpus: Seq[(Long, String)] = {
+    val t = "identical body text shared by exactly two documents here"
+    (0 until 70).map(i => (1000L + i, null: String)) ++
+      Seq((2000L, t), (2001L, t))
   }
 
   test("DupCollapseCutoff boundary: bypass and collapse paths emit " +
@@ -384,47 +393,76 @@ class DedupPropertySpec extends SparkSpec {
     "sides of the cutoff") {
     val s = spark
     import s.implicits._
-    for (mB <- Seq(24, 25)) {
-      val rows = boundaryCorpus(mB)
+    // (label, corpus, history ids of the incremental faces, membership
+    // rows, minimum pairs, minimum doomed ids)
+    val inputs = Seq(24, 25).map { mB =>
+      (s"mB=$mB", boundaryCorpus(mB), Set(200L, 300L, 301L), 40L + mB,
+        40 * 39 / 2 + mB * (mB - 1) / 2, 39 + mB - 1)
+    } :+ (("null text", nullTextCorpus, (1000L until 1010L).toSet, 2L, 1, 1))
+    def triples(d: org.apache.spark.sql.DataFrame): Set[Any] =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.get(2)): Any).toSet
+    for ((label, rows, histIds, wantMemb, minPairs, minDoomed) <- inputs) {
       val df = rows.toDF("id", "t").cache()
       // pin the construction to its intended side of the 64 cutoff:
       // membership rows = members of multi-member identical-text groups
-      val memb = df.groupBy(md5(col("t"))).agg(count(lit(1)).as("m"))
+      val memb = df.filter(col("t").isNotNull)
+        .groupBy(md5(col("t"))).agg(count(lit(1)).as("m"))
         .filter(col("m") > 1).agg(sum("m")).head().getLong(0)
-      assert(memb == 40L + mB, s"construction drifted: $memb rows")
-      val side = if (memb <= Dedup.DupCollapseCutoffDefault) "bypass"
+      assert(memb == wantMemb, s"$label: construction drifted: $memb rows")
+      val side = if (memb <= Collapse.DupCollapseCutoffDefault) "bypass"
         else "collapse"
+      // the incremental faces probe indexes built from the history
+      // split; every duplicate group sits in the increment, so the
+      // increment's census equals the corpus's
+      val hist = rows.filter(r => histIds(r._1)).toDF("id", "t")
+      val inc = rows.filterNot(r => histIds(r._1)).toDF("id", "t").cache()
+      val dir = java.nio.file.Files.createTempDirectory("cutoff_idx").toString
+      Dedup.writeBandIndex(hist, "t", "id", s"$dir/band", n = 3)
+      Dedup.writeSimhashIndex(hist, "t", "id", s"$dir/sim")
+      Dedup.writeEditIndex(hist, "t", "id", s"$dir/edit", maxDist = 2)
       // each operator under: default routing, forced bypass
       // (cutoff = MaxValue), forced collapse (cutoff = 0) — the three
       // runs must be set-identical, which upgrades the scaladoc's
       // output-identity argument from prose to an executed proof
-      val ops: Seq[(String, () => Set[Any])] = Seq(
-        ("lsh", () => Dedup.minhashLshPairs(df, "t", "id",
-          n = 3, minJaccard = 0.7)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)): Any)
-          .toSet),
-        ("simhash", () => Dedup.simhashPairs(df, "t", "id", maxHamming = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)): Any)
-          .toSet),
-        ("edit", () => Dedup.editDistancePairs(df, "t", "id", maxDist = 2)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)): Any)
-          .toSet))
-      for ((opName, run) <- ops) {
+      val ops: Seq[(String, Int, () => Set[Any])] = Seq(
+        ("lsh", minPairs, () => triples(Dedup.minhashLshPairs(df, "t", "id",
+          n = 3, minJaccard = 0.7))),
+        ("simhash", minPairs, () =>
+          triples(Dedup.simhashPairs(df, "t", "id", maxHamming = 3))),
+        ("edit", minPairs, () =>
+          triples(Dedup.editDistancePairs(df, "t", "id", maxDist = 2))),
+        ("lsh incremental", minPairs, () =>
+          triples(Dedup.minhashLshPairsIncremental(s, inc, hist,
+            s"$dir/band", "t", "id", n = 3, minJaccard = 0.7))),
+        ("lsh doomed incremental", minDoomed, () =>
+          Dedup.minhashLshDoomedIncremental(s, inc, hist, s"$dir/band",
+            "t", "id", n = 3, minJaccard = 0.7)
+            .collect().map(r => r.getLong(0): Any).toSet),
+        ("simhash incremental", minPairs, () =>
+          triples(Dedup.simhashPairsIncremental(s, inc, s"$dir/sim",
+            "t", "id", maxHamming = 3))),
+        ("edit incremental", minPairs, () =>
+          triples(Dedup.editDistancePairsIncremental(s, inc, hist,
+            s"$dir/edit", "t", "id", maxDist = 2))))
+      for ((opName, minSize, run) <- ops) {
         val default = withCutoff(None)(run())
         val bypass = withCutoff(Some(Long.MaxValue))(run())
         val collapse = withCutoff(Some(0L))(run())
         assert(default.nonEmpty, s"$opName found no pairs — dead test")
-        // the within-group pairs alone are C(40,2)+C(mB,2) — make sure
+        // the within-group pairs alone are C(40,2)+C(mB,2) on the
+        // boundary corpora (the doomed op: every non-rep) — make sure
         // the dup machinery (either path) is actually load-bearing here
-        assert(default.size >= 40 * 39 / 2 + mB * (mB - 1) / 2,
-          s"$opName at $side: only ${default.size} pairs")
+        assert(default.size >= minSize,
+          s"$opName on $label at $side: only ${default.size} results")
         assert(bypass == collapse,
-          s"$opName at $side (memb=$memb): bypass/collapse diverge: " +
-            s"${(bypass diff collapse) ++ (collapse diff bypass)}")
+          s"$opName on $label at $side (memb=$memb): bypass/collapse " +
+            s"diverge: ${(bypass diff collapse) ++ (collapse diff bypass)}")
         assert(default == bypass,
-          s"$opName at $side: default path diverges from the forced runs")
+          s"$opName on $label at $side: default path diverges from the " +
+            "forced runs")
       }
       df.unpersist()
+      inc.unpersist()
     }
   }
 
@@ -447,7 +485,7 @@ class DedupPropertySpec extends SparkSpec {
       .filter(col("m") > 1).agg(sum("m")).head().getLong(0)
     assert(memb >= 75,
       s"hot-copy construction yields only $memb membership rows")
-    assert(memb > Dedup.DupCollapseCutoffDefault,
+    assert(memb > Collapse.DupCollapseCutoffDefault,
       "hot-copy rows no longer exercise the collapse path")
   }
 
@@ -606,21 +644,21 @@ class DedupPropertySpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       Dedup.ngramJaccardPairs(df, "t", "id", n = 3, minJaccard = 0.7)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.clearMembershipMemo()
-    assert(Dedup.membershipMemoSize == 0)
+    Collapse.clearMembershipMemo()
+    assert(Collapse.membershipMemoSize == 0)
     val coldA = pairs(a)
-    val afterA = Dedup.membershipMemoSize
+    val afterA = Collapse.membershipMemoSize
     assert(afterA >= 1, "first census never reached the memo")
     val hitA = pairs(a)
-    assert(Dedup.membershipMemoSize == afterA,
+    assert(Collapse.membershipMemoSize == afterA,
       "an identical corpus plan must hit the memo, not grow it")
     assert(hitA == coldA, "memo-hit pairs diverge from the cold run")
     val coldB = pairs(b)
-    assert(Dedup.membershipMemoSize > afterA,
+    assert(Collapse.membershipMemoSize > afterA,
       "a distinct corpus plan must get its own entry")
     assert(coldB != coldA || coldB.isEmpty,
       "suspicious: disjoint corpora produced identical non-empty pairs")
-    Dedup.clearMembershipMemo()
+    Collapse.clearMembershipMemo()
     assert(pairs(a) == coldA,
       "a cleared memo must recompute to the same pairs")
   }

@@ -92,7 +92,9 @@ class SemanticDedupSpec extends SparkSpec {
   // force on the semantics it must preserve bit-for-bit: duplicate
   // groups (incl. the within kernel value), identical ZERO vectors
   // (cos NaN — must NOT pair), and identical vectors in DIFFERENT
-  // caller-provided blocks (must NOT pair — block rides in the group key)
+  // caller-provided blocks (must NOT pair — block rides in the group key),
+  // and rows in a NULL block (pair with nothing, identical or not — the
+  // block equi-join's rule)
   test("cosinePairs collapse: duplicates, zero vectors and cross-block " +
     "identicals equal brute force") {
     val s = spark
@@ -102,11 +104,12 @@ class SemanticDedupSpec extends SparkSpec {
     val vC = Seq(0.0f, 0.1f, -0.99f)  // unrelated
     val zero = Seq(0.0f, 0.0f, 0.0f)
     val rows = Seq(
-      (1L, vA, 1L), (2L, vA, 1L), (3L, vA, 1L),   // dup group, block 1
-      (4L, vB, 1L),                               // near-dup, block 1
-      (5L, vC, 1L),
-      (6L, zero, 1L), (7L, zero, 1L),             // zero-vector dup group
-      (8L, vA, 2L), (9L, vA, 2L))                 // same vector, block 2
+      (1L, vA, Some(1L)), (2L, vA, Some(1L)), (3L, vA, Some(1L)), // dup group, block 1
+      (4L, vB, Some(1L)),                         // near-dup, block 1
+      (5L, vC, Some(1L)),
+      (6L, zero, Some(1L)), (7L, zero, Some(1L)), // zero-vector dup group
+      (8L, vA, Some(2L)), (9L, vA, Some(2L)),     // same vector, block 2
+      (10L, vA, None), (11L, vA, None), (12L, vB, None)) // null block
     val df = rows.toDF("vec_id", "embedding", "blk")
     val got = Similarity.cosinePairs(df, "vec_id", "embedding",
       minCosine = 0.9, blockCol = Some("blk"))
@@ -121,7 +124,7 @@ class SemanticDedupSpec extends SparkSpec {
     }
     val expected = (for {
       (ia, va, ba) <- rows; (ib, vb, bb) <- rows
-      if ia < ib && ba == bb
+      if ia < ib && ba.isDefined && ba == bb
       c = cos(va, vb) if c >= 0.9
     } yield (ia, ib) -> c).toMap
     assert(got.keySet == expected.keySet)
@@ -132,6 +135,8 @@ class SemanticDedupSpec extends SparkSpec {
     assert(!got.keySet.exists(p => Set(6L, 7L).contains(p._1)))
     assert(!got.contains((1L, 8L)) && !got.contains((2L, 9L)))
     assert(got.contains((8L, 9L))) // but they pair within their block
+    // null-block rows never pair
+    assert(!got.keySet.exists(p => Set(10L, 11L, 12L).contains(p._2)))
     // no duplicate output rows
     val all = Similarity.cosinePairs(df, "vec_id", "embedding",
       minCosine = 0.9, blockCol = Some("blk")).collect()
