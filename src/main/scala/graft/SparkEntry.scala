@@ -10,6 +10,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** The local session every main runs on: `local[n]` with n from
+    * SPARK_GRAFT_CPUS (default 4) and as many shuffle partitions.
+    * Events' `ts` may be timestamp[ns] or timestamp[us] depending on the
+    * generator: nanosAsLong reads an ns one as long, and `Tables.load`
+    * normalizes a us one to epoch nanos, so downstream always sees LONG
+    * nanos. AQE coalesces by target size, not parallelism (r15): with
+    * the upstream parallelismFirst=true every stage of every query
+    * schedules n near-empty tasks however small the data. false is
+    * Spark's own documented recommendation, and the 64m advisory is the
+    * upstream default; measured +7..53% per query across an 18-query
+    * A/B at sf0.1 (OPTIMIZATION_r15.md).
+    */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** All operator-query registries, merged. Later registries may not
     * shadow earlier names — duplicates are a bug, caught by the spec.
     */

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** dev scratch: per-job wall times for a query — `JobCount <sfDir>
   * <name> [maxRuns]` runs it until the wall time SETTLES (run-over-run
@@ -16,22 +15,18 @@ import org.apache.spark.sql.SparkSession
   * and had to calibrate on a stable row before standalone controls
   * were comparable to bench medians. A settled number reads directly
   * against a bench median (the bench JVM is warm by the time any
-  * given query runs). Launch it with the bench's own heap shape —
-  * `tools/jobcount.sh` carries the canonical direct-java invocation
-  * with `-Xms=-Xmx -XX:+AlwaysPreTouch` (lazy heap commit otherwise
-  * bills page-zeroing sys time to run 1; see PLANS.md r14).
+  * given query runs), and it runs on the bench's own session
+  * ([[graft.SparkEntry.localSession]]). Launch it with the bench's own
+  * heap shape — `tools/jobcount.sh` carries the canonical direct-java
+  * invocation with `-Xms=-Xmx -XX:+AlwaysPreTouch` (lazy heap commit
+  * otherwise bills page-zeroing sys time to run 1; see PLANS.md r14).
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
     val maxRuns = if (args.length > 2) args(2).toInt else 6
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,28 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** dev scratch: timed runs of a query subset — `QBench <sfDir>
   * <name,name,...> [runs]` prints per-run seconds and the median,
-  * the same local[32] session shape as [[graft.Bench]] (minus the
-  * pre-warm, so run ≥3 and read the median).
+  * on the same session as [[graft.Bench]] (minus the pre-warm, so run
+  * ≥3 and read the median).
   */
 object QBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val runs = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bench-session AQE shape (r15)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     names.foreach { name =>
       val ts = (1 to runs).map { _ =>
         val t0 = System.nanoTime()

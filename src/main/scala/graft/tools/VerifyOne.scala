@@ -1,12 +1,11 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev helper: run a subset of SparkEntry.queries (comma-separated names,
   * or "all") against an sfDir, dump parquet + oracle_sql.json in the same
-  * layout as [[graft.Verify]] — for fast local DuckDB cross-checks while
+  * layout and session as [[graft.Verify]] — for fast local DuckDB cross-checks while
   * iterating on a single operator.
   */
 object VerifyOne {
@@ -15,14 +14,7 @@ object VerifyOne {
     val names =
       if (namesArg == "all") SparkEntry.queries.keys.toSeq.sorted
       else namesArg.split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries(name)(spark, sfDir)

@@ -56,4 +56,18 @@ class StatefulRerunSpec extends SparkSpec {
           first.zip(second).find { case (a, b) => a != b }.toString)
     }
   }
+
+  // the bench runs rows in interleaved passes, so between a row's two
+  // runs every other row runs once: state one row leaves behind must
+  // not reach another row's output either
+  test("every row, re-run after all the others ran, is byte-identical") {
+    val first = stateful.map(render)
+    stateful.zip(first).foreach { case (name, out) =>
+      val again = render(name)
+      assert(again == out,
+        s"$name output drifted after the other stateful rows ran " +
+          s"(${out.size} -> ${again.size} rows); first diff: " +
+          out.zip(again).find { case (a, b) => a != b }.toString)
+    }
+  }
 }
