@@ -11,7 +11,12 @@ import java.lang.management.ManagementFactory
   * order, for p = 1..SPARK_GRAFT_BENCH_RUNS (default 3), and a row's
   * number is the median of its runs. Families are contiguous in name
   * order, so a slow host window lands on one run of many rows instead
-  * of every run of one family, and the median absorbs it. Each run
+  * of every run of one family, and the median absorbs it. One untimed
+  * warm pass runs every row once before pass 1 (`[bench] warm pass`
+  * on stderr): a row's first run pays JIT and first codegen of its
+  * plans, which made pass 1 systematically slower than passes 2 and 3.
+  * The warm pass enters no median, spread, `runs` entry or budget
+  * gate; a row failing in it is reported on stderr. Each run
   * records its wall time and the JVM's process CPU time beside it (in
   * `local[n]` driver and executors share this JVM): wall that grows while
   * CPU stays flat is the host window, CPU that grows is the code.
@@ -144,17 +149,18 @@ object Bench {
       })
     }
 
-    // runsPer interleaved passes over `rows`, for the main measurement
-    // and the budget gate's confirmation re-run alike. Failures are
-    // counted, never silent, and never abort the bench: one broken row
-    // must not cost the other measurements. Each pass start is marked on
-    // stderr so a run's log lines up with its passes.
+    // `passes` interleaved passes over `rows`, for the warm pass, the
+    // main measurement and the budget gate's confirmation re-run alike.
+    // Failures are counted, never silent, and never abort the bench: one
+    // broken row must not cost the other measurements. Each pass start
+    // is marked on stderr so a run's log lines up with its passes.
     val fns = SparkEntry.queries
-    def measure(label: String, rows: Seq[String]): Seq[(String, Measured)] = {
+    def measure(label: String, rows: Seq[String],
+        passes: Int = runsPer): Seq[(String, Measured)] = {
       val runs = rows.map(_ => Seq.newBuilder[Run])
       val errors = scala.collection.mutable.Map[String, String]()
-      for (p <- 1 to runsPer) {
-        System.err.println(s"[bench] $label $p/$runsPer start")
+      for (p <- 1 to passes) {
+        System.err.println(s"[bench] $label $p/$passes start")
         rows.zip(runs).foreach { case (name, acc) =>
           sc.setLocalProperty(QueryProp, name)
           sc.setJobDescription(name)
@@ -174,6 +180,8 @@ object Bench {
       }
     }
 
+    // untimed: its runs are dropped, its failures only reported
+    measure("warm pass", fns.keys.toSeq.sorted, passes = 1)
     val measured = measure("pass", fns.keys.toSeq.sorted)
     stageMapPath.foreach { path =>
       val w2 = new java.io.PrintWriter(path, "UTF-8")

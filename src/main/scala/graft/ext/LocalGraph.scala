@@ -1,6 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 
 /** Shared bounded driver-local finish for the iterative graph
   * operators ([[Scc]], [[Lpa]], [[Topo]], [[KCore]], [[Ppr]]) — the
@@ -14,9 +15,10 @@ import org.apache.spark.sql.DataFrame
   * semantics bit-for-bit (spec-pinned local ≡ forced-distributed on
   * random graphs; the DuckDB oracles hold over both paths), and the
   * distributed loop remains the default above the bound — scale
-  * behavior is unchanged.
+  * behavior is unchanged. [[graft.paths.PathExpand]] finishes small
+  * variable-length walks the same way.
   */
-private[ext] object LocalGraph {
+private[graft] object LocalGraph {
 
   /** Edge-count bound under which an iterative graph operator may
     * finish on the driver: 2M canonical edges = 32 MB collected as
@@ -52,6 +54,21 @@ private[ext] object LocalGraph {
     val rows = e.limit(limit + 1).collect()
     if (rows.length > limit) None
     else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
+  }
+
+  /** Collect `df` in ONE job, each partition sending at most `cap`
+    * rows: a caller bounding a relation at `limit` passes limit+1 and
+    * falls back when more than `limit` rows arrive, having moved a
+    * bounded amount. A limit-collect would instead scan the partitions
+    * over several growing jobs. Runs `df`'s own physical plan and
+    * converts rows on the driver: `df.rdd` would optimize and plan a
+    * second, deserializing query.
+    */
+  def collectCapped(df: DataFrame, cap: Int): Array[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
+      (it: Iterator[InternalRow]) => it.take(cap).map(_.copy()).toArray)
+      .flatten.map(r => toRow(r).asInstanceOf[Row])
   }
 
   /** dense interning of long node ids: (idOf, names) where

@@ -88,13 +88,33 @@ final case class ViewProvider(
 
   private val viewByName = nodeViews.map(v => v.name -> v).toMap
 
-  def nodeTable(name: String): DataFrame = viewByName.get(name) match {
-    case Some(v) => unionTable(v)
-    case None =>
-      val t = base.nodeTable(name)
-      // base sink tables of view edges carry the view's reversed mirror
-      val extra = reversedOverlayCols(name)
-      if (extra.isEmpty) t else t.select((t.columns.map(col).toSeq ++ extra): _*)
+  // overlay frames keyed by the base frames they were built from: a base
+  // provider that hands out the same DataFrame for an unchanged table
+  // (a cached graph, the catalog between rewrites) gets the same overlay
+  // frame back, so a statement does not rebuild and re-analyze it; a
+  // rewritten base table is a new frame and rebuilds what reads it
+  private val built =
+    scala.collection.concurrent.TrieMap[String, (Seq[DataFrame], DataFrame)]()
+
+  def nodeTable(name: String): DataFrame = {
+    val inputs = viewByName.get(name) match {
+      case Some(v) => v.members.map(base.nodeTable)
+      case None => Seq(base.nodeTable(name))
+    }
+    built.get(name) match {
+      case Some((in, df)) if in.corresponds(inputs)(_ eq _) => df
+      case _ =>
+        val df = viewByName.get(name) match {
+          case Some(v) => unionTable(v, inputs)
+          case None =>
+            val t = inputs.head
+            // base sink tables of view edges carry the view's reversed mirror
+            val extra = reversedOverlayCols(name)
+            if (extra.isEmpty) t else t.select((t.columns.map(col).toSeq ++ extra): _*)
+        }
+        built(name) = (inputs, df)
+        df
+    }
   }
 
   /** reversed struct type of a view edge (matches
@@ -229,9 +249,9 @@ final case class ViewProvider(
       (props ++ edgeCols ++ rev)): _*)
   }
 
-  private def unionTable(v: NodeViewDef): DataFrame = {
+  private def unionTable(v: NodeViewDef, tables: Seq[DataFrame]): DataFrame = {
     require(v.members.nonEmpty, s"node view ${v.name} has no member tables")
-    v.members.map(m => memberProjection(v, m, base.nodeTable(m)))
+    v.members.zip(tables).map { case (m, t) => memberProjection(v, m, t) }
       .reduce(_ unionAll _)
   }
 }
@@ -258,12 +278,22 @@ object ViewProvider {
       (ev.viewTable, ev.name) ->
         graft.stats.EdgeStat(c, c.toDouble / n, c.toDouble / sinkRows)
     }.toMap
+    // a view's sample is its members' re-projected samples concatenated
+    // into ONE LocalRelation, built once here: a union of the projections
+    // would not constant-fold, so every plan-time probe over it would run
+    // Spark jobs. Each projection over a member's LocalRelation folds to
+    // local rows, so collecting it runs no job either.
     val vSamples = p.nodeViews.flatMap { v =>
       val memberSamples = v.members.flatMap(m => base.samples.get(m).map(m -> _))
       if (memberSamples.size != v.members.size) None
-      else Some(v.name -> memberSamples.map { case (m, s) =>
-        p.memberProjection(v, m, s, withEdges = false)
-      }.reduce(_ unionAll _))
+      else {
+        val parts = memberSamples.map { case (m, s) =>
+          p.memberProjection(v, m, s, withEdges = false)
+        }
+        val schema = StructType(parts.head.schema.map(_.copy(nullable = true)))
+        Some(v.name -> parts.head.sparkSession.createDataFrame(
+          java.util.Arrays.asList(parts.flatMap(_.collect()): _*), schema))
+      }
     }.toMap
     base.copy(rows = base.rows ++ vRows, edges = base.edges ++ vEdges,
       samples = base.samples ++ vSamples)

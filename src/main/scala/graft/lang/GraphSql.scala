@@ -7,7 +7,12 @@ import graft.paths.PathExpand
 import graft.pattern._
 import graft.stats.GraphStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The SQL dialect: Spark SQL + a native `MATCH` clause (the reference's
   * language, `GraphViewParser.cs` — but parsed first-class instead of the
@@ -22,12 +27,14 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Compilation: the MATCH pattern plans through the cost-based join-order
-  * search into a DataFrame whose columns are `alias__col`; the rest of
-  * the statement is rewritten (`alias.col` → `alias__col`) and delegated
-  * verbatim to Spark SQL over that DataFrame — exactly the reference's
-  * split between graph translation and relational delegation, with Spark
-  * in SQL Server's seat. Non-MATCH statements pass straight through to
-  * `spark.sql`.
+  * search into an unanalyzed plan whose columns are `alias__col`; the
+  * rest of the statement is rewritten (`alias.col` → `alias__col`),
+  * parsed by Spark's SQL parser over a placeholder relation, and the
+  * match plan takes the placeholder's place. The statement is then
+  * analyzed once, as one plan — the reference's split between graph
+  * translation and relational delegation, compiled once as GraphView
+  * compiles one T-SQL statement, with Spark in SQL Server's seat.
+  * Non-MATCH statements pass straight through to `spark.sql`.
   */
 object GraphSql {
 
@@ -274,24 +281,26 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
   def this(spark: SparkSession, catalog: graft.ddl.GraphCatalog) =
     this(spark, catalog.provider, None, Some(catalog))
 
-  // the dialect's relational tail delegates to spark.sql, so the
-  // library's SQL functions (html_to_text, quality gates, …) must be
-  // registered for dialect statements to see them — idempotent
+  // the dialect's relational tail is analyzed by the session's
+  // analyzer, so the library's SQL functions (html_to_text, quality
+  // gates, …) must be registered for dialect statements to see them —
+  // idempotent
   graft.GraftExtensions.register(spark)
 
   private var statsCache: Option[GraphStats] = statsOpt
 
-  // plan-time probe memos: selectivity per (table, conjunct) and
-  // histogram per (table, conjunct set). Probes run as Filter+Project
-  // over the ≤200-row slim sample LocalRelations, which constant-fold —
-  // pure driver-side plan evaluation, zero jobs — but each still pays
-  // parse+optimize; without the memo the same probe ran once for
-  // costing and once for histogram refinement per statement, and again
-  // on every repeat of the statement. Cleared whenever stats refresh.
+  // plan-time probe memos per (table, conjunct): the sample rows the
+  // conjunct keeps, which both the selectivity and the histogram
+  // refinement read, and the table-count selectivity for stats that
+  // carry no sample. A sample probe evaluates its conjunct as one bound
+  // predicate over the ≤200-row slim sample on the driver (zero jobs)
+  // but still pays a parse and an analysis; without the memo it ran
+  // again on every repeat of the statement. Cleared whenever stats
+  // refresh.
   private val selProbeCache =
     scala.collection.concurrent.TrieMap[(String, String), Double]()
-  private val histProbeCache =
-    scala.collection.concurrent.TrieMap[(String, String), graft.stats.Histogram]()
+  private val rowProbeCache = scala.collection.concurrent
+    .TrieMap[(String, String), Option[scala.collection.immutable.BitSet]]()
 
   // ---- view registry: node/edge views created through the dialect
   // (View.cs:689-903). Views are metadata only — the overlay provider
@@ -351,7 +360,7 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
     // conjunct probes are keyed by table name — a redefined view must
     // not reuse the old definition's selectivities
     selProbeCache.clear()
-    histProbeCache.clear()
+    rowProbeCache.clear()
   }
 
   private def baseStats: GraphStats = statsCache.getOrElse {
@@ -382,7 +391,7 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
     statsCache = Some(s)
     augStatsCache = None
     selProbeCache.clear()
-    histProbeCache.clear()
+    rowProbeCache.clear()
     s
   }
 
@@ -587,7 +596,10 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
     case ExplainRe(inner) =>
       // T-SQL SHOWPLAN analogue: one string row with the formatted
       // physical plan of the inner statement (works for MATCH queries
-      // too — Spark's own EXPLAIN can't see through the dialect)
+      // too — Spark's own EXPLAIN can't see through the dialect). EXPLAIN
+      // of a small var-length statement runs the bounded jobs that
+      // collect the walk's seeds and adjacency: its driver-local paths
+      // are data in the plan (PathExpand)
       import spark.implicits._
       Seq(sql(inner).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)).toDF("plan")
@@ -939,17 +951,15 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
     val aliases = GraphSql.parseFromPublic(from).toMap
     val srcTable = aliases(srcA)
     val e = cat.schema.table(srcTable).edge(edgeName)
-    val matched = MatchPlanner.plan(provider, MatchPattern(
+    val matched = MatchPlanner.planRel(provider, MatchPattern(
       Seq(NodePat(srcA, srcTable), NodePat(dstA, aliases(dstA))),
       Seq(EdgePat(srcA, edgeName, dstA))))
-    val view = s"__del_${System.identityHashCode(matched).toHexString}"
-    matched.createOrReplaceTempView(view)
     val names = Seq(srcA, dstA, s"${srcA}_${edgeName}_$dstA")
     val cond = where.map(w => s"WHERE ${GraphSql.rewriteRefs(w, names)}").getOrElse("")
     val eAlias = s"${srcA}_${edgeName}_$dstA"
-    val doomed = spark.sql(
+    val doomed = splice(matched,
       s"SELECT ${srcA}__GlobalNodeId AS src, ${eAlias}__edgeId AS edgeId, " +
-        s"${dstA}__GlobalNodeId AS sink FROM $view $cond")
+        s"${dstA}__GlobalNodeId AS sink FROM ${GraphSession.MatchRelation} $cond")
       .stageBoundary
     val n = doomed.count()
     val srcT = provider.nodeTable(srcTable)
@@ -1076,18 +1086,6 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
     (pattern, varHops)
   }
 
-  /** Predicate attachment for costing — the port of
-    * `AttachWhereClauseVisitor.cs:107-213`: split the WHERE clause into
-    * top-level conjuncts, bind each to a node alias when all its column
-    * references belong to that alias, and estimate per-alias selectivity
-    * by filtering the table's ~200-row stats sample (the reference's
-    * SHOWPLAN round-trip against its `_Sampling` tables) — a driver-local
-    * scan of a LocalRelation, so plan-time cost is O(sample), independent
-    * of table size. Only when no sample was collected (externally
-    * supplied stats) does it fall back to filtering the base table. The
-    * predicates themselves still apply via the relational tail — Catalyst
-    * pushes them into the scans.
-    */
   /** WHERE conjuncts referencing exactly one pattern alias, keyed by that
     * alias — the binding step of `AttachWhereClauseVisitor.cs:42-101`
     */
@@ -1110,7 +1108,8 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
   /** Per-alias histogram of the sample ids surviving the alias's own
     * WHERE conjuncts — feeds the planner's histogram-refined expansion
     * estimate (detects when a predicate's surviving ids sit outside the
-    * edge's sink range). Driver-local work on the ≤200-row samples.
+    * edge's sink range). Driver-local work on the ≤200-row samples: the
+    * intersection of each conjunct's memoized sample rows.
     */
   private def filteredIdHists(p: GraphSql.ParsedMatch)
       : Map[String, graft.stats.Histogram] = {
@@ -1118,59 +1117,106 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
     boundConjuncts(p).flatMap { case (a, conjuncts) =>
       for {
         t <- tableOf.get(a)
-        sample <- stats.samples.get(t)
+        sample <- sampleRelation(t)
       } yield {
-        val locals = conjuncts.map(_.replaceAll(s"\\b$a\\.", ""))
-        a -> histProbeCache.getOrElseUpdate((t, locals.sorted.mkString("&&")), {
-          try {
-            val pred = locals
-              .map(org.apache.spark.sql.functions.expr)
-              .reduce(_ && _)
-            val ids = sample.filter(pred)
-              .select("GlobalNodeId").collect().map(_.getLong(0)).toSeq
-            graft.stats.Histogram.build(ids)
-          } catch { case _: Exception => graft.stats.Histogram(Vector.empty) }
+        val kept = conjuncts.map(c => sampleRows(t, sample, localOf(a, c)))
+        a -> (if (kept.exists(_.isEmpty)) graft.stats.Histogram(Vector.empty)
+        else {
+          val id = sample.output.indexWhere(_.name == "GlobalNodeId")
+          graft.stats.Histogram.build(kept.flatten.reduce(_ & _).toSeq
+            .map(i => sample.data(i).getLong(id)))
         })
       }
     }.filter(_._2.totalRows > 0)
   }
 
+  /** Predicate attachment for costing — the port of
+    * `AttachWhereClauseVisitor.cs:107-213`: split the WHERE clause into
+    * top-level conjuncts, bind each to a node alias when all its column
+    * references belong to that alias, and estimate per-alias selectivity
+    * by filtering the table's ~200-row stats sample (the reference's
+    * SHOWPLAN round-trip against its `_Sampling` tables) — a driver-local
+    * evaluation over a LocalRelation, so plan-time cost is O(sample),
+    * independent of table size. Only when no sample was collected
+    * (externally supplied stats) does it fall back to filtering the base
+    * table. The predicates themselves still apply via the relational
+    * tail — Catalyst pushes them into the scans.
+    */
   private def aliasSelectivities(p: GraphSql.ParsedMatch): Map[String, Double] = {
     val tableOf = p.aliases.toMap
     val sel = scala.collection.mutable.Map[String, Double]()
     boundConjuncts(p).foreach { case (a, conjuncts) =>
       if (tableOf.contains(a)) conjuncts.foreach { conjunct =>
         val t = tableOf(a)
-        val local = conjunct.replaceAll(s"\\b$a\\.", "")
-        val s = selProbeCache.getOrElseUpdate((t, local), {
-          try {
-            val pred = org.apache.spark.sql.functions.expr(local)
-            stats.samples.get(t) match {
-              // sample probe: Filter+Project over a LocalRelation
-              // constant-folds, so BOTH counts are driver-side plan
-              // evaluations — zero jobs, zero task bytes (an Aggregate
-              // `.count()` would not fold and would ship the sample as
-              // one task's partition data)
-              case Some(sample) =>
-                val denom = sample.select(lit(1)).collect().length.toDouble
-                if (denom > 0)
-                  math.max(
-                    sample.filter(pred).select(lit(1)).collect().length /
-                      denom, 1e-9)
-                else 1.0
-              case None =>
-                val denom = stats.tableRows(t)
-                if (denom > 0)
-                  math.max(g.nodeTable(t).filter(pred).count() / denom, 1e-9)
-                else 1.0
+        val local = localOf(a, conjunct)
+        val s = sampleRelation(t) match {
+          case Some(sample) =>
+            sampleRows(t, sample, local) match {
+              case Some(kept) if sample.data.nonEmpty =>
+                math.max(kept.size.toDouble / sample.data.size, 1e-9)
+              case _ => 1.0 // empty sample, or unparseable → selectivity 1
             }
-          } catch { case _: Exception => 1.0 } // unparseable → selectivity 1
-        })
+          case None => selProbeCache.getOrElseUpdate((t, local), {
+            try {
+              val denom = stats.tableRows(t)
+              if (denom > 0)
+                math.max(g.nodeTable(t).filter(expr(local)).count() / denom, 1e-9)
+              else 1.0
+            } catch { case _: Exception => 1.0 }
+          })
+        }
         sel(a) = sel.getOrElse(a, 1.0) * s
       }
     }
     sel.toMap
   }
+
+  /** a bound conjunct with its alias qualifier stripped */
+  private def localOf(alias: String, conjunct: String): String =
+    conjunct.replaceAll(s"\\b$alias\\.", "")
+
+  /** indices of the sample rows `t`'s conjunct keeps, memoized; `None`
+    * when the conjunct does not evaluate over the sample
+    */
+  private def sampleRows(t: String, sample: LocalRelation, local: String)
+      : Option[scala.collection.immutable.BitSet] =
+    rowProbeCache.getOrElseUpdate((t, local),
+      try Some(probeRows(sample, local))
+      catch { case _: Exception => None })
+
+  /** `t`'s stats sample as the LocalRelation the probes evaluate: every
+    * sample [[GraphStats]] collects is one (views included, see
+    * [[graft.graph.ViewProvider.augmentStats]]); a sample supplied as
+    * any other plan is collected into one
+    */
+  private def sampleRelation(t: String): Option[LocalRelation] =
+    stats.samples.get(t).map { s =>
+      s.queryExecution.analyzed match {
+        case l: LocalRelation => l
+        case _ => LocalRelation.fromExternalRows(
+          DataTypeUtils.toAttributes(s.schema), s.collect().toSeq)
+      }
+    }
+
+  /** Indices of the sample rows satisfying `cond` (unqualified column
+    * refs): the condition is analyzed once against the sample's
+    * attributes, bound, and evaluated row by row on the driver — no
+    * Spark job, no optimizer pass, no physical plan
+    */
+  private def probeRows(sample: LocalRelation, cond: String)
+      : scala.collection.immutable.BitSet =
+    ColumnBridge.ofPlan(spark,
+      Filter(ColumnBridge.convertedExpression(expr(cond)), sample))
+      .queryExecution.analyzed match {
+      case Filter(c, l: LocalRelation) =>
+        val pred = Predicate.createInterpreted(
+          BindReferences.bindReference(c, l.output))
+        pred.initialize(0)
+        scala.collection.immutable.BitSet(
+          l.data.indices.filter(i => pred.eval(l.data(i))): _*)
+      case other => throw new IllegalArgumentException(
+        s"probe did not analyze to a sample filter: $other")
+    }
 
   private def starColumns(df: DataFrame): Seq[String] = {
     // node properties + edge attrs stay; ids, degrees, adjacency internals
@@ -1199,21 +1245,25 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
 
   private def matchSql(query: String): DataFrame = {
     val p = GraphSql.parse(query)
-    relationalTail(buildMatchDf(p), substDisplay(p.select, displayAliases(p)),
+    relationalTail(buildMatch(p), substDisplay(p.select, displayAliases(p)),
       p.rest, p.aliases.map(_._1) ++ p.hops.map(_.aliasName), p.top)
   }
 
-  /** pattern + var-length splice → one DataFrame of `alias__col` columns */
-  private def buildMatchDf(p: GraphSql.ParsedMatch): DataFrame = {
+  /** Pattern + var-length splice → one unanalyzed plan of `alias__col`
+    * columns. Only the small pieces a var-length splice needs as data
+    * are analyzed on the way: the seed endpoint's own filter and the
+    * seed/path relations [[PathExpand.expand]] works on.
+    */
+  private def buildMatch(p: GraphSql.ParsedMatch): Rel = {
     val (pattern, varHops) = split(p)
     val tableOf = p.aliases.toMap
     val selMap = aliasSelectivities(p)
     val preds = boundConjuncts(p)
     val displaySet = displayAliases(p)
 
-    var df =
+    var df: Rel =
       if (pattern.nodes.nonEmpty)
-        MatchPlanner.planWithStats(g, pattern, stats, selMap,
+        MatchPlanner.relWithStats(g, pattern, stats, selMap,
           filteredIdHists(p))
       else null
 
@@ -1233,15 +1283,17 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
       if (!bound(seedA)) {
         // bind the seed endpoint, pre-filtered by its own WHERE conjuncts
         // so a selective unbound endpoint still bounds the walk (the
-        // conjuncts re-apply in the relational tail — idempotent)
-        var t = MatchPlanner.prefixed(g, NodePat(seedA, tableOf(seedA)))
+        // conjuncts re-apply in the relational tail — idempotent). A
+        // conjunct that does not analyze against the endpoint alone is
+        // skipped, so this one small filter is analyzed eagerly
+        var t = MatchPlanner.prefixedRel(g, NodePat(seedA, tableOf(seedA))).toDF
         preds.getOrElse(seedA, Nil).foreach { c =>
           try t = t.filter(expr(GraphSql.rewriteRefs(c, Seq(seedA))))
           catch { case _: Exception => () }
         }
-        df = if (df == null) t else df.crossJoin(t)
+        df = if (df == null) Rel(t) else df.crossJoin(Rel(t))
       }
-      val seeds = df.select(col(s"${seedA}__GlobalNodeId").as("id"))
+      val seeds = df.select(col(s"${seedA}__GlobalNodeId").as("id")).toDF
       val raw = PathExpand.expand(g, tableOf(h.src), h.edge,
         h.minLen, h.maxLen, PathExpand.EdgeDisjoint, h.attrEq,
         seeds = Some(seeds), backward = backward, display = wantDisplay)
@@ -1251,7 +1303,7 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
           Seq(PathExpand.renderDisplay(g, tableOf(h.src), h.edge)
             .as(s"${h.aliasName}__path"))
         else Nil)
-      val paths = raw.select(pathCols: _*)
+      val paths = Rel(raw).select(pathCols: _*)
       val (seedEnd, otherEnd) =
         if (backward) (col("__p_dst"), col("__p_src"))
         else (col("__p_src"), col("__p_dst"))
@@ -1259,25 +1311,39 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
       df = if (bound(otherA))
         df.filter(otherEnd === col(s"${otherA}__GlobalNodeId"))
       else
-        df.join(MatchPlanner.prefixed(g, NodePat(otherA, tableOf(otherA))),
+        df.join(MatchPlanner.prefixedRel(g, NodePat(otherA, tableOf(otherA))),
           otherEnd === col(s"${otherA}__GlobalNodeId"))
       df = df.drop("__p_src", "__p_dst")
     }
     df
   }
 
-  /** delegate the relational tail (projection, WHERE, GROUP BY, …) to
-    * Spark SQL over the match DataFrame, rewriting `alias.col` refs
+  /** Parse a statement tail written over the placeholder relation
+    * [[GraphSession.MatchRelation]] and put `rel`'s plan in its place —
+    * the statement stays one plan, analyzed once, with no temp view
+    * registered in the session catalog.
     */
-  private def relationalTail(df: DataFrame, select: String, rest: String,
+  private def splicePlan(rel: Rel, sqlText: String): LogicalPlan =
+    ColumnBridge.parsePlan(spark, sqlText).transformUp {
+      case u: UnresolvedRelation
+          if u.multipartIdentifier == Seq(GraphSession.MatchRelation) => rel.plan
+    }
+
+  /** [[splicePlan]], analyzed */
+  private def splice(rel: Rel, sqlText: String): DataFrame =
+    ColumnBridge.ofPlan(spark, splicePlan(rel, sqlText))
+
+  /** the relational tail (projection, WHERE, GROUP BY, …) as SQL over
+    * the match plan, `alias.col` refs rewritten, spliced into one plan
+    */
+  private def relationalTail(rel: Rel, select: String, rest: String,
       names: Seq[String], top: Option[GraphSql.TopSpec] = None): DataFrame = {
-    val view = s"__match_${System.identityHashCode(df).toHexString}"
-    df.createOrReplaceTempView(view)
     // SELECT * expands to user-visible node columns only — adjacency
     // arrays, tombstones, degrees and reversed columns stay internal
-    // (the reference's star expansion, TranslateMatchClauseVisitor.cs:1063-1188)
+    // (the reference's star expansion, TranslateMatchClauseVisitor.cs:1063-1188);
+    // the hidden columns are known by type, so only a star analyzes twice
     val selRaw =
-      if (select.trim == "*") starColumns(df).mkString(", ")
+      if (select.trim == "*") starColumns(rel.toDF).mkString(", ")
       else select
     val sel = GraphSql.rewriteRefs(selRaw, names)
     val restRw0 = GraphSql.rewriteRefs(rest, names)
@@ -1288,8 +1354,9 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
         "TOP cannot be combined with OFFSET ... FETCH")
     val restRw = GraphSql.rewriteOffsetFetch(restRw0)
     top match {
-      case None => spark.sql(s"SELECT $sel FROM $view $restRw")
-      case Some(t) => applyTop(t, sel, view, restRw)
+      case None =>
+        splice(rel, s"SELECT $sel FROM ${GraphSession.MatchRelation} $restRw")
+      case Some(t) => applyTop(t, sel, rel, restRw)
     }
   }
 
@@ -1301,14 +1368,15 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
     * ORDER BY keys — via the distributed cutoff-key shape
     * ([[graft.ext.TiesCutoff]]), never a single-partition rank window.
     */
-  private def applyTop(t: GraphSql.TopSpec, sel: String, view: String,
+  private def applyTop(t: GraphSql.TopSpec, sel: String, rel: Rel,
       restRw: String): DataFrame = {
+    val view = GraphSession.MatchRelation
     val LimitRe = """(?is)^(.*?)\s*\bLIMIT\s+(\d+)\s*$""".r
     val (core, userLimit) = restRw match {
       case LimitRe(c, m) => (c.trim, Some(m.toInt))
       case _ => (restRw, None)
     }
-    val base = spark.sql(s"SELECT $sel FROM $view $core")
+    val base = splice(rel, s"SELECT $sel FROM $view $core")
     val k =
       if (t.percent) math.ceil(base.count() * t.n / 100.0).toInt
       else t.n
@@ -1347,7 +1415,8 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
           val hiddenCols = items.zipWithIndex.map { case ((_, desc), i) =>
             if (desc) col(s"__ob_$i").desc else col(s"__ob_$i").asc
           }
-          val widened = spark.sql(s"SELECT $sel, $obHidden FROM $view $coreNoOb")
+          val widened =
+            splice(rel, s"SELECT $sel, $obHidden FROM $view $coreNoOb")
           graft.ext.TiesCutoff.topWithTies(widened, hiddenKeys, k)
             .orderBy(hiddenCols: _*)
             .drop(items.indices.map(i => s"__ob_$i"): _*)
@@ -1375,20 +1444,20 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
     val outerSql = before + "TRUE" + after
     val pIn = GraphSql.parse(sub)
 
-    val (dfOut0, outSelect, outRest, outAliases, outNames) =
+    val (relOut0, outSelect, outRest, outAliases, outNames) =
       if (GraphSql.isMatchQuery(outerSql)) {
         val pOut = GraphSql.parse(outerSql)
-        (buildMatchDf(pOut), substDisplay(pOut.select, displayAliases(pOut)),
+        (buildMatch(pOut), substDisplay(pOut.select, displayAliases(pOut)),
           pOut.rest, pOut.aliases,
           pOut.aliases.map(_._1) ++
             pOut.hops.map(_.aliasName))
       } else outerSql match {
         case PlainSelectRe(sel, from, rest) =>
           val aliases = GraphSql.parseFromPublic(from)
-          val df = aliases.map { case (a, t) =>
-            MatchPlanner.prefixed(g, NodePat(a, t))
+          val rel = aliases.map { case (a, t) =>
+            MatchPlanner.prefixedRel(g, NodePat(a, t))
           }.reduce(_ crossJoin _)
-          (df, sel, Option(rest).getOrElse("").trim, aliases,
+          (rel, sel, Option(rest).getOrElse("").trim, aliases,
             aliases.map(_._1))
         case _ => throw new IllegalArgumentException(
           s"cannot parse outer query of correlated MATCH: $outerSql")
@@ -1404,30 +1473,33 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
       s"correlated alias '$a' is not bound in the outer query"))
 
     // rematerialize external aliases as full pattern nodes; the shared
-    // buildMatchDf handles fixed AND var-length hops (costed splice)
+    // buildMatch handles fixed AND var-length hops (costed splice)
     val innerAliases = pIn.aliases ++ external.map(a => a -> outTableOf(a))
     val pInFull = pIn.copy(aliases = innerAliases)
-    var inner = buildMatchDf(pInFull)
+    var inner = buildMatch(pInFull)
     if (pIn.rest.nonEmpty) {
-      // the subquery's own predicates apply before the semi-join; keep
-      // every column (the binding ids are internal, starColumns hides them)
-      val view = s"__corr_${System.identityHashCode(inner).toHexString}"
-      inner.createOrReplaceTempView(view)
+      // the subquery's own predicates apply before the semi-join
       val names = innerAliases.map(_._1) ++
         pIn.hops.map(_.aliasName)
-      inner = spark.sql(
-        s"SELECT * FROM $view ${GraphSql.rewriteRefs(pIn.rest, names)}")
+      inner = inner.copy(plan = splicePlan(inner,
+        s"SELECT * FROM ${GraphSession.MatchRelation} " +
+          GraphSql.rewriteRefs(pIn.rest, names)))
     }
-    val dfOut = MatchPlanner.semiCorrelated(dfOut0, inner,
+    val relOut = MatchPlanner.semiCorrelated(relOut0, inner,
       external.map(a => a -> s"${a}__GlobalNodeId").toMap, negated)
     val outTop =
       if (GraphSql.isMatchQuery(outerSql)) GraphSql.parse(outerSql).top
       else None
-    relationalTail(dfOut, outSelect, outRest, outNames, outTop)
+    relationalTail(relOut, outSelect, outRest, outNames, outTop)
   }
 }
 
 object GraphSession {
   /** the reference's schema-wide implicit view name (`View.cs:2046`) */
   val GlobalViewName = "GlobalNodeView"
+
+  /** the placeholder relation a statement's SQL tail is written over;
+    * the statement's own match plan takes its place before analysis
+    */
+  private[lang] val MatchRelation = "__graft_match"
 }

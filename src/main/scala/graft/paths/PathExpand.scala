@@ -2,8 +2,10 @@ package graft.paths
 
 import graft.Stage.StageOps
 
+import graft.ext.LocalGraph
 import graft.graph.GraphProvider
-import org.apache.spark.sql.DataFrame
+import graft.pattern.Rel
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,14 +24,25 @@ import org.apache.spark.sql.types._
   *  - per-edge attr equality predicates apply at every hop
   *    (`DeployScriptTemplate.tt:86-91`).
   *
-  * Execution is an iterative DataFrame loop: each hop joins the frontier
-  * to the node table's adjacency on GlobalNodeId and explodes it. Bounded
-  * small expansions stay one declarative plan (Catalyst sees the whole
-  * unrolled join tree); unbounded ones `localCheckpoint` each iteration to
-  * truncate lineage — the standard Spark pattern for iterative graph
-  * algorithms. At 100 TB the frontier join is a key-partitioned shuffle
-  * per hop; AQE re-plans per iteration since each checkpoint re-derives
-  * stats.
+  * Execution has two faces with one semantics:
+  *
+  *  - driver-local finish (the [[graft.ext.LocalGraph]] pattern of Scc,
+  *    Lpa, Topo, KCore and Ppr): when the live adjacency of the edge
+  *    (tombstones and attr predicates applied), the seed set and the
+  *    produced path rows each fit `localEdgeLimit`, the adjacency and the
+  *    seeds are collected in one job each, the walk runs on the driver,
+  *    and the paths come back as a `LocalRelation`. A small walk then
+  *    costs two short jobs instead of a join + explode per hop. These
+  *    jobs run when `expand` is called, i.e. while a statement is being
+  *    compiled (EXPLAIN included);
+  *  - distributed, past any bound: an iterative DataFrame loop where each
+  *    hop joins the frontier to the node table's adjacency on
+  *    GlobalNodeId and explodes it. A bounded walk unrolls into one plan;
+  *    an unbounded one `localCheckpoint`s each iteration to truncate
+  *    lineage — the standard Spark pattern for iterative graph
+  *    algorithms. At 100 TB the frontier join is a key-partitioned
+  *    shuffle per hop; AQE re-plans per iteration since each checkpoint
+  *    re-derives stats.
   */
 object PathExpand {
 
@@ -57,6 +70,9 @@ object PathExpand {
     *   (src/dst swapped back, pathNodes re-reversed); edge-disjointness
     *   keys on the reversed holder's (node, edgeId), which is unique per
     *   physical edge.
+    * @param localEdgeLimit  bound on the collected adjacency, seed rows
+    *   and produced path rows under which the walk finishes on the
+    *   driver; 0 forces the distributed loop
     */
   def expand(
       g: GraphProvider,
@@ -69,7 +85,8 @@ object PathExpand {
       maxIterations: Int = 64,
       seeds: Option[DataFrame] = None,
       backward: Boolean = false,
-      display: Boolean = false): DataFrame = {
+      display: Boolean = false,
+      localEdgeLimit: Int = LocalGraph.LocalEdgeLimit): DataFrame = {
     require(minLen >= 0, "minLen must be >= 0")
     require(!display || !backward, "typed display requires forward expansion")
     val td = g.schema.table(table)
@@ -85,15 +102,21 @@ object PathExpand {
     // step shuffle — they can contribute no step rows, and over a view
     // union this prunes entire non-contributing member tables (e.g. a
     // sink-only member) from every hop's frontier join.
-    val adj = (
+    val adjCols =
       if (!backward)
-        nt.select(col("GlobalNodeId").as("__node"),
+        Seq(col("GlobalNodeId").as("__node"),
           col(ed.columnName).as("__adj"), col(ed.delColumnName).as("__del"))
       else
-        nt.select(col("GlobalNodeId").as("__node"),
+        Seq(col("GlobalNodeId").as("__node"),
           col(ed.reversedColumnName).as("__adj"),
           col(ed.reversedDelColumnName).as("__del"))
-      ).filter(size(col("__adj")) > 0)
+    val nonEmpty = size(col("__adj")) > 0
+    // tombstone + attr predicates fold into the array before the
+    // explode — dead/non-matching edges never materialize as rows
+    val live = filter(col("__adj"), x =>
+      attrEq.foldLeft(!array_contains(col("__del"), x.getField("edgeId"))) {
+        case (acc, (k, v)) => acc && x.getField(k) === lit(v)
+      })
 
     val edgeKeyType = ArrayType(StructType(Seq(
       StructField("node", LongType), StructField("edgeId", IntegerType))))
@@ -105,85 +128,191 @@ object PathExpand {
         StructField("edgeType", StringType) +:
         ed.attrs.map(a => StructField(a.name, a.dataType))))
 
-    val seedIds = seeds match {
-      case Some(s) => s.select(col(s.columns.head).as("GlobalNodeId")).distinct()
-      case None => nt.select(col("GlobalNodeId"))
+    val (seedSource, seedCol) = seeds match {
+      case Some(s) => (s, col(s.columns.head))
+      case None => (nt, col("GlobalNodeId"))
     }
-    val seedCols = Seq(
-      col("GlobalNodeId").as("src"),
-      col("GlobalNodeId").as("dst"),
-      lit(0).as("hops"),
-      array(col("GlobalNodeId")).as("pathNodes"),
-      array().cast(edgeKeyType).as("pathEdges")) ++
-      (if (display) Seq(array().cast(hopInfoType).as("pathHops")) else Nil)
-    val seed = seedIds.select(seedCols: _*)
 
-    def step(frontier: DataFrame): DataFrame = {
-      // tombstone + attr predicates fold into the array before the
-      // explode — dead/non-matching edges never materialize as rows
-      val live = filter(col("__adj"), x =>
-        attrEq.foldLeft(!array_contains(col("__del"), x.getField("edgeId"))) {
-          case (acc, (k, v)) => acc && x.getField(k) === lit(v)
-        })
-      var df = frontier
-        .join(adj, col("dst") === col("__node"))
+    def local: Option[DataFrame] = {
+      // seeds and live adjacency rows in ONE job, told apart by `kind`;
+      // the bound applies to each side, and to the seeds before their
+      // dedupe. Built as one plan over the cache-substituted node table,
+      // so the collect costs one small analysis.
+      val attrs = if (display) ed.attrs else Nil
+      val seedRows = Rel(seedSource).select((lit(0).as("kind") +:
+        seedCol.as("node") +: lit(null).cast(LongType).as("sink") +:
+        lit(null).cast(IntegerType).as("edgeId") +:
+        attrs.map(a => lit(null).cast(a.dataType).as(a.name))): _*)
+      val edgeRows = Rel(nt).select(adjCols: _*).filter(nonEmpty)
         .withColumn("__e", explode(live))
-      df = mode match {
-        case EdgeDisjoint => df.filter(!array_contains(col("pathEdges"),
-          struct(col("dst").as("node"), col("__e.edgeId").as("edgeId"))))
-        case NodeDisjoint => df.filter(!array_contains(col("pathNodes"),
-          col("__e.sink")))
+        .select((lit(1).as("kind") +: col("__node").as("node") +:
+          col("__e.sink").as("sink") +: col("__e.edgeId").as("edgeId") +:
+          attrs.map(a => col(s"__e.${a.name}").as(a.name))): _*)
+      val rows = LocalGraph.collectCapped(
+        seedRows.unionAll(edgeRows).toDF, localEdgeLimit + 1)
+      val (seedPart, edgePart) = rows.partition(_.getInt(0) == 0)
+      if (seedPart.length > localEdgeLimit || edgePart.length > localEdgeLimit) None
+      else walk(seedPart.map(_.getLong(1)).distinct.toSeq,
+        edgePart.groupBy(_.getLong(1)), minLen, maxLen, mode, maxIterations,
+        localEdgeLimit).map { paths =>
+        val out = paths.map { p =>
+          val edges = p.edges.map { case (n, e) => Row(n, e) }
+          if (backward) Row(p.dst, p.src, p.hops, p.nodes.reverse, edges)
+          else Row.fromSeq(Seq(p.src, p.dst, p.hops, p.nodes, edges) ++
+            (if (display) Seq(p.via.map(r =>
+              Row.fromSeq(Seq(table, r.getLong(1), edgeName) ++ r.toSeq.drop(4))))
+            else Nil))
+        }
+        val schema = StructType(Seq(
+          StructField("src", LongType), StructField("dst", LongType),
+          StructField("hops", IntegerType),
+          StructField("pathNodes", ArrayType(LongType, containsNull = false)),
+          StructField("pathEdges", edgeKeyType)) ++
+          (if (display) Seq(StructField("pathHops", hopInfoType)) else Nil))
+        nt.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
       }
-      val stepCols = Seq(
-        col("src"),
-        col("__e.sink").as("dst"),
-        (col("hops") + 1).as("hops"),
-        concat(col("pathNodes"), array(col("__e.sink"))).as("pathNodes"),
-        concat(col("pathEdges"),
-          array(struct(col("dst").as("node"), col("__e.edgeId").as("edgeId"))))
-          .as("pathEdges")) ++
-        (if (display) Seq(
-          concat(col("pathHops"), array(struct(
-            (lit(table).as("nodeType") +:
-              col("dst").as("nodeId") +:
-              lit(edgeName).as("edgeType") +:
-              ed.attrs.map(a => col(s"__e.${a.name}").as(a.name))): _*)))
-            .as("pathHops")) else Nil)
-      df.select(stepCols: _*)
     }
 
-    val results = Seq.newBuilder[DataFrame]
-    if (minLen == 0) results += seed
+    def distributed: DataFrame = {
+      val adj = nt.select(adjCols: _*).filter(nonEmpty)
+      val seedIds = seedSource.select(seedCol.as("GlobalNodeId"))
+      val seedCols = Seq(
+        col("GlobalNodeId").as("src"),
+        col("GlobalNodeId").as("dst"),
+        lit(0).as("hops"),
+        array(col("GlobalNodeId")).as("pathNodes"),
+        array().cast(edgeKeyType).as("pathEdges")) ++
+        (if (display) Seq(array().cast(hopInfoType).as("pathHops")) else Nil)
+      val seed = (if (seeds.isDefined) seedIds.distinct() else seedIds)
+        .select(seedCols: _*)
 
-    var frontier = seed
+      def step(frontier: DataFrame): DataFrame = {
+        var df = frontier
+          .join(adj, col("dst") === col("__node"))
+          .withColumn("__e", explode(live))
+        df = mode match {
+          case EdgeDisjoint => df.filter(!array_contains(col("pathEdges"),
+            struct(col("dst").as("node"), col("__e.edgeId").as("edgeId"))))
+          case NodeDisjoint => df.filter(!array_contains(col("pathNodes"),
+            col("__e.sink")))
+        }
+        val stepCols = Seq(
+          col("src"),
+          col("__e.sink").as("dst"),
+          (col("hops") + 1).as("hops"),
+          concat(col("pathNodes"), array(col("__e.sink"))).as("pathNodes"),
+          concat(col("pathEdges"),
+            array(struct(col("dst").as("node"), col("__e.edgeId").as("edgeId"))))
+            .as("pathEdges")) ++
+          (if (display) Seq(
+            concat(col("pathHops"), array(struct(
+              (lit(table).as("nodeType") +:
+                col("dst").as("nodeId") +:
+                lit(edgeName).as("edgeType") +:
+                ed.attrs.map(a => col(s"__e.${a.name}").as(a.name))): _*)))
+              .as("pathHops")) else Nil)
+        df.select(stepCols: _*)
+      }
+
+      val results = Seq.newBuilder[DataFrame]
+      if (minLen == 0) results += seed
+
+      var frontier = seed
+      if (maxLen >= 0) {
+        // bounded: unroll into one declarative plan; empty hops union harmlessly
+        for (k <- 1 to maxLen) {
+          frontier = step(frontier)
+          if (k >= minLen) results += frontier
+        }
+      } else {
+        // unbounded *: iterate to fixpoint, truncating lineage each hop
+        var k = 0
+        var done = false
+        while (!done) {
+          frontier = step(frontier).stageBoundary
+          if (frontier.isEmpty) done = true
+          else {
+            k += 1
+            if (k >= minLen) results += frontier
+            if (k >= maxIterations) throw notConverged(maxIterations)
+          }
+        }
+      }
+
+      val rs = results.result()
+      val union = if (rs.isEmpty) seed.limit(0) else rs.reduce(_ unionAll _)
+      if (!backward) union
+      else union.select(
+        col("dst").as("src"), col("src").as("dst"), col("hops"),
+        reverse(col("pathNodes")).as("pathNodes"), col("pathEdges"))
+    }
+
+    local.getOrElse(distributed)
+  }
+
+  private def notConverged(maxIterations: Int) = new IllegalStateException(
+    s"unbounded path expansion did not converge in $maxIterations hops")
+
+  /** One walk row: `via` holds the collected edge row of every hop taken
+    * (kind, departing node, sink, edgeId, display attrs).
+    */
+  private final case class Walk(src: Long, dst: Long, hops: Int,
+      nodes: Vector[Long], edges: Vector[(Long, Int)], via: Vector[Row])
+
+  /** The distributed loop's recurrence on the driver over `adj` (holder
+    * id → its live edge rows `(kind, holder, sink, edgeId, attrs*)`): the
+    * same seed rows, disjointness filters, `minLen` cut, bounded
+    * unrolling and unbounded fixpoint with its `maxIterations` error.
+    * `None` once more than `limit` rows were produced (results and
+    * intermediate frontiers alike).
+    */
+  private def walk(seeds: Seq[Long], adj: Map[Long, Array[Row]], minLen: Int,
+      maxLen: Int, mode: Mode, maxIterations: Int, limit: Int): Option[Seq[Walk]] = {
+    var produced = seeds.size.toLong
+    if (produced > limit) return None
+    val out = Seq.newBuilder[Walk]
+    def step(frontier: Seq[Walk]): Option[Seq[Walk]] = {
+      val next = Seq.newBuilder[Walk]
+      frontier.foreach { w =>
+        adj.getOrElse(w.dst, Array.empty[Row]).foreach { e =>
+          val sink = e.getLong(2)
+          val edgeId = e.getInt(3)
+          val ok = mode match {
+            case EdgeDisjoint => !w.edges.contains((w.dst, edgeId))
+            case NodeDisjoint => !w.nodes.contains(sink)
+          }
+          if (ok) {
+            produced += 1
+            if (produced > limit) return None
+            next += Walk(w.src, sink, w.hops + 1, w.nodes :+ sink,
+              w.edges :+ ((w.dst, edgeId)), w.via :+ e)
+          }
+        }
+      }
+      Some(next.result())
+    }
+    var frontier: Seq[Walk] =
+      seeds.map(s => Walk(s, s, 0, Vector(s), Vector.empty, Vector.empty))
+    if (minLen == 0) out ++= frontier
     if (maxLen >= 0) {
-      // bounded: unroll into one declarative plan; empty hops union harmlessly
       for (k <- 1 to maxLen) {
-        frontier = step(frontier)
-        if (k >= minLen) results += frontier
+        frontier = step(frontier).getOrElse(return None)
+        if (k >= minLen) out ++= frontier
       }
     } else {
-      // unbounded *: iterate to fixpoint, truncating lineage each hop
       var k = 0
       var done = false
       while (!done) {
-        frontier = step(frontier).stageBoundary
+        frontier = step(frontier).getOrElse(return None)
         if (frontier.isEmpty) done = true
         else {
           k += 1
-          if (k >= minLen) results += frontier
-          if (k >= maxIterations) throw new IllegalStateException(
-            s"unbounded path expansion did not converge in $maxIterations hops")
+          if (k >= minLen) out ++= frontier
+          if (k >= maxIterations) throw notConverged(maxIterations)
         }
       }
     }
-
-    val rs = results.result()
-    val union = if (rs.isEmpty) seed.limit(0) else rs.reduce(_ unionAll _)
-    if (!backward) union
-    else union.select(
-      col("dst").as("src"), col("src").as("dst"), col("hops"),
-      reverse(col("pathNodes")).as("pathNodes"), col("pathEdges"))
+    Some(out.result())
   }
 
   def localKey(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

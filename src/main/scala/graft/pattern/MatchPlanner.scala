@@ -3,6 +3,7 @@ package graft.pattern
 import graft.graph.GraphProvider
 import graft.meta.EdgeDef
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.functions._
 
 /** MATCH-pattern IR — the Spark analogue of the reference's `MatchGraph`
@@ -28,13 +29,18 @@ final case class EdgePat(
 }
 final case class MatchPattern(nodes: Seq[NodePat], edges: Seq[EdgePat])
 
-/** Plans a MATCH pattern into a DataFrame of joins + adjacency explodes.
+/** Plans a MATCH pattern into one plan of joins + adjacency explodes.
   *
   * Output columns are `<alias>__<column>` for every node alias, plus
   * `<edgeAlias>__sink`, `<edgeAlias>__edgeId` and `<edgeAlias>__<attr>`
   * for every traversed edge. Callers `.select(...)` the projection; node
   * predicates are plain `.filter`s on the result, which Catalyst pushes
   * back down through the joins into the parquet scans.
+  *
+  * The plan is built as an unanalyzed [[Rel]] (`relWithStats`,
+  * `planRel`, `prefixedRel`, `execute`) so the MATCH compiler can keep
+  * composing before one analysis; `planWithStats` and `plan` are
+  * DataFrame faces over it.
   *
   * Physical shape (v1, greedy left-deep from the first alias):
   *   - forward traversal: explode the source's adjacency array (tombstones
@@ -62,7 +68,16 @@ object MatchPlanner {
   def planWithStats(g: GraphProvider, pattern: MatchPattern,
       stats: graft.stats.GraphStats,
       nodeSel: Map[String, Double] = Map.empty,
-      filteredIdHists: Map[String, graft.stats.Histogram] = Map.empty): DataFrame = {
+      filteredIdHists: Map[String, graft.stats.Histogram] = Map.empty): DataFrame =
+    relWithStats(g, pattern, stats, nodeSel, filteredIdHists).toDF
+
+  /** [[planWithStats]] as an unanalyzed [[Rel]] — the MATCH compiler's
+    * face: the statement keeps composing before its one analysis
+    */
+  def relWithStats(g: GraphProvider, pattern: MatchPattern,
+      stats: graft.stats.GraphStats,
+      nodeSel: Map[String, Double] = Map.empty,
+      filteredIdHists: Map[String, graft.stats.Histogram] = Map.empty): Rel = {
     validate(g, pattern)
     execute(g, pattern,
       CostPlanner.plan(g, pattern, stats, nodeSel, filteredIdHists).steps)
@@ -70,39 +85,39 @@ object MatchPlanner {
 
   /** Execute an ordered step program from the cost planner. */
   def execute(g: GraphProvider, pattern: MatchPattern,
-      steps: Seq[Step]): DataFrame = {
+      steps: Seq[Step]): Rel = {
     val nodeByAlias = pattern.nodes.map(n => n.alias -> n).toMap
-    var df: DataFrame = null
+    var df: Rel = null
     steps.foreach {
       case StartNode(a) =>
-        val t = prefixed(g, nodeByAlias(a))
+        val t = prefixedRel(g, nodeByAlias(a))
         df = if (df == null) t else df.crossJoin(t)
       case ExpandEdge(e, reversed, bcast, preMat) =>
         val edgeDef = g.schema.table(nodeByAlias(e.src).table).edge(e.edge)
         if (!reversed) {
           if (!preMat) {
             // frontier-side explode, then join the new sink node
-            var t = prefixed(g, nodeByAlias(e.dst))
-            if (bcast) t = broadcast(t)
+            var t = prefixedRel(g, nodeByAlias(e.dst))
+            if (bcast) t = t.broadcast
             df = explodeForward(df, e, edgeDef)
               .join(t, col(s"${e.alias}__sink") === col(s"${e.dst}__GlobalNodeId"))
           } else {
             // build-side pre-materialization: explode the NEW node's
             // reversed mirror before joining (shrinks a <1-degree side)
-            var build = explodeReversed(prefixed(g, nodeByAlias(e.dst)), e, edgeDef)
-            if (bcast) build = broadcast(build)
+            var build = explodeReversed(prefixedRel(g, nodeByAlias(e.dst)), e, edgeDef)
+            if (bcast) build = build.broadcast
             df = df.join(build,
               col(s"${e.alias}__src") === col(s"${e.src}__GlobalNodeId"))
           }
         } else {
           if (!preMat) {
-            var t = prefixed(g, nodeByAlias(e.src))
-            if (bcast) t = broadcast(t)
+            var t = prefixedRel(g, nodeByAlias(e.src))
+            if (bcast) t = t.broadcast
             df = explodeReversed(df, e, edgeDef)
               .join(t, col(s"${e.alias}__src") === col(s"${e.src}__GlobalNodeId"))
           } else {
-            var build = explodeForward(prefixed(g, nodeByAlias(e.src)), e, edgeDef)
-            if (bcast) build = broadcast(build)
+            var build = explodeForward(prefixedRel(g, nodeByAlias(e.src)), e, edgeDef)
+            if (bcast) build = build.broadcast
             df = df.join(build,
               col(s"${e.alias}__sink") === col(s"${e.dst}__GlobalNodeId"))
           }
@@ -151,22 +166,32 @@ object MatchPlanner {
     * aliases to the outer row's ids — a semi/anti equi-join on the
     * binding columns (the multiplicity-preserving form of the
     * reference's rematerialization, `TranslateMatchClauseVisitor.cs:620-705`).
-    * `inner` must already carry the pattern's own predicates.
+    * `inner` must already carry the pattern's own predicates. Both sides
+    * name a binding `<alias>__GlobalNodeId`, so the inner side exposes
+    * its bindings under `__bind_<alias>` before the join.
     */
-  def semiCorrelated(outer: DataFrame, inner: DataFrame,
-      bindings: Map[String, String], negated: Boolean = false): DataFrame = {
-    val cond = bindings.map { case (alias, outerCol) =>
-      outer(outerCol) === inner(s"${alias}__GlobalNodeId")
+  def semiCorrelated(outer: Rel, inner: Rel,
+      bindings: Map[String, String], negated: Boolean = false): Rel = {
+    val keys = bindings.toSeq
+    val innerKeys = inner.select(keys.map { case (alias, _) =>
+      col(s"${alias}__GlobalNodeId").as(s"__bind_$alias")
+    }: _*)
+    val cond = keys.map { case (alias, outerCol) =>
+      col(outerCol) === col(s"__bind_$alias")
     }.reduce(_ && _)
-    outer.join(inner, cond, if (negated) "left_anti" else "left_semi")
+    outer.join(innerKeys, cond, if (negated) LeftAnti else LeftSemi)
   }
 
-  def plan(g: GraphProvider, pattern: MatchPattern): DataFrame = {
+  def plan(g: GraphProvider, pattern: MatchPattern): DataFrame =
+    planRel(g, pattern).toDF
+
+  /** [[plan]] as an unanalyzed [[Rel]] */
+  def planRel(g: GraphProvider, pattern: MatchPattern): Rel = {
     validate(g, pattern)
     val nodeByAlias = pattern.nodes.map(n => n.alias -> n).toMap
 
     var bound = Set(pattern.nodes.head.alias)
-    var df = prefixed(g, pattern.nodes.head)
+    var df = prefixedRel(g, pattern.nodes.head)
     var remaining = pattern.edges
 
     while (remaining.nonEmpty || bound.size < pattern.nodes.size) {
@@ -178,12 +203,12 @@ object MatchPlanner {
           val edgeDef = g.schema.table(srcNode.table).edge(e.edge)
           if (bound(e.src) && !bound(e.dst)) {
             df = explodeForward(df, e, edgeDef)
-              .join(prefixed(g, dstNode),
+              .join(prefixedRel(g, dstNode),
                 col(s"${e.alias}__sink") === col(s"${e.dst}__GlobalNodeId"))
             bound += e.dst
           } else if (!bound(e.src) && bound(e.dst)) {
             df = explodeReversed(df, e, edgeDef)
-              .join(prefixed(g, srcNode),
+              .join(prefixedRel(g, srcNode),
                 col(s"${e.alias}__src") === col(s"${e.src}__GlobalNodeId"))
             bound += e.src
           } else { // both bound: edge becomes a filter
@@ -195,7 +220,7 @@ object MatchPlanner {
           // its edges connect (the reference handles components separately
           // and cross-joins them, TranslateMatchClauseVisitor.cs:1004-1030)
           val next = pattern.nodes.find(n => !bound(n.alias)).get
-          df = df.crossJoin(prefixed(g, next))
+          df = df.crossJoin(prefixedRel(g, next))
           bound += next.alias
       }
     }
@@ -203,9 +228,9 @@ object MatchPlanner {
   }
 
   /** Node table with every column prefixed `alias__`. */
-  def prefixed(g: GraphProvider, n: NodePat): DataFrame = {
+  def prefixedRel(g: GraphProvider, n: NodePat): Rel = {
     val t = g.nodeTable(n.table)
-    t.select(t.columns.map(c => col(c).as(s"${n.alias}__$c")).toSeq: _*)
+    Rel(t).select(t.columns.map(c => col(c).as(s"${n.alias}__$c")).toSeq: _*)
   }
 
   /** Live, predicate-surviving edges of an adjacency array: tombstone
@@ -223,7 +248,7 @@ object MatchPlanner {
   /** Explode `src`'s adjacency for `e`: one output row per live edge,
     * with flattened `<edgeAlias>__{sink,edgeId,attrs*}` columns.
     */
-  private def explodeForward(df: DataFrame, e: EdgePat, ed: EdgeDef): DataFrame =
+  private def explodeForward(df: Rel, e: EdgePat, ed: EdgeDef): Rel =
     flatten(
       df.withColumn("__e", explode(liveEdges(
         col(s"${e.src}__${ed.columnName}"),
@@ -235,16 +260,15 @@ object MatchPlanner {
     * tombstones (appended incrementally by DELETE EDGE) filter here, the
     * mirror of the forward DeleteCol skip.
     */
-  private def explodeReversed(df: DataFrame, e: EdgePat, ed: EdgeDef): DataFrame =
+  private def explodeReversed(df: Rel, e: EdgePat, ed: EdgeDef): Rel =
     flatten(
       df.withColumn("__e", explode(liveEdges(
         col(s"${e.dst}__${ed.reversedColumnName}"),
         col(s"${e.dst}__${ed.reversedDelColumnName}"), e))),
       e, ed, srcField = Some("sink"))
 
-  private def flatten(df0: DataFrame, e: EdgePat, ed: EdgeDef,
-      srcField: Option[String]): DataFrame = {
-    val df = df0
+  private def flatten(df: Rel, e: EdgePat, ed: EdgeDef,
+      srcField: Option[String]): Rel = {
     val endpoint = srcField match {
       case None => Seq(col("__e.sink").as(s"${e.alias}__sink"))
       case Some(f) => Seq(col(s"__e.$f").as(s"${e.alias}__src"))

@@ -30,6 +30,21 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(session, plan)
 
+  /** [[ofRows]] for the API-level session type the engine passes around */
+  def ofPlan(session: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    ofRows(session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** parse SQL text into an unresolved plan with the session's parser —
+    * the first half of `spark.sql`, so a caller can splice its own plan
+    * in for a placeholder relation before the one analysis
+    */
+  def parsePlan(session: org.apache.spark.sql.SparkSession, sqlText: String)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.sqlParser.parsePlan(sqlText)
+
   /** drive a configured `SparkSessionExtensions`' function injections
     * into a registry — the `private[sql]` step session construction
     * performs, exposed so tests can exercise the extensions hook */

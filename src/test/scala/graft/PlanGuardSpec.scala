@@ -70,9 +70,13 @@ class PlanGuardSpec extends SparkSpec {
     // earlier fingerprints embed) is unchanged. Same caveat as
     // q_sql_edge_view: persist/ReusedExchange changes move counts
     // between prints without changing physical work — re-pin with a
-    // note on deliberate plan changes
-    "q_sql_view_varlen" -> Fingerprint(187, 83, 53, 0),
-    "q_sql_correlated_view" -> Fingerprint(429, 190, 126, 0),
+    // note on deliberate plan changes. Re-pinned (187,83,53) → (57,26,16)
+    // and (429,190,126) → (145,64,40) when small var-length walks began
+    // finishing on the driver: each 1..2-hop walk over the Place view is
+    // now one LocalTableScan of its paths instead of the unrolled
+    // frontier joins and explodes over the view union (PathExpand)
+    "q_sql_view_varlen" -> Fingerprint(57, 26, 16, 0),
+    "q_sql_correlated_view" -> Fingerprint(145, 64, 40, 0),
     // collapse-shape pins (r10 #5): the hot-copy LSH rows construct
     // exact duplicates, so the dup membership resolves Some and the
     // FULL collapse path plans — and because the membership/candidate

@@ -249,6 +249,37 @@ class GraphSqlSpec extends SparkSpec {
     assert(two == Seq(("Alice", "Bob")))
   }
 
+  test("MATCH, correlated EXISTS and DELETE EDGE leave no temp view behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_views").toString
+    val gs = new GraphSession(spark, new graft.ddl.GraphCatalog(spark, dir))
+    gs.sql("""CREATE NODE TABLE People (
+             |  id INT NODEID, name STRING,
+             |  EDGE Knows TO People)""".stripMargin)
+    gs.sql("""INSERT NODE INTO People
+             |SELECT * FROM VALUES (1,'Alice'),(2,'Bob'),(3,'Caven')
+             |  AS t(id, name)""".stripMargin)
+    gs.sql("""INSERT EDGE INTO People.Knows
+             |SELECT * FROM VALUES (1,2),(2,3) AS t(src_id, dst_id)""".stripMargin)
+    def statementViews() = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => Seq("__match_", "__corr_", "__del_").exists(n.startsWith))
+    val before = statementViews()
+    assert(gs.sql(
+      """SELECT B.name FROM People A, People B MATCH A-[Knows]->B
+        |WHERE A.name = 'Alice'""".stripMargin)
+      .collect().map(_.getString(0)).toSeq == Seq("Bob"))
+    assert(gs.sql(
+      """SELECT A.name FROM People A
+        |WHERE EXISTS (SELECT 1 FROM People B MATCH A-[Knows]->B
+        |              WHERE B.name = 'Caven')""".stripMargin)
+      .collect().map(_.getString(0)).toSeq == Seq("Bob"))
+    assert(gs.sql(
+      """DELETE EDGE x-[Knows]->y FROM People x, People y
+        |WHERE x.name = 'Bob' AND y.name = 'Caven'""".stripMargin)
+      .head().getLong(0) == 1)
+    assert(before.isEmpty && statementViews().isEmpty,
+      s"statement temp views left in the catalog: ${statementViews().toSeq}")
+  }
+
   test("selective dst seeds a backward var-length expansion (golden plan)") {
     import graft.planner.ExpandPath
     val gs = new GraphSession(spark, peopleProvider)

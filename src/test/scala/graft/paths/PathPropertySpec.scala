@@ -195,6 +195,97 @@ class PathPropertySpec extends SparkSpec {
         """{"NodeType":"N","Id":3}]"""))
   }
 
+  /** a weighted self-edge graph (`w` alternates 0/1) with every third
+    * live edge tombstoned on both the forward and the mirror side
+    */
+  private val tdW = NodeTableDef("N", 1, Some("id"), Nil,
+    Seq(EdgeDef("e", "N", "N", Seq(graft.meta.EdgeAttr("w",
+      org.apache.spark.sql.types.LongType)))))
+
+  private def tombstonedGraph(n: Int, edges: Seq[(Int, Int)]): GraphProvider = {
+    val s = spark
+    import s.implicits._
+    val ed = tdW.edge("e")
+    val nodes = (1 to n).map(Tuple1(_)).toDF("id")
+    val pairs = edges.zipWithIndex.map { case ((a, b), i) => (a, b, (i % 2).toLong) }
+      .toDF("s", "t", "w")
+      .select(GraphBuilder.gid(1, col("s")).as("src"),
+        GraphBuilder.gid(1, col("t")).as("sink"), col("w"))
+    val built = GraphBuilder.nodeTable(tdW, nodes, "id",
+      Map("e" -> pairs), Seq(ed -> pairs))
+    val doomed = built
+      .select(col("GlobalNodeId").as("src"), explode(col("e")).as("x"))
+      .filter(pmod(col("x.edgeId") + col("src"), lit(3)) === 0)
+      .select(col("src"), col("x.edgeId").as("edgeId"), col("x.sink").as("sink"))
+    val table = GraphDml.deleteEdgesSinkSide(
+      GraphDml.deleteEdges(built, ed, doomed), ed, doomed).cache()
+    new GraphProvider {
+      val schema: GraphSchema = GraphSchema(Seq(tdW))
+      def nodeTable(name: String): DataFrame = table
+    }
+  }
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** whole rows (pathNodes, pathEdges and pathHops included), as a sorted multiset */
+  private def wholeRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("driver-local walk equals the forced-distributed plan (whole rows)") {
+    val s = spark
+    import s.implicits._
+    samples(caseGen, 5).foreach {
+      case ((n, edges), minL, span, nodeDisjoint) =>
+        val g = tombstonedGraph(n, edges)
+        val mode = if (nodeDisjoint) PathExpand.NodeDisjoint
+          else PathExpand.EdgeDisjoint
+        val seeds = Seq(1, n).distinct
+          .map(graft.meta.GlobalNodeId.pack(1, _)).toDF("id")
+        val variants = Seq[(String, Int => DataFrame)](
+          "bounded, display" -> (lim => PathExpand.expand(g, "N", "e", minL,
+            minL + span, mode, display = true, localEdgeLimit = lim)),
+          "bounded, w = 1" -> (lim => PathExpand.expand(g, "N", "e", minL,
+            minL + span, mode, attrEq = Map("w" -> 1L), localEdgeLimit = lim)),
+          "unbounded, seeded" -> (lim => PathExpand.expand(g, "N", "e", minL,
+            -1, mode, seeds = Some(seeds), localEdgeLimit = lim)),
+          "bounded backward, seeded" -> (lim => PathExpand.expand(g, "N", "e",
+            minL, minL + span, mode, seeds = Some(seeds), backward = true,
+            localEdgeLimit = lim)),
+          "unbounded backward, seeded" -> (lim => PathExpand.expand(g, "N", "e",
+            minL, -1, mode, seeds = Some(seeds), backward = true,
+            localEdgeLimit = lim)))
+        variants.foreach { case (what, run) =>
+          val local = run(graft.ext.LocalGraph.LocalEdgeLimit)
+          val dist = run(0)
+          val ctx = s"$what: n=$n edges=$edges min=$minL span=$span mode=$mode"
+          assert(isLocal(local) && !isLocal(dist), ctx)
+          assert(local.schema.map(f => (f.name, f.dataType)) ==
+            dist.schema.map(f => (f.name, f.dataType)), ctx)
+          assert(wholeRows(local) == wholeRows(dist), ctx)
+        }
+    }
+  }
+
+  test("a walk past the path-row bound mid-walk falls back to the distributed plan") {
+    // 4 nodes, 8 live-before-tombstone edges: adjacency and seeds fit the
+    // bound of 10, the 1..3-hop walks do not
+    val edges = Seq((1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (3, 1), (2, 4), (4, 2))
+    val g = tombstonedGraph(4, edges)
+    val liveEdges = g.nodeTable("N")
+      .select(explode(expr("filter(e, x -> NOT array_contains(eDel, x.edgeId))")))
+      .count()
+    assert(liveEdges <= 10)
+    def run(lim: Int) = PathExpand.expand(g, "N", "e", 1, 3, localEdgeLimit = lim)
+    val tripped = run(10)
+    val dist = run(0)
+    assert(wholeRows(dist).size > 10)
+    assert(!isLocal(tripped))
+    assert(wholeRows(tripped) == wholeRows(dist))
+    assert(isLocal(run(graft.ext.LocalGraph.LocalEdgeLimit)))
+  }
+
   test("INSERT EDGE then DELETE EDGE round-trips the adjacency") {
     samples(graphGen.flatMap(g => Gen.choose(1, 4).map(k => (g, k))), 5).foreach {
       case ((n, edges), k) =>
