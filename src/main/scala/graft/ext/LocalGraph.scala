@@ -16,7 +16,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
   * random graphs; the DuckDB oracles hold over both paths), and the
   * distributed loop remains the default above the bound — scale
   * behavior is unchanged. [[graft.paths.PathExpand]] finishes small
-  * variable-length walks the same way.
+  * variable-length walks the same way, through [[collectBounded]].
   */
 private[graft] object LocalGraph {
 
@@ -56,19 +56,29 @@ private[graft] object LocalGraph {
     else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
   }
 
-  /** Collect `df` in ONE job, each partition sending at most `cap`
-    * rows: a caller bounding a relation at `limit` passes limit+1 and
-    * falls back when more than `limit` rows arrive, having moved a
-    * bounded amount. A limit-collect would instead scan the partitions
-    * over several growing jobs. Runs `df`'s own physical plan and
-    * converts rows on the driver: `df.rdd` would optimize and plan a
+  /** Collect `df` in ONE job when each of its P partitions holds at
+    * most its share ⌊limit / P⌋ of rows, so at most `limit` in all;
+    * `None` otherwise. Each partition sends at most share + 1 rows, so
+    * the driver receives at most limit + P rows whatever the size of
+    * `df`. A relation under `limit` whose rows crowd one partition past
+    * its share is also `None`: callers fall back to their distributed
+    * plan, which is always correct. A share of 0 (limit < P) answers
+    * `None` without a job. A limit-collect would instead scan the
+    * partitions over several growing jobs. Runs `df`'s own physical plan
+    * and converts rows on the driver: `df.rdd` would optimize and plan a
     * second, deserializing query.
     */
-  def collectCapped(df: DataFrame, cap: Int): Array[Row] = {
-    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
-      (it: Iterator[InternalRow]) => it.take(cap).map(_.copy()).toArray)
-      .flatten.map(r => toRow(r).asInstanceOf[Row])
+  def collectBounded(df: DataFrame, limit: Int): Option[Array[Row]] = {
+    val rdd = df.queryExecution.toRdd
+    val share = limit / math.max(rdd.getNumPartitions, 1)
+    if (share == 0) return None
+    val parts = df.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[InternalRow]) => it.take(share + 1).map(_.copy()).toArray)
+    if (parts.exists(_.length > share)) None
+    else {
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      Some(parts.flatten.map(r => toRow(r).asInstanceOf[Row]))
+    }
   }
 
   /** dense interning of long node ids: (idOf, names) where

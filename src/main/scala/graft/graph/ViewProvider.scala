@@ -88,33 +88,13 @@ final case class ViewProvider(
 
   private val viewByName = nodeViews.map(v => v.name -> v).toMap
 
-  // overlay frames keyed by the base frames they were built from: a base
-  // provider that hands out the same DataFrame for an unchanged table
-  // (a cached graph, the catalog between rewrites) gets the same overlay
-  // frame back, so a statement does not rebuild and re-analyze it; a
-  // rewritten base table is a new frame and rebuilds what reads it
-  private val built =
-    scala.collection.concurrent.TrieMap[String, (Seq[DataFrame], DataFrame)]()
-
-  def nodeTable(name: String): DataFrame = {
-    val inputs = viewByName.get(name) match {
-      case Some(v) => v.members.map(base.nodeTable)
-      case None => Seq(base.nodeTable(name))
-    }
-    built.get(name) match {
-      case Some((in, df)) if in.corresponds(inputs)(_ eq _) => df
-      case _ =>
-        val df = viewByName.get(name) match {
-          case Some(v) => unionTable(v, inputs)
-          case None =>
-            val t = inputs.head
-            // base sink tables of view edges carry the view's reversed mirror
-            val extra = reversedOverlayCols(name)
-            if (extra.isEmpty) t else t.select((t.columns.map(col).toSeq ++ extra): _*)
-        }
-        built(name) = (inputs, df)
-        df
-    }
+  def nodeTable(name: String): DataFrame = viewByName.get(name) match {
+    case Some(v) => unionTable(v)
+    case None =>
+      val t = base.nodeTable(name)
+      // base sink tables of view edges carry the view's reversed mirror
+      val extra = reversedOverlayCols(name)
+      if (extra.isEmpty) t else t.select((t.columns.map(col).toSeq ++ extra): _*)
   }
 
   /** reversed struct type of a view edge (matches
@@ -249,9 +229,9 @@ final case class ViewProvider(
       (props ++ edgeCols ++ rev)): _*)
   }
 
-  private def unionTable(v: NodeViewDef, tables: Seq[DataFrame]): DataFrame = {
+  private def unionTable(v: NodeViewDef): DataFrame = {
     require(v.members.nonEmpty, s"node view ${v.name} has no member tables")
-    v.members.zip(tables).map { case (m, t) => memberProjection(v, m, t) }
+    v.members.map(m => memberProjection(v, m, base.nodeTable(m)))
       .reduce(_ unionAll _)
   }
 }

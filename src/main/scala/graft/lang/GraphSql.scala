@@ -10,7 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -597,8 +596,8 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
       // T-SQL SHOWPLAN analogue: one string row with the formatted
       // physical plan of the inner statement (works for MATCH queries
       // too — Spark's own EXPLAIN can't see through the dialect). EXPLAIN
-      // of a small var-length statement runs the bounded jobs that
-      // collect the walk's seeds and adjacency: its driver-local paths
+      // of a small var-length statement runs the bounded job that
+      // collects the walk's seeds and adjacency: its driver-local paths
       // are data in the plan (PathExpand)
       import spark.implicits._
       Seq(sql(inner).queryExecution.explainString(
@@ -1186,15 +1185,14 @@ class GraphSession(val spark: SparkSession, val provider: GraphProvider,
 
   /** `t`'s stats sample as the LocalRelation the probes evaluate: every
     * sample [[GraphStats]] collects is one (views included, see
-    * [[graft.graph.ViewProvider.augmentStats]]); a sample supplied as
-    * any other plan is collected into one
+    * [[graft.graph.ViewProvider.augmentStats]])
     */
   private def sampleRelation(t: String): Option[LocalRelation] =
     stats.samples.get(t).map { s =>
       s.queryExecution.analyzed match {
         case l: LocalRelation => l
-        case _ => LocalRelation.fromExternalRows(
-          DataTypeUtils.toAttributes(s.schema), s.collect().toSeq)
+        case other => throw new IllegalStateException(
+          s"stats sample of $t is not a LocalRelation: ${other.nodeName}")
       }
     }
 

@@ -27,14 +27,16 @@ import org.apache.spark.sql.types._
   * Execution has two faces with one semantics:
   *
   *  - driver-local finish (the [[graft.ext.LocalGraph]] pattern of Scc,
-  *    Lpa, Topo, KCore and Ppr): when the live adjacency of the edge
-  *    (tombstones and attr predicates applied), the seed set and the
-  *    produced path rows each fit `localEdgeLimit`, the adjacency and the
-  *    seeds are collected in one job each, the walk runs on the driver,
-  *    and the paths come back as a `LocalRelation`. A small walk then
-  *    costs two short jobs instead of a join + explode per hop. These
-  *    jobs run when `expand` is called, i.e. while a statement is being
-  *    compiled (EXPLAIN included);
+  *    Lpa, Topo, KCore and Ppr): when the seed rows and the live
+  *    adjacency of the edge (tombstones and attr predicates applied) fit
+  *    `localEdgeLimit` rows together, they are collected in one job
+  *    ([[graft.ext.LocalGraph.collectBounded]], which moves a bounded
+  *    number of rows whatever the graph's size) and the walk runs on the
+  *    driver while its paths hold at most `localEdgeLimit / 8` path
+  *    elements (nodes, counted per produced row). The paths come back as
+  *    a `LocalRelation`. A small walk then costs one short job instead of
+  *    a join + explode per hop. The job runs when `expand` is called,
+  *    i.e. while a statement is being compiled (EXPLAIN included);
   *  - distributed, past any bound: an iterative DataFrame loop where each
   *    hop joins the frontier to the node table's adjacency on
   *    GlobalNodeId and explodes it. A bounded walk unrolls into one plan;
@@ -70,9 +72,10 @@ object PathExpand {
     *   (src/dst swapped back, pathNodes re-reversed); edge-disjointness
     *   keys on the reversed holder's (node, edgeId), which is unique per
     *   physical edge.
-    * @param localEdgeLimit  bound on the collected adjacency, seed rows
-    *   and produced path rows under which the walk finishes on the
-    *   driver; 0 forces the distributed loop
+    * @param localEdgeLimit  bound on the collected seed and adjacency
+    *   rows, and eight times the bound on the produced path elements,
+    *   under which the walk finishes on the driver; 0 forces the
+    *   distributed loop without a job
     */
   def expand(
       g: GraphProvider,
@@ -134,10 +137,10 @@ object PathExpand {
     }
 
     def local: Option[DataFrame] = {
-      // seeds and live adjacency rows in ONE job, told apart by `kind`;
-      // the bound applies to each side, and to the seeds before their
-      // dedupe. Built as one plan over the cache-substituted node table,
-      // so the collect costs one small analysis.
+      // seeds and live adjacency rows in ONE job, told apart by `kind`,
+      // at most localEdgeLimit rows in all. Built as one plan over the
+      // cache-substituted node table, so the collect costs one small
+      // analysis.
       val attrs = if (display) ed.attrs else Nil
       val seedRows = Rel(seedSource).select((lit(0).as("kind") +:
         seedCol.as("node") +: lit(null).cast(LongType).as("sink") +:
@@ -148,29 +151,29 @@ object PathExpand {
         .select((lit(1).as("kind") +: col("__node").as("node") +:
           col("__e.sink").as("sink") +: col("__e.edgeId").as("edgeId") +:
           attrs.map(a => col(s"__e.${a.name}").as(a.name))): _*)
-      val rows = LocalGraph.collectCapped(
-        seedRows.unionAll(edgeRows).toDF, localEdgeLimit + 1)
-      val (seedPart, edgePart) = rows.partition(_.getInt(0) == 0)
-      if (seedPart.length > localEdgeLimit || edgePart.length > localEdgeLimit) None
-      else walk(seedPart.map(_.getLong(1)).distinct.toSeq,
-        edgePart.groupBy(_.getLong(1)), minLen, maxLen, mode, maxIterations,
-        localEdgeLimit).map { paths =>
-        val out = paths.map { p =>
-          val edges = p.edges.map { case (n, e) => Row(n, e) }
-          if (backward) Row(p.dst, p.src, p.hops, p.nodes.reverse, edges)
-          else Row.fromSeq(Seq(p.src, p.dst, p.hops, p.nodes, edges) ++
-            (if (display) Seq(p.via.map(r =>
-              Row.fromSeq(Seq(table, r.getLong(1), edgeName) ++ r.toSeq.drop(4))))
-            else Nil))
+      LocalGraph.collectBounded(seedRows.unionAll(edgeRows).toDF, localEdgeLimit)
+        .flatMap { rows =>
+          val (seedPart, edgePart) = rows.partition(_.getInt(0) == 0)
+          walk(seedPart.map(_.getLong(1)).distinct.toSeq,
+            edgePart.groupBy(_.getLong(1)), minLen, maxLen, mode, maxIterations,
+            localEdgeLimit / PathElementCost)
+        }.map { paths =>
+          val out = paths.map { p =>
+            val edges = p.edges.map { case (n, e) => Row(n, e) }
+            if (backward) Row(p.dst, p.src, p.hops, p.nodes.reverse, edges)
+            else Row.fromSeq(Seq(p.src, p.dst, p.hops, p.nodes, edges) ++
+              (if (display) Seq(p.via.map(r =>
+                Row.fromSeq(Seq(table, r.getLong(1), edgeName) ++ r.toSeq.drop(4))))
+              else Nil))
+          }
+          val schema = StructType(Seq(
+            StructField("src", LongType), StructField("dst", LongType),
+            StructField("hops", IntegerType),
+            StructField("pathNodes", ArrayType(LongType, containsNull = false)),
+            StructField("pathEdges", edgeKeyType)) ++
+            (if (display) Seq(StructField("pathHops", hopInfoType)) else Nil))
+          nt.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
         }
-        val schema = StructType(Seq(
-          StructField("src", LongType), StructField("dst", LongType),
-          StructField("hops", IntegerType),
-          StructField("pathNodes", ArrayType(LongType, containsNull = false)),
-          StructField("pathEdges", edgeKeyType)) ++
-          (if (display) Seq(StructField("pathHops", hopInfoType)) else Nil))
-        nt.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
-      }
     }
 
     def distributed: DataFrame = {
@@ -247,7 +250,7 @@ object PathExpand {
         reverse(col("pathNodes")).as("pathNodes"), col("pathEdges"))
     }
 
-    local.getOrElse(distributed)
+    (if (localEdgeLimit > 0) local else None).getOrElse(distributed)
   }
 
   private def notConverged(maxIterations: Int) = new IllegalStateException(
@@ -259,12 +262,22 @@ object PathExpand {
   private final case class Walk(src: Long, dst: Long, hops: Int,
       nodes: Vector[Long], edges: Vector[(Long, Int)], via: Vector[Row])
 
+  /** The driver cost of one path element (a node of a produced path,
+    * with the edge and hop row that reached it) in units of one
+    * collected edge: an edge row is a few longs, a path element about
+    * 100 bytes across the walk's vectors, the returned rows and the
+    * `LocalRelation`. The walk's budget is `localEdgeLimit / 8` path
+    * elements, so long unbounded walks fall back as wide ones do.
+    */
+  private val PathElementCost = 8
+
   /** The distributed loop's recurrence on the driver over `adj` (holder
     * id → its live edge rows `(kind, holder, sink, edgeId, attrs*)`): the
     * same seed rows, disjointness filters, `minLen` cut, bounded
     * unrolling and unbounded fixpoint with its `maxIterations` error.
-    * `None` once more than `limit` rows were produced (results and
-    * intermediate frontiers alike).
+    * `None` once the produced rows (results and intermediate frontiers
+    * alike) hold more than `limit` path elements, a row of h hops
+    * holding h + 1.
     */
   private def walk(seeds: Seq[Long], adj: Map[Long, Array[Row]], minLen: Int,
       maxLen: Int, mode: Mode, maxIterations: Int, limit: Int): Option[Seq[Walk]] = {
@@ -282,7 +295,7 @@ object PathExpand {
             case NodeDisjoint => !w.nodes.contains(sink)
           }
           if (ok) {
-            produced += 1
+            produced += w.hops + 2
             if (produced > limit) return None
             next += Walk(w.src, sink, w.hops + 1, w.nodes :+ sink,
               w.edges :+ ((w.dst, edgeId)), w.via :+ e)

@@ -39,8 +39,7 @@ final case class MatchPattern(nodes: Seq[NodePat], edges: Seq[EdgePat])
   *
   * The plan is built as an unanalyzed [[Rel]] (`relWithStats`,
   * `planRel`, `prefixedRel`, `execute`) so the MATCH compiler can keep
-  * composing before one analysis; `planWithStats` and `plan` are
-  * DataFrame faces over it.
+  * composing before one analysis; `plan` is a DataFrame face over it.
   *
   * Physical shape (v1, greedy left-deep from the first alias):
   *   - forward traversal: explode the source's adjacency array (tombstones
@@ -63,16 +62,9 @@ object MatchPlanner {
   import graft.planner.{BindEdge, CostPlanner, ExpandEdge, StartNode, Step}
 
   /** Cost-based plan: order chosen by the ported DP/beam search
-    * (SURVEY §4.2) using graph stats + per-alias selectivities.
-    */
-  def planWithStats(g: GraphProvider, pattern: MatchPattern,
-      stats: graft.stats.GraphStats,
-      nodeSel: Map[String, Double] = Map.empty,
-      filteredIdHists: Map[String, graft.stats.Histogram] = Map.empty): DataFrame =
-    relWithStats(g, pattern, stats, nodeSel, filteredIdHists).toDF
-
-  /** [[planWithStats]] as an unanalyzed [[Rel]] — the MATCH compiler's
-    * face: the statement keeps composing before its one analysis
+    * (SURVEY §4.2) using graph stats + per-alias selectivities, as an
+    * unanalyzed [[Rel]] — the MATCH compiler keeps composing the
+    * statement before its one analysis
     */
   def relWithStats(g: GraphProvider, pattern: MatchPattern,
       stats: graft.stats.GraphStats,
@@ -150,7 +142,7 @@ object MatchPlanner {
       outer: DataFrame, outerBindings: Map[String, String],
       stats: Option[graft.stats.GraphStats] = None): DataFrame = {
     val inner = stats match {
-      case Some(st) => planWithStats(g, pattern, st)
+      case Some(st) => relWithStats(g, pattern, st).toDF
       case None => plan(g, pattern)
     }
     // plain equi-join on the binding ids — the outer side is often the

@@ -268,22 +268,34 @@ class PathPropertySpec extends SparkSpec {
     }
   }
 
-  test("a walk past the path-row bound mid-walk falls back to the distributed plan") {
-    // 4 nodes, 8 live-before-tombstone edges: adjacency and seeds fit the
-    // bound of 10, the 1..3-hop walks do not
+  test("a walk past the path-element bound mid-walk falls back to the distributed plan") {
+    // 4 nodes, at most 8 live edges: seeds and adjacency fit a bound of
+    // 160 rows, whose budget of 20 path elements holds the 4 seeds and
+    // the 1-hop rows (2 elements each) but not the 2-hop frontier
     val edges = Seq((1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (3, 1), (2, 4), (4, 2))
     val g = tombstonedGraph(4, edges)
-    val liveEdges = g.nodeTable("N")
-      .select(explode(expr("filter(e, x -> NOT array_contains(eDel, x.edgeId))")))
-      .count()
-    assert(liveEdges <= 10)
-    def run(lim: Int) = PathExpand.expand(g, "N", "e", 1, 3, localEdgeLimit = lim)
-    val tripped = run(10)
-    val dist = run(0)
-    assert(wholeRows(dist).size > 10)
+    def run(lim: Int, maxLen: Int) =
+      PathExpand.expand(g, "N", "e", 1, maxLen, localEdgeLimit = lim)
+    assert(isLocal(run(160, 1)))
+    val tripped = run(160, 3)
+    val dist = run(0, 3)
     assert(!isLocal(tripped))
     assert(wholeRows(tripped) == wholeRows(dist))
-    assert(isLocal(run(graft.ext.LocalGraph.LocalEdgeLimit)))
+  }
+
+  test("a long unbounded walk falls back on its path elements, not its rows") {
+    // a 30-node chain: 30 seeds and 29 edges, 435 paths of 1..29 hops
+    // holding 4960 path elements with the seeds. A bound of 8000 rows
+    // allows 1000 elements: more than the 465 rows, fewer than their nodes
+    val n = 30
+    val g = buildGraph(n, (1 until n).map(i => (i, i + 1)))
+    def run(lim: Int) = PathExpand.expand(g, "N", "e", 1, -1, localEdgeLimit = lim)
+    val tripped = run(8000)
+    val dist = run(0)
+    assert(dist.count() == n * (n - 1) / 2)
+    assert(!isLocal(tripped))
+    assert(wholeRows(tripped) == wholeRows(dist))
+    assert(isLocal(run(8 * 4960)))
   }
 
   test("INSERT EDGE then DELETE EDGE round-trips the adjacency") {

@@ -137,7 +137,7 @@ class MatchPlannerSpec extends SparkSpec {
     // the DP search must emit the self-loop as a BindEdge, not drop it
     val steps = CostPlanner.plan(gSelf, pat, stats).steps
     assert(steps == Seq(StartNode("a"), BindEdge(EdgePat("a", "Knows", "a"))))
-    val costed = MatchPlanner.planWithStats(gSelf, pat, stats)
+    val costed = MatchPlanner.relWithStats(gSelf, pat, stats).toDF
       .select("a__name").collect().map(_.getString(0)).toSet
     assert(costed == greedy)
   }
@@ -150,7 +150,7 @@ class MatchPlannerSpec extends SparkSpec {
     val stats = graft.stats.GraphStats.collect(gSelf)
     val steps = CostPlanner.plan(gSelf, pat, stats).steps
     assert(steps.contains(BindEdge(EdgePat("b", "Knows", "b"))), steps.toString)
-    val res = MatchPlanner.planWithStats(gSelf, pat, stats)
+    val res = MatchPlanner.relWithStats(gSelf, pat, stats).toDF
       .select(col("a__name"), col("b__name"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     // Alice→Bob and Bob→Bob both land on self-looping Bob
@@ -289,7 +289,7 @@ class MatchPlannerSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("a__name"), col("b__name"))
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(rows(MatchPlanner.planWithStats(g, pattern, stats)) ==
+    assert(rows(MatchPlanner.relWithStats(g, pattern, stats).toDF) ==
       rows(MatchPlanner.plan(g, pattern)))
   }
 

@@ -95,7 +95,7 @@ class MatchPropertySpec extends SparkSpec {
       assert(greedy == want,
         s"greedy n=$n edges=$edges aliases=$aliases pat=$patEdges")
       val stats = graft.stats.GraphStats.collect(g)
-      val costed = bag(MatchPlanner.planWithStats(g, pattern, stats))
+      val costed = bag(MatchPlanner.relWithStats(g, pattern, stats).toDF)
       assert(costed == want,
         s"costed n=$n edges=$edges aliases=$aliases pat=$patEdges")
     }
