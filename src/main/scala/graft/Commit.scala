@@ -47,11 +47,6 @@ object Commit {
   final case class Swap(dst: HPath, tmp: HPath, bak: HPath, marker: HPath)
 
   object Swap {
-    /** `<path>__tmp`, `<path>__bak`, `<path>__swap` */
-    def suffixed(path: String): Swap = Swap(new HPath(path),
-      new HPath(path + "__tmp"), new HPath(path + "__bak"),
-      new HPath(path + "__swap"))
-
     /** `<dir>/.<name>_tmp|_bak|_swap`: hidden from readers of `dir` */
     def hidden(dir: String, name: String): Swap = Swap(
       new HPath(s"$dir/$name"), new HPath(s"$dir/.${name}_tmp"),
@@ -109,6 +104,11 @@ object Commit {
     }
 
     def remove(name: String): Unit = fs.delete(path(name), false)
+
+    def read(name: String): String = {
+      val in = fs.open(path(name))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
   }
 
   /** the `<root>/_commits` markers */
@@ -134,6 +134,9 @@ object Commit {
 
     def latest: Option[Long] = committed.lastOption
 
+    /** the marker text of committed version `v` */
+    def marker(v: Long): String = marks.read(s"$prefix$v")
+
     /** `version`, or the one after the latest committed */
     def next(version: Option[Long]): Long =
       version.getOrElse(latest.fold(0L)(_ + 1))
@@ -149,11 +152,13 @@ object Commit {
 
     /** Write version `v` (derived from `parent`, the latest committed
       * version when the caller read the state) through `write` and
-      * commit it, unless `v` is committed already. With `vacuum`, then
+      * commit it, unless `v` is committed already. The marker holds
+      * `parent=<parent>`, then `body`. With `vacuum`, then
       * [[vacuumBelow]] `v`. `beforeMarker` is a test seam.
       */
     def publish(v: Long, parent: Option[Long], vacuum: Boolean = true,
-        beforeMarker: () => Unit = () => ())(write: HPath => Unit): Unit = {
+        beforeMarker: () => Unit = () => (), body: String = "")(
+        write: HPath => Unit): Unit = {
       if (guard(parent).contains(v)) return
       val d = dir(v)
       val tmp = new HPath(s"$root/.$prefix$v.tmp-" +
@@ -171,7 +176,7 @@ object Commit {
       } finally fs.delete(tmp, true)
       beforeMarker()
       val m = s"$prefix$v"
-      try marks.create(m, s"parent=${parent.getOrElse(-1L)}",
+      try marks.create(m, s"parent=${parent.getOrElse(-1L)}\n$body",
         overwrite = false)
       catch { case e: java.io.IOException if marks.has(m) =>
         throw new IllegalArgumentException(

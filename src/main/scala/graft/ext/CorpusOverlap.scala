@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.IndexStore
 import graft.Stage.StageOps
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -72,66 +73,56 @@ object CorpusOverlap {
     Seq("kind" -> "kmv-sketch", "k" -> k.toString)
 
   /** Persist the corpus's KMV sketch — the daily-ingest face the rest
-    * of the index family has: ≤k longs + the `_params.json` sidecar,
-    * so tomorrow's increment screens against today's 100 TB corpus by
-    * reading k values instead of rescanning anything. Published through
-    * a directory swap, so rebuilding over an existing sketch can't
-    * destroy it mid-write either.
+    * of the index family has: ≤k longs in a [[graft.IndexStore]] whose
+    * marker carries k, so tomorrow's increment screens against today's
+    * 100 TB corpus by reading k values instead of rescanning anything.
+    * Each write is a full build, so rebuilding over an existing sketch
+    * can't destroy it mid-write either.
     */
   def writeKmvSketch(docs: DataFrame, textCol: String, path: String,
       k: Int = 256): Unit =
-    publishSketch(docs.sparkSession, path, k) { tmp =>
-      kmvSketch(docs, textCol, k).coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-    }
+    publishSketch(IndexStore(docs.sparkSession, path), k,
+      kmvSketch(docs, textCol, k))
 
   /** Fold an increment into a persisted sketch: the updated sketch is
     * the bottom-k of the union — exactly [[writeKmvSketch]] over
     * history ∪ increment (KMV mergeability), so probes after any
     * append ≡ a from-scratch build. Single writer, like every index
-    * in the family. The merged sketch is swapped in whole: an in-place
-    * overwrite would have a window where the pre-merge history sketch
-    * is simply gone, recoverable only by rescanning the full history
-    * corpus, the exact cost the persisted sketch exists to avoid.
+    * in the family. The merged sketch is a new full build: the
+    * pre-merge history sketch stays readable until it commits, so it
+    * is never lost to a crash (rebuilding it would rescan the full
+    * history corpus, the exact cost the persisted sketch exists to
+    * avoid).
     */
   def mergeKmvSketch(newDocs: DataFrame, textCol: String, path: String,
-      k: Int = 256): Unit = {
+      k: Int = 256): Unit =
+    mergeKmvSketch(newDocs, textCol, IndexStore(newDocs.sparkSession, path),
+      k, None)
+
+  /** [[mergeKmvSketch]] into `sketch`, an empty streaming store merging
+    * as an empty history; with `key`, a no-op when that key is visible */
+  private[graft] def mergeKmvSketch(newDocs: DataFrame, textCol: String,
+      sketch: IndexStore, k: Int, key: Option[Long]): Unit = {
     val spark = newDocs.sparkSession
-    recoverSketch(spark, path)
-    IndexParams.check(spark, path, kmvParams(k))
-    val merged = spark.read.schema("h LONG").parquet(path)
+    import spark.implicits._
+    val merged = sketchRows(sketch, k)
       .unionByName(kmvSketch(newDocs, textCol, k))
       .distinct().orderBy(col("h")).limit(k)
-      // the k-row result must materialize BEFORE the swap retires the
+      // the k-row result must materialize BEFORE the build retires the
       // files it was read from
       .collect().map(_.getLong(0)).toSeq
-    import spark.implicits._
-    publishSketch(spark, path, k) { tmp =>
-      merged.toDF("h").coalesce(1).write.mode("overwrite").parquet(tmp)
-    }
+    publishSketch(sketch, k, merged.toDF("h"), key)
   }
 
-  /** [[graft.Commit.swap]] of a sketch dir and its sidecar
-    * (`<path>__tmp|__bak|__swap`) */
-  private def publishSketch(spark: org.apache.spark.sql.SparkSession,
-      path: String, k: Int)(writeTmp: String => Unit): Unit = {
-    val sw = graft.Commit.Swap.suffixed(path)
-    graft.Commit.swap(graft.Commit.fs(spark, path), sw) {
-      writeTmp(sw.tmp.toString)
-      IndexParams.write(spark, sw.tmp.toString, kmvParams(k))
-    }
-  }
+  /** the persisted sketch's hashes, with k checked against the build's */
+  private[graft] def sketchRows(sketch: IndexStore, k: Int): DataFrame =
+    sketch.probe("", kmvParams(k), "h LONG")
 
-  /** Reader-side [[graft.Commit.recover]] of an interrupted sketch
-    * swap; runs at the head of every sketch merge and probe, and of the
-    * streaming face's pre-batch snapshot (without it, a merge that
-    * crashed mid-swap would read as "no sketch" and the snapshot would
-    * silently record an empty history).
-    */
-  private[graft] def recoverSketch(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    graft.Commit.recover(graft.Commit.fs(spark, path),
-      graft.Commit.Swap.suffixed(path))
+  private def publishSketch(sketch: IndexStore, k: Int, rows: DataFrame,
+      key: Option[Long] = None): Unit =
+    sketch.build(Seq(IndexStore.Part("", kmvParams(k))), key) { at =>
+      rows.coalesce(1).write.parquet(at(""))
+    }
 
   /** Overlap of an increment against a persisted history sketch:
     * the same one-row estimate as [[overlapEstimate]](history,
@@ -143,9 +134,7 @@ object CorpusOverlap {
   def overlapWithSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, textCol: String,
       k: Int = 256): DataFrame = {
-    recoverSketch(spark, path)
-    IndexParams.check(spark, path, kmvParams(k))
-    val hist = spark.read.schema("h LONG").parquet(path)
+    val hist = sketchRows(IndexStore(spark, path), k)
       .withColumn("in_a", lit(1))
     val inc = kmvSketch(newDocs, textCol, k)
       .withColumnRenamed("h", "hb").withColumn("in_b", lit(1))

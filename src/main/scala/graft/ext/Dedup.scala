@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.IndexStore
 import graft.Stage.StageOps
 
 import graft.functions.SimHash64
@@ -36,8 +37,15 @@ object Dedup {
     */
   def writeFingerprintIndex(df: DataFrame, textCol: String,
       path: String): Unit =
-    df.select(TextFunctions.fingerprint(col(textCol)).as("fp"))
-      .distinct().write.mode("overwrite").parquet(path)
+    IndexStore(df.sparkSession, path).build(Seq(fingerprintPart(""))) {
+      at => fingerprintRows(df, textCol).write.parquet(at(""))
+    }
+
+  private[ext] def fingerprintPart(name: String) =
+    IndexStore.Part(name, Seq("kind" -> "fingerprint"))
+
+  private[ext] def fingerprintRows(df: DataFrame, textCol: String) =
+    df.select(TextFunctions.fingerprint(col(textCol)).as("fp")).distinct()
 
   /** Exact-dedup an ingestion increment against the fingerprint index
     * AND within itself (min-id keeper): returns the surviving rows.
@@ -45,9 +53,13 @@ object Dedup {
     * the index, one fingerprint aggregation of the increment.
     */
   def exactDedupIncremental(newDocs: DataFrame, indexPath: String,
-      textCol: String, idCol: String): DataFrame = {
-    val spark = newDocs.sparkSession
-    val index = spark.read.parquet(indexPath)
+      textCol: String, idCol: String): DataFrame =
+    exactDedupIncremental(newDocs,
+      IndexStore.at(newDocs.sparkSession, indexPath), textCol, idCol)
+
+  private[graft] def exactDedupIncremental(newDocs: DataFrame,
+      index0: IndexStore.Ref, textCol: String, idCol: String): DataFrame = {
+    val index = index0.probe(fingerprintPart("").params, "fp BINARY")
     val fresh = newDocs
       .withColumn("__fp", TextFunctions.fingerprint(col(textCol)))
       .join(index.withColumnRenamed("fp", "__fp"), Seq("__fp"), "left_anti")
@@ -349,6 +361,9 @@ object Dedup {
     Seq("kind" -> "edit-prefix", "maxDist" -> maxDist.toString,
       "q" -> q.toString)
 
+  private def editParts(maxDist: Int, q: Int, names: String*) =
+    names.map(IndexStore.Part(_, editParams(maxDist, q)))
+
   /** Persist the edit-distance blocking index — the daily-ingest face
     * the rest of the dedup family already has (exact/LSH/simhash/span/
     * embedding): `prefix/` holds the corpus's prefix-gram rows sorted
@@ -370,35 +385,42 @@ object Dedup {
     * semi-joined down to candidates.
     */
   def writeEditIndex(docs: DataFrame, textCol: String, idCol: String,
-      path: String, maxDist: Int, q: Int = 5): Unit = {
-    // grams feed both the df aggregate and the prefix build; the
-    // explode recomputes cheaper than a checkpoint of the corpus-scale
-    // gram relation would materialize
-    val grams = editGramRows(docs, textCol, idCol, maxDist, q)
-    val gdf = grams.groupBy("g").agg(count(lit(1)).as("gdf"))
-    gdf.write.mode("overwrite").parquet(s"$path/df")
-    // plain write sorted by bucket (row-group min/max carries the
-    // length-bucket pruning a probe's b-filter needs) — a
-    // partitionBy("b") layout measured 3-5x slower to WRITE (one tiny
-    // file per task x bucket) while buying nothing: a real increment
-    // spans all length buckets, so directory pruning never fires.
-    // The order side is the JUST-WRITTEN df snapshot read back — the
-    // write already materialized the aggregate, so the prefix pass
-    // reuses it instead of re-aggregating the gram relation
-    editPrefixFrom(grams, frozenDf(docs.sparkSession, path), maxDist, q)
-      .sortWithinPartitions("b")
-      .write.mode("overwrite").parquet(s"$path/prefix")
+      path: String, maxDist: Int, q: Int = 5): Unit =
+    IndexStore(docs.sparkSession, path)
+      .build(editParts(maxDist, q, "df", "prefix", "short")) { at =>
+        // grams feed both the df aggregate and the prefix build; the
+        // explode recomputes cheaper than a checkpoint of the corpus-scale
+        // gram relation would materialize
+        val grams = editGramRows(docs, textCol, idCol, maxDist, q)
+        val gdf = grams.groupBy("g").agg(count(lit(1)).as("gdf"))
+        gdf.write.parquet(at("df"))
+        // plain write sorted by bucket (row-group min/max carries the
+        // length-bucket pruning a probe's b-filter needs) — a
+        // partitionBy("b") layout measured 3-5x slower to WRITE (one tiny
+        // file per task x bucket) while buying nothing: a real increment
+        // spans all length buckets, so directory pruning never fires.
+        // The order side is the JUST-WRITTEN df snapshot read back — the
+        // write already materialized the aggregate, so the prefix pass
+        // reuses it instead of re-aggregating the gram relation
+        editPrefixFrom(grams, docs.sparkSession.read.schema(EditDfSchema)
+            .parquet(at("df")), maxDist, q)
+          .sortWithinPartitions("b")
+          .write.parquet(at("prefix"))
+        editShortRows(docs, textCol, idCol, maxDist, q)
+          .write.parquet(at("short"))
+      }
+
+  private val EditDfSchema = "g LONG, gdf LONG"
+
+  private def editShortRows(docs: DataFrame, textCol: String, idCol: String,
+      maxDist: Int, q: Int): DataFrame =
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol).cast(LongType).as("id"),
         length(col(textCol)).as("len"))
       .filter(col("len") <= editShortMax(maxDist, q) + maxDist)
-      .write.mode("overwrite").parquet(s"$path/short")
-    IndexParams.write(docs.sparkSession, path, editParams(maxDist, q))
-  }
 
-  private def frozenDf(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.schema("g LONG, gdf LONG").parquet(s"$path/df")
+  private def frozenDf(index: IndexStore, maxDist: Int, q: Int): DataFrame =
+    index.probe("df", editParams(maxDist, q), EditDfSchema)
 
   /** append an increment's rows to a [[writeEditIndex]] layout —
     * prefixes ordered by the index's FROZEN df snapshot (see
@@ -407,17 +429,16 @@ object Dedup {
     */
   def appendEditIndex(docs: DataFrame, textCol: String, idCol: String,
       path: String, maxDist: Int, q: Int = 5): Unit = {
-    val spark = docs.sparkSession
-    IndexParams.writeOrCheck(spark, path, editParams(maxDist, q))
-    editPrefixFrom(editGramRows(docs, textCol, idCol, maxDist, q),
-      frozenDf(spark, path), maxDist, q)
-      .sortWithinPartitions("b")
-      .write.mode("append").parquet(s"$path/prefix")
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).cast(LongType).as("id"),
-        length(col(textCol)).as("len"))
-      .filter(col("len") <= editShortMax(maxDist, q) + maxDist)
-      .write.mode("append").parquet(s"$path/short")
+    val index = IndexStore(docs.sparkSession, path)
+    val df = frozenDf(index, maxDist, q)
+    index.append(editParts(maxDist, q, "prefix", "short")) { at =>
+      editPrefixFrom(editGramRows(docs, textCol, idCol, maxDist, q), df,
+        maxDist, q)
+        .sortWithinPartitions("b")
+        .write.parquet(at("prefix"))
+      editShortRows(docs, textCol, idCol, maxDist, q)
+        .write.parquet(at("short"))
+    }
   }
 
   /** Drift observer for a [[writeEditIndex]] layout — the same
@@ -434,8 +455,7 @@ object Dedup {
     */
   def editHotPrefixes(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, maxRows: Long): DataFrame =
-    spark.read.schema("id LONG, len INT, g LONG, b LONG")
-      .parquet(s"$indexPath/prefix")
+    IndexStore(spark, indexPath).read("prefix")
       .groupBy(col("g"), col("b")).agg(count(lit(1)).as("rows"))
       .filter(col("rows") > maxRows)
 
@@ -444,10 +464,10 @@ object Dedup {
     * whole layout under the fresh order. The rebuilt index is exactly
     * [[writeEditIndex]] over `docs`, so the incremental face resumes
     * from the same state a from-scratch build would give — probes
-    * after a rebuild stay ≡ the batch operator (spec-pinned). Single
-    * writer during the rewrite, like every index in this family; a
-    * crash mid-rebuild is recovered by re-running the rebuild (the
-    * index holds no text — the caller still owns the corpus).
+    * after a rebuild stay ≡ the batch operator (spec-pinned). The
+    * rebuild is a full [[graft.IndexStore]] build: probes see the old
+    * layout until the new one commits, so a crash mid-rebuild leaves
+    * the old index and a re-run finishes it.
     */
   def rebuildEditIndex(docs: DataFrame, textCol: String, idCol: String,
       path: String, maxDist: Int, q: Int = 5): Unit =
@@ -467,7 +487,7 @@ object Dedup {
       newDocs: DataFrame, corpus: DataFrame, indexPath: String,
       textCol: String, idCol: String, maxDist: Int,
       q: Int = 5): DataFrame = {
-    IndexParams.check(spark, indexPath, editParams(maxDist, q))
+    val store = IndexStore(spark, indexPath)
     val shortMax = editShortMax(maxDist, q)
     // exact-text collapse of the increment (see editDistancePairs): a
     // batch of m copies of one hot page probes the index once instead
@@ -485,7 +505,7 @@ object Dedup {
     // (see writeEditIndex — mixed orders break prefix completeness)
     val newPrefix = editPrefixFrom(
       editGramRows(repDocs, textCol, idCol, maxDist, q),
-      frozenDf(spark, indexPath), maxDist, q)
+      frozenDf(store, maxDist, q), maxDist, q)
       .stageBoundary
     // static bucket pruning: the touched buckets are known before the
     // join, so the index read skips foreign row groups (the prefix
@@ -497,9 +517,8 @@ object Dedup {
     // prunes instead (correctness identical either way)
     val bRows = newPrefix.select(col("b")).distinct().limit(1025)
       .collect().map(_.getLong(0))
-    val indexAll = spark.read
-      .schema("id LONG, len INT, g LONG, b LONG")
-      .parquet(s"$indexPath/prefix")
+    val indexAll = store.probe("prefix", editParams(maxDist, q),
+      "id LONG, len INT, g LONG, b LONG")
     val index =
       if (bRows.length > 1024) indexAll // over the cap: list may be cut
       else indexAll.filter(col("b").isin(
@@ -531,8 +550,8 @@ object Dedup {
     val newShort = newPartners
       .select(col("id"), col("len"),
         explode(array(col("b") - 1, col("b"), col("b") + 1)).as("b"))
-    val histShort = spark.read.schema("id LONG, len INT")
-      .parquet(s"$indexPath/short")
+    val histShort = store.probe("short", editParams(maxDist, q),
+      "id LONG, len INT")
       .join(incIds, col("id") === col("__iid"), "left_anti")
       .withColumn("b", (col("len") / (maxDist + 1)).cast(LongType))
     val crossShort = newShort.as("a").join(
@@ -822,31 +841,37 @@ object Dedup {
     * re-signaturing it.
     */
   def writeBandIndex(docs: DataFrame, textCol: String, idCol: String,
-      path: String, n: Int = 3, numPerms: Int = 64, bands: Int = 16): Unit = {
-    bandRows(docs, textCol, idCol, n, numPerms, bands)
-      .repartition(col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(path)
-    IndexParams.write(docs.sparkSession, path, bandParams(n, numPerms, bands))
-  }
+      path: String, n: Int = 3, numPerms: Int = 64, bands: Int = 16): Unit =
+    IndexStore(docs.sparkSession, path)
+      .build(Seq(bandPart("", n, numPerms, bands))) { at =>
+        writeBands(docs, textCol, idCol, at(""), n, numPerms, bands)
+      }
 
   private def bandParams(n: Int, numPerms: Int, bands: Int) =
     Seq("kind" -> "minhash-band", "n" -> n.toString,
       "numPerms" -> numPerms.toString, "bands" -> bands.toString)
 
-  /** append an increment's band rows to an existing [[writeBandIndex]]
-    * layout (creates it when absent) — the streaming/daily-ingest
-    * index-maintenance face
-    */
-  def appendBandIndex(docs: DataFrame, textCol: String, idCol: String,
-      path: String, n: Int = 3, numPerms: Int = 64, bands: Int = 16): Unit = {
-    // params check BEFORE the append — a mismatched append would corrupt
-    // the index rather than just mis-probe it
-    IndexParams.writeOrCheck(docs.sparkSession, path,
-      bandParams(n, numPerms, bands))
+  private[graft] def bandPart(name: String, n: Int, numPerms: Int,
+      bands: Int) = IndexStore.Part(name, bandParams(n, numPerms, bands))
+
+  /** a corpus's band rows, written band-partitioned to `dir` */
+  private[graft] def writeBands(docs: DataFrame, textCol: String,
+      idCol: String, dir: String, n: Int, numPerms: Int, bands: Int): Unit =
     bandRows(docs, textCol, idCol, n, numPerms, bands)
       .repartition(col("band"))
-      .write.mode("append").partitionBy("band").parquet(path)
-  }
+      .write.partitionBy("band").parquet(dir)
+
+  /** append an increment's band rows to a [[writeBandIndex]] layout
+    * (creates it when absent) — the streaming/daily-ingest
+    * index-maintenance face; a mismatched params append is refused
+    * before anything is written
+    */
+  def appendBandIndex(docs: DataFrame, textCol: String, idCol: String,
+      path: String, n: Int = 3, numPerms: Int = 64, bands: Int = 16): Unit =
+    IndexStore(docs.sparkSession, path)
+      .append(Seq(bandPart("", n, numPerms, bands))) { at =>
+        writeBands(docs, textCol, idCol, at(""), n, numPerms, bands)
+      }
 
   /** (id, band, bandHash) rows of a corpus — the banding stage of
     * [[minhashLshPairs]], exposed for index builds and probes (and for
@@ -910,7 +935,8 @@ object Dedup {
       n: Int = 3, minJaccard: Double = 0.9,
       numPerms: Int = 64, bands: Int = 16): DataFrame = {
     val (c, crossPairs, selfPairs) = lshIncProbe(spark, newDocs, corpus,
-      indexPath, textCol, idCol, n, minJaccard, numPerms, bands)
+      IndexStore.at(spark, indexPath), textCol, idCol, n, minJaccard,
+      numPerms, bands)
     Collapse.memberPairs(c.memb, "jaccard", jaccardWithin(minJaccard),
       selfPairs, Some(crossPairs))
   }
@@ -943,9 +969,18 @@ object Dedup {
       textCol: String, idCol: String,
       n: Int = 3, minJaccard: Double = 0.9,
       numPerms: Int = 64, bands: Int = 16,
-      historyWins: Boolean = true): DataFrame = {
+      historyWins: Boolean = true): DataFrame =
+    minhashLshDoomedIncremental(spark, newDocs, corpus,
+      IndexStore.at(spark, indexPath), textCol, idCol, n, minJaccard,
+      numPerms, bands, historyWins)
+
+  private[graft] def minhashLshDoomedIncremental(
+      spark: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
+      corpus: DataFrame, index: IndexStore.Ref, textCol: String,
+      idCol: String, n: Int, minJaccard: Double, numPerms: Int, bands: Int,
+      historyWins: Boolean): DataFrame = {
     val (c, crossPairs, selfPairs) = lshIncProbe(spark, newDocs, corpus,
-      indexPath, textCol, idCol, n, minJaccard, numPerms, bands)
+      index, textCol, idCol, n, minJaccard, numPerms, bands)
     // group verdicts decompose over the duplicates-only membership: the
     // rep's own verdict comes straight off crossPairs (id_a IS the
     // rep), non-rep members inherit through the membership — both
@@ -984,18 +1019,15 @@ object Dedup {
     *   - self:  (id_a < id_b, both increment reps, jaccard)
     */
   private def lshIncProbe(spark: org.apache.spark.sql.SparkSession,
-      newDocs: DataFrame, corpus: DataFrame, indexPath: String,
+      newDocs: DataFrame, corpus: DataFrame, index0: IndexStore.Ref,
       textCol: String, idCol: String, n: Int, minJaccard: Double,
       numPerms: Int, bands: Int)
       : (Collapse.Banded, DataFrame, DataFrame) = {
-    IndexParams.check(spark, indexPath, bandParams(n, numPerms, bands))
+    val index = index0.probe(bandParams(n, numPerms, bands),
+      "id LONG, bandHash LONG, band INT")
     val c = Collapse.banded(
       bandRowsFp(newDocs, textCol, idCol, n, numPerms, bands),
       "fp", "id", "band", "bandHash")
-    // explicit schema: an EMPTY band-partitioned index (bootstrap of the
-    // streaming face) has no data files to infer from
-    val index = spark.read
-      .schema("id LONG, bandHash LONG, band INT").parquet(indexPath)
     val crossCand = c.reps.as("a")
       .join(index.as("b"),
         col("a.band") === col("b.band") &&
@@ -1116,12 +1148,13 @@ object Dedup {
     * history's TEXT is never needed again.
     */
   def writeSimhashIndex(docs: DataFrame, textCol: String, idCol: String,
-      path: String, tokenHash: Column => Column = XxTokenHash): Unit = {
-    simhashBandRows(docs, textCol, idCol, tokenHash)
-      .repartition(col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(path)
-    IndexParams.write(docs.sparkSession, path, simhashParams(tokenHash))
-  }
+      path: String, tokenHash: Column => Column = XxTokenHash): Unit =
+    IndexStore(docs.sparkSession, path)
+      .build(Seq(IndexStore.Part("", simhashParams(tokenHash)))) { at =>
+        simhashBandRows(docs, textCol, idCol, tokenHash)
+          .repartition(col("band"))
+          .write.partitionBy("band").parquet(at(""))
+      }
 
   /** token hash canonicalized as its Column expression string — build
     * and probe must hash tokens identically or band values never collide
@@ -1143,13 +1176,9 @@ object Dedup {
       textCol: String, idCol: String, maxHamming: Int = 3,
       tokenHash: Column => Column = XxTokenHash): DataFrame = {
     require(maxHamming < 4, "4 x 16-bit banding guarantees only hamming <= 3")
-    IndexParams.check(spark, indexPath, simhashParams(tokenHash))
+    val index = IndexStore.at(spark, indexPath).probe(
+      simhashParams(tokenHash), "id LONG, simhash LONG, bandVal LONG, band INT")
     val c = simhashBanded(newDocs, textCol, idCol, tokenHash)
-    // explicit schema: an empty band-partitioned index has no data
-    // files to infer from
-    val index = spark.read
-      .schema("id LONG, simhash LONG, bandVal LONG, band INT")
-      .parquet(indexPath)
     // rep probe of the index, pruned of replayed increment ids (their
     // group rep produces their pairs): id_a = rep, id_b = history id
     val crossPairs = hammingPairs(c.reps.as("a")

@@ -30,16 +30,6 @@ private[graft] object LocalGraph {
     */
   val LocalEdgeLimit: Int = 1 << 21
 
-  /** collect a (src, dst) LONG edge relation — callers pass the
-    * already-canonical (cast, distinct) edge set and have verified
-    * its count against the bound first
-    */
-  def collectEdges(e: DataFrame): Array[(Long, Long)] = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    e.as[(Long, Long)].collect()
-  }
-
   /** Fused bound-check + collect (r15): ONE limit-collect job off the
     * materialized canonical edge boundary replaces the count job plus
     * the separate collect — `Some(edges)` when the relation fits the

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.IndexStore
 import graft.Stage.StageOps
 
 import org.apache.spark.sql.DataFrame
@@ -118,75 +119,93 @@ object Pipeline {
   // q_pipeline_curate_incremental oracle replays it byte-for-byte).
 
   /** Persist the index family [[curateV2Incremental]] probes, from the
-    * history corpus:
+    * history corpus, as one full build of a [[graft.IndexStore]] at
+    * `dir` whose version holds four parts:
     *
-    *   - `windows/`   distinct k-token window hashes of the GATED raw
+    *   - `windows`   distinct k-token window hashes of the GATED raw
     *     text (8 B each) — the substring-dedup face;
-    *   - `fingerprints/` content fingerprints of the span-cleaned docs
+    *   - `fingerprints` content fingerprints of the span-cleaned docs
     *     (16 B per distinct doc) — the exact-dedup face;
-    *   - `bands/`     MinHash band index of the exact-dedup survivors
+    *   - `bands`     MinHash band index of the exact-dedup survivors
     *     (~20 B × bands per doc), band-partitioned — the near-dup face;
-    *   - `exact_docs/` (id, cleaned) of the exact survivors — the
+    *   - `exact_docs` (id, cleaned) of the exact survivors — the
     *     verification text LSH candidates re-shingle against (the one
     *     non-constant-size artifact: it IS the curated corpus a
     *     production pipeline persists anyway).
     *
     * Each index derives from the same intermediate stage the batch
-    * pipeline computes — nothing here re-reads history afterwards.
+    * pipeline computes — nothing here re-reads history afterwards. The
+    * four parts commit together: a probe sees all of them or none.
     */
   def curateV2WriteIndexes(docs: DataFrame, textCol: String, idCol: String,
-      dir: String, k: Int = 8, minCleanTokens: Int = 10): Unit = {
-    val spark = docs.sparkSession
-    val gated = docs.filter(TextFunctions.gopherKeep(col(textCol)))
-    // the window index derives from the GATED RAW text and nothing
-    // downstream of it — overlap its build with the span-clean chain
-    // (guide §2.6: independent actions submitted concurrently back-fill
-    // each other's stragglers; job descriptions are thread-local, so
-    // the overlap never mislabels the enclosing query's jobs)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val windowsF = Future {
-      SubstringDedup.writeWindowIndex(gated, textCol, idCol, k,
-        s"$dir/windows")
+      dir: String, k: Int = 8, minCleanTokens: Int = 10): Unit =
+    IndexStore(docs.sparkSession, dir).build(curationParts(k)) { at =>
+      val gated = docs.filter(TextFunctions.gopherKeep(col(textCol)))
+      // the window index derives from the GATED RAW text and nothing
+      // downstream of it — overlap its build with the span-clean chain
+      // (guide §2.6: independent actions submitted concurrently
+      // back-fill each other's stragglers; job descriptions are
+      // thread-local, so the overlap never mislabels the enclosing
+      // query's jobs)
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      val windowsF = Future {
+        SubstringDedup.windowRows(gated, textCol, idCol, k)
+          .write.parquet(at("windows"))
+      }
+      val cleaned = SubstringDedup.cleanedText(gated, textCol, idCol, k)
+        .filter(TextFunctions.tokenCount(col("cleaned")) >= minCleanTokens)
+        .stageBoundary
+      // the fingerprint index reads only the MATERIALIZED boundary, as
+      // does the exact_docs chain — two more independent actions, same
+      // §2.6 overlap as the window index above
+      val fpF = Future {
+        Dedup.fingerprintRows(cleaned, "cleaned")
+          .write.parquet(at("fingerprints"))
+      }
+      val keepers = cleaned
+        .groupBy(TextFunctions.fingerprint(col("cleaned")).as("__fp"))
+        .agg(min(col(idCol)).as(idCol))
+        .select(idCol)
+      // the exact survivors feed BOTH remaining indexes — materialize
+      // them once, then the exact_docs write and the band build are
+      // independent actions over the same checkpointed rows (the band
+      // index no longer waits for, or re-reads, the parquet)
+      val exact = cleaned.join(keepers, Seq(idCol), "left_semi")
+        .select(col(idCol), col("cleaned"))
+        .stageBoundary
+      val exactF = Future { exact.write.parquet(at("exact_docs")) }
+      // every concurrent write is JOINED before the version publishes,
+      // even when the inline band build throws (r15 ADVICE: a detached
+      // write could leave the index family partially written with its
+      // failure swallowed and nothing naming which index broke). The
+      // first failure — band build or any future — is the one surfaced.
+      var primary: Throwable = null
+      try Dedup.writeBands(exact, "cleaned", idCol, at("bands"), CurationN,
+        CurationPerms, CurationBands)
+      catch { case t: Throwable => primary = t }
+      Seq(windowsF, fpF, exactF).foreach { f =>
+        try Await.result(f, Duration.Inf)
+        catch { case t: Throwable => if (primary == null) primary = t }
+      }
+      if (primary != null) throw primary
     }
-    val cleaned = SubstringDedup.cleanedText(gated, textCol, idCol, k)
-      .filter(TextFunctions.tokenCount(col("cleaned")) >= minCleanTokens)
-      .stageBoundary
-    // the fingerprint index reads only the MATERIALIZED boundary, as
-    // does the exact_docs chain — two more independent actions, same
-    // §2.6 overlap as the window index above
-    val fpF = Future {
-      Dedup.writeFingerprintIndex(cleaned, "cleaned", s"$dir/fingerprints")
-    }
-    val keepers = cleaned
-      .groupBy(TextFunctions.fingerprint(col("cleaned")).as("__fp"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(idCol)
-    // the exact survivors feed BOTH remaining indexes — materialize
-    // them once, then the exact_docs write and the band build are
-    // independent actions over the same checkpointed rows (the band
-    // index no longer waits for, or re-reads, the parquet)
-    val exact = cleaned.join(keepers, Seq(idCol), "left_semi")
-      .select(col(idCol), col("cleaned"))
-      .stageBoundary
-    val exactF = Future {
-      exact.write.mode("overwrite").parquet(s"$dir/exact_docs")
-    }
-    // every concurrent write is JOINED before this method exits, even
-    // when the inline band build throws (r15 ADVICE: a detached write
-    // could leave the index family partially written with its failure
-    // swallowed and nothing naming which index broke). The first
-    // failure — band build or any future — is the one surfaced.
-    var primary: Throwable = null
-    try Dedup.writeBandIndex(exact, "cleaned", idCol, s"$dir/bands")
-    catch { case t: Throwable => primary = t }
-    Seq(windowsF, fpF, exactF).foreach { f =>
-      try Await.result(f, Duration.Inf)
-      catch { case t: Throwable => if (primary == null) primary = t }
-    }
-    if (primary != null) throw primary
-  }
+
+  // the curation family's MinHash banding (the band index defaults)
+  private val CurationN = 3
+  private val CurationPerms = 64
+  private val CurationBands = 16
+
+  private val ExactDocs =
+    IndexStore.Part("exact_docs", Seq("kind" -> "exact-docs"))
+
+  /** the four parts of a curation family version */
+  private def curationParts(k: Int) = Seq(
+    SubstringDedup.windowPart("windows", k),
+    Dedup.fingerprintPart("fingerprints"),
+    ExactDocs,
+    Dedup.bandPart("bands", CurationN, CurationPerms, CurationBands))
 
   /** Curate an ingestion increment against a [[curateV2WriteIndexes]]
     * index family: result rows are exactly the increment's rows of the
@@ -205,24 +224,27 @@ object Pipeline {
       textCol: String, idCol: String, dir: String,
       k: Int = 8, minJaccard: Double = 0.9,
       decontamN: Int = 5, decontamMinHits: Int = 5,
-      minCleanTokens: Int = 10): DataFrame = {
+      minCleanTokens: Int = 10): DataFrame =
+    curateV2Incremental(newDocs, bench, textCol, idCol,
+      IndexStore(newDocs.sparkSession, dir), k, minJaccard, decontamN,
+      decontamMinHits, minCleanTokens)
+
+  private[graft] def curateV2Incremental(newDocs: DataFrame,
+      bench: DataFrame, textCol: String, idCol: String, family: IndexStore,
+      k: Int, minJaccard: Double, decontamN: Int, decontamMinHits: Int,
+      minCleanTokens: Int): DataFrame = {
     val spark = newDocs.sparkSession
-    val gated = newDocs.filter(TextFunctions.gopherKeep(col(textCol)))
-    val cleaned = SubstringDedup
-      .cleanedTextIncremental(gated, s"$dir/windows", textCol, idCol, k)
-      .filter(TextFunctions.tokenCount(col("cleaned")) >= minCleanTokens)
-      .stageBoundary
-    val exact = Dedup.exactDedupIncremental(
-      cleaned, s"$dir/fingerprints", "cleaned", idCol)
-      .stageBoundary
+    val (cleaned, exact) =
+      probeCleanExact(newDocs, textCol, idCol, family, k, minCleanTokens)
     // larger-id greedy drop (the batch contract's pairs.id_b), resolved
     // at rep granularity — doomed history ids were no-ops in the
     // anti-join, so the increment-only doomed set is the same filter
-    val doomed = Dedup.minhashLshDoomedIncremental(spark,
-      exact.select(col(idCol), col("cleaned")),
-      spark.read.parquet(s"$dir/exact_docs"), s"$dir/bands",
-      "cleaned", idCol, n = 3, minJaccard = minJaccard,
-      historyWins = false)
+    val survivors = exact.select(col(idCol), col("cleaned"))
+    val doomed = Dedup.minhashLshDoomedIncremental(spark, survivors,
+      family.probe(ExactDocs.name, ExactDocs.params,
+        empty = survivors.limit(0)),
+      IndexStore.Ref(family, "bands"), "cleaned", idCol, CurationN,
+      minJaccard, CurationPerms, CurationBands, historyWins = false)
     val nearDeduped = exact.join(doomed, Seq(idCol), "left_anti")
       .stageBoundary
     val dirty = Decontaminate.overlapHits(
@@ -237,43 +259,58 @@ object Pipeline {
       .withColumn("quality", TextFunctions.qualityScore(col("cleaned")))
   }
 
-  /** Fold a processed increment into the index family so the NEXT
-    * increment dedups against history ∪ this one — the index-maintenance
-    * half of the daily-ingest loop. Appends are per-index parquet
-    * appends (duplicate fingerprints/windows are harmless to the
-    * semi/anti-join probes).
-    *
-    * @param appendTo  when set, append output lands under
-    *   `appendTo(subdir)` instead of `dir/subdir` while the probes keep
-    *   reading `dir` — the staging hook the replay-idempotent streaming
-    *   face uses ([[graft.streaming.BatchLedger]] publishes the staged
-    *   files into the live index under a batch-provenance prefix)
-    */
-  def curateV2AppendIndexes(newDocs: DataFrame, textCol: String,
-      idCol: String, dir: String, k: Int = 8,
-      minCleanTokens: Int = 10,
-      appendTo: String => String = null): Unit = {
-    val out: String => String =
-      if (appendTo == null) sub => s"$dir/$sub" else appendTo
+  /** the gated increment span-cleaned against the window index, and its
+    * rows that survive exact dedup against the fingerprint index */
+  private def probeCleanExact(newDocs: DataFrame, textCol: String,
+      idCol: String, family: IndexStore, k: Int,
+      minCleanTokens: Int): (DataFrame, DataFrame) = {
     val gated = newDocs.filter(TextFunctions.gopherKeep(col(textCol)))
-    // probe the PRE-append indexes first (stage boundaries are eager, so
-    // `cleaned`/`exact` materialize before any append below lands — an
-    // increment must never see its own windows/fingerprints as history)
     val cleaned = SubstringDedup
-      .cleanedTextIncremental(gated, s"$dir/windows", textCol, idCol, k)
+      .cleanedTextIncremental(gated, IndexStore.Ref(family, "windows"),
+        textCol, idCol, k)
       .filter(TextFunctions.tokenCount(col("cleaned")) >= minCleanTokens)
       .stageBoundary
     val exact = Dedup.exactDedupIncremental(
-      cleaned, s"$dir/fingerprints", "cleaned", idCol)
+      cleaned, IndexStore.Ref(family, "fingerprints"), "cleaned", idCol)
       .stageBoundary
-    SubstringDedup.appendWindowIndex(gated, textCol, idCol, k,
-      out("windows"))
-    cleaned.select(TextFunctions.fingerprint(col("cleaned")).as("fp"))
-      .distinct().write.mode("append").parquet(out("fingerprints"))
-    exact.select(col(idCol), col("cleaned"))
-      .write.mode("append").parquet(out("exact_docs"))
-    Dedup.appendBandIndex(exact.select(col(idCol), col("cleaned")),
-      "cleaned", idCol, out("bands"))
+    (cleaned, exact)
+  }
+
+  /** Fold a processed increment into the index family so the NEXT
+    * increment dedups against history ∪ this one — the index-maintenance
+    * half of the daily-ingest loop. The four parts' rows land in one
+    * appended [[graft.IndexStore]] version (duplicate fingerprints/
+    * windows are harmless to the semi/anti-join probes), so a probe
+    * sees the whole increment or none of it, and a failed append
+    * leaves nothing a retry must clean up by hand.
+    */
+  def curateV2AppendIndexes(newDocs: DataFrame, textCol: String,
+      idCol: String, dir: String, k: Int = 8,
+      minCleanTokens: Int = 10): Unit =
+    curateV2AppendIndexes(newDocs, textCol, idCol,
+      IndexStore(newDocs.sparkSession, dir), k, minCleanTokens, None)
+
+  /** [[curateV2AppendIndexes]] into `family`; with `key`, a no-op when
+    * that key's append is already visible */
+  private[graft] def curateV2AppendIndexes(newDocs: DataFrame,
+      textCol: String, idCol: String, family: IndexStore, k: Int,
+      minCleanTokens: Int, key: Option[Long]): Unit = {
+    // probe the PRE-append indexes first (stage boundaries are eager, so
+    // `cleaned`/`exact` materialize before the append below — an
+    // increment must never see its own windows/fingerprints as history)
+    val (cleaned, exact) =
+      probeCleanExact(newDocs, textCol, idCol, family, k, minCleanTokens)
+    val survivors = exact.select(col(idCol), col("cleaned"))
+    family.append(curationParts(k), key) { at =>
+      SubstringDedup.windowRows(
+        newDocs.filter(TextFunctions.gopherKeep(col(textCol))),
+        textCol, idCol, k).write.parquet(at("windows"))
+      Dedup.fingerprintRows(cleaned, "cleaned")
+        .write.parquet(at("fingerprints"))
+      survivors.write.parquet(at("exact_docs"))
+      Dedup.writeBands(survivors, "cleaned", idCol, at("bands"), CurationN,
+        CurationPerms, CurationBands)
+    }
   }
 
   /** Leakage-safe train/validation/test split: every member of a

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.IndexStore
 import graft.Stage.StageOps
 import graft.functions.SrpBands
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -142,26 +143,20 @@ object Similarity {
   // states exactly that.
   //
   // State: `knnDir/v<N>` parquet (qid, nid, cs, rn), versioned through
-  // [[graft.Commit.Versions]]; vectors accumulate in the
-  // cell-partitioned IVF dir. Single writer, like every index here.
+  // [[graft.Commit.Versions]]; vectors accumulate in the IVF layout's
+  // [[graft.IndexStore]]. Single writer, like every index here.
 
   private[graft] def knnState(spark: org.apache.spark.sql.SparkSession,
       knnDir: String) =
     new graft.Commit.Versions(graft.Commit.fs(spark, knnDir), knnDir, "v",
       "knn state")
 
-  // vacuumOld=false defers reclaiming superseded versions to the
-  // CALLER's commit point: the streaming face must not delete the
-  // previous version until its ledger marker lands, or a crash
-  // between state-commit and ledger-commit would leave the replay's
-  // begin-phase cleanup (which drops the crashed attempt's version)
-  // with NO surviving state at all
   private def knnWrite(spark: org.apache.spark.sql.SparkSession,
       knnDir: String, edges: DataFrame, parent: Option[Long],
-      version: Option[Long] = None, vacuumOld: Boolean = true): Unit = {
+      version: Option[Long], vacuum: Boolean): Unit = {
     val state = knnState(spark, knnDir)
-    state.publish(state.next(version), parent, vacuumOld) { tmp =>
-      edges.write.mode("overwrite").parquet(tmp.toString)
+    state.publish(state.next(version), parent, vacuum) { tmp =>
+      edges.write.parquet(tmp.toString)
     }
   }
 
@@ -180,18 +175,27 @@ object Similarity {
     writeIvfIndex(corpus, idCol, vecCol, cellCol, ivfDir)
     val spark = corpus.sparkSession
     knnWrite(spark, knnDir, knnGraph(corpus, idCol, vecCol, cellCol, k),
-      knnState(spark, knnDir).latest)
+      knnState(spark, knnDir).latest, None, vacuum = true)
   }
 
-  /** fold an increment in: new nodes get their top-k, affected old
+  /** Fold an increment in: new nodes get their top-k, affected old
     * nodes get repaired, untouched nodes' edges are carried over
-    * verbatim; the increment's vectors append to the IVF layout */
+    * verbatim; the increment's vectors append to the IVF layout.
+    *
+    * The state version commits first and the IVF append — keyed on
+    * `version` — commits last, so the IVF append is the increment's
+    * commit point; superseded state versions are reclaimed after it.
+    * A retry with the same `version` converges: a committed state
+    * version is not rewritten and a committed IVF key is a no-op.
+    * Without a `version`, a failure between the two commits leaves the
+    * state folded and the vectors unappended, and a retry folds the
+    * increment's edges a second time: pass a version (the streaming
+    * face passes its batch id) where a retry must be safe.
+    */
   def knnGraphIncrement(increment: DataFrame, idCol: String,
       vecCol: String, cellCol: String, k: Int,
       ivfDir: String, knnDir: String,
-      version: Option[Long] = None,
-      ivfWriter: Option[DataFrame => Unit] = None,
-      vacuumOld: Boolean = true): Unit = {
+      version: Option[Long] = None): Unit = {
     val spark = increment.sparkSession
     val inc = increment.select(col(idCol).as("qid"), col(vecCol).as("qv"),
       col(cellCol).as("__cell")).stageBoundary
@@ -200,116 +204,46 @@ object Similarity {
     // DPP-dependent)
     val cells = inc.select(col("__cell")).distinct().collect()
       .map(_.get(0))
-    // bootstrap falls out of the general case: with no IVF layout and
+    // bootstrap falls out of the general case: with no IVF store and
     // no stored state yet, the candidate set is inc×inc and every
-    // node is "new" — which IS the batch build of the first increment.
-    // "Exists" means HAS DATA FILES, not bare directory existence: a
-    // crashed mid-publish of the FIRST batch can leave empty cell=
-    // partition dirs (the ledger's begin sweep removes data files but
-    // keeps dirs), and reading those fails parquet schema inference,
-    // permanently wedging every replay.
-    val ivfExists = {
-      val p = new org.apache.hadoop.fs.Path(ivfDir)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      f.exists(p) && {
-        val it = f.listFiles(p, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val st = it.next()
-          val n = st.getPath.getName
-          found = st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-        found
-      }
-    }
-    val old =
-      if (!ivfExists)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("nid",
-              inc.schema("qid").dataType),
-            org.apache.spark.sql.types.StructField("nv",
-              inc.schema("qv").dataType),
-            org.apache.spark.sql.types.StructField("__cell",
-              inc.schema("__cell").dataType))))
-      else spark.read.parquet(ivfDir)
-        .filter(col(cellCol).isin(cells: _*))
-        .select(col(idCol).as("nid"), col(vecCol).as("nv"),
-          col(cellCol).as("__cell"))
+    // node is "new" — which IS the batch build of the first increment
+    val ivfRows = increment.select(col(idCol), col(vecCol), col(cellCol))
+    val ivf = IndexStore.streaming(spark, ivfDir)
+    val old = ivf.probe("", ivfParams(cellCol), empty = ivfRows.limit(0))
+      .filter(col(cellCol).isin(cells: _*))
+      .select(col(idCol).as("nid"), col(vecCol).as("nv"),
+        col(cellCol).as("__cell"))
     val both = old.union(inc.select(col("qid").as("nid"),
       col("qv").as("nv"), col("__cell")))
     val cands = inc.join(both, Seq("__cell"))
       .filter(col("qid") =!= col("nid"))
       .withColumn("cs", cosine(col("qv"), col("nv")))
       .select(col("qid"), col("nid"), col("cs")).stageBoundary
-    // the IVF append reads only the RAW increment, and the candidate
-    // boundary above has already consumed the pre-append index — from
-    // here the append is independent of the state merge below, so
-    // overlap the two actions (guide §2.6). Both complete before
-    // return, preserving the caller contract (the next increment sees
-    // both); the staged-write streaming face is unaffected (its
-    // ivfWriter lands in a ledger-published staging path either way).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val ivfRows = increment.select(col(idCol), col(vecCol), col(cellCol))
-    val ivfF = Future {
-      ivfWriter match {
-        case Some(w) => w(ivfRows)
-        case None => ivfRows.write.mode("append")
-          .partitionBy(cellCol).parquet(ivfDir)
-      }
-    }
-    // the append is ALWAYS joined before this method exits (r15 ADVICE:
-    // a knnWrite failure must not leave the append running detached
-    // with its own failure silently dropped). Failure-ordering caveat
-    // for the non-ledger (ivfWriter=None) path: the mode-append parquet
-    // write is not versioned, so a knnWrite failure AFTER a successful
-    // append means a caller retry would double-append the increment's
-    // vectors — clean the IVF dir (or vacuum to the last good state)
-    // before replaying. The ledger-staged streaming face is immune: its
-    // writer lands in a staging path published atomically after both
-    // writes succeed.
-    try {
-      val w = Window.partitionBy("qid").orderBy(col("cs").desc, col("nid"))
-      val newEdges = cands
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      // reverse repairs: (old → new) scores are the swapped candidate
-      // pairs whose nid is an OLD vector
-      val incIds = inc.select(col("qid").as("nid"))
-      val rev = cands.join(incIds, Seq("nid"), "left_anti")
-        .select(col("nid").as("qid"), col("qid").as("nid"), col("cs"))
-      val affected = rev.select("qid").distinct()
-      val state = knnState(spark, knnDir)
-      val parent = state.latest
-      val stored =
-        if (parent.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("qid",
-                inc.schema("qid").dataType),
-              org.apache.spark.sql.types.StructField("nid",
-                inc.schema("qid").dataType),
-              org.apache.spark.sql.types.StructField("cs",
-                org.apache.spark.sql.types.DoubleType),
-              org.apache.spark.sql.types.StructField("rn",
-                org.apache.spark.sql.types.IntegerType))))
-        else spark.read.parquet(state.dir(parent.get).toString)
-      val repaired = stored.select("qid", "nid", "cs")
-        .join(affected, Seq("qid"), "left_semi")
-        .union(rev)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      val untouched = stored.join(affected, Seq("qid"), "left_anti")
-      knnWrite(spark, knnDir,
-        untouched.select("qid", "nid", "cs", "rn")
-          .union(repaired.select("qid", "nid", "cs", "rn"))
-          .union(newEdges.select("qid", "nid", "cs", "rn"))
-          .stageBoundary, parent, version, vacuumOld)
-    } finally Await.ready(ivfF, Duration.Inf)
-    // knnWrite succeeded — now surface an append failure, if any
-    Await.result(ivfF, Duration.Inf)
+    val w = Window.partitionBy("qid").orderBy(col("cs").desc, col("nid"))
+    val newEdges = cands
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    // reverse repairs: (old → new) scores are the swapped candidate
+    // pairs whose nid is an OLD vector
+    val incIds = inc.select(col("qid").as("nid"))
+    val rev = cands.join(incIds, Seq("nid"), "left_anti")
+      .select(col("nid").as("qid"), col("qid").as("nid"), col("cs"))
+    val affected = rev.select("qid").distinct()
+    val state = knnState(spark, knnDir)
+    val parent = state.latest
+    val stored = parent.fold(newEdges.limit(0))(p =>
+      spark.read.parquet(state.dir(p).toString))
+    val repaired = stored.select("qid", "nid", "cs")
+      .join(affected, Seq("qid"), "left_semi")
+      .union(rev)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    val untouched = stored.join(affected, Seq("qid"), "left_anti")
+    knnWrite(spark, knnDir,
+      untouched.select("qid", "nid", "cs", "rn")
+        .union(repaired.select("qid", "nid", "cs", "rn"))
+        .union(newEdges.select("qid", "nid", "cs", "rn"))
+        .stageBoundary, parent, version, vacuum = false)
+    appendIvfIndex(ivfRows, cellCol, ivf, version)
+    state.latest.foreach(state.vacuumBelow)
   }
 
   /** Cell-occupancy watermark over a maintained IVF layout: (cell,
@@ -322,7 +256,7 @@ object Similarity {
     */
   def ivfHotCells(spark: org.apache.spark.sql.SparkSession,
       ivfDir: String, cellCol: String, maxCell: Long): DataFrame =
-    spark.read.parquet(ivfDir)
+    IndexStore.at(spark, ivfDir).probe(ivfParams(cellCol))
       .groupBy(col(cellCol)).agg(count(lit(1)).as("rows"))
       .filter(col("rows") > maxCell)
 
@@ -347,16 +281,16 @@ object Similarity {
     val state = knnState(spark, knnDir)
     require(version.forall(v => !state.committed.contains(v)),
       s"kNN state version ${version.get} is already committed at $knnDir")
-    val vecs = spark.read.parquet(ivfDir).select(col(idCol), col(vecCol))
+    val vecs = IndexStore.at(spark, ivfDir).probe(ivfParams(cellCol))
+      .select(col(idCol), col(vecCol))
       .stageBoundary // sever from the files the rewrite replaces
     val centroids = trainCentroidsKMeansPP(vecs, idCol, vecCol,
       numCells, sampleRows, seed = seed)
     val recelled = assignCells(vecs, vecCol, cellCol, centroids)
       .stageBoundary
-    writeIvfIndex(recelled, idCol, vecCol, cellCol, ivfDir)
-    writeCentroids(spark, ivfDir, centroids)
+    writeIvfIndex(recelled, idCol, vecCol, cellCol, ivfDir, centroids)
     knnWrite(spark, knnDir, knnGraph(recelled, idCol, vecCol, cellCol, k),
-      state.latest, version)
+      state.latest, version, vacuum = true)
   }
 
   /** Materialize the IVF index layout: the corpus written as parquet
@@ -368,10 +302,34 @@ object Similarity {
     */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       cellCol: String, path: String): Unit =
-    corpus.select(col(idCol), col(vecCol), col(cellCol))
-      .repartition(col(cellCol))
-      .sortWithinPartitions(idCol)
-      .write.mode("overwrite").partitionBy(cellCol).parquet(path)
+    writeIvfIndex(corpus, idCol, vecCol, cellCol, path, Nil)
+
+  /** [[writeIvfIndex]], with the quantizer (when given) persisted in the
+    * same version; with `key`, a no-op when that key is visible */
+  private[graft] def writeIvfIndex(corpus: DataFrame, idCol: String,
+      vecCol: String, cellCol: String, path: String,
+      centroids: Seq[(Int, Seq[Float])],
+      key: Option[Long] = None): Unit =
+    IndexStore(corpus.sparkSession, path)
+      .build(Seq(IndexStore.Part("", ivfParams(cellCol))), key) { at =>
+        corpus.select(col(idCol), col(vecCol), col(cellCol))
+          .repartition(col(cellCol))
+          .sortWithinPartitions(idCol)
+          .write.partitionBy(cellCol).parquet(at(""))
+        if (centroids.nonEmpty)
+          writeCentroids(corpus.sparkSession, at(""), centroids)
+      }
+
+  private def ivfParams(cellCol: String) =
+    Seq("kind" -> "ivf-cell", "cellCol" -> cellCol)
+
+  /** append celled rows to an IVF store as one version; with `key`, a
+    * no-op when that key is visible */
+  private[graft] def appendIvfIndex(rows: DataFrame, cellCol: String,
+      ivf: IndexStore, key: Option[Long]): Unit =
+    ivf.append(Seq(IndexStore.Part("", ivfParams(cellCol))), key) { at =>
+      rows.write.partitionBy(cellCol).parquet(at(""))
+    }
 
   /** Cell-restricted top-k over a materialized [[writeIvfIndex]] layout.
     * The broadcast query side drives dynamic partition pruning on the
@@ -381,17 +339,19 @@ object Similarity {
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, cellCol: String,
       k: Int): DataFrame =
-    ivfTopK(spark.read.parquet(path), queries, idCol, vecCol, cellCol, k)
+    ivfTopK(IndexStore.at(spark, path).probe(ivfParams(cellCol)), queries,
+      idCol, vecCol, cellCol, k)
 
-  /** Persist the quantizer WITH the index (`_centroids.json` beside the
-    * cell-partitioned parquet — the underscore keeps it invisible to
-    * the parquet reader), so the index is self-contained: new queries
-    * assign their own probe cells at search time instead of arriving
-    * pre-celled.
+  /** Persist the quantizer WITH the index (`_centroids.json` in the
+    * staged version dir `dir`, beside the cell-partitioned parquet —
+    * the underscore keeps it invisible to the parquet reader), so the
+    * index is self-contained: new queries assign their own probe cells
+    * at search time instead of arriving pre-celled, and a retrain's
+    * quantizer commits with its cells.
     */
-  def writeCentroids(spark: org.apache.spark.sql.SparkSession, path: String,
-      centroids: Seq[(Int, Seq[Float])]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, "_centroids.json")
+  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+      dir: String, centroids: Seq[(Int, Seq[Float])]): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, "_centroids.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val json = centroids.map { case (i, v) =>
       s"""{"cell":$i,"v":[${v.mkString(",")}]}"""
@@ -402,7 +362,8 @@ object Similarity {
 
   def readCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(Int, Seq[Float])] = {
-    val p = new org.apache.hadoop.fs.Path(path, "_centroids.json")
+    val p = new org.apache.hadoop.fs.Path(IndexStore(spark, path).baseDir,
+      "_centroids.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
     val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
@@ -422,14 +383,12 @@ object Similarity {
   }
 
   /** One call: assign cells, write the partitioned index, persist the
-    * quantizer beside it.
+    * quantizer beside it — one full build.
     */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[(Int, Seq[Float])], path: String): Unit = {
+      centroids: Seq[(Int, Seq[Float])], path: String): Unit =
     writeIvfIndex(assignCells(corpus, vecCol, "__cell", centroids),
-      idCol, vecCol, "__cell", path)
-    writeCentroids(corpus.sparkSession, path, centroids)
-  }
+      idCol, vecCol, "__cell", path, centroids)
 
   /** Search a [[buildIvfIndex]] layout with RAW query vectors: the
     * persisted quantizer assigns each query its `nprobe` nearest cells,
@@ -440,7 +399,7 @@ object Similarity {
   def ivfSearchIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int = 1): DataFrame =
-    ivfTopKProbe(spark.read.parquet(path),
+    ivfTopKProbe(IndexStore.at(spark, path).probe(ivfParams("__cell")),
       queries, idCol, vecCol, "__cell", k,
       readCentroids(spark, path), nprobe)
 
@@ -482,7 +441,7 @@ object Similarity {
     // directories are never listed, let alone read.
     val probeCells = inc.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val hist = spark.read.parquet(indexPath)
+    val hist = IndexStore.at(spark, indexPath).probe(ivfParams("__cell"))
       .filter(col("__cell").isin(probeCells.map(Integer.valueOf): _*))
       .select(col(idCol).as("id"), col(vecCol).as("v"),
         col("__cell").cast(IntegerType).as("cell"))

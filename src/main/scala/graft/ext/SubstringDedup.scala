@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.IndexStore
 import graft.Stage.StageOps
 
 import org.apache.spark.sql.DataFrame
@@ -125,27 +126,29 @@ object SubstringDedup {
     * same order as any content index over it.
     */
   def writeWindowIndex(df: DataFrame, textCol: String, idCol: String,
-      k: Int, path: String): Unit = {
-    occurrences(df, textCol, idCol, k)
-      .select(col("h")).distinct()
-      .write.mode("overwrite").parquet(path)
-    IndexParams.write(df.sparkSession, path,
-      Seq("kind" -> "window", "k" -> k.toString))
-  }
+      k: Int, path: String): Unit =
+    IndexStore(df.sparkSession, path).build(Seq(windowPart("", k))) { at =>
+      windowRows(df, textCol, idCol, k).write.parquet(at(""))
+    }
 
-  /** append an increment's distinct window hashes to an existing
-    * [[writeWindowIndex]] layout — the index-maintenance face (append
-    * AFTER probing: the increment must not see its own windows as
-    * history)
+  private[ext] def windowPart(name: String, k: Int) =
+    IndexStore.Part(name, Seq("kind" -> "window", "k" -> k.toString))
+
+  /** a corpus's distinct k-window hashes: the window index's rows */
+  private[ext] def windowRows(df: DataFrame, textCol: String, idCol: String,
+      k: Int): DataFrame =
+    occurrences(df, textCol, idCol, k).select(col("h")).distinct()
+
+  /** append an increment's distinct window hashes to a
+    * [[writeWindowIndex]] layout (creates it when absent) — the
+    * index-maintenance face (append AFTER probing: the increment must
+    * not see its own windows as history)
     */
   def appendWindowIndex(df: DataFrame, textCol: String, idCol: String,
-      k: Int, path: String): Unit = {
-    IndexParams.writeOrCheck(df.sparkSession, path,
-      Seq("kind" -> "window", "k" -> k.toString))
-    occurrences(df, textCol, idCol, k)
-      .select(col("h")).distinct()
-      .write.mode("append").parquet(path)
-  }
+      k: Int, path: String): Unit =
+    IndexStore(df.sparkSession, path).append(Seq(windowPart("", k))) { at =>
+      windowRows(df, textCol, idCol, k).write.parquet(at(""))
+    }
 
   /** Incremental duplicated spans for an ingestion increment: a window
     * occurrence is duplicated when its window exists in the history
@@ -157,7 +160,8 @@ object SubstringDedup {
     */
   def duplicatedSpansIncremental(newDocs: DataFrame, indexPath: String,
       textCol: String, idCol: String, k: Int): DataFrame =
-    mergedSpans(incrementalStarts(newDocs, indexPath, textCol, idCol, k), k)
+    mergedSpans(incrementalStarts(newDocs,
+      IndexStore.at(newDocs.sparkSession, indexPath), textCol, idCol, k), k)
       .select(col("id").as(idCol), explode(col("spans")).as("sp"))
       .select(col(idCol), col("sp.s").as("span_start"),
         col("sp.e").as("span_end"))
@@ -167,17 +171,22 @@ object SubstringDedup {
     */
   def cleanedTextIncremental(newDocs: DataFrame, indexPath: String,
       textCol: String, idCol: String, k: Int): DataFrame =
+    cleanedTextIncremental(newDocs,
+      IndexStore.at(newDocs.sparkSession, indexPath), textCol, idCol, k)
+
+  private[graft] def cleanedTextIncremental(newDocs: DataFrame,
+      index: IndexStore.Ref, textCol: String, idCol: String,
+      k: Int): DataFrame =
     cleanAgainstSpans(newDocs, textCol, idCol, mergedSpans(
-      incrementalStarts(newDocs, indexPath, textCol, idCol, k), k))
+      incrementalStarts(newDocs, index, textCol, idCol, k), k))
 
   /** duplicated window starts of an increment: in-history windows plus
     * non-canonical within-increment repeats
     */
-  private def incrementalStarts(newDocs: DataFrame, indexPath: String,
+  private def incrementalStarts(newDocs: DataFrame, index0: IndexStore.Ref,
       textCol: String, idCol: String, k: Int): DataFrame = {
-    val spark = newDocs.sparkSession
-    IndexParams.check(spark, indexPath,
-      Seq("kind" -> "window", "k" -> k.toString))
+    val index = index0.probe(windowPart("", k).params, "h LONG")
+      .select(col("h"), lit(true).as("__ih"))
     val occ = occurrences(newDocs, textCol, idCol, k)
     // One window pass marks within-increment repeats off the h-shuffle
     // (r15, see [[duplicatedStarts]]), then ONE left join flags
@@ -191,8 +200,6 @@ object SubstringDedup {
     // is [[mergedSpans]], whose sorted cover-merge is idempotent in
     // repeated positions. The window runs before the join so __cnt
     // counts occurrence rows, never join-multiplied ones.
-    val index = spark.read.parquet(indexPath)
-      .select(col("h"), lit(true).as("__ih"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("h")
     occ
       .withColumn("__cnt", count(lit(1)).over(w))

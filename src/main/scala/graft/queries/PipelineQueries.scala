@@ -1563,8 +1563,7 @@ object PipelineQueries {
         |SELECT qid, nid, ROUND(cs, 4) AS cs, CAST(rn AS INTEGER) AS rn
         |FROM r WHERE rn <= 5 ORDER BY qid, rn""".stripMargin) { (s, d) =>
       val emb = Tables.load(s, d, "embeddings")
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val idx = graft.QueryDef.scratchDir("graft_ivf")
       Similarity.writeIvfIndex(emb, "vec_id", "embedding", "label", idx)
       Similarity.ivfTopKIndexed(s, idx, emb.filter(col("vec_id") < 20),
         "vec_id", "embedding", "label", k = 5)
@@ -1987,8 +1986,7 @@ object PipelineQueries {
         |FROM r WHERE rn <= 5 ORDER BY qid, rn""".stripMargin) { (s, d) =>
       val emb = Tables.load(s, d, "embeddings")
       val cents = Similarity.trainCentroids(emb, "vec_id", "embedding", 8)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfq_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val idx = graft.QueryDef.scratchDir("graft_ivfq")
       Similarity.buildIvfIndex(emb, "vec_id", "embedding", cents, idx)
       Similarity.ivfSearchIndexed(s, idx,
         emb.filter(col("vec_id") < 20).select("vec_id", "embedding"),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.{Commit, IndexStore}
 import graft.Stage.StageOps
 
 import graft.dml.GraphDml
@@ -58,8 +59,9 @@ object EdgeStream {
     * a replayed micro-batch would re-apply and duplicate its edges; a
     * [[BatchLedger]] marker beside the table (committed after the swap
     * sequence, checked before it) makes a batch whose PREVIOUS attempt
-    * committed skip entirely — the `edgeUpserts` face of the same
-    * protection [[curatedDocs]]/[[nearDedupedDocs]] already carry. The
+    * committed skip entirely — the `edgeUpserts` face of the replay
+    * protection [[curatedDocs]]/[[nearDedupedDocs]] get from their
+    * batchId-keyed [[graft.IndexStore]] appends. The
     * residual window is a crash BETWEEN the swap and the marker write
     * (the swap rewrites the table, so there is no per-batch file
     * provenance to strip on replay); closing it needs a transactional
@@ -92,8 +94,7 @@ object EdgeStream {
       getSink: Option[() => DataFrame],
       setSink: Option[DataFrame => Unit],
       ledgerDir: Option[String]): Unit = {
-    val ledger = ledgerDir.map(d =>
-      new BatchLedger(batch.sparkSession, d, Nil))
+    val ledger = ledgerDir.map(new BatchLedger(batch.sparkSession, _))
     if (ledger.exists(_.applied(batchId))) return
     val pairs = toPairs(batch).stageBoundary
     if (!pairs.isEmpty) {
@@ -147,12 +148,13 @@ object EdgeStream {
     * not executor memory: it survives restarts and is the same artifact
     * the batch incremental path uses.
     *
-    * REPLAY-SAFE: foreachBatch is at-least-once, so each batch commits
-    * through a [[BatchLedger]] — an already-applied batchId skips, a
-    * replayed one first removes its own partial appends so the probe
-    * sees clean history and reproduces the original outcome. `sink`
-    * receives the batchId and must be idempotent per batch (e.g.
-    * overwrite `dir/batch=<id>`).
+    * REPLAY-SAFE: foreachBatch is at-least-once, so each batch's band
+    * rows are one [[graft.IndexStore]] append keyed on its batchId — an
+    * already-visible batchId skips, and a replayed one probes only
+    * committed history (its crashed attempt's files are never visible)
+    * and reproduces the original outcome. `sink` receives the batchId
+    * and must be idempotent per batch (e.g. overwrite
+    * `dir/batch=<id>`).
     *
     * `corpusDir` must hold the kept documents' (id, text) parquet —
     * candidate verification re-shingles only candidate docs from it;
@@ -171,66 +173,42 @@ object EdgeStream {
       }
 
   /** one [[nearDedupedDocs]] micro-batch, exposed so a replay (same
-    * batchId) is directly testable — idempotent via [[BatchLedger]]
+    * batchId) is directly testable — idempotent via the keyed append
     */
   private[streaming] def nearDedupBatch(batch0: DataFrame, batchId: Long,
       textCol: String, idCol: String, corpusDir: String, indexDir: String,
       n: Int, minJaccard: Double, numPerms: Int, bands: Int,
       sink: (DataFrame, Long) => Unit): Unit = {
     val spark = batch0.sparkSession
-    val ledger = new BatchLedger(spark, indexDir, Seq(indexDir))
-    if (ledger.applied(batchId)) return
+    val index = IndexStore.streaming(spark, indexDir)
+    if (index.replayed(batchId)) return
     val batch = batch0.stageBoundary
     if (batch.isEmpty) return
-    // drop a crashed attempt's partial appends BEFORE probing — the
-    // batch must never see its own bands as history
-    ledger.begin(batchId)
-    // Hadoop FS existence check, not java.io.File — the corpus and
-    // index live wherever spark.read.parquet reads from (HDFS/S3
-    // on a cluster), and a silently "absent" history index would
-    // fall back to self-dedup and admit duplicates of history
-    def exists(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(p)
-    }
+    // Hadoop FS existence check, not java.io.File — the corpus lives
+    // wherever spark.read.parquet reads from (HDFS/S3 on a cluster)
+    val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)
     val corpus =
-      if (exists(corpusDir))
-        spark.read.parquet(corpusDir)
-          .select(col(idCol), col(textCol))
+      if (corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(corpusPath))
+        spark.read.parquet(corpusDir).select(col(idCol), col(textCol))
       else batch.select(col(idCol), col(textCol)).limit(0)
-    val haveIndex = exists(indexDir)
-    val doomed =
-      if (!haveIndex) {
-        // first batch: self-dedup only (doomed-set primitive — same
-        // result as pairs.id_b, never materializes within-set pairs)
-        graft.ext.Dedup.minhashLshDoomed(batch, textCol, idCol,
-          n, minJaccard, numPerms, bands)
-      } else {
-        // a batch doc drops when it near-matches history (history
-        // always wins) or has a smaller in-batch near-neighbor — the
-        // same greedy policy the pair-derived set gave, but resolved at
-        // exact-shingle-set-rep granularity: a batch of m copies of a
-        // hot history page never materializes its m×|history matches|
-        // member pairs
-        graft.ext.Dedup.minhashLshDoomedIncremental(
-          spark, batch, corpus, indexDir, textCol, idCol,
-          n, minJaccard, numPerms, bands, historyWins = true)
-          .stageBoundary
-      }
+    // a batch doc drops when it near-matches history (history always
+    // wins; before the first commit the history is empty) or has a
+    // smaller in-batch near-neighbor — resolved at exact-shingle-set-rep
+    // granularity: a batch of m copies of a hot history page never
+    // materializes its m×|history matches| member pairs
+    val doomed = graft.ext.Dedup.minhashLshDoomedIncremental(spark, batch,
+      corpus, IndexStore.Ref(index), textCol, idCol, n, minJaccard,
+      numPerms, bands, historyWins = true)
+      .stageBoundary
     val kept = batch.join(doomed, Seq(idCol), "left_anti")
       .stageBoundary
     sink(kept, batchId)
-    if (!haveIndex) {
-      // bootstrap an empty index so the staged append publishes into a
-      // consistent live layout
-      graft.ext.Dedup.writeBandIndex(kept.limit(0), textCol, idCol,
-        indexDir, n, numPerms, bands)
+    index.append(Seq(graft.ext.Dedup.bandPart("", n, numPerms, bands)),
+      Some(batchId)) { at =>
+      graft.ext.Dedup.writeBands(kept, textCol, idCol, at(""), n, numPerms,
+        bands)
     }
-    graft.ext.Dedup.appendBandIndex(kept, textCol, idCol,
-      ledger.stagingFor(batchId, indexDir), n, numPerms, bands)
-    ledger.publish(batchId)
-    ledger.commit(batchId)
   }
 
   /** Streaming end-to-end curation: each micro-batch runs the FULL
@@ -242,9 +220,9 @@ object EdgeStream {
     * batches dedup against everything kept so far. The curation state
     * IS the on-disk index family — restart-safe, shared bit-for-bit
     * with the batch incremental path (batch and streaming curation are
-    * one code path). First batch bootstraps empty indexes (an empty
-    * history is a valid history). Contract as everywhere incremental:
-    * ids increase across batches.
+    * one code path). Before the first batch commits, the family reads
+    * as empty history. Contract as everywhere incremental: ids
+    * increase across batches.
     */
   def curatedDocs(docs: DataFrame, bench: DataFrame, textCol: String,
       idCol: String, indexDir: String,
@@ -259,48 +237,29 @@ object EdgeStream {
           k, minJaccard, decontamN, decontamMinHits, minCleanTokens, sink)
       }
 
-  /** the index subdirs of the curation family a batch appends to */
-  private def curationDirs(indexDir: String): Seq[String] =
-    Seq("windows", "fingerprints", "exact_docs", "bands")
-      .map(s => s"$indexDir/$s")
-
   /** One [[curatedDocs]] micro-batch, exposed so a replay (same batchId)
-    * is directly testable. Idempotent via [[BatchLedger]]: an applied
-    * batch skips; a replayed one removes its own partial index appends
-    * BEFORE probing (otherwise its documents would classify as
-    * duplicates of "history" and the epoch's output would collapse),
-    * recomputes deterministically, and re-publishes.
+    * is directly testable. The batch's index rows are one keyed append
+    * to the family's [[graft.IndexStore]]: an already-visible batch
+    * skips; a replayed one probes only committed history (otherwise its
+    * documents would classify as duplicates of "history" and the
+    * epoch's output would collapse), recomputes deterministically, and
+    * appends again.
     */
   private[streaming] def curateBatch(batch0: DataFrame, batchId: Long,
       bench: DataFrame, textCol: String, idCol: String, indexDir: String,
       k: Int, minJaccard: Double, decontamN: Int, decontamMinHits: Int,
       minCleanTokens: Int, sink: (DataFrame, Long) => Unit): Unit = {
-    val spark = batch0.sparkSession
-    val ledger = new BatchLedger(spark, indexDir, curationDirs(indexDir))
-    if (ledger.applied(batchId)) return
+    val family = IndexStore.streaming(batch0.sparkSession, indexDir)
+    if (family.replayed(batchId)) return
     val batch = batch0.stageBoundary
     if (batch.isEmpty) return
-    ledger.begin(batchId)
-    // bootstrap-completeness probe on the LAST artifact
-    // curateV2WriteIndexes writes (bands): a crash mid-bootstrap then
-    // re-runs the whole (idempotent, all-overwrite) bootstrap instead of
-    // leaving later probes to fail on a half-written family
-    val bandsPath = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-    val fs = bandsPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(bandsPath))
-      graft.ext.Pipeline.curateV2WriteIndexes(batch.limit(0),
-        textCol, idCol, indexDir, k, minCleanTokens)
     val curated = graft.ext.Pipeline.curateV2Incremental(
-      batch, bench, textCol, idCol, indexDir, k, minJaccard,
+      batch, bench, textCol, idCol, family, k, minJaccard,
       decontamN, decontamMinHits, minCleanTokens)
       .stageBoundary
     sink(curated, batchId)
     graft.ext.Pipeline.curateV2AppendIndexes(batch, textCol, idCol,
-      indexDir, k, minCleanTokens,
-      appendTo = sub => ledger.stagingFor(batchId, s"$indexDir/$sub"))
-    ledger.publish(batchId)
-    ledger.commit(batchId)
+      family, k, minCleanTokens, Some(batchId))
   }
 
   /** Streaming ANN-index ingestion with near-dup gating — the embedding
@@ -328,30 +287,25 @@ object EdgeStream {
       }
 
   /** One [[indexedEmbeddings]] micro-batch, exposed so a replay (same
-    * batchId) is directly testable. Idempotent via [[BatchLedger]]: an
-    * applied batch skips; a replayed crash-window batch strips its own
-    * partial cell appends BEFORE probing (its vectors must never see
-    * themselves as history), recomputes deterministically, re-publishes.
+    * batchId) is directly testable. The bootstrap build and every later
+    * cell append are keyed on the batchId in the index's
+    * [[graft.IndexStore]]: an already-visible batch skips; a replayed
+    * one probes only committed history (its vectors never see
+    * themselves as history), recomputes deterministically, re-appends.
     */
   private[streaming] def indexedEmbeddingBatch(batch0: DataFrame,
       batchId: Long, idCol: String, vecCol: String, indexDir: String,
       minCosine: Double, cells: Int, sink: (DataFrame, Long) => Unit): Unit = {
     import graft.ext.Similarity
     val spark = batch0.sparkSession
-    val ledger = new BatchLedger(spark, indexDir, Seq(indexDir))
-    if (ledger.applied(batchId)) return
+    val index = IndexStore.streaming(spark, indexDir)
+    if (index.replayed(batchId)) return
     val batch = batch0.stageBoundary
     if (batch.isEmpty) return
-    ledger.begin(batchId)
-    // quantizer sidecar = bootstrap-completeness signal (it is written
-    // LAST by the bootstrap, so a half-written first attempt re-runs
-    // the whole idempotent bootstrap)
-    val centsPath = new org.apache.hadoop.fs.Path(indexDir, "_centroids.json")
-    val fs = centsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(centsPath)) {
+    if (index.isEmpty) {
       // bootstrap: train the coarse quantizer on this batch, self-dedup
       // (greedy min-id keeper, same policy as the batch family), build
-      // the index from the admitted rows
+      // the index — quantizer included — from the admitted rows
       val k = math.min(cells.toLong, batch.count()).toInt
       val cents = Similarity.trainCentroidsKMeansPP(
         batch, idCol, vecCol, k)
@@ -364,8 +318,9 @@ object EdgeStream {
         .select(col("b.id").as(idCol)).distinct()
       val kept = batch.join(doomed, Seq(idCol), "left_anti").stageBoundary
       sink(kept, batchId)
-      Similarity.buildIvfIndex(kept, idCol, vecCol, cents, indexDir)
-      ledger.commit(batchId)
+      Similarity.writeIvfIndex(
+        Similarity.assignCells(kept, vecCol, "__cell", cents),
+        idCol, vecCol, "__cell", indexDir, cents, Some(batchId))
       return
     }
     val cents = Similarity.readCentroids(spark, indexDir)
@@ -377,13 +332,11 @@ object EdgeStream {
     val doomed = pairs.select(col("id_b").as(idCol)).distinct()
     val kept = batch.join(doomed, Seq(idCol), "left_anti").stageBoundary
     sink(kept, batchId)
-    Similarity.assignCells(kept, vecCol, "__cell", cents)
-      .select(col(idCol), col(vecCol), col("__cell"))
-      .repartition(col("__cell")).sortWithinPartitions(idCol)
-      .write.mode("overwrite").partitionBy("__cell")
-      .parquet(ledger.stagingFor(batchId, indexDir))
-    ledger.publish(batchId)
-    ledger.commit(batchId)
+    Similarity.appendIvfIndex(
+      Similarity.assignCells(kept, vecCol, "__cell", cents)
+        .select(col(idCol), col(vecCol), col("__cell"))
+        .repartition(col("__cell")).sortWithinPartitions(idCol),
+      "__cell", index, Some(batchId))
   }
 
   /** Streaming quality gating: the same C4 + Gopher gates the batch
@@ -466,12 +419,13 @@ object EdgeStream {
     * rows folds into the persisted graph via
     * [[graft.ext.Similarity.knnGraphIncrement]] — new vectors take
     * their top-k, old vectors in the touched cells repair, and the
-    * increment's vectors publish into the cell-partitioned IVF layout
-    * through the [[BatchLedger]] staging protocol (crashed partial
-    * publishes are swept by `begin`, the state version is keyed by
-    * batchId, replays are committed no-ops). The very first batch
-    * bootstraps both the IVF layout and the graph — the increment's
-    * general case already IS the batch build when history is empty.
+    * increment's vectors append to the cell-partitioned IVF layout's
+    * [[graft.IndexStore]] keyed on the batchId. That append is the
+    * batch's commit point: a visible batchId is a committed no-op, and
+    * a replay first drops the crashed attempt's state version. The
+    * very first batch bootstraps both the IVF layout and the graph —
+    * the increment's general case already IS the batch build when
+    * history is empty.
     *
     * Maintenance: the within-cell repair cost is Σ|cell|², so a
     * drifting ingest stream that overgrows one cell degrades
@@ -497,24 +451,12 @@ object EdgeStream {
       idCol: String, vecCol: String, cellCol: String, k: Int,
       ivfDir: String, knnDir: String): Unit = {
     val spark = batch.sparkSession
-    val ledger = new BatchLedger(spark, knnDir, Seq(ivfDir))
     val state = graft.ext.Similarity.knnState(spark, knnDir)
-    if (!ledger.applied(batchId)) {
-      ledger.begin(batchId)
+    if (!IndexStore(spark, ivfDir).replayed(batchId)) {
       state.drop(batchId) // a crashed attempt's version, committed or not
-      if (!batch.isEmpty) {
+      if (!batch.isEmpty)
         graft.ext.Similarity.knnGraphIncrement(batch, idCol, vecCol,
-          cellCol, k, ivfDir, knnDir, version = Some(batchId),
-          ivfWriter = Some { rows =>
-            rows.write.mode("overwrite").partitionBy(cellCol)
-              .parquet(ledger.stagingFor(batchId, ivfDir))
-            ledger.publish(batchId)
-          },
-          // the previous state version survives until THIS batch's
-          // ledger marker lands — see knnWrite's crash-window note
-          vacuumOld = false)
-      }
-      ledger.commit(batchId)
+          cellCol, k, ivfDir, knnDir, version = Some(batchId))
     }
     // Vacuum keys on the max COMMITTED version, not batchId: an empty
     // micro-batch writes no version batchId, and vacuuming below the
@@ -603,12 +545,12 @@ object EdgeStream {
     * cluster labeling via [[graft.ext.Cc.addPairs]]. The state IS one
     * on-disk star-forest snapshot (id → component for every node that
     * has ever appeared in a pair — clustered nodes only, NOT the whole
-    * corpus), rewritten per batch through the [[BatchLedger]] staging
-    * protocol: a replayed committed batch skips, a crash-window replay
-    * recomputes from the previous committed snapshot and reproduces
-    * the identical labeling (contraction is deterministic). Older
-    * snapshots vacuum after commit; [[readClusterLabels]] always
-    * resolves the latest COMMITTED one.
+    * corpus), rewritten per batch as the [[graft.Commit.Versions]]
+    * version numbered by the batchId: a replayed committed batch skips,
+    * a crash-window replay recomputes from the previous committed
+    * snapshot and reproduces the identical labeling (contraction is
+    * deterministic). Older snapshots vacuum after commit;
+    * [[readClusterLabels]] always resolves the latest COMMITTED one.
     *
     * Scale note: the per-batch cost is the contraction over
     * |star snapshot| + |batch pairs| — history enters pre-collapsed,
@@ -625,63 +567,36 @@ object EdgeStream {
         clusterBatch(batch0, batchId, aCol, bCol, labelsDir, sink)
       }
 
+  private def labelState(spark: org.apache.spark.sql.SparkSession,
+      labelsDir: String) =
+    new Commit.Versions(Commit.fs(spark, labelsDir), labelsDir, "v",
+      "cluster labels")
+
   /** latest COMMITTED cluster snapshot, None before the first batch */
   def readClusterLabels(spark: org.apache.spark.sql.SparkSession,
       labelsDir: String): Option[DataFrame] = {
-    val dir = new org.apache.hadoop.fs.Path(labelsDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return None
-    val applied = {
-      val m = new org.apache.hadoop.fs.Path(s"$labelsDir/_applied")
-      if (!fs.exists(m)) return None
-      fs.listStatus(m).map(_.getPath.getName)
-        .filter(_.startsWith("b")).map(_.drop(1).toLong).toSet
-    }
-    val files = fs.listStatus(dir)
-      .filter(_.isFile)
-      .map(_.getPath)
-      .filter(_.getName.startsWith("b"))
-    val byBatch = files.groupBy(p =>
-      p.getName.drop(1).takeWhile(_.isDigit) match {
-        case "" => -1L
-        case ds => ds.toLong
-      }).filter { case (b, _) => b >= 0 && applied(b) }
-    if (byBatch.isEmpty) return None
-    val latest = byBatch(byBatch.keys.max).map(_.toString)
-    Some(spark.read
-      .schema("id LONG, component LONG")
-      .parquet(latest: _*))
+    val state = labelState(spark, labelsDir)
+    state.latest.map(v => spark.read.schema("id LONG, component LONG")
+      .parquet(state.dir(v).toString))
   }
 
   private[streaming] def clusterBatch(batch0: DataFrame, batchId: Long,
       aCol: String, bCol: String, labelsDir: String,
       sink: (DataFrame, Long) => Unit): Unit = {
     val spark = batch0.sparkSession
-    val ledger = new BatchLedger(spark, labelsDir, Seq(labelsDir))
-    if (ledger.applied(batchId)) return
+    val state = labelState(spark, labelsDir)
+    if (state.replayed(batchId)) return
     val batch = batch0.stageBoundary
     if (batch.isEmpty) return
-    ledger.begin(batchId)
+    val parent = state.latest
     val merged = readClusterLabels(spark, labelsDir) match {
       case Some(prev) => graft.ext.Cc.addPairs(prev, batch, aCol, bCol)
       case None => graft.ext.Cc.connectedComponents(batch, aCol, bCol)
     }
     val snap = merged.stageBoundary
-    snap.write.mode("overwrite")
-      .parquet(ledger.stagingFor(batchId, labelsDir))
     sink(snap, batchId)
-    ledger.publish(batchId)
-    ledger.commit(batchId)
-    // older snapshots are now unreachable (readers resolve the max
-    // committed batch) — reclaim them
-    val dir = new org.apache.hadoop.fs.Path(labelsDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(dir).filter(_.isFile).map(_.getPath)
-      .filter { p =>
-        val ds = p.getName.drop(1).takeWhile(_.isDigit)
-        p.getName.startsWith("b") && ds.nonEmpty && ds.toLong < batchId
-      }
-      .foreach(p => fs.delete(p, false))
+    // committing version batchId reclaims the older snapshots
+    state.publish(batchId, parent) { tmp => snap.write.parquet(tmp.toString) }
   }
 
   /** Streaming funnel progress — the streaming face of
@@ -767,24 +682,19 @@ object EdgeStream {
     * the streaming face of the [[graft.ext.CorpusOverlap]] family
     * (every other incremental family has one): each micro-batch of
     * documents folds into the persisted corpus sketch at `sketchPath`
-    * through the family's swap-published merge, and the batch's
+    * through the family's merge, and the batch's
     * one-row overlap estimate against the PRE-batch sketch ("how much
     * of this shard has the corpus already seen") goes to
     * `sink(estimate, batchId)`. At 100 TB the per-batch cost is one
     * map pass + one ≤k-long partial-aggregated exchange over the BATCH
     * plus k persisted longs — history is never rescanned.
     *
-    * Idempotence needs less machinery here than the index families:
-    * KMV merge is a set union under bottom-k, so re-merging a replayed
-    * batch is a mathematical no-op — the ledger marker only skips
-    * committed batches (wasted work + double-sinking), not corruption.
-    * The one replay hazard is the SCREEN: a crash between merge and
-    * commit would leave the replay estimating against a sketch that
-    * already absorbed the batch (containment reads ~inflated). So the
-    * pre-batch sketch is snapshotted — swap-published — BEFORE the
-    * merge, and the screen always reads the snapshot: a replay at any
-    * crash point reproduces the sink row exactly. Applied batches'
-    * snapshots are swept at the head of later batches.
+    * Idempotence: the merge is a full build of the sketch's
+    * [[graft.IndexStore]] keyed on the batchId, so a batch whose merge
+    * committed is skipped. The screen reads the committed pre-batch
+    * sketch and is sunk BEFORE the merge commits, so a replay from any
+    * earlier crash point screens against the same history and
+    * reproduces the sink row exactly (`sink` overwrites per batch).
     */
   def kmvSketchStream(docs: DataFrame, textCol: String,
       sketchPath: String, k: Int = 256)(
@@ -854,62 +764,21 @@ object EdgeStream {
   private[streaming] def kmvBatch(batch0: DataFrame, batchId: Long,
       textCol: String, sketchPath: String, k: Int,
       sink: (DataFrame, Long) => Unit): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val spark = batch0.sparkSession
-    val ledger = new BatchLedger(spark, s"$sketchPath._ledger", Seq())
-    if (ledger.applied(batchId)) return
+    val sketch = IndexStore.streaming(batch0.sparkSession, sketchPath)
+    if (sketch.replayed(batchId)) return
     val batch = batch0.stageBoundary
-    if (batch.count() == 0) { ledger.commit(batchId); return }
-    val fs = graft.Commit.fs(spark, sketchPath)
-    // a merge that crashed mid-swap leaves the live dir possibly absent
-    // until the family's recovery runs — run it BEFORE the existence
-    // checks below, or the pre-batch snapshot would silently record an
-    // empty history (the screen's replay-stability depends on the
-    // snapshot being the true pre-batch sketch)
-    graft.ext.CorpusOverlap.recoverSketch(spark, sketchPath)
-
-    // sweep snapshots orphaned by a crash between commit and cleanup
-    val preRoot = new HPath(s"$sketchPath._pre")
-    if (fs.exists(preRoot))
-      fs.listStatus(preRoot).foreach { st =>
-        val bid = st.getPath.getName.stripPrefix("b")
-        if (bid.forall(_.isDigit) && bid.nonEmpty &&
-            ledger.applied(bid.toLong))
-          fs.delete(st.getPath, true)
-      }
-
-    // pre-batch snapshot, swapped in BEFORE the merge: the
-    // replay-stable history side of the screen. k rows — copying it is
-    // O(k), not O(corpus)
-    val snap = graft.Commit.Swap.suffixed(s"$sketchPath._pre/b$batchId")
-    val pre = snap.dst
-    graft.Commit.recover(fs, snap)
-    if (!fs.exists(pre))
-      graft.Commit.swap(fs, snap) {
-        val hist =
-          if (fs.exists(new HPath(sketchPath)))
-            spark.read.schema("h LONG").parquet(sketchPath)
-          else spark.range(0).select(col("id").as("h"))
-        hist.coalesce(1).write.mode("overwrite").parquet(snap.tmp.toString)
-      }
-
-    if (fs.exists(new HPath(sketchPath)))
-      graft.ext.CorpusOverlap.mergeKmvSketch(batch, textCol, sketchPath, k)
-    else
-      graft.ext.CorpusOverlap.writeKmvSketch(batch, textCol, sketchPath, k)
-
+    if (batch.count() == 0) return
+    // the committed pre-batch sketch, materialized (k rows) so the
+    // screen never reads the merge below
+    val pre = graft.ext.CorpusOverlap.sketchRows(sketch, k).stageBoundary
     // the bootstrap batch has no history to screen against (an empty
     // history side would put 0 in the estimator's containment divisor)
     // — the sketch is still written; screening starts at the next batch
-    val preSketch = spark.read.schema("h LONG").parquet(pre.toString)
-    if (preSketch.count() > 0) {
-      val est = graft.ext.CorpusOverlap
-        .overlapFromSketch(preSketch, batch, textCol, k)
-        .withColumn("batch_id", lit(batchId))
-      sink(est, batchId)
-    }
-    ledger.commit(batchId)
-    fs.delete(pre, true)
+    if (!pre.isEmpty)
+      sink(graft.ext.CorpusOverlap.overlapFromSketch(pre, batch, textCol, k)
+        .withColumn("batch_id", lit(batchId)), batchId)
+    graft.ext.CorpusOverlap.mergeKmvSketch(batch, textCol, sketch, k,
+      Some(batchId))
   }
 
   /** convenience: run a streaming query to completion over a bounded

@@ -150,14 +150,16 @@ class CorpusOverlapSpec extends SparkSpec {
       "estimate through the rolled sketch must equal the batch estimator")
   }
 
-  test("merge swap is crash-safe: every window leaves a readable sketch") {
+  test("merge is crash-safe: every window leaves a readable sketch") {
     val hist = corpus(0 until 700, "cw")
     val folded = corpus(500 until 900, "cw")
     val probe = corpus(600 until 1200, "cw")
     def expected(dir: String) = CorpusOverlap
       .overlapWithSketch(spark, dir, probe, "text", k = 128).head().toSeq
+    def tmp(name: String) =
+      java.nio.file.Files.createTempDirectory(name).toString
     def build() = {
-      val dir = java.nio.file.Files.createTempDirectory("kmv_cw").toString
+      val dir = tmp("kmv_cw")
       CorpusOverlap.writeKmvSketch(hist, "text", dir, k = 128)
       CorpusOverlap.mergeKmvSketch(folded, "text", dir, k = 128)
       dir
@@ -166,25 +168,43 @@ class CorpusOverlapSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val mergedAnswer = expected(build())
+    val histDir = tmp("kmv_cw0")
+    CorpusOverlap.writeKmvSketch(hist, "text", histDir, k = 128)
+    val histAnswer = expected(histDir)
+    val v0 = "index_version=0"
+    def left(dir: String) = new java.io.File(dir).list().toSeq
+      .filter(n => n.contains(".tmp-") ||
+        n.startsWith("index_version=") && !fs.exists(p(s"$dir/_commits/$n")))
 
-    // window 1: crash BEFORE publish (marker dropped, live moved aside)
-    // → recovery restores the pre-merge sketch; re-running the merge
-    // reconverges (the increment still exists at the caller)
-    val d1 = java.nio.file.Files.createTempDirectory("kmv_cw1").toString
+    // window 1: crash BEFORE the marker (the merged version renamed into
+    // place, never marked) → probes keep the pre-merge sketch; re-running
+    // the merge sweeps it and reconverges (the increment still exists
+    // at the caller)
+    val d1 = tmp("kmv_cw1")
     CorpusOverlap.writeKmvSketch(hist, "text", d1, k = 128)
-    fs.create(p(d1 + "__swap"), true).close()
-    assert(fs.rename(p(d1), p(d1 + "__bak")), "simulate mid-swap crash")
+    spark.range(3).toDF("h").write.parquet(s"$d1/index_version=1")
+    assert(expected(d1) == histAnswer,
+      "pre-marker crash must keep the old sketch")
     CorpusOverlap.mergeKmvSketch(folded, "text", d1, k = 128)
-    assert(expected(d1) == mergedAnswer, "pre-publish crash must keep the old sketch")
-    assert(!fs.exists(p(d1 + "__swap")) && !fs.exists(p(d1 + "__bak")))
+    assert(expected(d1) == mergedAnswer)
+    assert(left(d1).isEmpty, left(d1).toString)
 
-    // window 2: crash AFTER publish (marker + leftovers remain) →
-    // recovery keeps the new sketch and sweeps the debris
-    val d2 = build()
-    fs.create(p(d2 + "__swap"), true).close()
-    fs.mkdirs(p(d2 + "__bak"))
-    assert(expected(d2) == mergedAnswer, "post-publish crash must keep the new sketch")
-    assert(!fs.exists(p(d2 + "__swap")) && !fs.exists(p(d2 + "__bak")))
+    // window 2: crash AFTER the marker, before the superseded version is
+    // reclaimed → probes see the new sketch; the next write sweeps the
+    // old version
+    val d2 = tmp("kmv_cw2")
+    CorpusOverlap.writeKmvSketch(hist, "text", d2, k = 128)
+    val saved = tmp("kmv_cw2_old")
+    fs.copyToLocalFile(p(s"$d2/$v0"), p(s"$saved/$v0"))
+    fs.copyToLocalFile(p(s"$d2/_commits/$v0"), p(s"$saved/marker"))
+    CorpusOverlap.mergeKmvSketch(folded, "text", d2, k = 128)
+    fs.copyToLocalFile(p(s"$saved/$v0"), p(s"$d2/$v0"))
+    fs.copyToLocalFile(p(s"$saved/marker"), p(s"$d2/_commits/$v0"))
+    assert(expected(d2) == mergedAnswer,
+      "post-marker crash must keep the new sketch")
+    CorpusOverlap.mergeKmvSketch(folded, "text", d2, k = 128)
+    assert(expected(d2) == mergedAnswer)
+    assert(!fs.exists(p(s"$d2/$v0")) && !fs.exists(p(s"$d2/_commits/$v0")))
   }
 
   test("overlapMatrix drops null groups instead of NPEing") {

@@ -104,7 +104,7 @@ class KnnGraphSpec extends SparkSpec {
       "vec_id", "embedding", "label", k = 2, numCells = 2)
     assert(Similarity.ivfHotCells(spark, ivfDir, "label", maxCell = 10)
       .isEmpty)
-    val cellsNow = spark.read.parquet(ivfDir)
+    val cellsNow = graft.IndexStore(spark, ivfDir).read()
       .groupBy("label").count().collect()
       .map(r => r.getLong(1)).sorted.toSeq
     assert(cellsNow == Seq(8L, 8L), cellsNow.toString)
@@ -113,7 +113,7 @@ class KnnGraphSpec extends SparkSpec {
     def edges(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "nid").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recelled = spark.read.parquet(ivfDir)
+    val recelled = graft.IndexStore(spark, ivfDir).read()
       .select("vec_id", "embedding", "label")
     assert(edges(Similarity.readKnnGraph(spark, knnDir)) ==
       edges(Similarity.knnGraph(recelled, "vec_id", "embedding", "label", 2)))
@@ -126,7 +126,7 @@ class KnnGraphSpec extends SparkSpec {
       Similarity.readCentroids(spark, ivfDir))
     Similarity.knnGraphIncrement(incCelled, "vec_id", "embedding",
       "label", 2, ivfDir, knnDir)
-    val after = spark.read.parquet(ivfDir)
+    val after = graft.IndexStore(spark, ivfDir).read()
       .select("vec_id", "embedding", "label")
     assert(edges(Similarity.readKnnGraph(spark, knnDir)) ==
       edges(Similarity.knnGraph(after, "vec_id", "embedding", "label", 2)))

@@ -6,10 +6,10 @@ import java.nio.file.{Files, Path => JPath, StandardCopyOption}
 import scala.util.control.NonFatal
 import scala.util.hashing.MurmurHash3
 
-import graft.{FaultFs, SparkSpec}
+import graft.{FaultFs, IndexStore, SparkSpec}
 import graft.ddl.GraphCatalog
-import graft.ext.{ClusteredStore, Cms, CorpusOverlap, Similarity,
-  TextFunctions}
+import graft.ext.{ClusteredStore, Cms, CorpusOverlap, Dedup, Pipeline,
+  Similarity, SubstringDedup, TextFunctions}
 import graft.lang.GraphSession
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
   *    or temp leftovers and no uncommitted version dirs.
   *
   * Retries replay the same batch id or version, the replay contract the
-  * streaming faces rely on. The non-ledger `knnGraphIncrement` retry
-  * double-append is documented at the method and not exercised here; the
-  * kNN row runs through the ledger face ([[EdgeStream.knnBatch]]).
+  * streaming faces rely on. An unversioned `knnGraphIncrement` retry
+  * folds twice (documented at the method) and is not exercised here;
+  * the kNN row runs through the streaming face ([[EdgeStream.knnBatch]]),
+  * which passes its batch id.
   */
 class CommitFaultSpec extends SparkSpec {
 
@@ -193,25 +194,34 @@ class CommitFaultSpec extends SparkSpec {
     read = root => Seq(tableHash(root, "Ta"), tableHash(root, "Tb")),
     independent = true)
 
-  private def sketchRead(root: String): Seq[Int] = {
-    val path = s"$root/sk"
-    CorpusOverlap.recoverSketch(spark, path)
-    Seq(rowsHash(spark.read.schema("h LONG").parquet(path)))
-  }
+  private def sketchRead(root: String): Seq[Int] =
+    storeRead("sk", "")(root)
+
+  /** one hash over the committed rows of a store's parts: a version
+    * commits all of them together */
+  private def storeRead(dir: String, parts: String*)(
+      root: String): Seq[Int] =
+    Seq(MurmurHash3.seqHash(parts.map(p =>
+      rowsHash(IndexStore(spark, s"$root/$dir").read(p)))))
+
+  private def storeVersions(dir: String)(root: String) =
+    Seq((s"$root/$dir", isVersion("index_version=") _))
 
   private val kmvWrite = Writer("writeKmvSketch",
     setup = root =>
       CorpusOverlap.writeKmvSketch(docs(0 until 40), "text", s"$root/sk", 16),
     write = root =>
       CorpusOverlap.writeKmvSketch(docs(20 until 90), "text", s"$root/sk", 16),
-    read = sketchRead)
+    read = sketchRead,
+    versioned = storeVersions("sk"))
 
   private val kmvMerge = Writer("mergeKmvSketch",
     setup = root =>
       CorpusOverlap.writeKmvSketch(docs(0 until 40), "text", s"$root/sk", 16),
     write = root =>
       CorpusOverlap.mergeKmvSketch(docs(20 until 90), "text", s"$root/sk", 16),
-    read = sketchRead)
+    read = sketchRead,
+    versioned = storeVersions("sk"))
 
   private def isVersion(prefix: String)(n: String): Boolean =
     n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
@@ -302,7 +312,8 @@ class CommitFaultSpec extends SparkSpec {
     setup = root => kmvBatchOf(root, 0 until 40, 0L),
     write = root => kmvBatchOf(root, 20 until 90, 1L),
     read = sketchRead,
-    converged = root => screens.get((root, 1L)).hashCode)
+    converged = root => screens.get((root, 1L)).hashCode,
+    versioned = storeVersions("sk"))
 
   private def vecs(ids: Range): DataFrame = {
     val s = spark
@@ -320,13 +331,143 @@ class CommitFaultSpec extends SparkSpec {
     setup = root => knnBatchOf(root, 0 until 8, 0L),
     write = root => knnBatchOf(root, 8 until 14, 1L),
     read = root => Seq(rowsHash(Similarity.readKnnGraph(spark, s"$root/knn"))),
-    converged = root => rowsHash(spark.read.parquet(s"$root/ivf")),
-    versioned = root => Seq((s"$root/knn",
-      isVersion("v"))))
+    converged = root => storeRead("ivf", "")(root).head,
+    versioned = root => Seq((s"$root/knn", isVersion("v") _)) ++
+      storeVersions("ivf")(root))
+
+  // ---- index stores ----
+
+  private val bandArgs = (2, 4, 2) // n, numPerms, bands: two band dirs
+
+  private val bandAppend = Writer("appendBandIndex",
+    setup = root => Dedup.writeBandIndex(docs(0 until 6), "text", "doc_id",
+      s"$root/band", bandArgs._1, bandArgs._2, bandArgs._3),
+    write = root => Dedup.appendBandIndex(docs(6 until 12), "text",
+      "doc_id", s"$root/band", bandArgs._1, bandArgs._2, bandArgs._3),
+    read = storeRead("band", ""),
+    versioned = storeVersions("band"))
+
+  private val editRead = storeRead("ed", "df", "prefix", "short") _
+
+  private val editAppend = Writer("appendEditIndex",
+    setup = root => Dedup.writeEditIndex(docs(0 until 6), "text", "doc_id",
+      s"$root/ed", maxDist = 1, q = 2),
+    write = root => Dedup.appendEditIndex(docs(6 until 12), "text",
+      "doc_id", s"$root/ed", maxDist = 1, q = 2),
+    read = editRead,
+    versioned = storeVersions("ed"))
+
+  private val editRebuild = Writer("rebuildEditIndex",
+    setup = root => Dedup.writeEditIndex(docs(0 until 6), "text", "doc_id",
+      s"$root/ed", maxDist = 1, q = 2),
+    write = root => Dedup.rebuildEditIndex(docs(0 until 12), "text",
+      "doc_id", s"$root/ed", maxDist = 1, q = 2),
+    read = editRead,
+    versioned = storeVersions("ed"))
+
+  private val windowAppend = Writer("appendWindowIndex",
+    setup = root => SubstringDedup.writeWindowIndex(docs(0 until 6), "text",
+      "doc_id", 3, s"$root/win"),
+    write = root => SubstringDedup.appendWindowIndex(docs(6 until 12),
+      "text", "doc_id", 3, s"$root/win"),
+    read = storeRead("win", ""),
+    versioned = storeVersions("win"))
+
+  /** documents that pass the curation gates and share no 8-token
+    * window: four shared words, then a tail unique to the doc */
+  private def prose(ids: Range): DataFrame = {
+    val s = spark
+    import s.implicits._
+    val fill = Seq("the", "quiet", "study", "of", "corpus", "language",
+      "models", "enjoy", "clean", "and", "varied", "text", "because",
+      "quality", "gates", "check", "for", "stopwords", "and", "mean",
+      "lengths", "while", "duplicate", "ngrams", "must", "stay", "rare",
+      "so", "each", "sentence", "here", "differs", "slightly", "with",
+      "unique", "tails", "that", "keep", "windows", "apart")
+    ids.map(i => (i.toLong, fill.grouped(4).zipWithIndex
+      .flatMap { case (g, j) => g :+ s"u${i}x$j" }.mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
+  private val curationRead =
+    storeRead("cur", "windows", "fingerprints", "exact_docs", "bands") _
+
+  private val curateAppend = Writer("curateV2AppendIndexes",
+    setup = root => Pipeline.curateV2WriteIndexes(prose(0 until 3), "text",
+      "doc_id", s"$root/cur"),
+    write = root => Pipeline.curateV2AppendIndexes(prose(3 until 5), "text",
+      "doc_id", s"$root/cur"),
+    read = curationRead,
+    versioned = storeVersions("cur"))
+
+  // what a streaming face's sink received, per root, face and batch id
+  private val sunk =
+    scala.collection.concurrent.TrieMap[(String, String, Long), Int]()
+
+  private def curateBatchOf(root: String, ids: Range, batchId: Long): Unit = {
+    val s = spark
+    import s.implicits._
+    EdgeStream.curateBatch(prose(ids), batchId,
+      Seq((900L, "benchmark questions with held out answers"))
+        .toDF("doc_id", "text"),
+      "text", "doc_id", s"$root/cur", 8, 0.9, 5, 5, 10,
+      (out, b) => sunk((root, "cur", b)) = rowsHash(out))
+  }
+
+  private val curateStream = Writer("curateBatch",
+    setup = root => curateBatchOf(root, 0 until 3, 0L),
+    write = root => curateBatchOf(root, 3 until 5, 1L),
+    read = curationRead,
+    converged = root => sunk.get((root, "cur", 1L)).hashCode,
+    versioned = storeVersions("cur"))
+
+  private def nearDedupOf(root: String, ids: Range, batchId: Long): Unit =
+    EdgeStream.nearDedupBatch(docs(ids), batchId, "text", "doc_id",
+      s"$root/corpus", s"$root/band", bandArgs._1, 0.6, bandArgs._2,
+      bandArgs._3, (kept, b) =>
+        kept.write.mode("overwrite").parquet(s"$root/corpus/batch=$b"))
+
+  private val nearDedupStream = Writer("nearDedupBatch",
+    setup = root => nearDedupOf(root, 0 until 6, 0L),
+    write = root => nearDedupOf(root, 6 until 14, 1L),
+    read = storeRead("band", ""),
+    converged = root => rowsHash(spark.read.parquet(s"$root/corpus")),
+    versioned = storeVersions("band"))
+
+  private def embeddingOf(root: String, ids: Range, batchId: Long): Unit =
+    EdgeStream.indexedEmbeddingBatch(vecs(ids).drop("label"), batchId,
+      "vec_id", "embedding", s"$root/emb", 0.95, 2,
+      (kept, b) => sunk((root, "emb", b)) = rowsHash(kept))
+
+  private val embeddingStream = Writer("indexedEmbeddingBatch",
+    setup = root => embeddingOf(root, 0 until 6, 0L),
+    write = root => embeddingOf(root, 6 until 14, 1L),
+    read = storeRead("emb", ""),
+    converged = root => sunk.get((root, "emb", 1L)).hashCode,
+    versioned = storeVersions("emb"))
+
+  private def pairs(ps: (Long, Long)*): DataFrame = {
+    val s = spark
+    import s.implicits._
+    ps.toDF("id_a", "id_b")
+  }
+
+  private val clusterStream = Writer("clusterBatch",
+    setup = root => EdgeStream.clusterBatch(pairs((1L, 2L), (5L, 6L)), 0L,
+      "id_a", "id_b", s"$root/cc", (_, _) => ()),
+    write = root => EdgeStream.clusterBatch(pairs((2L, 5L), (7L, 8L)), 1L,
+      "id_a", "id_b", s"$root/cc",
+      (snap, b) => sunk((root, "cc", b)) = rowsHash(snap)),
+    read = root => Seq(rowsHash(
+      EdgeStream.readClusterLabels(spark, s"$root/cc").get)),
+    converged = root => sunk.get((root, "cc", 1L)).hashCode,
+    versioned = root => Seq((s"$root/cc", isVersion("v") _)))
 
   Seq(catalogRewrite, catalogTruncate, kmvWrite, kmvMerge, cms,
     heavyHitters, boilerplate, cstoreAppend, cstoreCompact, kmvStream,
-    knnStream).foreach { w =>
+    knnStream, bandAppend, editAppend, editRebuild, windowAppend,
+    curateAppend, curateStream, nearDedupStream, embeddingStream,
+    clusterStream).foreach { w =>
     test(s"${w.name}: a fault at any mutating call leaves the old or the " +
       "new state, and one retry converges without leftovers") {
       runMatrix(w)

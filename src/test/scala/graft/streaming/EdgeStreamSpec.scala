@@ -166,13 +166,9 @@ class EdgeStreamSpec extends SparkSpec {
       0L, "id_a", "id_b", dir, (_, _) => ())
     assert(labels() == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L))
 
-    // simulate a CRASHED batch 1: staged junk published but no commit —
-    // readers must still resolve batch 0
-    val ledger = new BatchLedger(spark, dir, Seq(dir))
-    ledger.begin(1L)
-    Seq((99L, 99L)).toDF("id", "component").write
-      .parquet(ledger.stagingFor(1L, dir))
-    ledger.publish(1L)
+    // simulate a CRASHED batch 1: its junk snapshot renamed into place
+    // as version 1 but never marked — readers must still resolve batch 0
+    Seq((99L, 99L)).toDF("id", "component").write.parquet(s"$dir/v1")
     assert(labels() == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L),
       "uncommitted snapshot leaked into reads")
 
@@ -422,10 +418,12 @@ class EdgeStreamSpec extends SparkSpec {
             curated.write.mode("overwrite").parquet(s"$outDir/batch=$bid"))
       exec(b0, 0)
       if (withReplays) {
-        exec(b0, 0) // committed replay: marker short-circuits
-        // crash-window replay: marker lost AFTER the appends published —
-        // begin() must strip the batch's own rows before re-probing
-        val m = new org.apache.hadoop.fs.Path(s"$dir/indexes/_applied/b0")
+        exec(b0, 0) // committed replay: the visible key short-circuits
+        // crash-window replay: the batch's version written but its
+        // marker never landed — the unmarked version must stay out of
+        // the re-probe and be swept by the re-append
+        val m = new org.apache.hadoop.fs.Path(
+          s"$dir/indexes/_commits/index_version=0")
         m.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .delete(m, false)
         exec(b0, 0)
@@ -444,15 +442,15 @@ class EdgeStreamSpec extends SparkSpec {
     assert(repRows.map(_._2) == Set(1L, 2L, 11L))
 
     // index contents equal the replay-free run's, row for row
-    def windowSet(d: String) = spark.read
-      .parquet(s"$d/indexes/windows").collect().map(_.getLong(0)).toSet
-    def fpSet(d: String) = spark.read
-      .parquet(s"$d/indexes/fingerprints").collect().map(_.get(0).toString).toSet
-    def exactSet(d: String) = spark.read
-      .parquet(s"$d/indexes/exact_docs").collect()
+    def part(d: String, p: String) =
+      graft.IndexStore(spark, s"$d/indexes").read(p)
+    def windowSet(d: String) = part(d, "windows")
+      .collect().map(_.getLong(0)).toSet
+    def fpSet(d: String) = part(d, "fingerprints")
+      .collect().map(_.get(0).toString).toSet
+    def exactSet(d: String) = part(d, "exact_docs").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
-    def bandRows(d: String) = spark.read
-      .parquet(s"$d/indexes/bands").select("id", "band", "bandHash")
+    def bandRows(d: String) = part(d, "bands").select("id", "band", "bandHash")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(windowSet(repDir) == windowSet(refDir))
     assert(fpSet(repDir) == fpSet(refDir))
@@ -481,8 +479,9 @@ class EdgeStreamSpec extends SparkSpec {
       .toDF("doc_id", "text")
     exec(b0, 0)
     exec(b0, 0) // committed replay skips
-    // crash-window replay: published appends present, marker gone
-    val m = new org.apache.hadoop.fs.Path(s"$indexDir/_applied/b0")
+    // crash-window replay: the batch's version written, its marker gone
+    val m = new org.apache.hadoop.fs.Path(
+      s"$indexDir/_commits/index_version=0")
     m.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(m, false)
     exec(b0, 0)
     exec(b1, 1)
@@ -490,7 +489,7 @@ class EdgeStreamSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 3L, 11L))
     // 8 band rows per kept doc, no duplicates from the replay
-    val bandRows = spark.read.parquet(indexDir)
+    val bandRows = graft.IndexStore(spark, indexDir).read()
       .select("id", "band", "bandHash").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(bandRows.map(_._1).toSet == Set(1L, 3L, 11L))
@@ -627,9 +626,9 @@ class EdgeStreamSpec extends SparkSpec {
     assert(!ests.contains(0L),
       "bootstrap batch has no history — its screen row must be skipped")
 
-    // merge-then-crash window: batch 2 merges, sink throws before the
-    // commit — the replay must produce the row a replay-free run would
-    // (the screen reads the PRE-batch snapshot, not the merged sketch)
+    // crash window: batch 2's sink throws before its merge commits —
+    // the replay must produce the row a replay-free run would (the
+    // screen reads the committed PRE-batch sketch, not a merged one)
     val b2 = docs(140 until 220).toDF("doc_id", "text")
     val histB2 = union
     val expect2 = graft.ext.CorpusOverlap.overlapEstimate(
@@ -651,19 +650,18 @@ class EdgeStreamSpec extends SparkSpec {
         union.unionByName(b2), "text", k)
         .collect().map(_.getLong(0)).toSeq,
       "post-replay sketch must still equal the from-scratch sketch")
-    // the committed batch's snapshot is gone (swept at commit)
+    // no pre-batch snapshot is left beside the sketch
     val pre = new org.apache.hadoop.fs.Path(s"$sketch._pre/b2")
     val fs = pre.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(pre), "committed snapshot not swept")
 
-    // a PRIOR merge crashed mid-swap (marker dropped, live dir moved
-    // aside) and batch 3 arrives: the batch head must run the sketch
-    // family's recovery BEFORE snapshotting, or the pre-batch snapshot
-    // reads "no sketch" and the screen silently records empty history
-    def hp(s2: String) = new org.apache.hadoop.fs.Path(s2)
-    fs.create(hp(sketch + "__swap"), true).close()
-    assert(fs.rename(hp(sketch), hp(sketch + "__bak")),
-      "simulate mid-swap crash")
+    // a PRIOR merge crashed before its marker (its junk version renamed
+    // into place, never marked) and batch 3 arrives: the pre-batch
+    // snapshot must read the COMMITTED history, not the unmarked version
+    val next = new java.io.File(sketch).list()
+      .filter(_.startsWith("index_version="))
+      .map(_.stripPrefix("index_version=").toInt).max + 1
+    spark.range(5).toDF("h").write.parquet(s"$sketch/index_version=$next")
     val b3 = docs(200 until 260).toDF("doc_id", "text")
     val expect3 = graft.ext.CorpusOverlap.overlapEstimate(
       union.unionByName(b2), b3, "text", k).head().toSeq
@@ -671,7 +669,7 @@ class EdgeStreamSpec extends SparkSpec {
     EdgeStream.kmvBatch(b3, 3L, "text", sketch, k,
       (est, _) => got3 = est.drop("batch_id").head().toSeq)
     assert(got3 == expect3,
-      "screen after a mid-swap crash must see the RECOVERED history")
+      "screen after a crashed merge must see the COMMITTED history")
   }
 
   test("streaming CMS sketch: batches fold to the from-scratch sketch, " +
@@ -829,17 +827,19 @@ class EdgeStreamSpec extends SparkSpec {
       1, ivf, knn)
     assert(stateEdges() == batchEdges(b0))
 
-    // CRASHED attempt of batch 1: state version committed, IVF publish
-    // never happened, no ledger marker
-    Similarity.knnGraphIncrement(df(b1), "vec_id", "embedding", "label",
-      1, ivf, knn, version = Some(1L), ivfWriter = Some(_ => ()),
-      vacuumOld = false)
-    // the real replay must sweep the crashed version and reproduce the
+    // CRASHED attempt of batch 1: its (junk) state version committed,
+    // its IVF append renamed into place as version 1 but never marked
+    Similarity.knnState(spark, knn).publish(1L, Some(0L), vacuum = false) {
+      tmp => Similarity.knnGraph(df(b1), "vec_id", "embedding", "label", 1)
+        .write.parquet(tmp.toString)
+    }
+    df(b1).write.partitionBy("label").parquet(s"$ivf/index_version=1")
+    // the real replay must sweep the crashed versions and reproduce the
     // clean result — including the IVF append this time
     EdgeStream.knnBatch(df(b1), 1L, "vec_id", "embedding", "label",
       1, ivf, knn)
     assert(stateEdges() == batchEdges(b0 ++ b1))
-    assert(spark.read.parquet(ivf).count() == 5)
+    assert(graft.IndexStore(spark, ivf).read().count() == 5)
 
     // a COMMITTED replay is a no-op even with junk content
     EdgeStream.knnBatch(df(Seq((99L, Seq(1f, 1f, 1f), 0))), 1L,
@@ -951,7 +951,7 @@ class EdgeStreamSpec extends SparkSpec {
     deliver(batch1, 1L)
     assert(sunk.toList == List(0L -> Set(0L, 2L, 3L, 5L), 1L -> Set(11L)))
 
-    def indexIds(): Set[Long] = spark.read.parquet(indexDir)
+    def indexIds(): Set[Long] = graft.IndexStore(spark, indexDir).read()
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(indexIds() == Set(0L, 2L, 3L, 5L, 11L))
 
@@ -966,10 +966,12 @@ class EdgeStreamSpec extends SparkSpec {
     deliver(batch1, 1L)
     assert(sunk.size == 2 && indexIds() == Set(0L, 2L, 3L, 5L, 11L))
 
-    // crash-window replay (marker lost after publish): begin() strips the
-    // batch's own cell appends before probing, so its rows never see
-    // themselves as history — final state identical
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_applied/b1")
+    // crash-window replay (the batch's version written, its marker
+    // lost): the unmarked cell append stays out of the probe, so its rows
+    // never see themselves as history, and the re-append sweeps it —
+    // final state identical
+    val marker = new org.apache.hadoop.fs.Path(
+      s"$indexDir/_commits/index_version=1")
     marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(marker, false)
     deliver(batch1, 1L)
