@@ -23,7 +23,14 @@ import org.apache.spark.sql.types.StructType
   * The latest marker is the whole state. It names `base`, the latest
   * full build (a reader sees it and every append committed after it);
   * per part, its build parameters and the versions holding its files;
-  * and `keys`, the batch ids whose appends are visible.
+  * `keys`, the batch ids whose appends are visible; and `id`, a random
+  * id drawn at publish.
+  *
+  * A [[snapshot]] reads that state once: its probes and its append all
+  * see the same versions, and its [[IndexStore.Snapshot.token]] (the
+  * version plus the publish id) names the state. The version alone
+  * does not: a store deleted and rebuilt at the same path counts from
+  * 0 again with the same marker body.
   *
   *  - A probe ([[probe]]) and an append check the parameters they use
   *    against the store's: a mismatch fails loudly instead of silently
@@ -86,6 +93,9 @@ final class IndexStore private (spark: SparkSession, val root: String,
     state.get
   }
 
+  /** one read of the latest committed state (see the class doc) */
+  def snapshot(): Snapshot = new Snapshot(this, current())
+
   /** true when no version is committed (a streaming face's first batch) */
   def isEmpty: Boolean = current().isEmpty
 
@@ -129,7 +139,7 @@ final class IndexStore private (spark: SparkSession, val root: String,
     */
   def build(parts: Seq[Part], key: Option[Long] = None)(
       write: (String => String) => Unit): Unit =
-    publish(parts, key, full = true)(write)
+    publish(current(), parts, key, full = true)(write)
 
   /** Append a version holding `parts`, visible together with the
     * current ones (on an empty store it is the base). Each part's
@@ -137,21 +147,23 @@ final class IndexStore private (spark: SparkSession, val root: String,
     */
   def append(parts: Seq[Part], key: Option[Long] = None)(
       write: (String => String) => Unit): Unit =
-    publish(parts, key, full = false)(write)
+    snapshot().append(parts, key)(write)
 
-  private def publish(parts: Seq[Part], key: Option[Long], full: Boolean)(
+  /** publish the version after `state`, which must still be the latest */
+  private def publish(state: Option[State], parts: Seq[Part],
+      key: Option[Long], full: Boolean)(
       write: (String => String) => Unit): Unit = {
-    val state = current()
     sweep(state)
     if (key.exists(k => state.exists(_.keys.contains(k)))) return
-    val v = versions.next(None)
+    val v = state.fold(0L)(_.v + 1)
+    val id = Some(java.util.UUID.randomUUID().toString)
     val next = state match {
       case Some(s) if !full =>
         parts.foreach(check(s, _))
         s.copy(v = v, keys = s.keys ++ key, parts = s.parts ++ parts.map {
-          p => p.name -> s.parts(p.name).add(v) })
+          p => p.name -> s.parts(p.name).add(v) }, id = id)
       case _ => State(v, v, key.toSeq, parts.map(p =>
-        p.name -> PartState(render(p.params), Seq(v))).toMap)
+        p.name -> PartState(render(p.params), Seq(v))).toMap, id)
     }
     versions.publish(v, state.map(_.v), vacuum = full, body = next.render)(
       d => write(partDir(d.toString, _)))
@@ -168,22 +180,26 @@ final class IndexStore private (spark: SparkSession, val root: String,
       .drop(VersionCol, PartCol)
   }
 
-  /** A probe's read of `part`, with `params` checked against the
-    * store's; `schema` (DDL) when given. An empty store fails, or —
-    * opened with [[IndexStore.streaming]] — reads `empty`, by default
-    * an empty frame of `schema`.
+  /** A probe's read of `part` in the latest state, with `params`
+    * checked against the store's; `schema` (DDL) when given. An empty
+    * store fails, or — opened with [[IndexStore.streaming]] — reads
+    * `empty`, by default an empty frame of `schema`.
     */
   def probe(part: String, params: Seq[(String, String)],
       schema: String = null, empty: => DataFrame = null): DataFrame =
-    current() match {
-      case Some(state) =>
-        check(state, Part(part, params))
-        rows(state, part, schema)
-      case None =>
-        require(absentIsEmpty, s"no committed index at $root")
-        Option(empty).getOrElse(spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), StructType.fromDDL(schema)))
-    }
+    snapshot().probe(part, params, schema, empty)
+
+  private def probe(state: Option[State], part: String,
+      params: Seq[(String, String)], schema: String,
+      empty: => DataFrame): DataFrame = state match {
+    case Some(s) =>
+      check(s, Part(part, params))
+      rows(s, part, schema)
+    case None =>
+      require(absentIsEmpty, s"no committed index at $root")
+      Option(empty).getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), StructType.fromDDL(schema)))
+  }
 
   /** the committed rows of `part`, unchecked — for inspection */
   def read(part: String = ""): DataFrame = rows(committed(), part, null)
@@ -203,18 +219,40 @@ object IndexStore {
   /** a named part of a version and its build parameters */
   final case class Part(name: String, params: Seq[(String, String)])
 
-  /** one part of a store: where a probe reads an index */
-  final case class Ref(store: IndexStore, part: String = "") {
+  /** One read of a store's latest committed state: every probe and the
+    * append made through it see the same versions. */
+  final class Snapshot private[IndexStore] (val store: IndexStore,
+      state: Option[State]) {
+    /** names the state: its version and publish id; None for an empty
+      * store or a marker written without an id */
+    val token: Option[String] =
+      state.flatMap(s => s.id.map(id => s"${s.v}:$id"))
+
+    /** [[IndexStore.probe]] on this state */
+    def probe(part: String, params: Seq[(String, String)],
+        schema: String = null, empty: => DataFrame = null): DataFrame =
+      store.probe(state, part, params, schema, empty)
+
+    /** [[IndexStore.append]] on this state: it fails at the version
+      * guard if another version was committed since the read */
+    def append(parts: Seq[Part], key: Option[Long] = None)(
+        write: (String => String) => Unit): Unit =
+      store.publish(state, parts, key, full = false)(write)
+  }
+
+  /** one part of a store snapshot: where a probe reads an index */
+  final case class Ref(snapshot: Snapshot, part: String = "") {
     def probe(params: Seq[(String, String)], schema: String = null,
         empty: => DataFrame = null): DataFrame =
-      store.probe(part, params, schema, empty)
+      snapshot.probe(part, params, schema, empty)
   }
 
   def apply(spark: SparkSession, root: String): IndexStore =
     new IndexStore(spark, root, absentIsEmpty = false)
 
-  /** the single-part store at `root` */
-  def at(spark: SparkSession, root: String): Ref = Ref(apply(spark, root))
+  /** the single-part store at `root`, as it is now */
+  def at(spark: SparkSession, root: String): Ref =
+    Ref(apply(spark, root).snapshot())
 
   /** a streaming face's store: until its first commit, probes read it
     * as empty history */
@@ -235,11 +273,12 @@ object IndexStore {
   }
 
   /** the state a version's marker names (see the class doc): lines
-    * `base=<v>`, `keys=<ids>` and `part<TAB>name<TAB>versions<TAB>params` */
+    * `base=<v>`, `keys=<ids>`, `id=<publish id>` and
+    * `part<TAB>name<TAB>versions<TAB>params` */
   private final case class State(v: Long, base: Long, keys: Seq[Long],
-      parts: Map[String, PartState]) {
+      parts: Map[String, PartState], id: Option[String]) {
     def render: String = (Seq(s"base=$base", s"keys=${keys.mkString(",")}") ++
-      parts.toSeq.sortBy(_._1).map { case (n, p) =>
+      id.map(i => s"id=$i") ++ parts.toSeq.sortBy(_._1).map { case (n, p) =>
         Seq("part", n, p.versions.mkString(","), p.params).mkString("\t")
       }).mkString("\n")
   }
@@ -258,7 +297,7 @@ object IndexStore {
         lines.filter(_.startsWith("part\t")).map { l =>
           val Array(_, n, vs, p) = l.split("\t", 4)
           n -> PartState(p, longs(vs))
-        }.toMap)
+        }.toMap, field("id"))
     }
   }
 }

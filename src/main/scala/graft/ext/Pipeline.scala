@@ -3,8 +3,14 @@ package graft.ext
 import graft.IndexStore
 import graft.Stage.StageOps
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end corpus curation — the composition the individual operators
   * exist for: quality-gate → exact dedup → near-dedup → annotate. Each
@@ -140,57 +146,61 @@ object Pipeline {
   def curateV2WriteIndexes(docs: DataFrame, textCol: String, idCol: String,
       dir: String, k: Int = 8, minCleanTokens: Int = 10): Unit =
     IndexStore(docs.sparkSession, dir).build(curationParts(k)) { at =>
-      val gated = docs.filter(TextFunctions.gopherKeep(col(textCol)))
-      // the window index derives from the GATED RAW text and nothing
-      // downstream of it — overlap its build with the span-clean chain
-      // (guide §2.6: independent actions submitted concurrently
-      // back-fill each other's stragglers; job descriptions are
-      // thread-local, so the overlap never mislabels the enclosing
-      // query's jobs)
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val windowsF = Future {
-        SubstringDedup.windowRows(gated, textCol, idCol, k)
-          .write.parquet(at("windows"))
+      joined { fork =>
+        val gated = docs.filter(TextFunctions.gopherKeep(col(textCol)))
+        // the window index derives from the GATED RAW text and nothing
+        // downstream of it — overlap its build with the span-clean chain
+        fork(SubstringDedup.windowRows(gated, textCol, idCol, k)
+          .write.parquet(at("windows")))
+        val cleaned = SubstringDedup.cleanedText(gated, textCol, idCol, k)
+          .filter(TextFunctions.tokenCount(col("cleaned")) >= minCleanTokens)
+          .stageBoundary
+        // the fingerprint index reads only the MATERIALIZED boundary, as
+        // does the exact_docs chain — two more independent writes
+        fork(Dedup.fingerprintRows(cleaned, "cleaned")
+          .write.parquet(at("fingerprints")))
+        val keepers = cleaned
+          .groupBy(TextFunctions.fingerprint(col("cleaned")).as("__fp"))
+          .agg(min(col(idCol)).as(idCol))
+          .select(idCol)
+        // the exact survivors feed BOTH remaining indexes — materialize
+        // them once, then the exact_docs write and the band build are
+        // independent actions over the same checkpointed rows
+        val exact = cleaned.join(keepers, Seq(idCol), "left_semi")
+          .select(col(idCol), col("cleaned"))
+          .stageBoundary
+        fork(exact.write.parquet(at("exact_docs")))
+        Dedup.writeBands(exact, "cleaned", idCol, at("bands"), CurationN,
+          CurationPerms, CurationBands)
       }
-      val cleaned = SubstringDedup.cleanedText(gated, textCol, idCol, k)
-        .filter(TextFunctions.tokenCount(col("cleaned")) >= minCleanTokens)
-        .stageBoundary
-      // the fingerprint index reads only the MATERIALIZED boundary, as
-      // does the exact_docs chain — two more independent actions, same
-      // §2.6 overlap as the window index above
-      val fpF = Future {
-        Dedup.fingerprintRows(cleaned, "cleaned")
-          .write.parquet(at("fingerprints"))
-      }
-      val keepers = cleaned
-        .groupBy(TextFunctions.fingerprint(col("cleaned")).as("__fp"))
-        .agg(min(col(idCol)).as(idCol))
-        .select(idCol)
-      // the exact survivors feed BOTH remaining indexes — materialize
-      // them once, then the exact_docs write and the band build are
-      // independent actions over the same checkpointed rows (the band
-      // index no longer waits for, or re-reads, the parquet)
-      val exact = cleaned.join(keepers, Seq(idCol), "left_semi")
-        .select(col(idCol), col("cleaned"))
-        .stageBoundary
-      val exactF = Future { exact.write.parquet(at("exact_docs")) }
-      // every concurrent write is JOINED before the version publishes,
-      // even when the inline band build throws (r15 ADVICE: a detached
-      // write could leave the index family partially written with its
-      // failure swallowed and nothing naming which index broke). The
-      // first failure — band build or any future — is the one surfaced.
-      var primary: Throwable = null
-      try Dedup.writeBands(exact, "cleaned", idCol, at("bands"), CurationN,
-        CurationPerms, CurationBands)
-      catch { case t: Throwable => primary = t }
-      Seq(windowsF, fpF, exactF).foreach { f =>
-        try Await.result(f, Duration.Inf)
-        catch { case t: Throwable => if (primary == null) primary = t }
-      }
-      if (primary != null) throw primary
     }
+
+  /** Run `body`, which may submit independent writes through `fork`
+    * (independent actions submitted concurrently back-fill each other's
+    * stragglers). Every forked write is JOINED before this
+    * returns, even when `body` or another write throws, so a version
+    * never publishes over a write still running, and a failure is never
+    * swallowed by a detached write: the first one — `body`'s or any
+    * fork's — is the one surfaced.
+    */
+  private def joined(body: Fork => Unit): Unit = {
+    val fork = new Fork
+    var primary: Throwable = null
+    try body(fork)
+    catch { case t: Throwable => primary = t }
+    fork.started.foreach { f =>
+      try Await.result(f, Duration.Inf)
+      catch { case t: Throwable => if (primary == null) primary = t }
+    }
+    if (primary != null) throw primary
+  }
+
+  /** starts the concurrent writes of one [[joined]] block */
+  private final class Fork {
+    val started = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+    def apply(write: => Unit): Unit =
+      started += Future(write)(ExecutionContext.global)
+  }
 
   // the curation family's MinHash banding (the band index defaults)
   private val CurationN = 3
@@ -211,7 +221,8 @@ object Pipeline {
     * index family: result rows are exactly the increment's rows of the
     * batch `curateV2` over history ∪ increment — without re-reading
     * history text anywhere except for the LSH candidates' verification
-    * (a semi-join on candidate ids against `exact_docs`).
+    * (a semi-join on candidate ids against `exact_docs`). Every probe
+    * reads one [[graft.IndexStore.Snapshot]] of the family.
     *
     * Stage ledger: gate (map) → span-clean vs the window index (one
     * 8-byte-key join) → exact vs the fingerprint index (one 16-byte-key
@@ -234,16 +245,19 @@ object Pipeline {
       k: Int, minJaccard: Double, decontamN: Int, decontamMinHits: Int,
       minCleanTokens: Int): DataFrame = {
     val spark = newDocs.sparkSession
+    val snap = family.snapshot()
     val (cleaned, exact) =
-      probeCleanExact(newDocs, textCol, idCol, family, k, minCleanTokens)
+      probeCleanExact(newDocs, textCol, idCol, snap, k, minCleanTokens)
     // larger-id greedy drop (the batch contract's pairs.id_b), resolved
     // at rep granularity — doomed history ids were no-ops in the
     // anti-join, so the increment-only doomed set is the same filter
     val survivors = exact.select(col(idCol), col("cleaned"))
+    // exact_docs holds survivors' rows: read it with their schema, not
+    // an inferring job
+    val exactDocs = snap.probe(ExactDocs.name, ExactDocs.params,
+      StructType(survivors.schema.map(_.copy(nullable = true))).toDDL)
     val doomed = Dedup.minhashLshDoomedIncremental(spark, survivors,
-      family.probe(ExactDocs.name, ExactDocs.params,
-        empty = survivors.limit(0)),
-      IndexStore.Ref(family, "bands"), "cleaned", idCol, CurationN,
+      exactDocs, IndexStore.Ref(snap, "bands"), "cleaned", idCol, CurationN,
       minJaccard, CurationPerms, CurationBands, historyWins = false)
     val nearDeduped = exact.join(doomed, Seq(idCol), "left_anti")
       .stageBoundary
@@ -259,22 +273,65 @@ object Pipeline {
       .withColumn("quality", TextFunctions.qualityScore(col("cleaned")))
   }
 
-  /** the gated increment span-cleaned against the window index, and its
-    * rows that survive exact dedup against the fingerprint index */
+  /** The gated increment span-cleaned against the window index, and its
+    * rows that survive exact dedup against the fingerprint index: two
+    * materialized boundaries, shared by [[curateV2Incremental]] and the
+    * [[curateV2AppendIndexes]] that folds the same increment in.
+    *
+    * Reuse rule: the last probe of each store is remembered, keyed on
+    * the snapshot's token, the increment's plan and the probe's
+    * arguments, and a probe with an equal key returns it instead of
+    * probing again. Only a snapshot with a token and an increment whose
+    * every plan leaf is in memory (`LocalRelation`, `LogicalRDD`) are
+    * remembered: a file-backed increment can read different rows later.
+    * The entry is dropped when the append that used it publishes, or
+    * replaced by the next remembered probe of the store; a newer token
+    * drops it. Entries are only dropped, never unpersisted: the
+    * boundaries live no longer than their plans.
+    */
   private def probeCleanExact(newDocs: DataFrame, textCol: String,
-      idCol: String, family: IndexStore, k: Int,
+      idCol: String, snap: IndexStore.Snapshot, k: Int,
       minCleanTokens: Int): (DataFrame, DataFrame) = {
-    val gated = newDocs.filter(TextFunctions.gopherKeep(col(textCol)))
-    val cleaned = SubstringDedup
-      .cleanedTextIncremental(gated, IndexStore.Ref(family, "windows"),
-        textCol, idCol, k)
-      .filter(TextFunctions.tokenCount(col("cleaned")) >= minCleanTokens)
-      .stageBoundary
-    val exact = Dedup.exactDedupIncremental(
-      cleaned, IndexStore.Ref(family, "fingerprints"), "cleaned", idCol)
-      .stageBoundary
-    (cleaned, exact)
+    val root = snap.store.root
+    val key = snap.token.filter(_ => inMemory(newDocs)).map(t =>
+      ProbeKey(t, newDocs.queryExecution.analyzed.canonicalized, textCol,
+        idCol, k, minCleanTokens))
+    Option(probes.get(root)).filter(p => key.contains(p.key)) match {
+      case Some(p) => (p.cleaned, p.exact)
+      case None =>
+        val gated = newDocs.filter(TextFunctions.gopherKeep(col(textCol)))
+        val cleaned = SubstringDedup
+          .cleanedTextIncremental(gated, IndexStore.Ref(snap, "windows"),
+            textCol, idCol, k)
+          .filter(TextFunctions.tokenCount(col("cleaned")) >= minCleanTokens)
+          .stageBoundary
+        val exact = Dedup.exactDedupIncremental(
+          cleaned, IndexStore.Ref(snap, "fingerprints"), "cleaned", idCol)
+          .stageBoundary
+        key match {
+          case Some(pk) => probes.put(root, Probe(pk, cleaned, exact))
+          case None => probes.computeIfPresent(root, (_, p) =>
+            if (snap.token.contains(p.key.token)) p else null)
+        }
+        (cleaned, exact)
+    }
   }
+
+  private final case class ProbeKey(token: String, plan: LogicalPlan,
+      textCol: String, idCol: String, k: Int, minCleanTokens: Int)
+
+  private final case class Probe(key: ProbeKey, cleaned: DataFrame,
+      exact: DataFrame)
+
+  /** the last remembered probe per store root */
+  private val probes =
+    new java.util.concurrent.ConcurrentHashMap[String, Probe]()
+
+  private def inMemory(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case _: LocalRelation | _: LogicalRDD => true
+      case _ => false
+    }
 
   /** Fold a processed increment into the index family so the NEXT
     * increment dedups against history ∪ this one — the index-maintenance
@@ -282,7 +339,15 @@ object Pipeline {
     * appended [[graft.IndexStore]] version (duplicate fingerprints/
     * windows are harmless to the semi/anti-join probes), so a probe
     * sees the whole increment or none of it, and a failed append
-    * leaves nothing a retry must clean up by hand.
+    * leaves nothing a retry must clean up by hand. The four parts are
+    * written concurrently.
+    *
+    * The parts derive from the increment probed against the family
+    * BEFORE the append: an increment must never see its own windows or
+    * fingerprints as history. When a [[curateV2Incremental]] of the same
+    * increment just probed the same store state, that probe is reused
+    * (the rule is at `probeCleanExact`); otherwise the append probes
+    * the state it appends to.
     */
   def curateV2AppendIndexes(newDocs: DataFrame, textCol: String,
       idCol: String, dir: String, k: Int = 8,
@@ -295,22 +360,23 @@ object Pipeline {
   private[graft] def curateV2AppendIndexes(newDocs: DataFrame,
       textCol: String, idCol: String, family: IndexStore, k: Int,
       minCleanTokens: Int, key: Option[Long]): Unit = {
-    // probe the PRE-append indexes first (stage boundaries are eager, so
-    // `cleaned`/`exact` materialize before the append below — an
-    // increment must never see its own windows/fingerprints as history)
+    val snap = family.snapshot()
     val (cleaned, exact) =
-      probeCleanExact(newDocs, textCol, idCol, family, k, minCleanTokens)
+      probeCleanExact(newDocs, textCol, idCol, snap, k, minCleanTokens)
     val survivors = exact.select(col(idCol), col("cleaned"))
-    family.append(curationParts(k), key) { at =>
-      SubstringDedup.windowRows(
-        newDocs.filter(TextFunctions.gopherKeep(col(textCol))),
-        textCol, idCol, k).write.parquet(at("windows"))
-      Dedup.fingerprintRows(cleaned, "cleaned")
-        .write.parquet(at("fingerprints"))
-      survivors.write.parquet(at("exact_docs"))
-      Dedup.writeBands(survivors, "cleaned", idCol, at("bands"), CurationN,
-        CurationPerms, CurationBands)
+    snap.append(curationParts(k), key) { at =>
+      joined { fork =>
+        fork(SubstringDedup.windowRows(
+          newDocs.filter(TextFunctions.gopherKeep(col(textCol))),
+          textCol, idCol, k).write.parquet(at("windows")))
+        fork(Dedup.fingerprintRows(cleaned, "cleaned")
+          .write.parquet(at("fingerprints")))
+        fork(survivors.write.parquet(at("exact_docs")))
+        Dedup.writeBands(survivors, "cleaned", idCol, at("bands"),
+          CurationN, CurationPerms, CurationBands)
+      }
     }
+    probes.remove(family.root)
   }
 
   /** Leakage-safe train/validation/test split: every member of a

@@ -476,10 +476,7 @@ object CurationQueries {
          |FROM tok, tot GROUP BY w, t HAVING COUNT(*) > t * 0.002
          |ORDER BY cnt DESC, token""".stripMargin) { (s, d) =>
       val docs = Tables.load(s, d, "documents")
-      val stateDir = s"${System.getProperty("java.io.tmpdir")}/graft_hh_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val p = new org.apache.hadoop.fs.Path(stateDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val stateDir = graft.QueryDef.scratchDir("graft_hh")
       TextFunctions.heavyHittersUpdateState(
         docs.filter(col("doc_id") < 250), "text", stateDir)
       TextFunctions.heavyHittersUpdateState(
@@ -722,10 +719,7 @@ object CurationQueries {
             concat(lit("SUBSCRIBE NOW\n"), col("text"),
               lit("\nCOOKIE NOTICE")))
             .otherwise(col("text")).as("txt"))
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_bp_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val dir = graft.QueryDef.scratchDir("graft_bp")
       TextFunctions.boilerplateUpdateState(
         injected.filter(col("doc_id") < 250), "txt", dir)
       TextFunctions.boilerplateUpdateState(
@@ -784,8 +778,7 @@ object CurationQueries {
          |       CAST(SUM(len($SqlTokens)) AS BIGINT) AS tok_sum
          |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val docs = Tables.load(s, d, "documents")
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val dir = graft.QueryDef.scratchDir("graft_jsonl")
       CorpusSink.writeJsonl(docs, dir)
       val (good, bad) = CorpusSink.readJsonl(s, dir, docs.schema)
       require(bad.isEmpty, "self-written JSONL must have no corrupt lines")
@@ -806,8 +799,7 @@ object CurationQueries {
          |       CAST(SUM(len($SqlTokens)) AS BIGINT) AS tok_sum
          |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val docs = Tables.load(s, d, "documents")
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_orc_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val dir = graft.QueryDef.scratchDir("graft_orc")
       CorpusSink.writeOrc(docs, dir, sortCol = Some("doc_id"))
       CorpusSink.readOrc(s, dir, docs.schema)
         .groupBy("source")
@@ -1072,8 +1064,7 @@ object CurationQueries {
         |       CAST(SUM(n_chars) AS BIGINT) AS chars
         |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val docs = Tables.load(s, d, "documents")
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val dir = graft.QueryDef.scratchDir("graft_zorder")
       CorpusSink.writeZOrdered(docs, dir, Seq("n_chars", "doc_id"),
         bits = 6, maxRecordsPerFile = 100)
       s.read.parquet(dir)
@@ -1092,10 +1083,7 @@ object CurationQueries {
         |       CAST(SUM(n_chars) AS BIGINT) AS chars
         |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val docs = Tables.load(s, d, "documents")
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_cstore_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val root = graft.QueryDef.scratchDir("graft_cstore")
       ClusteredStore.create(s, root, docs.filter(col("doc_id") < 200),
         Seq("n_chars", "doc_id"), bits = 6, maxRecordsPerFile = 100)
       ClusteredStore.append(s, root,

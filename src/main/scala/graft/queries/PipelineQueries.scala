@@ -1612,11 +1612,8 @@ object PipelineQueries {
         |SELECT qid, nid, ROUND(cs, 4) AS cs, CAST(rn AS INTEGER) AS rn
         |FROM r WHERE rn <= 3 ORDER BY qid, rn""".stripMargin) { (s, d) =>
       val emb = Tables.load(s, d, "embeddings")
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_knn_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val base = graft.QueryDef.scratchDir("graft_knn")
       val (ivfDir, knnDir) = (s"$base/ivf", s"$base/knn")
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       Similarity.knnGraphInit(emb.filter(col("vec_id") < 300),
         "vec_id", "embedding", "label", k = 3, ivfDir, knnDir)
       Similarity.knnGraphIncrement(

@@ -198,7 +198,7 @@ object EdgeStream {
     // granularity: a batch of m copies of a hot history page never
     // materializes its m×|history matches| member pairs
     val doomed = graft.ext.Dedup.minhashLshDoomedIncremental(spark, batch,
-      corpus, IndexStore.Ref(index), textCol, idCol, n, minJaccard,
+      corpus, IndexStore.Ref(index.snapshot()), textCol, idCol, n, minJaccard,
       numPerms, bands, historyWins = true)
       .stageBoundary
     val kept = batch.join(doomed, Seq(idCol), "left_anti")

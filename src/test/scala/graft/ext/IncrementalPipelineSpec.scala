@@ -1,8 +1,11 @@
 package graft.ext
 
-import graft.SparkSpec
+import graft.{IndexStore, SparkSpec}
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.hashing.MurmurHash3
 
 /** End-to-end incremental curation: `curateV2Incremental` over the
   * persisted index family must equal the batch `curateV2` over
@@ -15,6 +18,11 @@ import org.apache.spark.sql.functions._
   * cross-split; with k=8 the span stage dominates (long duplicated
   * chunks are removed before the later dedups see them — the
   * composition's real behavior on copy-heavy corpora).
+  *
+  * The append reuses the probe of a `curateV2Incremental` that just ran
+  * on the same increment and store state; the reuse specs below pin
+  * that its result equals a fresh probe's and that any change of the
+  * store state between the two calls forces a fresh probe.
   */
 class IncrementalPipelineSpec extends SparkSpec {
 
@@ -121,5 +129,153 @@ class IncrementalPipelineSpec extends SparkSpec {
     assert(!r2.contains(57L),
       "a copy of an inc1 doc is span-removed via the appended window index")
     assert(r2.contains(46L))
+  }
+
+  // ---- probe reuse between curateV2Incremental and the append ----
+
+  private val parts = Seq("windows", "fingerprints", "exact_docs", "bands")
+
+  private def rowsHash(df: DataFrame): Int =
+    MurmurHash3.unorderedHash(df.collect().map(_.toString).toSeq)
+
+  /** row hash of each part of the family at `dir` */
+  private def storeRows(dir: String): Seq[Int] =
+    parts.map(p => rowsHash(IndexStore(spark, dir).read(p)))
+
+  private def tempDir(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** the increment as parquet read back: a file-backed plan, never reused */
+  private def fromFiles(df: DataFrame): DataFrame = {
+    val p = tempDir("curate-inc") + "/inc"
+    df.write.parquet(p)
+    spark.read.parquet(p)
+  }
+
+  /** the short call sites (the final stage's name) of the jobs `f` runs */
+  private def jobs(f: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { f; ListenerDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  private def probes(sites: Seq[String]) =
+    sites.count(_.startsWith("localCheckpoint at"))
+
+  private val history = (1L to 29L).map(i => i -> body(i.toInt))
+
+  test("a reused probe appends the same rows and curates the next " +
+    "increment the same as a fresh probe") {
+    val inc1 = (31L to 36L).map(i => i -> body(i.toInt)) ++ Seq(
+      37L -> body(5), // exact copy of history
+      38L -> (body(7) + " " + (0 until 14).map(j => s"tail38x$j the of")
+        .mkString(" ")), // a copied chunk plus its own tail
+      39L -> body(39), 40L -> body(39)) // within-increment pair
+    val inc2 = Seq(46L -> body(46), 47L -> body(31), 48L -> body(39))
+    for (k <- Seq(8, 60)) {
+      def run(fileBacked: Boolean): (Seq[Int], Map[Long, Any], Int) = {
+        val dir = tempDir("curate-reuse")
+        Pipeline.curateV2WriteIndexes(mkDocs(history), "text", "doc_id",
+          dir, k = k, minCleanTokens = 5)
+        val inc = if (fileBacked) fromFiles(mkDocs(inc1)) else mkDocs(inc1)
+        Pipeline.curateV2Incremental(inc, bench, "text", "doc_id", dir,
+          k = k, minCleanTokens = 5).collect()
+        val append = jobs(Pipeline.curateV2AppendIndexes(inc, "text",
+          "doc_id", dir, k = k, minCleanTokens = 5))
+        (storeRows(dir), curatedCols(Pipeline.curateV2Incremental(
+          mkDocs(inc2), bench, "text", "doc_id", dir, k = k,
+          minCleanTokens = 5)), probes(append))
+      }
+      val (memRows, memNext, memProbes) = run(fileBacked = false)
+      val (fileRows, fileNext, fileProbes) = run(fileBacked = true)
+      assert(memProbes == 0, s"k=$k: the in-memory append must reuse the probe")
+      assert(fileProbes > 0, s"k=$k: the file-backed append must probe")
+      assert(memRows == fileRows, s"k=$k: appended store rows differ")
+      assert(memNext == fileNext, s"k=$k: next increment's output differs")
+      assert(!memNext.contains(47L) && !memNext.contains(48L),
+        s"k=$k: copies of appended docs must drop")
+    }
+  }
+
+  /** ids in the family's exact_docs part */
+  private def exactIds(dir: String): Set[Long] =
+    IndexStore(spark, dir).read("exact_docs").select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+
+  private def markerVersions(dir: String): Seq[String] =
+    Option(new java.io.File(s"$dir/_commits").list()).toSeq.flatten.sorted
+
+  test("a store deleted and rebuilt at the same path between the two " +
+    "calls is probed again: the append reflects the new history") {
+    val dir = tempDir("curate-rebuilt")
+    Pipeline.curateV2WriteIndexes(mkDocs(history), "text", "doc_id", dir,
+      k = 60, minCleanTokens = 5)
+    val before = markerVersions(dir)
+    // doc 40 copies history doc 5 — a duplicate in the old history only
+    val inc = mkDocs(Seq(40L -> body(5), 41L -> body(41)))
+    val r = curatedCols(Pipeline.curateV2Incremental(inc, bench, "text",
+      "doc_id", dir, k = 60, minCleanTokens = 5))
+    assert(!r.contains(40L) && r.contains(41L))
+    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    Pipeline.curateV2WriteIndexes(
+      mkDocs(history.map { case (i, t) => i -> (if (i == 5) body(105) else t) }),
+      "text", "doc_id", dir, k = 60, minCleanTokens = 5)
+    // the same version number: a key on it alone would reuse the probe
+    assert(markerVersions(dir) == before)
+    Pipeline.curateV2AppendIndexes(inc, "text", "doc_id", dir, k = 60,
+      minCleanTokens = 5)
+    assert(exactIds(dir) == (1L to 29L).toSet ++ Set(40L, 41L),
+      "doc 40 survives exact dedup against the rebuilt history")
+  }
+
+  test("another writer's append between the two calls prevents reuse") {
+    val dir = tempDir("curate-raced")
+    Pipeline.curateV2WriteIndexes(mkDocs(history), "text", "doc_id", dir,
+      k = 60, minCleanTokens = 5)
+    // doc 42 copies doc 30, which the other writer appends in between
+    val inc = mkDocs(Seq(41L -> body(41), 42L -> body(30)))
+    val r = curatedCols(Pipeline.curateV2Incremental(inc, bench, "text",
+      "doc_id", dir, k = 60, minCleanTokens = 5))
+    assert(r.contains(41L) && r.contains(42L))
+    // the other writer names the store by another path, as another
+    // process would: only the store state tells the two calls apart
+    Pipeline.curateV2AppendIndexes(mkDocs(Seq(30L -> body(30))), "text",
+      "doc_id", s"file:$dir", k = 60, minCleanTokens = 5)
+    val append = jobs(Pipeline.curateV2AppendIndexes(inc, "text", "doc_id",
+      dir, k = 60, minCleanTokens = 5))
+    assert(probes(append) > 0, "the append must probe the newer state")
+    assert(exactIds(dir) == (1L to 30L).toSet + 41L,
+      "doc 42 is an exact copy of the appended doc 30")
+  }
+
+  // CI tripwire: the job count of one curation increment. The pin is
+  // this increment's count with the append reusing the probe; move it
+  // only deliberately, with a note of what changed the count.
+  private val IncrementJobsPin = 43
+
+  test("one curation increment runs at most the pinned job count, and " +
+    "its append runs no probe boundary") {
+    val dir = tempDir("curate-jobs")
+    Pipeline.curateV2WriteIndexes(mkDocs(history), "text", "doc_id", dir,
+      k = 8, minCleanTokens = 5)
+    val inc = mkDocs((31L to 45L).map(i => i -> body(i.toInt)))
+    val curate = jobs(Pipeline.curateV2Incremental(inc, bench, "text",
+      "doc_id", dir, k = 8, minCleanTokens = 5).collect())
+    val append = jobs(Pipeline.curateV2AppendIndexes(inc, "text", "doc_id",
+      dir, k = 8, minCleanTokens = 5))
+    assert(probes(append) == 0,
+      s"the append ran probe boundaries: ${append.mkString(" | ")}")
+    val total = curate.size + append.size
+    info(s"increment: $total jobs (curate ${curate.size}, " +
+      s"append ${append.size})")
+    assert(total <= IncrementJobsPin, s"increment ran $total jobs, pin " +
+      s"$IncrementJobsPin: ${(curate ++ append).mkString(" | ")}")
   }
 }
