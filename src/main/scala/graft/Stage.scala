@@ -74,6 +74,11 @@ object Stage {
     * with the measured bytes (and keep everything else of the plan).
     * A boundary that really is big keeps honestly-big stats, so
     * genuinely useful runtime filters still inject at scale.
+    *
+    * An empty boundary has no partitions, so no block and no storage
+    * entry: it becomes an empty `LocalRelation` of the same output,
+    * which `PropagateEmptyRelation` prunes the joins over, instead of
+    * keeping its plan's estimate.
     */
   private def patchLocalStats(cp: DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.LogicalRDD
@@ -90,10 +95,28 @@ object Stage {
               LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
                 lr.outputOrdering, lr.isStreaming, lr.stream)(session,
                 Some(Statistics(sizeInBytes = bytes)), None))
+          case None if lr.rdd.partitions.isEmpty =>
+            org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(session,
+              org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+                lr.output))
           case None => cp
         }
       case _ => cp
     }
+  }
+
+  /** Run `f` with `what` as the description of every Spark job it
+    * starts, then restore the caller's. AQE stage jobs inherit it, so a
+    * job listener can attribute a step's jobs by it.
+    */
+  private[graft] def described[A](spark: org.apache.spark.sql.SparkSession, what: String)(
+      f: => A): A = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, what)
+    try f
+    finally sc.setLocalProperty(key, prev)
   }
 
   /** heartbeat marker inside a run namespace: FILE mtimes are reliable

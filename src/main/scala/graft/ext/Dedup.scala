@@ -4,7 +4,7 @@ import graft.IndexStore
 import graft.Stage.StageOps
 
 import graft.functions.SimHash64
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -889,19 +889,25 @@ object Dedup {
     * hashes — and therefore persisted band indexes — unchanged.
     */
   private def bandRowsFp(df: DataFrame, textCol: String, idCol: String,
-      n: Int, numPerms: Int, bands: Int): DataFrame = {
-    require(numPerms % bands == 0, "numPerms must divide into bands")
-    val rows = numPerms / bands
-    df.select(col(idCol).as("id"),
-      array_sort(hashedShingles(col(textCol), n)).as("shs"))
+      n: Int, numPerms: Int, bands: Int): DataFrame =
+    df.select(col(idCol).as("id"), sortedShingles(col(textCol), n).as("shs"))
       .filter(size(col("shs")) > 0)
       .withColumn("fp", Collapse.arrayKey(col("shs")))
       .withColumn("sig", graft.functions.MinHashSig(col("shs"), numPerms))
       .select(col("id"), col("fp"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(concat_ws(",",
-            slice(col("sig"), b * rows + 1, lit(rows)))))))
+        posexplode(bandHashes(col("sig"), numPerms, bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandHash")
+
+  /** a doc's distinct shingle hashes, sorted: the banding's `shs` */
+  private def sortedShingles(text: Column, n: Int): Column =
+    array_sort(hashedShingles(text, n))
+
+  /** a MinHash signature's band hashes, band b at index b */
+  private def bandHashes(sig: Column, numPerms: Int, bands: Int): Column = {
+    require(numPerms % bands == 0, "numPerms must divide into bands")
+    val rows = numPerms / bands
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(concat_ws(",", slice(sig, b * rows + 1, lit(rows)))))
   }
 
   /** Incremental near-dedup: verified pairs between `newDocs` and the
@@ -963,6 +969,28 @@ object Dedup {
     *     test becomes min(history neighbor id) < member id. Doomed
     *     history ids are not emitted — consumers anti-join the batch,
     *     where they are no-ops.
+    *
+    * Two faces, one semantics:
+    *
+    *  - driver-local (the [[LocalGraph]] pattern): when the increment
+    *    holds at most [[LocalDedupLimit]] (id, text) rows and
+    *    [[LocalDedupBytes]] bytes and its ids are non-null longs, it is
+    *    collected once; shingles, fingerprints and band hashes come from
+    *    the batch banding's own Column expressions, folded on the driver
+    *    (no job, no generated code). The reps' band hashes then probe
+    *    the index in one job (replay prune kept), the candidate history
+    *    docs' text comes from `corpus` in one more (`id IN (…)`), and
+    *    the census, self candidates, exact-Jaccard verify and doomed
+    *    resolution run on the driver. The result is a `LocalRelation`.
+    *    Band matches, candidate pairs and candidate history docs are
+    *    each bounded by the same row limit, and the history text by the
+    *    byte limit; passing any bound falls back;
+    *  - distributed, past any bound: the plan below, with its census,
+    *    candidate and verify boundaries.
+    *
+    * Both faces keep the census's [[Collapse.DupCollapseCutoff]]
+    * routing and produce the same id set (spec-pinned local ≡
+    * forced-distributed on random increments).
     */
   def minhashLshDoomedIncremental(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, corpus: DataFrame, indexPath: String,
@@ -972,9 +1000,35 @@ object Dedup {
       historyWins: Boolean = true): DataFrame =
     minhashLshDoomedIncremental(spark, newDocs, corpus,
       IndexStore.at(spark, indexPath), textCol, idCol, n, minJaccard,
-      numPerms, bands, historyWins)
+      numPerms, bands, historyWins, LocalDedupLimit)
 
+  /** Row bound of the driver-local doomed face: the increment's rows,
+    * the index rows its reps' band hashes collect, its candidate pairs
+    * and its candidate history docs each stay at most this many. The
+    * probe carries the reps' band hashes as a literal set, at most
+    * 4096 × bands longs (512 KB at 16 bands). */
+  private[graft] val LocalDedupLimit: Int = 1 << 12
+
+  /** Byte bound of the driver-local doomed face, on the increment's
+    * collected rows and on the candidate history docs' collected text
+    * each: 64 MB, far under the driver heap. */
+  private[graft] val LocalDedupBytes: Long = 64L << 20
+
+  /** [[minhashLshDoomedIncremental]] on a store snapshot's part.
+    * `localLimit` bounds the local face's rows: [[LocalDedupLimit]], or 0
+    * to force the distributed plan (specs, and callers that already
+    * found the increment past the bound). */
   private[graft] def minhashLshDoomedIncremental(
+      spark: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
+      corpus: DataFrame, index: IndexStore.Ref, textCol: String,
+      idCol: String, n: Int, minJaccard: Double, numPerms: Int, bands: Int,
+      historyWins: Boolean, localLimit: Int): DataFrame =
+    lshDoomedLocal(spark, newDocs, corpus, index, textCol, idCol, n,
+      minJaccard, numPerms, bands, historyWins, localLimit)
+      .getOrElse(lshDoomedDistributed(spark, newDocs, corpus, index,
+        textCol, idCol, n, minJaccard, numPerms, bands, historyWins))
+
+  private def lshDoomedDistributed(
       spark: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
       corpus: DataFrame, index: IndexStore.Ref, textCol: String,
       idCol: String, n: Int, minJaccard: Double, numPerms: Int, bands: Int,
@@ -1008,6 +1062,185 @@ object Dedup {
       .distinct().select(col("id").as(idCol))
   }
 
+  /** a banded increment doc on the driver: its sorted distinct shingle
+    * hashes, their exact-set fingerprint and its band hashes (band b at
+    * index b) */
+  private final class LocalDoc(val id: Long, val shs: Array[Long],
+      val fp: (Long, Long), val bandHashes: Array[Long])
+
+  /** The driver-local face of [[minhashLshDoomedIncremental]], or None
+    * when a bound is passed (see the scaladoc there). Replays
+    * [[lshDoomedDistributed]] step by step: the banding with the same
+    * Column expressions, the census with the same cutoff, the probe and
+    * its replay prune as one plan, verification with the same
+    * arithmetic, the same doomed resolution.
+    */
+  private def lshDoomedLocal(spark: org.apache.spark.sql.SparkSession,
+      newDocs: DataFrame, corpus: DataFrame, index: IndexStore.Ref,
+      textCol: String, idCol: String, n: Int, minJaccard: Double,
+      numPerms: Int, bands: Int, historyWins: Boolean,
+      limit: Int): Option[DataFrame] = {
+    val docs = newDocs.select(col(idCol), col(textCol))
+    val idField = docs.schema.head
+    if (limit <= 0 || idField.dataType != LongType) return None
+    for {
+      rows <- LocalGraph.collectBounded(docs, limit, LocalDedupBytes)
+      // null or repeated ids: the distributed plan decides those
+      if !rows.exists(_.isNullAt(0)) &&
+        rows.iterator.map(_.getLong(0)).distinct.size == rows.length
+      banded = localBanding(spark, rows, docs.schema, n, numPerms, bands)
+      rep = localCensus(banded)
+      reps = banded.filter(d => rep(d.id) == d.id)
+      cross <- localCross(reps, banded, index, n, numPerms, bands, limit)
+      self <- localSelf(reps, limit - cross.length)
+      hist <- localHistory(spark, corpus, idCol, textCol, n,
+        cross.map(_._2).distinct, limit)
+    } yield {
+      val shs = banded.map(d => d.id -> d.shs).toMap
+      def verified(pairs: Seq[(Long, Long)], right: Map[Long, Array[Long]]) =
+        pairs.filter { case (a, b) =>
+          right.get(b).exists(jaccard(shs(a), _) >= minJaccard)
+        }
+      val crossPairs = verified(cross.toSeq, hist)
+      val selfPairs = verified(self, shs)
+      val members = banded.filter(d => rep(d.id) != d.id)
+      val histDoomed: Set[Long] =
+        if (historyWins) {
+          val hit = crossPairs.map(_._1).toSet
+          hit ++ members.filter(d => hit(rep(d.id))).map(_.id)
+        } else {
+          val hmin = crossPairs.groupMapReduce(_._1)(_._2)(math.min)
+          hmin.collect { case (r, h) if h < r => r }.toSet ++
+            members.filter(d => hmin.get(rep(d.id)).exists(_ < d.id))
+              .map(_.id)
+        }
+      val nonReps =
+        if (1.0 >= minJaccard) members.map(_.id).toSet else Set.empty[Long]
+      val doomed = (nonReps ++ histDoomed ++ selfPairs.map(_._2)).toSeq
+      LocalGraph.frame(spark, doomed.map(Row(_)),
+        StructType(Seq(idField)))
+    }
+  }
+
+  /** the reps' distinct (rep, history id) band matches against the
+    * index, pruned of replayed increment ids as in [[lshIncProbe]]. One
+    * job with no exchange or broadcast: the index rows whose band hash
+    * and id pass literal `IN` filters (at most `limit` rows) meet the
+    * reps' band buckets on the driver. */
+  private def localCross(reps: Seq[LocalDoc], banded: Seq[LocalDoc],
+      index: IndexStore.Ref, n: Int, numPerms: Int, bands: Int,
+      limit: Int): Option[Array[(Long, Long)]] =
+    if (reps.isEmpty) Some(Array.empty)
+    else {
+      val bucket = reps.flatMap(d => d.bandHashes.indices.map(b =>
+        (b, d.bandHashes(b)) -> d.id)).groupMap(_._1)(_._2)
+      val hits = index.probe(bandParams(n, numPerms, bands),
+          "id LONG, bandHash LONG, band INT")
+        .filter(col("bandHash").isin(bucket.keys.map(_._2).toSeq: _*) &&
+          !col("id").isin(banded.map(_.id): _*))
+        .select("band", "bandHash", "id")
+      LocalGraph.collectBounded(hits, limit).map(_.flatMap { r =>
+        bucket.getOrElse((r.getInt(0), r.getLong(1)), Nil)
+          .map(_ -> r.getLong(2))
+      }.distinct)
+    }
+
+  /** the reps' self candidates (a < b sharing a band bucket), or None
+    * past `budget` pairs */
+  private def localSelf(reps: Seq[LocalDoc],
+      budget: Int): Option[Seq[(Long, Long)]] = {
+    val buckets = scala.collection.mutable.HashMap
+      .empty[(Int, Long), scala.collection.mutable.ArrayBuffer[Long]]
+    for (d <- reps; b <- d.bandHashes.indices)
+      buckets.getOrElseUpdate((b, d.bandHashes(b)),
+        scala.collection.mutable.ArrayBuffer.empty[Long]) += d.id
+    val pairs = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    val it = buckets.valuesIterator.filter(_.size > 1)
+    while (it.hasNext && pairs.size <= budget) {
+      val ids = it.next().sorted
+      var i = 0
+      while (i < ids.length && pairs.size <= budget) {
+        var j = i + 1
+        while (j < ids.length && pairs.size <= budget) {
+          if (ids(i) < ids(j)) pairs += ((ids(i), ids(j)))
+          j += 1
+        }
+        i += 1
+      }
+    }
+    if (pairs.size > budget) None else Some(pairs.toSeq)
+  }
+
+  /** the candidate history docs' sorted shingle hashes, their text
+    * fetched from `corpus` in one job (at most `limit` rows and
+    * [[LocalDedupBytes]]); docs without shingles dropped as in
+    * [[verifyJaccard]] */
+  private def localHistory(spark: org.apache.spark.sql.SparkSession,
+      corpus: DataFrame, idCol: String, textCol: String, n: Int,
+      ids: Array[Long], limit: Int): Option[Map[Long, Array[Long]]] = {
+    val docs = corpus.select(col(idCol), col(textCol))
+    if (ids.isEmpty) Some(Map.empty)
+    else if (ids.length > limit || docs.schema.head.dataType != LongType) None
+    else LocalGraph.collectBounded(docs.filter(col(idCol).isin(ids.toSeq: _*)),
+        limit, LocalDedupBytes).map { rows =>
+      LocalGraph.evalLocal(LocalGraph.frame(spark, rows, docs.schema)
+        .select(col(idCol), sortedShingles(col(textCol), n)))
+        .map(r => r.getLong(0) -> r.getArray(1).toLongArray())
+        .filter(_._2.nonEmpty).toMap
+    }
+  }
+
+  /** exact Jaccard of two sorted distinct hash sets, with
+    * [[verifyJaccard]]'s arithmetic */
+  private def jaccard(a: Array[Long], b: Array[Long]): Double = {
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { inter += 1; i += 1; j += 1 }
+    }
+    inter.toDouble / (a.length + b.length - inter).toDouble
+  }
+
+  /** the increment's band rows on the driver: [[bandRowsFp]]'s Column
+    * expressions over a driver-local frame, docs without shingles
+    * dropped as there. `sig` stays in the output so the optimizer keeps
+    * it one column instead of inlining it into the band-hash lambda. */
+  private def localBanding(spark: org.apache.spark.sql.SparkSession,
+      rows: Array[Row], schema: StructType, n: Int, numPerms: Int,
+      bands: Int): Seq[LocalDoc] = {
+    val (idCol, textCol) = (schema(0).name, schema(1).name)
+    val sigs = LocalGraph.evalLocal(LocalGraph.frame(spark, rows, schema)
+      .select(col(idCol).as("id"), sortedShingles(col(textCol), n).as("shs"))
+      .withColumn("fp", Collapse.arrayKey(col("shs")))
+      .withColumn("sig", graft.functions.MinHashSig(col("shs"), numPerms))
+      .select(col("id"), col("shs"), col("fp"), col("sig"),
+        bandHashes(col("sig"), numPerms, bands).as("bh")))
+    sigs.map { r =>
+      val fp = r.getStruct(2, 2)
+      new LocalDoc(r.getLong(0), r.getArray(1).toLongArray(),
+        (fp.getLong(0), fp.getLong(1)), r.getArray(4).toLongArray())
+    }.filter(_.shs.nonEmpty)
+  }
+
+  /** the collapse census on the driver: each doc's rep, the min id of
+    * its exact-shingle-set group when the duplicate membership has more
+    * than [[Collapse.DupCollapseCutoff]] rows, else the doc itself — the
+    * [[Collapse.banded]] routing */
+  private def localCensus(banded: Seq[LocalDoc]): Long => Long = {
+    val groups = banded.groupBy(_.fp).values.filter(_.size > 1)
+    if (groups.iterator.map(_.size.toLong).sum <= Collapse.DupCollapseCutoff)
+      identity
+    else {
+      val rep = groups.flatMap { g =>
+        val r = g.iterator.map(_.id).min
+        g.map(_.id -> r)
+      }.toMap
+      id => rep.getOrElse(id, id)
+    }
+  }
   /** Shared probe of the incremental near-dedup family: collapse the
     * increment to exact-shingle-set representatives, probe the
     * persisted band index — pruned of matches onto replayed increment

@@ -1,22 +1,37 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
 
-/** Shared bounded driver-local finish for the iterative graph
-  * operators ([[Scc]], [[Lpa]], [[Topo]], [[KCore]], [[Ppr]]) — the
-  * [[Cc.LocalEdgeLimit]] pattern (r14) generalized. The distributed
-  * loops pay 2-6 scheduler round-trips per round times O(rounds)
-  * rounds; below the edge bound that latency dominates the actual
-  * work by orders of magnitude (a 30-edge SCC took 2.5 s of pure
-  * job-scheduling at sf0.1), so the canonical distinct edge set is
-  * collected once and the SAME deterministic recurrence runs on the
-  * driver. Every operator's local face replays its distributed
-  * semantics bit-for-bit (spec-pinned local ≡ forced-distributed on
-  * random graphs; the DuckDB oracles hold over both paths), and the
-  * distributed loop remains the default above the bound — scale
-  * behavior is unchanged. [[graft.paths.PathExpand]] finishes small
-  * variable-length walks the same way, through [[collectBounded]].
+/** Shared bounded driver-local finish — the [[Cc.LocalEdgeLimit]]
+  * pattern (r14) generalized. An operator with this face has two faces
+  * and one semantics:
+  *
+  *  - driver-local: below a stated bound, its input is collected once
+  *    ([[collectBounded]], [[probeLocal]]) and the SAME deterministic
+  *    recurrence runs on the driver; the result comes back as a
+  *    `LocalRelation`;
+  *  - distributed: past the bound (re-checked per call, never cached)
+  *    the operator's DataFrame plan runs exactly as without the face.
+  *
+  * Each operator states its bound, enforces it while collecting (a
+  * collect moves a bounded number of rows whatever the input's size),
+  * and takes a `private[graft]` limit whose 0 forces the distributed
+  * plan, so a spec pins local ≡ forced-distributed on random inputs.
+  *
+  * Why: a distributed step pays scheduler round-trips (jobs, stages,
+  * AQE re-plans) and code generation per plan; below the bound that
+  * fixed cost dominates the actual work by orders of magnitude (a
+  * 30-edge SCC took 2.5 s of pure job-scheduling at sf0.1). Users:
+  * the iterative graph operators ([[Scc]], [[Lpa]], [[Topo]], [[KCore]],
+  * [[Ppr]]) below [[LocalEdgeLimit]] edges; [[graft.paths.PathExpand]]'s
+  * small variable-length walks; and the incremental LSH doomed set
+  * ([[Dedup.minhashLshDoomedIncremental]]) below
+  * [[Dedup.LocalDedupLimit]] rows, which evaluates its Column
+  * expressions over driver-local frames ([[localRows]]).
   */
 private[graft] object LocalGraph {
 
@@ -47,29 +62,75 @@ private[graft] object LocalGraph {
   }
 
   /** Collect `df` in ONE job when each of its P partitions holds at
-    * most its share ⌊limit / P⌋ of rows, so at most `limit` in all;
-    * `None` otherwise. Each partition sends at most share + 1 rows, so
-    * the driver receives at most limit + P rows whatever the size of
-    * `df`. A relation under `limit` whose rows crowd one partition past
+    * most its share ⌊limit / P⌋ of rows and ⌊maxBytes / P⌋ of row
+    * bytes, so at most `limit` rows and `maxBytes` bytes in all; `None`
+    * otherwise. Each partition stops one row past either share, so the
+    * driver receives at most limit + P rows whatever the size of `df`.
+    * A relation under the bounds whose rows crowd one partition past
     * its share is also `None`: callers fall back to their distributed
     * plan, which is always correct. A share of 0 (limit < P) answers
     * `None` without a job. A limit-collect would instead scan the
     * partitions over several growing jobs. Runs `df`'s own physical plan
     * and converts rows on the driver: `df.rdd` would optimize and plan a
-    * second, deserializing query.
+    * second, deserializing query. A relation the driver already holds
+    * (see [[localRows]]) is read without a job, under the row bound.
     */
-  def collectBounded(df: DataFrame, limit: Int): Option[Array[Row]] = {
-    val rdd = df.queryExecution.toRdd
-    val share = limit / math.max(rdd.getNumPartitions, 1)
-    if (share == 0) return None
-    val parts = df.sparkSession.sparkContext.runJob(rdd,
-      (it: Iterator[InternalRow]) => it.take(share + 1).map(_.copy()).toArray)
-    if (parts.exists(_.length > share)) None
-    else {
-      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-      Some(parts.flatten.map(r => toRow(r).asInstanceOf[Row]))
+  def collectBounded(df: DataFrame, limit: Int,
+      maxBytes: Long = Long.MaxValue): Option[Array[Row]] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    def rows(in: Iterator[InternalRow]) =
+      in.map(r => toRow(r).asInstanceOf[Row]).toArray
+    localRows(df) match {
+      case Some(held) =>
+        if (held.length > limit) None else Some(rows(held.iterator))
+      case None =>
+        val rdd = df.queryExecution.toRdd
+        val p = math.max(rdd.getNumPartitions, 1)
+        val share = limit / p
+        val byteShare = maxBytes / p
+        if (share == 0) return None
+        val parts = df.sparkSession.sparkContext.runJob(rdd,
+          (it: Iterator[InternalRow]) => {
+            val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+            var bytes = 0L
+            // bounds first: a generated iterator's hasNext reads a row
+            while (out.length <= share && bytes <= byteShare && it.hasNext) {
+              val r = it.next()
+              bytes += (r match {
+                case u: UnsafeRow => u.getSizeInBytes.toLong
+                case _ => 0L
+              })
+              out += r.copy()
+            }
+            (out.toArray, out.length > share || bytes > byteShare)
+          })
+        if (parts.exists(_._2)) None
+        else Some(rows(parts.iterator.flatMap(_._1)))
     }
   }
+
+  /** The rows of `df` when the driver already holds them: its optimized
+    * plan is a `LocalRelation`. A `Project` over a `LocalRelation`
+    * folds into one (`ConvertToLocalRelation`, an interpreted
+    * projection), so a driver-local frame's derived columns evaluate
+    * here without a job and without generating code.
+    */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation => Some(r.data)
+      case _ => None
+    }
+
+  /** the rows of a driver-local frame ([[localRows]]), or of any other
+    * frame by one collect */
+  def evalLocal(df: DataFrame): Seq[InternalRow] =
+    localRows(df).getOrElse(df.queryExecution.executedPlan.executeCollect()
+      .toSeq)
+
+  /** `rows` of `schema` as a driver-local frame (a `LocalRelation`) */
+  def frame(spark: SparkSession, rows: Iterable[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema)
 
   /** dense interning of long node ids: (idOf, names) where
     * `names(i)` is the original id of dense index i

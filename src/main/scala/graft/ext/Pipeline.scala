@@ -1,12 +1,12 @@
 package graft.ext
 
-import graft.IndexStore
+import graft.{IndexStore, Stage}
 import graft.Stage.StageOps
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -229,7 +229,10 @@ object Pipeline {
     * anti-join) → LSH vs the band-partitioned index (pruned band join +
     * candidate-only re-shingling) → decontaminate (broadcast) →
     * annotate (map). Work scales with the increment + index sizes,
-    * never with history's text.
+    * never with history's text. A small increment (within
+    * [[Dedup.LocalDedupLimit]] survivors) finishes the LSH step on the
+    * driver and drops its contaminated docs there, so the result is a
+    * driver-local relation and its annotation runs no job.
     */
   def curateV2Incremental(newDocs: DataFrame, bench: DataFrame,
       textCol: String, idCol: String, dir: String,
@@ -246,31 +249,72 @@ object Pipeline {
       minCleanTokens: Int): DataFrame = {
     val spark = newDocs.sparkSession
     val snap = family.snapshot()
-    val (cleaned, exact) =
+    val (_, exact) =
       probeCleanExact(newDocs, textCol, idCol, snap, k, minCleanTokens)
-    // larger-id greedy drop (the batch contract's pairs.id_b), resolved
-    // at rep granularity — doomed history ids were no-ops in the
-    // anti-join, so the increment-only doomed set is the same filter
-    val survivors = exact.select(col(idCol), col("cleaned"))
+    val (near, nearRows) = Stage.described(spark, "curate: near-dedup")(
+      nearDeduped(exact, snap, idCol, minJaccard))
+    val dirty = Decontaminate.overlapHits(
+      near,
+      bench.select(col(idCol), col(textCol).as("cleaned")),
+      "cleaned", idCol, n = decontamN, minHits = decontamMinHits)
+      .select(col("doc_id").as("__dirty_id"))
+    // driver-held survivors drop their (at most as many) dirty ids on
+    // the driver, so the annotation below folds into their relation
+    val clean = nearRows.flatMap(rows =>
+      Stage.described(spark, "curate: decontaminate")(
+        LocalGraph.collectBounded(dirty, Dedup.LocalDedupLimit)).map(d =>
+        LocalGraph.frame(spark, without(rows, exact.schema, idCol,
+          d.map(_.getLong(0))), exact.schema)))
+      .getOrElse(
+        near.join(dirty, col(idCol) === col("__dirty_id"), "left_anti"))
+    clean
+      .withColumn("lang_id", TextFunctions.langId(col("cleaned")))
+      .withColumn("token_cnt", TextFunctions.tokenCount(col("cleaned")))
+      .withColumn("quality", TextFunctions.qualityScore(col("cleaned")))
+  }
+
+  /** The exact-dedup survivors minus their near-duplicates: the
+    * larger-id greedy drop of the batch contract's pairs.id_b, resolved
+    * at rep granularity (doomed history ids were no-ops in the
+    * anti-join, so the increment-only doomed set is the same filter).
+    * Survivors within [[Dedup.LocalDedupLimit]] rows and
+    * [[Dedup.LocalDedupBytes]] are collected once and handed to the
+    * doomed set's driver-local face; when it answers driver-local too,
+    * the result is their rows minus the doomed ids, returned with the
+    * rows, and no boundary runs. Otherwise the anti-join is
+    * materialized as before.
+    */
+  private def nearDeduped(exact: DataFrame, snap: IndexStore.Snapshot,
+      idCol: String, minJaccard: Double): (DataFrame, Option[Array[Row]]) = {
+    val spark = exact.sparkSession
+    val held = LocalGraph.collectBounded(exact, Dedup.LocalDedupLimit,
+      Dedup.LocalDedupBytes)
+    val kept = held.fold(exact)(LocalGraph.frame(spark, _, exact.schema))
+    val survivors = kept.select(col(idCol), col("cleaned"))
     // exact_docs holds survivors' rows: read it with their schema, not
     // an inferring job
     val exactDocs = snap.probe(ExactDocs.name, ExactDocs.params,
       StructType(survivors.schema.map(_.copy(nullable = true))).toDDL)
     val doomed = Dedup.minhashLshDoomedIncremental(spark, survivors,
       exactDocs, IndexStore.Ref(snap, "bands"), "cleaned", idCol, CurationN,
-      minJaccard, CurationPerms, CurationBands, historyWins = false)
-    val nearDeduped = exact.join(doomed, Seq(idCol), "left_anti")
-      .stageBoundary
-    val dirty = Decontaminate.overlapHits(
-      nearDeduped,
-      bench.select(col(idCol), col(textCol).as("cleaned")),
-      "cleaned", idCol, n = decontamN, minHits = decontamMinHits)
-      .select(col("doc_id").as("__dirty_id"))
-    nearDeduped
-      .join(dirty, col(idCol) === col("__dirty_id"), "left_anti")
-      .withColumn("lang_id", TextFunctions.langId(col("cleaned")))
-      .withColumn("token_cnt", TextFunctions.tokenCount(col("cleaned")))
-      .withColumn("quality", TextFunctions.qualityScore(col("cleaned")))
+      minJaccard, CurationPerms, CurationBands, historyWins = false,
+      // survivors past the bound would fail the local face's collect too
+      if (held.isDefined) Dedup.LocalDedupLimit else 0)
+    (held, LocalGraph.localRows(doomed)) match {
+      case (Some(rows), Some(d)) =>
+        val left = without(rows, exact.schema, idCol, d.map(_.getLong(0)))
+        (LocalGraph.frame(spark, left, exact.schema), Some(left))
+      case _ =>
+        (kept.join(doomed, Seq(idCol), "left_anti").stageBoundary, None)
+    }
+  }
+
+  /** driver-held `rows` of `schema` whose LONG `idCol` is not in `ids` */
+  private def without(rows: Array[Row], schema: StructType, idCol: String,
+      ids: Iterable[Long]): Array[Row] = {
+    val gone = ids.toSet
+    val i = schema.fieldIndex(idCol)
+    rows.filterNot(r => gone(r.getLong(i)))
   }
 
   /** The gated increment span-cleaned against the window index, and its
@@ -298,7 +342,7 @@ object Pipeline {
         idCol, k, minCleanTokens))
     Option(probes.get(root)).filter(p => key.contains(p.key)) match {
       case Some(p) => (p.cleaned, p.exact)
-      case None =>
+      case None => Stage.described(newDocs.sparkSession, "curate: probe") {
         val gated = newDocs.filter(TextFunctions.gopherKeep(col(textCol)))
         val cleaned = SubstringDedup
           .cleanedTextIncremental(gated, IndexStore.Ref(snap, "windows"),
@@ -314,6 +358,7 @@ object Pipeline {
             if (snap.token.contains(p.key.token)) p else null)
         }
         (cleaned, exact)
+      }
     }
   }
 
@@ -364,16 +409,18 @@ object Pipeline {
     val (cleaned, exact) =
       probeCleanExact(newDocs, textCol, idCol, snap, k, minCleanTokens)
     val survivors = exact.select(col(idCol), col("cleaned"))
+    def write(part: String)(f: => Unit): Unit =
+      Stage.described(newDocs.sparkSession, s"curate: append $part")(f)
     snap.append(curationParts(k), key) { at =>
       joined { fork =>
-        fork(SubstringDedup.windowRows(
+        fork(write("windows")(SubstringDedup.windowRows(
           newDocs.filter(TextFunctions.gopherKeep(col(textCol))),
-          textCol, idCol, k).write.parquet(at("windows")))
-        fork(Dedup.fingerprintRows(cleaned, "cleaned")
-          .write.parquet(at("fingerprints")))
-        fork(survivors.write.parquet(at("exact_docs")))
-        Dedup.writeBands(survivors, "cleaned", idCol, at("bands"),
-          CurationN, CurationPerms, CurationBands)
+          textCol, idCol, k).write.parquet(at("windows"))))
+        fork(write("fingerprints")(Dedup.fingerprintRows(cleaned, "cleaned")
+          .write.parquet(at("fingerprints"))))
+        fork(write("exact_docs")(survivors.write.parquet(at("exact_docs"))))
+        write("bands")(Dedup.writeBands(survivors, "cleaned", idCol,
+          at("bands"), CurationN, CurationPerms, CurationBands))
       }
     }
     probes.remove(family.root)

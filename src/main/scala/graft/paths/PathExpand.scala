@@ -172,7 +172,7 @@ object PathExpand {
             StructField("pathNodes", ArrayType(LongType, containsNull = false)),
             StructField("pathEdges", edgeKeyType)) ++
             (if (display) Seq(StructField("pathHops", hopInfoType)) else Nil))
-          nt.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
+          LocalGraph.frame(nt.sparkSession, out, schema)
         }
     }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Commit, IndexStore}
+import graft.{Commit, IndexStore, Stage}
 import graft.Stage.StageOps
 
 import graft.dml.GraphDml
@@ -197,19 +197,27 @@ object EdgeStream {
     // smaller in-batch near-neighbor — resolved at exact-shingle-set-rep
     // granularity: a batch of m copies of a hot history page never
     // materializes its m×|history matches| member pairs
-    val doomed = graft.ext.Dedup.minhashLshDoomedIncremental(spark, batch,
-      corpus, IndexStore.Ref(index.snapshot()), textCol, idCol, n, minJaccard,
-      numPerms, bands, historyWins = true)
-      .stageBoundary
-    val kept = batch.join(doomed, Seq(idCol), "left_anti")
-      .stageBoundary
+    val kept = Stage.described(spark, "near-dedup batch: doomed set") {
+      val doomed = graft.ext.Dedup.minhashLshDoomedIncremental(spark, batch,
+        corpus, IndexStore.Ref(index.snapshot()), textCol, idCol, n,
+        minJaccard, numPerms, bands, historyWins = true,
+        graft.ext.Dedup.LocalDedupLimit)
+      batch.join(boundedOrLocal(doomed), Seq(idCol), "left_anti")
+        .stageBoundary
+    }
     sink(kept, batchId)
-    index.append(Seq(graft.ext.Dedup.bandPart("", n, numPerms, bands)),
-      Some(batchId)) { at =>
-      graft.ext.Dedup.writeBands(kept, textCol, idCol, at(""), n, numPerms,
-        bands)
+    Stage.described(spark, "near-dedup batch: append bands") {
+      index.append(Seq(graft.ext.Dedup.bandPart("", n, numPerms, bands)),
+        Some(batchId)) { at =>
+        graft.ext.Dedup.writeBands(kept, textCol, idCol, at(""), n, numPerms,
+          bands)
+      }
     }
   }
+
+  /** `df` behind a stage boundary, unless the driver already holds it */
+  private def boundedOrLocal(df: DataFrame): DataFrame =
+    if (graft.ext.LocalGraph.localRows(df).isDefined) df else df.stageBoundary
 
   /** Streaming end-to-end curation: each micro-batch runs the FULL
     * incremental curation pipeline
@@ -253,10 +261,9 @@ object EdgeStream {
     if (family.replayed(batchId)) return
     val batch = batch0.stageBoundary
     if (batch.isEmpty) return
-    val curated = graft.ext.Pipeline.curateV2Incremental(
+    val curated = boundedOrLocal(graft.ext.Pipeline.curateV2Incremental(
       batch, bench, textCol, idCol, family, k, minJaccard,
-      decontamN, decontamMinHits, minCleanTokens)
-      .stageBoundary
+      decontamN, decontamMinHits, minCleanTokens))
     sink(curated, batchId)
     graft.ext.Pipeline.curateV2AppendIndexes(batch, textCol, idCol,
       family, k, minCleanTokens, Some(batchId))

@@ -93,10 +93,13 @@ class PlanGuardSpec extends SparkSpec {
     // incremental's three cross sources)
     "q_dedup_hotcopy_lsh" -> Fingerprint(1, 5, 0, 0),
     "q_dedup_hotcopy_lsh_inc" -> Fingerprint(1, 10, 0, 0),
-    // doomed set: rep-granularity distinct on the single id column is
-    // the 2 extra hash exchanges (union → distinct → final sort) —
-    // bounded by reps, never member pairs
-    "q_dedup_lsh_doomed_inc" -> Fingerprint(3, 6, 0, 0),
+    // doomed set: re-pinned (3,6,0,0) → (1,0,0,0) when small increments
+    // began finishing on the driver: the sf0.001 increment's doomed ids
+    // come back as one LocalRelation, so the output sort's exchange is
+    // the only one left. The distributed plan's shape (rep-granularity
+    // distinct on the single id column, never member pairs) now runs
+    // past Dedup.LocalDedupLimit; LshDoomedLocalSpec forces it
+    "q_dedup_lsh_doomed_inc" -> Fingerprint(1, 0, 0, 0),
     // sharded KMV rollup (r12): exactly 3 exchanges — the per-shard
     // KmvAgg's partial→final (one ≤k-long buffer per (partition,
     // shard) moves), the rollup KmvAgg's global final (bounded: one

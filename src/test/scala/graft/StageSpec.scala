@@ -126,4 +126,21 @@ class StageSpec extends SparkSpec {
       intercept[IllegalArgumentException](df.stageBoundary)
     }
   }
+
+  test("an empty local boundary is an empty LocalRelation, so the joins " +
+    "over it are pruned") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val empty = Seq.empty[(Long, String)].toDF("k", "v").stageBoundary
+    assert(empty.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    val joined = (1L to 20L).toDF("k").join(empty, Seq("k"))
+    assert(joined.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      "the join over an empty boundary must be pruned to an empty relation")
+    assert(joined.collect().isEmpty && joined.columns.toSeq == Seq("k", "v"))
+    // a boundary with rows stays a checkpoint with measured stats
+    val full = Seq((1L, "a")).toDF("k", "v").filter($"k" > 0L).stageBoundary
+    assert(full.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+  }
 }

@@ -34,4 +34,35 @@ class LocalGraphSpec extends SparkSpec {
     assert(LocalGraph.collectBounded(df, 7).isEmpty)
     assert(pulled.value == 0)
   }
+
+  test("collectBounded bounds the bytes it moves") {
+    // 4 partitions of 20 rows of 16 bytes each (UnsafeRow: null bits +
+    // one long): 1280 bytes in all
+    val (df, _) = counted(4, 20)
+    assert(LocalGraph.collectBounded(df, 1000, maxBytes = 1280).isDefined)
+    assert(LocalGraph.collectBounded(df, 1000, maxBytes = 1279).isEmpty)
+  }
+
+  test("a driver-local frame is collected and evaluated without a job") {
+    val s = spark
+    import s.implicits._
+    val df = Seq((1L, "a b"), (2L, "c")).toDF("id", "t")
+      .select($"id", org.apache.spark.sql.functions.size(
+        org.apache.spark.sql.functions.split($"t", " ")).as("n"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      assert(LocalGraph.collectBounded(df, 2).map(_.map(r =>
+        (r.getLong(0), r.getInt(1))).toSeq).contains(Seq((1L, 2), (2L, 1))))
+      assert(LocalGraph.collectBounded(df, 1).isEmpty)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get == 0)
+  }
 }
