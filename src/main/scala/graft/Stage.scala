@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   *   - `local` (default): `localCheckpoint(eager)` — executor-local
   *     storage, fastest, right for local[n] and interactive runs; NOT
   *     fault-tolerant (a lost executor after lineage truncation fails
-  *     the job).
+  *     the job). A relation the driver already holds passes as is.
   *   - `reliable`: `checkpoint(eager)` to the Spark checkpoint dir
   *     (`spark.graft.stage.dir` sets it if unset) — survives executor
   *     loss; the 100 TB posture for long pipelines.
@@ -43,6 +43,7 @@ object Stage {
   def boundary(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.get(ModeKey, "local") match {
+      case "local" if heldLocally(df) => df
       case "local" => patchLocalStats(df.localCheckpoint(true))
       case "reliable" =>
         if (spark.sparkContext.getCheckpointDir.isEmpty)
@@ -59,6 +60,16 @@ object Stage {
         s"$ModeKey must be local|reliable|parquet, got $other")
     }
   }
+
+  /** A deterministic `df` whose optimized plan is a `LocalRelation`: the
+    * driver already holds its rows (a driver-local result, or a
+    * projection folded into one), so a `local` boundary has no lineage
+    * to truncate and returns it as it is, running no job.
+    */
+  private def heldLocally(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.deterministic &&
+      df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** A local boundary's `LogicalRDD` inherits `originStats` from the
     * plan it checkpointed — for a multi-join subtree those are

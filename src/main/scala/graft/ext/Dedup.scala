@@ -982,9 +982,10 @@ object Dedup {
     *    docs' text comes from `corpus` in one more (`id IN (…)`), and
     *    the census, self candidates, exact-Jaccard verify and doomed
     *    resolution run on the driver. The result is a `LocalRelation`.
-    *    Band matches, candidate pairs and candidate history docs are
-    *    each bounded by the same row limit, and the history text by the
-    *    byte limit; passing any bound falls back;
+    *    The index rows the probe collects are bounded by the row limit
+    *    times `bands`, candidate pairs and candidate history docs each
+    *    by the row limit, and the history text by the byte limit;
+    *    passing any bound falls back;
     *  - distributed, past any bound: the plan below, with its census,
     *    candidate and verify boundaries.
     *
@@ -1003,16 +1004,33 @@ object Dedup {
       numPerms, bands, historyWins, LocalDedupLimit)
 
   /** Row bound of the driver-local doomed face: the increment's rows,
-    * the index rows its reps' band hashes collect, its candidate pairs
-    * and its candidate history docs each stay at most this many. The
-    * probe carries the reps' band hashes as a literal set, at most
-    * 4096 × bands longs (512 KB at 16 bands). */
-  private[graft] val LocalDedupLimit: Int = 1 << 12
+    * its candidate pairs and its candidate history docs each stay at
+    * most this many, and the index rows its reps' band hashes collect
+    * at most this many times `bands` (each doc may match a history doc
+    * on every band). The probe carries the reps' band hashes as a
+    * literal set, at most 1024 × bands longs (128 KB at 16 bands).
+    *
+    * Set under the measured crossover (`graft.tools.LshCrossover` on
+    * the sf0.1 documents, local[4]): on increments like the
+    * `curate_stream` benchmark's (~54 words a doc, 10% exact and 10%
+    * near copies of history) the local face took 494 against 2076 ms
+    * at 250 docs, 538/2409 at 500 and 1004/2176 at 1000. At 4096 docs
+    * (the former bound) their history copies passed the band-match
+    * bound after the local banding and probe had run, so the call took
+    * 1.78 times the distributed plan's; past this bound it takes 1.00
+    * to 1.02 times. */
+  private[graft] val LocalDedupLimit: Int = 1 << 10
 
   /** Byte bound of the driver-local doomed face, on the increment's
     * collected rows and on the candidate history docs' collected text
-    * each: 64 MB, far under the driver heap. */
-  private[graft] val LocalDedupBytes: Long = 64L << 20
+    * each. The local face shingles and MinHashes on one driver thread,
+    * the distributed plan on every core, so for long docs the text
+    * volume sets the crossover: on docs of ~2000 words the local face
+    * took 0.66 to 0.75 times the distributed plan's time at 250 docs
+    * (3.0 MB), 0.69 at 320 (3.8 MB) and 1.07 at 500 (6 MB); past this
+    * bound, 400 docs (4.8 MB) took 1.01 times (same tool and machine as
+    * [[LocalDedupLimit]]). */
+  private[graft] val LocalDedupBytes: Long = 4L << 20
 
   /** [[minhashLshDoomedIncremental]] on a store snapshot's part.
     * `localLimit` bounds the local face's rows: [[LocalDedupLimit]], or 0
@@ -1125,8 +1143,8 @@ object Dedup {
   /** the reps' distinct (rep, history id) band matches against the
     * index, pruned of replayed increment ids as in [[lshIncProbe]]. One
     * job with no exchange or broadcast: the index rows whose band hash
-    * and id pass literal `IN` filters (at most `limit` rows) meet the
-    * reps' band buckets on the driver. */
+    * and id pass literal `IN` filters (at most `limit` × `bands` rows)
+    * meet the reps' band buckets on the driver. */
   private def localCross(reps: Seq[LocalDoc], banded: Seq[LocalDoc],
       index: IndexStore.Ref, n: Int, numPerms: Int, bands: Int,
       limit: Int): Option[Array[(Long, Long)]] =
@@ -1139,7 +1157,7 @@ object Dedup {
         .filter(col("bandHash").isin(bucket.keys.map(_._2).toSeq: _*) &&
           !col("id").isin(banded.map(_.id): _*))
         .select("band", "bandHash", "id")
-      LocalGraph.collectBounded(hits, limit).map(_.flatMap { r =>
+      LocalGraph.collectBounded(hits, limit * bands).map(_.flatMap { r =>
         bucket.getOrElse((r.getInt(0), r.getLong(1)), Nil)
           .map(_ -> r.getLong(2))
       }.distinct)

@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+  InterpretedUnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.StructType
 
@@ -73,7 +74,9 @@ private[graft] object LocalGraph {
     * partitions over several growing jobs. Runs `df`'s own physical plan
     * and converts rows on the driver: `df.rdd` would optimize and plan a
     * second, deserializing query. A relation the driver already holds
-    * (see [[localRows]]) is read without a job, under the row bound.
+    * (see [[localRows]]) is read without a job, under both bounds: its
+    * rows are measured as the executors would hold them (an `UnsafeRow`
+    * each, encoded by an interpreted projection, generating no code).
     */
   def collectBounded(df: DataFrame, limit: Int,
       maxBytes: Long = Long.MaxValue): Option[Array[Row]] = {
@@ -82,7 +85,9 @@ private[graft] object LocalGraph {
       in.map(r => toRow(r).asInstanceOf[Row]).toArray
     localRows(df) match {
       case Some(held) =>
-        if (held.length > limit) None else Some(rows(held.iterator))
+        if (held.length > limit || !withinBytes(held, df.schema, maxBytes))
+          None
+        else Some(rows(held.iterator))
       case None =>
         val rdd = df.queryExecution.toRdd
         val p = math.max(rdd.getNumPartitions, 1)
@@ -107,6 +112,24 @@ private[graft] object LocalGraph {
         if (parts.exists(_._2)) None
         else Some(rows(parts.iterator.flatMap(_._1)))
     }
+  }
+
+  /** whether driver-held `rows` of `schema` take at most `maxBytes` as
+    * `UnsafeRow`s; stops at the first row past the bound */
+  private def withinBytes(rows: Seq[InternalRow], schema: StructType,
+      maxBytes: Long): Boolean = maxBytes == Long.MaxValue || {
+    lazy val encode = InterpretedUnsafeProjection.createProjection(
+      schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        BoundReference(i, f.dataType, f.nullable)
+      })
+    val it = rows.iterator
+    var bytes = 0L
+    while (bytes <= maxBytes && it.hasNext)
+      bytes += (it.next() match {
+        case u: UnsafeRow => u.getSizeInBytes.toLong
+        case r => encode(r).getSizeInBytes.toLong
+      })
+    bytes <= maxBytes
   }
 
   /** The rows of `df` when the driver already holds them: its optimized

@@ -202,7 +202,7 @@ object EdgeStream {
         corpus, IndexStore.Ref(index.snapshot()), textCol, idCol, n,
         minJaccard, numPerms, bands, historyWins = true,
         graft.ext.Dedup.LocalDedupLimit)
-      batch.join(boundedOrLocal(doomed), Seq(idCol), "left_anti")
+      batch.join(doomed.stageBoundary, Seq(idCol), "left_anti")
         .stageBoundary
     }
     sink(kept, batchId)
@@ -214,10 +214,6 @@ object EdgeStream {
       }
     }
   }
-
-  /** `df` behind a stage boundary, unless the driver already holds it */
-  private def boundedOrLocal(df: DataFrame): DataFrame =
-    if (graft.ext.LocalGraph.localRows(df).isDefined) df else df.stageBoundary
 
   /** Streaming end-to-end curation: each micro-batch runs the FULL
     * incremental curation pipeline
@@ -261,9 +257,10 @@ object EdgeStream {
     if (family.replayed(batchId)) return
     val batch = batch0.stageBoundary
     if (batch.isEmpty) return
-    val curated = boundedOrLocal(graft.ext.Pipeline.curateV2Incremental(
+    val curated = graft.ext.Pipeline.curateV2Incremental(
       batch, bench, textCol, idCol, family, k, minJaccard,
-      decontamN, decontamMinHits, minCleanTokens))
+      decontamN, decontamMinHits, minCleanTokens)
+      .stageBoundary
     sink(curated, batchId)
     graft.ext.Pipeline.curateV2AppendIndexes(batch, textCol, idCol,
       family, k, minCleanTokens, Some(batchId))

@@ -98,7 +98,8 @@ class PlanGuardSpec extends SparkSpec {
     // come back as one LocalRelation, so the output sort's exchange is
     // the only one left. The distributed plan's shape (rep-granularity
     // distinct on the single id column, never member pairs) now runs
-    // past Dedup.LocalDedupLimit; LshDoomedLocalSpec forces it
+    // past Dedup.LocalDedupLimit; LshDoomedLocalSpec forces it on this
+    // query and pins its former (3,6,0,0)
     "q_dedup_lsh_doomed_inc" -> Fingerprint(1, 0, 0, 0),
     // sharded KMV rollup (r12): exactly 3 exchanges — the per-shard
     // KmvAgg's partial→final (one ≤k-long buffer per (partition,

@@ -132,15 +132,47 @@ class StageSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    val empty = Seq.empty[(Long, String)].toDF("k", "v").stageBoundary
+    // a plan over an RDD of no partitions: its checkpoint has none
+    // either, so no block and no storage entry
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL("k LONG, v STRING"))
+      .stageBoundary
     assert(empty.queryExecution.analyzed.isInstanceOf[LocalRelation])
     val joined = (1L to 20L).toDF("k").join(empty, Seq("k"))
     assert(joined.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
       "the join over an empty boundary must be pruned to an empty relation")
     assert(joined.collect().isEmpty && joined.columns.toSeq == Seq("k", "v"))
     // a boundary with rows stays a checkpoint with measured stats
-    val full = Seq((1L, "a")).toDF("k", "v").filter($"k" > 0L).stageBoundary
+    val full = spark.range(1, 2).select($"id".as("k"), $"id".cast("string")
+      .as("v")).stageBoundary
     assert(full.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+  }
+
+  test("a local boundary over rows the driver holds returns them as they " +
+    "are, running no job") {
+    val s = spark
+    import s.implicits._
+    // a projection and a filter over a LocalRelation fold into one
+    val held = Seq((1L, "a"), (2L, "b")).toDF("k", "v").filter($"k" > 1L)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      assert(held.stageBoundary eq held)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get == 0)
+    // a nondeterministic column still materializes once
+    val drawn = Seq(1L, 2L).toDF("k").withColumn("r",
+      org.apache.spark.sql.functions.rand()).stageBoundary
+    assert(drawn.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
   }
 }

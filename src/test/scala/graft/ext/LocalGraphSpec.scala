@@ -43,6 +43,22 @@ class LocalGraphSpec extends SparkSpec {
     assert(LocalGraph.collectBounded(df, 1000, maxBytes = 1279).isEmpty)
   }
 
+  test("collectBounded bounds the bytes of a relation the driver holds") {
+    val s = spark
+    import s.implicits._
+    // UnsafeRow of (long, 1000-byte string): 8 null bits + 2 words +
+    // 1000 bytes = 1024 bytes; 2048 for both rows
+    val rows = Seq((1L, "x" * 1000), (2L, "y" * 1000))
+    val encoded = rows.toDF("id", "t")
+    val generic = LocalGraph.frame(spark, rows.map { case (i, t) =>
+      org.apache.spark.sql.Row(i, t) }, encoded.schema)
+    Seq(encoded, generic).foreach { df =>
+      assert(LocalGraph.localRows(df).isDefined)
+      assert(LocalGraph.collectBounded(df, 10, maxBytes = 2048).isDefined)
+      assert(LocalGraph.collectBounded(df, 10, maxBytes = 2047).isEmpty)
+    }
+  }
+
   test("a driver-local frame is collected and evaluated without a job") {
     val s = spark
     import s.implicits._

@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.{IndexStore, SparkSpec}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** The incremental LSH doomed set's two faces: the driver-local finish
   * and the distributed plan (forced with a local limit of 0) return the
@@ -118,17 +119,44 @@ class LshDoomedLocalSpec extends SparkSpec {
 
   test("a bound passed after the survivors fit falls back to the " +
     "distributed plan") {
-    // 20 increment docs fit a limit of 24, but the 12 near and exact
-    // copies of history collect far more than 24 band-index rows
+    // 20 increment docs fit a limit of 24, but each of its 12 near
+    // copies of history matches a base doc and its 3 near variants:
+    // ~48 candidate pairs, over 24 (and ~700 band-index rows, over 24 ×
+    // 16 bands)
     val rnd = new scala.util.Random(5)
-    val hist = (1L to 12L).map(i => i -> doc(rnd, 25))
-    val inc = hist.map { case (i, t) => (100 + i) -> near(rnd, t, 1) } ++
-      (200L until 208L).map(i => i -> doc(rnd, 25))
+    val base = (1L to 12L).map(i => i -> doc(rnd, 25))
+    val hist = base ++ base.flatMap { case (i, t) =>
+      (1 to 3).map(v => (100 * v + i) -> near(rnd, t, 1))
+    }
+    val inc = base.map { case (i, t) => (1000 + i) -> near(rnd, t, 1) } ++
+      (2000L until 2008L).map(i => i -> doc(rnd, 25))
     assert(inc.size <= 24)
     Seq(true, false).foreach { hw =>
       val (tripped, dist) = both(hist, frame(inc), 0.5, hw, limit = 24)
       assert(!isLocal(tripped) && !isLocal(dist))
       assert(ids(tripped) == ids(dist) && ids(tripped).nonEmpty)
     }
+  }
+
+  test("the forced-distributed plan keeps its exchange shape: " +
+    "rep-granularity distinct, never member pairs") {
+    // the sf0.001 doomed-set golden query, forced distributed: its
+    // pinned fingerprint before small increments finished on the driver
+    val docs = graft.Tables.load(spark, "/root/testdata/sf0.001",
+      "documents")
+    val hist = docs.filter(col("doc_id") % 10 =!= 0)
+    val inc = docs.filter(col("doc_id") % 10 === 0)
+    val dir = java.nio.file.Files.createTempDirectory("doomed-plan").toString
+    Dedup.writeBandIndex(hist, "text", "doc_id", dir, n = 3, numPerms = 64,
+      bands = 8)
+    def run(limit: Int) = Dedup.minhashLshDoomedIncremental(spark, inc, hist,
+      IndexStore.at(spark, dir), "text", "doc_id", 3, 0.9, 64, 8,
+      historyWins = true, limit).orderBy("doc_id")
+    val dist = run(0)
+    val plan = dist.queryExecution.executedPlan.toString
+    def c(re: String) = re.r.findAllIn(plan).size
+    assert((c("Exchange (hash|range|Single)"), c("BroadcastExchange"),
+      c("Generate"), c("CartesianProduct")) == ((3, 6, 0, 0)), plan)
+    assert(ids(dist) == ids(run(Dedup.LocalDedupLimit)))
   }
 }
